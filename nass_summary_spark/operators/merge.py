@@ -15,44 +15,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def coalesce_merge(
-    reported: DataFrame,
-    derived: DataFrame,
-    keys: Sequence[str],
-    values: Sequence[str],
-    how: str = "greatest",
-    keep_sides: bool = True,
-) -> DataFrame:
-    """FULL OUTER JOIN ``reported`` with ``derived`` on ``keys`` and
-    reconcile each value column.
-
-    how='greatest' → ``greatest(t.v, s.v)`` (null-tolerant, like SQL
-    GREATEST which skips NULLs); how='coalesce' → reported wins.
-    With ``keep_sides``, the per-side inputs are kept as ``t_v`` /
-    ``s_v`` like the reference's audit columns.
-    """
-    t = reported.select(*keys, *[F.col(v).alias(f"__t_{v}") for v in values])
-    s = derived.select(*keys, *[F.col(v).alias(f"__s_{v}") for v in values])
-    joined = t.join(s, on=list(keys), how="full_outer")
-    cols = [F.col(k) for k in keys]
-    for v in values:
-        tv, sv = F.col(f"__t_{v}"), F.col(f"__s_{v}")
-        if keep_sides:
-            cols += [tv.alias(f"t_{v}"), sv.alias(f"s_{v}")]
-        merged = F.greatest(tv, sv) if how == "greatest" else F.coalesce(tv, sv)
-        cols.append(merged.alias(v))
-    return joined.select(*cols)
-
-
 def total_and_sum_merge(
     reported: DataFrame,
     derived: DataFrame,
     keys: Sequence[str],
     values: Sequence[str],
+    how: str = "greatest",
 ) -> DataFrame:
-    """The harvest_total_and_sum shape: greatest-reconciled merge plus
-    a ``reported`` boolean flag (nass.sql:238 ``t.commodity is not
-    null as reported``)."""
+    """The *_total_and_sum shape: FULL OUTER JOIN ``reported`` with
+    ``derived`` on ``keys``, a ``reported`` flag (nass.sql:238
+    ``t.commodity is not null as reported``), the per-side inputs as
+    ``t_v`` / ``s_v`` audit columns, and each value reconciled.
+
+    how='greatest' → ``greatest(t.v, s.v)`` (null-tolerant, like SQL
+    GREATEST which skips NULLs); how='coalesce' → reported wins.
+    """
     t = reported.select(
         *keys, F.lit(True).alias("__rep"), *[F.col(v).alias(f"__t_{v}") for v in values]
     )
@@ -62,11 +39,8 @@ def total_and_sum_merge(
     cols.append(F.coalesce(F.col("__rep"), F.lit(False)).alias("reported"))
     for v in values:
         tv, sv = F.col(f"__t_{v}"), F.col(f"__s_{v}")
-        cols += [
-            tv.alias(f"t_{v}"),
-            sv.alias(f"s_{v}"),
-            F.greatest(tv, sv).alias(v),
-        ]
+        merged = F.greatest(tv, sv) if how == "greatest" else F.coalesce(tv, sv)
+        cols += [tv.alias(f"t_{v}"), sv.alias(f"s_{v}"), merged.alias(v)]
     return joined.select(*cols)
 
 

@@ -138,9 +138,9 @@ def tree_rollup_avg(
     parent's value is the AVERAGE of its direct children, evaluated
     level-synchronously from the deepest leaves upward.
 
-    Pass LEAF rows only (see :func:`leaf_rows`) — the reference's
-    recursion likewise seeds from leaves; reported non-leaf rows are
-    reconciled later by the total_and_sum coalesce merge.
+    Rows at every depth are taken as given: a non-leaf row is
+    averaged in with its derived twin (see the loop). The NASS
+    chains use :func:`tree_rollup_pg`, which seeds from the leaves.
 
     (The reference's recursive CTE has iteration-order artifacts for
     mixed-depth trees; we implement the clean level-synchronous
@@ -186,28 +186,28 @@ def tree_rollup_pg(
     values: Sequence[str],
     agg: str = "avg",
     carry: Sequence[str] = (),
-    max_depth: int | None = None,
 ) -> DataFrame:
     """EXACT replay of the reference's recursive-CTE rollup
     (yield_by_leaves nass.sql:322, price_by_leaves nass.sql:409,
     harvest_by_leaves nass.sql:198) — PostgreSQL evaluation
     semantics included.
 
-    PG evaluates ``WITH RECURSIVE ... UNION`` iteratively: each step
-    sees only the rows ADDED by the previous step, and UNION drops
-    rows identical to any already-emitted row. For mixed-depth trees
-    this is NOT the level-synchronous average: a parent receives one
-    derived row per *generation* of children (all leaves are
-    generation 0 wherever they sit in the tree), each row holding
-    the aggregate over that generation cohort only, and the closing
-    ``GROUP BY`` then aggregates across the cohort rows. E.g. HAY
-    with direct leaves ALFALFA/SMALL GRAIN/WILD and a deeper leaf
-    TAME→(EXCL …): cohort 1 yields avg(7.3, 3.0, 1.6) = 3.97,
-    cohort 2 yields 4.7, published value = avg(3.97, 4.7) = 4.33 —
-    not the single-level avg 4.15. The reference's shipped CSV
-    exports encode these semantics, so parity requires replaying
-    them (verified to 100% against commodity_yield.csv in
-    tests/test_nass_pipeline.py).
+    PG evaluates ``WITH RECURSIVE ... UNION`` iteratively: the base
+    term is the LEAF rows (:func:`leaf_rows` per ``keys``), each step
+    sees only the rows ADDED by the previous step, UNION drops rows
+    identical to any already-emitted row, and the recursion stops at
+    the first step that adds nothing. For mixed-depth trees this is
+    NOT the level-synchronous average: a parent receives one derived
+    row per *generation* of children (all leaves are generation 0
+    wherever they sit in the tree), each row holding the aggregate
+    over that generation cohort only, and the closing ``GROUP BY``
+    then aggregates across the cohort rows. E.g. HAY with direct
+    leaves ALFALFA/SMALL GRAIN/WILD and a deeper leaf TAME→(EXCL …):
+    cohort 1 yields avg(7.3, 3.0, 1.6) = 3.97, cohort 2 yields 4.7,
+    published value = avg(3.97, 4.7) = 4.33 — not the single-level
+    avg 4.15. The reference's shipped CSV exports encode these
+    semantics, so parity requires replaying them (verified to 100%
+    against commodity_yield.csv in tests/test_nass_pipeline.py).
 
     ``tree_rollup_avg`` remains the *clean* level-synchronous
     alternative for new pipelines.
@@ -219,35 +219,38 @@ def tree_rollup_pg(
     carried: sums legitimately cross units exactly like the
     reference. The closing group includes carry columns.
 
-    Each generation is one window + distinct + anti-join (bounded by
-    path depth ≤ 5); rollup frontiers are tiny relative to the fact
-    data, and the null-safe anti-join replays UNION's NULLs-equal
-    dedup.
+    Each generation is one window + distinct + null-safe anti-join
+    (UNION's NULLs-equal dedup) and shortens every path by one, so
+    the loop ends after at most longest-path + 1 generations. The
+    emitted set is the LAZY union of the per-generation
+    localCheckpoints (the ``bfs_hops`` idiom): each generation is
+    materialized once, so no lineage reaches back past the previous
+    generation and the anti-join + union that both read the emitted
+    set cannot double the plan per round. The row count rides the
+    checkpoint job via ``observe``, so the empty-generation exit
+    costs no extra job.
     """
     if agg not in ("avg", "sum"):
         raise ValueError(f"agg must be avg or sum, got {agg!r}")
+    from functools import reduce
+
+    from pyspark.sql import Observation, Window
+
     agg_fn = F.avg if agg == "avg" else F.sum
     keys = list(keys)
     carry = list(carry)
     cols = [*keys, path_col, *carry, *values]
+    w = Window.partitionBy(*keys, path_col)
 
-    if max_depth is None:
-        max_depth = (
-            df.select(F.max(F.size(F.col(path_col))).alias("d")).collect()[0]["d"]
-            or 0
-        )
-
-    # base term: UNION dedups the seed rows too
-    seen = df.select(*cols).dropDuplicates()
-    working = seen
-
-    from pyspark.sql import Window
-
-    for _ in range(max_depth):
-        wp = working.where(F.size(F.col(path_col)) > 0).withColumn(
+    # base term: the leaves; UNION dedups the seed rows too
+    levels = [
+        leaf_rows(df, path_col, keys).select(*cols).dropDuplicates().localCheckpoint()
+    ]
+    while True:
+        seen = reduce(DataFrame.unionByName, levels)
+        wp = levels[-1].where(F.size(F.col(path_col)) > 0).withColumn(
             path_col, F.slice(F.col(path_col), 1, F.size(F.col(path_col)) - 1)
         )
-        w = Window.partitionBy(*keys, path_col)
         gen = wp.select(
             *keys,
             path_col,
@@ -255,21 +258,24 @@ def tree_rollup_pg(
             *[agg_fn(F.col(v)).over(w).alias(v) for v in values],
         ).dropDuplicates()
         # UNION semantics: drop rows already emitted (NULLs compare
-        # equal). gen derives from seen, so alias both sides to keep
-        # the self-join unambiguous.
+        # equal). gen derives from the last level of seen, so alias
+        # both sides to keep the self-join unambiguous.
         g, s = gen.alias("__g"), seen.alias("__s")
         cond = None
         for c in cols:
             eq = F.col(f"__g.{c}").eqNullSafe(F.col(f"__s.{c}"))
             cond = eq if cond is None else (cond & eq)
-        new = g.join(s, on=cond, how="left_anti")
-        # eager localCheckpoint: the anti-join + union reference
-        # `seen` twice per generation, so the logical plan would
-        # otherwise double each round (see connected_components —
-        # same idiom, same 1g-driver OOM failure mode)
-        seen = seen.unionByName(new).localCheckpoint()
-        working = new
+        obs = Observation()
+        new = (
+            g.join(s, on=cond, how="left_anti")
+            .observe(obs, F.count(F.lit(1)).alias("n"))
+            .localCheckpoint()
+        )
+        if obs.get["n"] == 0:
+            break
+        levels.append(new)
 
+    # the empty generation was not appended: seen holds every row
     return seen.groupBy(*keys, path_col, *carry).agg(
         *[agg_fn(F.col(v)).alias(v) for v in values]
     )

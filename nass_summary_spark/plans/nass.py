@@ -33,11 +33,7 @@ from nass_summary_spark.functions.parsing import (
     strip_measured_in,
 )
 from nass_summary_spark.operators.merge import total_and_sum_merge
-from nass_summary_spark.operators.rollup import (
-    leaf_rows,
-    path_rollup,
-    tree_rollup_pg,
-)
+from nass_summary_spark.operators.rollup import path_rollup, tree_rollup_pg
 from nass_summary_spark.sources.readers import trim_all_strings
 
 #: Quick Stats CSV headers → canonical column names
@@ -350,28 +346,25 @@ def harvest_by_leaves(hli: DataFrame) -> DataFrame:
     production) against the reference's commodity_harvest.csv on
     the shipped 2012 ID slice (full-key merge; the residual is
     stripped input files, see tests/test_nass_pipeline.py)."""
-    keys = ["commodity", "location", "year"]
-    leaves = leaf_rows(hli, "subcommodity", keys=keys)
     return tree_rollup_pg(
-        leaves,
+        hli,
         path_col="subcommodity",
-        keys=keys,
+        keys=["commodity", "location", "year"],
         values=["irrigated_acres", "total_acres", "total_production"],
         agg="sum",
         carry=["unit"],
-        max_depth=4,
     )
 
 
 def harvest_total_and_sum(hli: DataFrame) -> DataFrame:
     """nass.harvest_total_and_sum (nass.sql:236-249): reported vs
     leaf-sum, reconciled by greatest."""
-    derived = harvest_by_leaves(hli)
     return total_and_sum_merge(
         hli,
-        derived,
+        harvest_by_leaves(hli),
         keys=["commodity", "location", "year", "subcommodity", "unit"],
         values=["irrigated_acres", "total_acres", "total_production"],
+        how="greatest",
     )
 
 
@@ -457,16 +450,12 @@ def yield_by_leaves(yli: DataFrame) -> DataFrame:
     (generation-cohort averaging, see tree_rollup_pg) — validated
     100% against the reference's own commodity_yield.csv export.
     Leaf detection joins on unit too (nass.sql:336 USING list)."""
-    leaves = leaf_rows(
-        yli, "subcommodity", keys=["commodity", "location", "year", "unit"]
-    )
     rolled = tree_rollup_pg(
-        leaves,
+        yli,
         path_col="subcommodity",
         keys=["commodity", "location", "year", "unit"],
         values=_YIELD_CLASSES,
         agg="avg",
-        max_depth=4,
     )
     return rolled.select(
         "commodity",
@@ -481,20 +470,12 @@ def yield_by_leaves(yli: DataFrame) -> DataFrame:
 def yield_total_and_sum(yli: DataFrame) -> DataFrame:
     """nass.yield_total_and_sum (nass.sql:360-376): reported wins,
     derived fills gaps (coalesce, not greatest)."""
-    t = yli
-    s = yield_by_leaves(yli)
-    keys = ["commodity", "location", "year", "subcommodity", "unit"]
-    tt = t.select(*keys, *[F.col(c).alias(f"t_{c}") for c in _YIELD_CLASSES])
-    ss = s.select(*keys, *[F.col(c).alias(f"s_{c}") for c in _YIELD_CLASSES])
-    joined = tt.join(ss, on=keys, how="full_outer")
-    return joined.select(
-        *keys,
-        *[F.col(f"t_{c}") for c in _YIELD_CLASSES],
-        *[F.col(f"s_{c}") for c in _YIELD_CLASSES],
-        *[
-            F.coalesce(F.col(f"t_{c}"), F.col(f"s_{c}")).alias(c)
-            for c in _YIELD_CLASSES
-        ],
+    return total_and_sum_merge(
+        yli,
+        yield_by_leaves(yli),
+        keys=["commodity", "location", "year", "subcommodity", "unit"],
+        values=_YIELD_CLASSES,
+        how="coalesce",
     )
 
 
@@ -547,28 +528,25 @@ def price_by_leaves(ploc: DataFrame) -> DataFrame:
     """nass.price_by_leaves (nass.sql:409-436): same recursion shape
     as yield_by_leaves (unit in the leaf-detection USING list and in
     the window partition), replayed exactly via tree_rollup_pg."""
-    leaves = leaf_rows(
-        ploc, "subcommodity", keys=["commodity", "location", "year", "unit"]
-    )
     rolled = tree_rollup_pg(
-        leaves,
+        ploc,
         path_col="subcommodity",
         keys=["commodity", "location", "year", "unit"],
         values=["price"],
         agg="avg",
-        max_depth=4,
     )
     return rolled.withColumn("price", F.round(F.col("price"), 2))
 
 
 def price_total_and_sum(ploc: DataFrame) -> DataFrame:
-    """nass.price_total_and_sum (nass.sql:438-444)."""
-    keys = ["commodity", "location", "year", "subcommodity", "unit"]
-    t = ploc.select(*keys, F.col("price").alias("t_price"))
-    s = price_by_leaves(ploc).select(*keys, F.col("price").alias("s_price"))
-    return (
-        t.join(s, on=keys, how="full_outer")
-        .select(*keys, "t_price", "s_price", F.coalesce("t_price", "s_price").alias("price"))
+    """nass.price_total_and_sum (nass.sql:438-444): reported wins,
+    derived fills gaps."""
+    return total_and_sum_merge(
+        ploc,
+        price_by_leaves(ploc),
+        keys=["commodity", "location", "year", "subcommodity", "unit"],
+        values=["price"],
+        how="coalesce",
     )
 
 

@@ -343,17 +343,16 @@ def swap_table(hy: DataFrame) -> DataFrame:
     return non_irr.unionByName(irr).unionByName(whole)
 
 
-def swap_crosstab(swap_df: DataFrame, value_col: str) -> DataFrame:
+def swap_crosstab(
+    swap_df: DataFrame, value_col: str, commodities: list[str]
+) -> DataFrame:
     """swap_net / swap_price / swap_yield (swap.sql:215-351):
-    location × commodity matrix of one swap column. The pivot value
-    list is the distinct commodity set (one dimension-sized collect,
-    like the reference's hardcoded column list)."""
-    values = sorted(
-        r["commodity"] for r in swap_df.select("commodity").distinct().collect()
-    )
+    location × commodity matrix of one swap column. ``commodities``
+    is the pivot value list — the sorted distinct commodity set,
+    like the reference's hardcoded column list."""
     return (
         swap_df.groupBy("location")
-        .pivot("commodity", values)
+        .pivot("commodity", commodities)
         .agg(F.first(value_col))
         .orderBy("location")
     )
@@ -377,6 +376,10 @@ def run_swap_pipeline(
     hpy = harvest_production_yield(commodity_harvest, commodities)
     hy = harvest_yield(h2012, counties, county_adc_df, yavg, hpy, ap, mp)
     sw = swap_table(hy)
+    # one dimension-sized collect shared by the three crosstabs
+    pivot_values = sorted(
+        r["commodity"] for r in sw.select("commodity").distinct().collect()
+    )
     return {
         "commodity_price": price,
         "commodity_avg_price": ap,
@@ -386,7 +389,7 @@ def run_swap_pipeline(
         "harvest_production_yield": hpy,
         "harvest_yield": hy,
         "swap": sw,
-        "swap_net": swap_crosstab(sw, "acres"),
-        "swap_price": swap_crosstab(sw, "price"),
-        "swap_yield": swap_crosstab(sw, "yield"),
+        "swap_net": swap_crosstab(sw, "acres", pivot_values),
+        "swap_price": swap_crosstab(sw, "price", pivot_values),
+        "swap_yield": swap_crosstab(sw, "yield", pivot_values),
     }

@@ -113,6 +113,50 @@ def test_price_chain(spark, quickstats):
     assert by_name["CORN"] == 6.5
 
 
+def test_yield_generation_cohort_average(spark):
+    """The reference recursion's generation-cohort average
+    (tree_rollup_pg docstring): HAY's direct leaves ALFALFA, SMALL
+    GRAIN, WILD form cohort 1 = avg(7.3, 3.0, 1.6); the deeper leaf
+    TAME→(EXCL …) reaches the root one generation later as cohort 2
+    = 4.7; the root publishes avg(3.967, 4.7) = 4.33, not the flat
+    average over direct children (4.15)."""
+    leaves = [
+        (["ALFALFA"], 7.3),
+        (["SMALL GRAIN"], 3.0),
+        (["WILD"], 1.6),
+        (["TAME", "(EXCL ALFALFA & SMALL GRAIN)"], 4.7),
+    ]
+    yli = spark.createDataFrame(
+        [("HAY", "06", 2007, p, "TONS / ACRE", v, None, None, None) for p, v in leaves],
+        "commodity string, location string, year int, subcommodity array<string>, "
+        "unit string, irrigated double, partial double, none double, unspecified double",
+    )
+    got = {
+        tuple(r["subcommodity"]): (r["reported"], r["irrigated"])
+        for r in nass.yield_total_and_sum(yli).collect()
+    }
+    assert got[()] == (False, 4.33)
+    assert got[("TAME",)] == (False, 4.7)
+    assert got[("ALFALFA",)] == (True, 7.3)
+
+
+def test_price_rollup_reaches_root_of_deep_path(spark):
+    """A 5-deep subcommodity path rolls up to every prefix, the bare
+    commodity () included: the recursion runs until a generation
+    adds nothing, not to a fixed depth."""
+    path = ["A", "B", "C", "D", "E"]
+    ploc = spark.createDataFrame(
+        [("CORN", "16", 2012, 2.5, path, "price", "$ / BU")],
+        "commodity string, location string, year int, price double, "
+        "subcommodity array<string>, item string, unit string",
+    )
+    got = {
+        tuple(r["subcommodity"]): r["price"]
+        for r in nass.price_total_and_sum(ploc).collect()
+    }
+    assert got == {tuple(path[:n]): 2.5 for n in range(len(path) + 1)}
+
+
 def test_commodity_explicitly_irrigated(spark):
     """nass.sql:164-166 twin: distinct commodities carrying any
     explicitly-IRRIGATED subcommodity path — hand-computed frame."""

@@ -12,7 +12,7 @@ from nass_summary_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from nass_summary_spark.operators.fallback import multilevel_fallback
-from nass_summary_spark.operators.merge import coalesce_merge, total_and_sum_merge
+from nass_summary_spark.operators.merge import total_and_sum_merge
 from nass_summary_spark.operators.pivot import class_pivot, crosstab
 from nass_summary_spark.operators.rollup import (
     leaf_rows,
@@ -70,14 +70,12 @@ def test_total_and_sum_merge_greatest_and_flag(spark):
     out = {r["k"]: (r["reported"], r["v"]) for r in
            total_and_sum_merge(t, s, ["k"], ["v"]).collect()}
     assert out == {"a": (True, 5.0), "b": (True, None), "c": (False, 7.0)}
-
-
-def test_coalesce_merge_reported_wins(spark):
-    t = spark.createDataFrame([("a", 5.0)], ["k", "v"])
-    s = spark.createDataFrame([("a", 3.0), ("b", 7.0)], ["k", "v"])
+    # how="coalesce" (yield/price): reported wins even when smaller
+    t = spark.createDataFrame([("a", 5.0), ("d", 2.0)], ["k", "v"])
+    s = spark.createDataFrame([("a", 3.0), ("b", 7.0), ("d", 9.0)], ["k", "v"])
     out = {r["k"]: r["v"] for r in
-           coalesce_merge(t, s, ["k"], ["v"], how="coalesce").collect()}
-    assert out == {"a": 5.0, "b": 7.0}
+           total_and_sum_merge(t, s, ["k"], ["v"], how="coalesce").collect()}
+    assert out == {"a": 5.0, "b": 7.0, "d": 2.0}
 
 
 def test_class_pivot(spark):
