@@ -22,9 +22,11 @@ __all__ = ["spread_narrow_scan", "pushdown_barrier"]
 
 
 def pushdown_barrier(col: Column) -> Column:
-    """``col + 0.0 * rand(0)`` — a numerically EXACT no-op
-    (``x + 0.0 * r == x`` for every finite double ``r`` and every
-    double ``x``; rand ∈ [0, 1)) that marks the expression
+    """``col + 0.0 * rand(0)`` — a numeric no-op (rand ∈ [0, 1), so
+    ``0.0 * r`` is ``+0.0`` and ``x + 0.0`` returns ``x`` bit for bit
+    for every double except ``-0.0``, which becomes ``+0.0``: equal
+    under ``=`` and in Spark's grouping and join keys, but not in its
+    sign bit or its string form) that marks the expression
     nondeterministic, so a filter referencing it can be neither
     pushed below an exchange nor inlined into a second evaluation.
 

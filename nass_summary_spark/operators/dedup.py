@@ -25,6 +25,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from nass_summary_spark.functions.fixpoint import until_stable
 from nass_summary_spark.functions.layout import spread_narrow_scan
 from nass_summary_spark.functions.text import word_shingles, words
 from nass_summary_spark.functions.vectors import (
@@ -688,15 +689,18 @@ def connected_components(
     so convergence is O(log diameter) rounds even for chain-shaped
     clusters. Every round is a bounded number of shuffles.
 
-    Lineage control: each round's frame references the previous
-    round TWICE (merge + pointer-halving grandparent join), so the
-    LOGICAL plan doubles per iteration — with persist() alone the
-    analyzer still walks a 2^k-node tree embedding the upstream
-    pair-generation plan 2^k times, which OOMed a default-sized 1g
-    driver on plan processing (the data itself is tiny). Eager
-    ``localCheckpoint`` truncates the plan to the materialized
-    partitions each round, keeping analysis O(1) per iteration —
-    the standard Spark idiom for iterative algorithms.
+    The rounds run under
+    :func:`~nass_summary_spark.functions.fixpoint.until_stable`, which
+    checkpoints every round: each round's frame references the
+    previous round TWICE (merge + pointer-halving grandparent join),
+    so the LOGICAL plan would otherwise double per iteration (the
+    analyzer walking a 2^k-node tree embedding the upstream
+    pair-generation plan 2^k times OOMed a default-sized 1g driver).
+    Labels only ever DECREASE (min-merges of node ids), so the label
+    sum strictly decreases on every non-converged round and is
+    constant exactly at convergence — the exit metric. ``max_iter``
+    is a loud cap: ``RuntimeError`` if the labels have not converged
+    within it.
     Output: (id, component) where component = min id in the group.
     """
     # hash-partition the (checkpointed) edge relation by the probe
@@ -713,24 +717,8 @@ def connected_components(
         .repartition(width, "src")
         .localCheckpoint()
     )
-    # labels only ever DECREASE (min-merges of node ids), so the label
-    # sum strictly decreases on every non-converged round and is
-    # constant exactly at convergence — the exit test is a one-row
-    # SUM. It RIDES the round's checkpoint action via ``observe``
-    # (CollectMetrics is a pass-through node computed during the
-    # materializing job), so a round is exactly ONE job — no separate
-    # aggregate pass over the node-sized frame (at corpus scale that
-    # pass re-reads the whole node relation). DECIMAL(38,0) cannot
-    # overflow for any realistic (rows × id-magnitude) product.
-    from pyspark.sql import Observation
 
-    _sum_metric = F.sum(F.col("component").cast("decimal(38,0)")).alias("s")
-    obs0 = Observation()
-    labels = (
-        edges.select(F.col("src").alias("id")).distinct().withColumn("component", F.col("id"))
-    ).observe(obs0, _sum_metric).localCheckpoint()
-    prev_sum = obs0.get["s"]
-    for _ in range(max_iter):
+    def halve(labels: DataFrame) -> DataFrame:
         propagated = (
             edges.join(labels, edges.src == labels.id)
             .select(F.col("dst").alias("id"), "component")
@@ -756,19 +744,22 @@ def connected_components(
         grandparent = labels.select(
             F.col("id").alias("component"), F.col("component").alias("__gp")
         )
-        obs = Observation()
-        new_labels = (
-            merged.join(grandparent, on="component", how="left")
-            .select("id", F.coalesce("__gp", "component").alias("component"))
-            .observe(obs, _sum_metric)
-            .localCheckpoint()
+        return merged.join(grandparent, on="component", how="left").select(
+            "id", F.coalesce("__gp", "component").alias("component")
         )
-        new_sum = obs.get["s"]
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    return labels
+
+    # DECIMAL(38,0) cannot overflow for any realistic (rows ×
+    # id-magnitude) product
+    seed = (
+        edges.select(F.col("src").alias("id")).distinct()
+        .withColumn("component", F.col("id"))
+    )
+    return until_stable(
+        seed,
+        halve,
+        F.sum(F.col("component").cast("decimal(38,0)")),
+        max_iter,
+    )
 
 
 def url_dedup(df: DataFrame, url_col: str, id_col: str) -> DataFrame:

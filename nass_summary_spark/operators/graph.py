@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nass_summary_spark.functions.fixpoint import semi_naive, until_stable
 from nass_summary_spark.functions.layout import spread_narrow_scan
 
 
@@ -251,13 +252,12 @@ def bfs_hops(
 
     Per round ONE equi-join of the fixed-width frontier against the
     (persisted) edge relation + ONE anti-join against the settled
-    set; both reference the previous frame, so each round eagerly
-    ``localCheckpoint``s (the plan-doubling lesson from connected
-    components — a frame consumed twice per round must truncate
-    every round, unlike PageRank's once-consumed ranks). The
-    frontier is (node, hops) rows only — never paths, so no
-    path-count explosion; work per round is bounded by the frontier
-    × average degree. Early-exits when a frontier empties.
+    set, run by :func:`~nass_summary_spark.functions.fixpoint.semi_naive`
+    (one job per round; the settled set is the lazy union of the
+    per-level checkpoints). The frontier is (node, hops) rows only —
+    never paths, so no path-count explosion; work per round is
+    bounded by the frontier × average degree. Early-exits when a
+    frontier empties.
 
     ``broadcast_frontier=True`` (default, the same shape as
     PageRank's broadcast rank vector): frontier and settled sets are
@@ -280,51 +280,29 @@ def bfs_hops(
     # a narrow cache only added per-round task/scheduling overhead
     # (+0.7-1s at sf0.1); at corpus scale the scan is already wide.
     e = edges.select("src", "dst").persist(StorageLevel.MEMORY_AND_DISK)
-    # dist is checkpoint-materialized at every step — the cached
-    # edges are never referenced by the result, so release them in a
-    # finally (an exception mid-round would otherwise leak one cached
-    # edge copy per failed call into the block manager)
-    try:
-        from functools import reduce
+    bc = F.broadcast if broadcast_frontier else (lambda d: d)
 
-        from pyspark.sql import Observation
-
-        # dist is the LAZY union of the per-level checkpointed
-        # frontiers: each level is materialized exactly once (its own
-        # checkpoint), and the union is a cheap scan of those
-        # checkpointed partitions — no second, settled-set-sized
-        # checkpoint job per round. The frontier count rides the
-        # level's checkpoint via ``observe`` (pass-through
-        # CollectMetrics), so the old ``rdd.isEmpty()`` job — and its
-        # Python row-serialization detour — is gone: a round is ONE
-        # job.
-        levels = [
-            seeds.select(F.col(node_col).cast("bigint").alias("node"))
+    def hop(frontier: DataFrame, dist: DataFrame, h: int) -> DataFrame:
+        return (
+            bc(frontier).join(e, frontier["node"] == e["src"])
+            .select(F.col("dst").alias("node"))
             .distinct()
-            .withColumn("hops", F.lit(0))
-            .localCheckpoint()
-        ]
-        frontier = levels[0]
-        bc = F.broadcast if broadcast_frontier else (lambda d: d)
-        for h in range(1, max_hops + 1):
-            dist = reduce(DataFrame.unionByName, levels)
-            obs = Observation()
-            nxt = (
-                bc(frontier).join(e, frontier["node"] == e["src"])
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(bc(dist), "node", "left_anti")
-                .withColumn("hops", F.lit(h))
-                .observe(obs, F.count(F.lit(1)).alias("n"))
-                .localCheckpoint()
-            )
-            if obs.get["n"] == 0:
-                break
-            levels.append(nxt)
-            frontier = nxt
+            .join(bc(dist), "node", "left_anti")
+            .withColumn("hops", F.lit(h))
+        )
+
+    seed = (
+        seeds.select(F.col(node_col).cast("bigint").alias("node"))
+        .distinct()
+        .withColumn("hops", F.lit(0))
+    )
+    # the result reads only the per-level checkpoints, never the
+    # cached edges; release them in a finally (an exception mid-round
+    # would otherwise leak one cached edge copy per failed call)
+    try:
+        return semi_naive(seed, hop, max_rounds=max_hops)
     finally:
         e.unpersist()
-    return reduce(DataFrame.unionByName, levels)
 
 
 def label_propagation(
@@ -527,8 +505,6 @@ def kcore_members(
     dst: str = "id_b",
     k: int = 3,
     n_rounds: int = 8,
-    require_converged: bool = True,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Fixed-k CORE extraction by iterated peeling: repeatedly drop
     nodes whose degree in the surviving subgraph is < k until the
@@ -537,25 +513,22 @@ def kcore_members(
     cohesion): entity clusters that survive a 3-core are
     mutually-corroborated; tendrils and chains are not.
 
-    Determinism/replay: the peel runs a FIXED ``n_rounds`` — extra
-    rounds after the fixpoint are no-ops (the peel is idempotent),
-    so the SQL replay (:func:`kcore_oracle_ctes`) applies the same
-    count verbatim. ``require_converged`` re-counts the last two
-    rounds (two node-sized actions) and raises if the budget was too
-    small — non-convergence is loud, never silently wrong.
+    Convergence: the peel runs under
+    :func:`~nass_summary_spark.functions.fixpoint.until_stable` on the
+    surviving-node count. A peel only ever removes nodes, so an
+    unchanged count is an unchanged set — the fixpoint — and the loop
+    stops there; it raises ``RuntimeError`` if ``n_rounds`` peels do
+    not reach it. Rounds past the fixpoint are no-ops, so the SQL
+    replay (:func:`kcore_oracle_ctes`), which applies all ``n_rounds``
+    peels, gives the same core.
 
     Scale shape: per round ONE degree aggregation over the edges of
     surviving nodes (two semi-joins that ride the edge partitioning)
-    with node-sized state; ``localCheckpoint`` every
-    ``checkpoint_every`` rounds truncates the doubling lineage (each
-    round references the node frame twice — the connected-components
-    regime, not PageRank's). The default is EVERY round: each
-    broadcast build of an un-truncated node frame re-executes the
-    whole peel chain below it (nested broadcast subtrees are built
-    independently, so k un-checkpointed rounds replay ~2^k degree
-    aggregations — measured as the dominant cost of the 6-round
-    3-core at sf0.1), while a per-round checkpoint is a node-sized
-    job.
+    with node-sized state, checkpointed every round: each round
+    references the node frame twice, and each broadcast build of an
+    un-truncated node frame would re-execute the whole peel chain
+    below it (k un-checkpointed rounds replay ~2^k degree
+    aggregations), while a per-round checkpoint is a node-sized job.
 
     Output: ``(id, core_degree)`` for members of the k-core, with
     their degree inside it.
@@ -580,10 +553,8 @@ def kcore_members(
         .distinct()
         .localCheckpoint()
     )
-    nodes = e2.select(F.col("s").alias("id")).distinct()
-    prev_n = None
-    last_n = None
-    for r in range(1, int(n_rounds) + 1):
+
+    def peel(nodes: DataFrame) -> DataFrame:
         # the surviving-node set is node-sized — broadcast both
         # semi-join sides so each round is one map stage + one
         # combinable aggregation over the cached edges, not two
@@ -594,38 +565,14 @@ def kcore_members(
             .groupBy("s")
             .agg(F.count(F.lit(1)).alias("__deg"))
         )
-        nodes = deg.where(F.col("__deg") >= k).select(
-            F.col("s").alias("id")
-        )
-        # the last two rounds are checkpointed unconditionally when
-        # converging: the two convergence counts AND the final
-        # degree output then read the node-sized checkpoint instead
-        # of replaying the peel chain once per action. The counts
-        # RIDE the checkpoint job via ``observe`` (a pass-through
-        # CollectMetrics computed during the materializing action),
-        # so convergence certification costs zero extra jobs — at
-        # corpus scale a separate count is a full pass over the
-        # node-sized frame.
-        count_round = require_converged and r >= int(n_rounds) - 1
-        if r % int(checkpoint_every) == 0 or count_round:
-            obs = None
-            if count_round:
-                from pyspark.sql import Observation
+        return deg.where(F.col("__deg") >= k).select(F.col("s").alias("id"))
 
-                obs = Observation()
-                nodes = nodes.observe(obs, F.count(F.lit(1)).alias("n"))
-            nodes = nodes.localCheckpoint()
-            if obs is not None:
-                if r == int(n_rounds) - 1:
-                    prev_n = obs.get["n"]
-                else:
-                    last_n = obs.get["n"]
-    if require_converged:
-        if prev_n is not None and last_n != prev_n:
-            raise RuntimeError(
-                f"kcore_members: not converged after {n_rounds} rounds"
-                f" ({prev_n} -> {last_n} nodes); raise n_rounds"
-            )
+    nodes = until_stable(
+        e2.select(F.col("s").alias("id")).distinct(),
+        peel,
+        F.count(F.lit(1)),
+        int(n_rounds),
+    )
     out = (
         e2.join(F.broadcast(nodes.withColumnRenamed("id", "s")), "s")
         .join(F.broadcast(nodes.select(F.col("id").alias("d"))), "d")

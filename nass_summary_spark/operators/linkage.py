@@ -346,7 +346,6 @@ def fellegi_sunter_em(
     init_u: float = 0.1,
     round_dp: int = 12,
     eps: float = 1e-06,
-    checkpoint_every: int = 1,
 ) -> DataFrame:
     """Unsupervised EM estimation of the Fellegi–Sunter parameters
     (the Splink / Winkler default when no labeled priors exist): fit
@@ -370,11 +369,12 @@ def fellegi_sunter_em(
     PATTERN share their E-step weight, so ONE map-side-combinable
     groupBy reduces the candidate relation (the only full-data pass,
     however many trillions of pairs) to a ≤2^F-row pattern histogram,
-    and every EM iteration is DataFrame arithmetic over that tiny
-    checkpointed relation crossed with the single-row parameter
-    frame — like :func:`~nass_summary_spark.operators.graph.pagerank`
-    each round references the previous frame once, so the whole loop
-    compiles into one Catalyst job.
+    checkpointed once. Each EM iteration is then one small driver
+    round trip: the E-step posterior is rendered as one SQL expression
+    with the current parameters inlined as literals, one aggregation
+    over the histogram computes the 2F+1 M-step sums, and ``.first()``
+    brings the new parameters back. The iteration count is fixed
+    (``n_iter``), so there is no exit metric to observe.
 
     Determinism / oracle: each M-step output is ``ROUND(·,
     round_dp)`` then clamped to ``[eps, 1-eps]`` in BOTH engines —
@@ -382,19 +382,10 @@ def fellegi_sunter_em(
     (sums over ≤2^F doubles differ only in final ulps, absorbed at
     12 dp) and the clamp keeps a saturated parameter (a field that
     the weighted pairs always/never agree on) from zeroing an E-step
-    product. Replay: :func:`fellegi_sunter_em_oracle_sql`.
-
-    ``checkpoint_every``: each round references the previous
-    single-row parameter frame once (linear lineage), but each level
-    carries 2F+1 aggregate expressions whose E-step trees reference
-    every parameter column of the level below — un-truncated chains
-    cost Catalyst seconds of driver-side analysis per consumer
-    (measured ~3s of inter-job gap at 5 un-checkpointed iterations
-    in cluster_eval). The frame is single-row, so a per-round
-    localCheckpoint is a ~30ms job; default 1 (0 disables)."""
+    product. Replay: :func:`fellegi_sunter_em_oracle_sql`."""
     params = _em_params_frame(
         candidates, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps, checkpoint_every,
+        round_dp, eps,
     )
     # unpivot via ONE explode so the final plan references the EM
     # chain once — a per-field union would replay the whole
@@ -425,7 +416,6 @@ def _em_params_frame(
     init_u: float,
     round_dp: int,
     eps: float,
-    checkpoint_every: int,
 ) -> DataFrame:
     """The EM fit as a SINGLE-ROW frame ``(lam, m_<f>..., u_<f>...)``
     — shared by :func:`fellegi_sunter_em` (unpivots it) and
@@ -481,14 +471,17 @@ def _em_params_frame(
         num = [_dl(cur["lam"])]
         den = [f"(1.0D - {_dl(cur['lam'])})"]
         for f in fields:
+            # backtick-quoted: a field name need not be a bare SQL
+            # identifier (``first-name``)
+            a = "`" + f"agree_{f}".replace("`", "``") + "`"
             num.append(
-                f"(CASE WHEN agree_{f} = 1 THEN {_dl(cur[f'm_{f}'])}"
-                f" WHEN agree_{f} = 0 THEN (1.0D - {_dl(cur[f'm_{f}'])})"
+                f"(CASE WHEN {a} = 1 THEN {_dl(cur[f'm_{f}'])}"
+                f" WHEN {a} = 0 THEN (1.0D - {_dl(cur[f'm_{f}'])})"
                 " ELSE 1.0D END)"
             )
             den.append(
-                f"(CASE WHEN agree_{f} = 1 THEN {_dl(cur[f'u_{f}'])}"
-                f" WHEN agree_{f} = 0 THEN (1.0D - {_dl(cur[f'u_{f}'])})"
+                f"(CASE WHEN {a} = 1 THEN {_dl(cur[f'u_{f}'])}"
+                f" WHEN {a} = 0 THEN (1.0D - {_dl(cur[f'u_{f}'])})"
                 " ELSE 1.0D END)"
             )
         n = " * ".join(num)
@@ -527,10 +520,6 @@ def _em_params_frame(
             for f in fields
         ],
     ]
-    # ``checkpoint_every`` is retained for API compatibility; the
-    # plan is constant-size per round, so there is nothing to
-    # truncate.
-    del checkpoint_every
     for _ in range(int(n_iter)):
         j = pat.withColumn("w", F.expr(_w_sql(vals)))
         row = j.agg(*agg_exprs).first()
@@ -576,7 +565,7 @@ def fellegi_sunter_em_scores(
     ids = list(id_cols) if id_cols else list(candidates.columns[:2])
     params = _em_params_frame(
         candidates, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps, checkpoint_every=1,
+        round_dp, eps,
     )
     scored = candidates.join(broadcast(params))
     # three-way: a NULL agreement nulls the score and the threshold
@@ -639,7 +628,7 @@ def fellegi_sunter_em_posteriors(
     ids = list(id_cols) if id_cols else list(candidates.columns[:2])
     params = _em_params_frame(
         candidates, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps, checkpoint_every=1,
+        round_dp, eps,
     )
     j = candidates.join(broadcast(params))
     num = F.col("lam")

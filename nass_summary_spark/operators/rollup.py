@@ -1,32 +1,34 @@
-"""Hierarchical path rollup — the Spark-first replacement for the
-reference's recursive CTEs.
+"""Hierarchical path rollups — the reference's recursive CTEs
+(`nass.sql:198` harvest_by_leaves, `nass.sql:322` yield_by_leaves,
+`nass.sql:409` price_by_leaves) walk a commodity "subcommodity"
+array-path hierarchy bottom-up into every ancestor prefix. Three
+semantics, one function each:
 
-Reference (`nass.sql:198-230` harvest_by_leaves, `nass.sql:322`
-yield_by_leaves, `nass.sql:409` price_by_leaves): a RECURSIVE CTE
-walks a commodity "subcommodity" array-path hierarchy bottom-up,
-summing (or averaging) leaf statistics into every ancestor prefix.
-
-Recursion is the wrong shape for Spark: each step would be a join +
-shuffle, serialized on the driver. Because rolling up a value to all
-ancestors of its path is equivalent to *emitting the value once per
-path prefix* and grouping, we instead:
-
-1. generate every prefix of the path array with built-in
-   higher-order functions (``transform`` over ``sequence`` + ``slice``),
-2. ``explode`` them (rows multiply by avg depth ≈ 2-4), and
-3. run ONE ``groupBy`` — a single shuffle with map-side partial
-   aggregation, whatever the hierarchy depth.
-
-At 100 TB this is the difference between one exchange and
-depth-many driver-coordinated exchanges.
+* :func:`path_rollup` — prefix sums: a value counts once toward
+  every prefix of its path, so the whole hierarchy is ONE ``explode``
+  of the prefixes + ONE ``groupBy`` (a single shuffle with map-side
+  partial aggregation, whatever the depth). For sums, counts, min and
+  max over all descendants.
+* :func:`tree_rollup_avg` — level-synchronous average of averages: a
+  parent is the average of its direct children, evaluated from the
+  deepest level upward, one narrow aggregation per level.
+* :func:`tree_rollup_pg` — the exact PostgreSQL replay of the
+  reference's ``WITH RECURSIVE … UNION`` (generation cohorts, UNION
+  dedup), seeded from :func:`leaf_rows` and run by
+  :func:`~nass_summary_spark.functions.fixpoint.semi_naive`; the NASS
+  harvest, yield and price chains use it for parity with the
+  reference's exports.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from nass_summary_spark.functions.fixpoint import semi_naive
 
 
 def path_prefixes(path: Column | str, include_empty: bool = True, include_self: bool = True) -> Column:
@@ -221,20 +223,12 @@ def tree_rollup_pg(
 
     Each generation is one window + distinct + null-safe anti-join
     (UNION's NULLs-equal dedup) and shortens every path by one, so
-    the loop ends after at most longest-path + 1 generations. The
-    emitted set is the LAZY union of the per-generation
-    localCheckpoints (the ``bfs_hops`` idiom): each generation is
-    materialized once, so no lineage reaches back past the previous
-    generation and the anti-join + union that both read the emitted
-    set cannot double the plan per round. The row count rides the
-    checkpoint job via ``observe``, so the empty-generation exit
-    costs no extra job.
+    the :func:`~nass_summary_spark.functions.fixpoint.semi_naive`
+    loop ends after at most longest-path + 1 generations.
     """
     if agg not in ("avg", "sum"):
         raise ValueError(f"agg must be avg or sum, got {agg!r}")
-    from functools import reduce
-
-    from pyspark.sql import Observation, Window
+    from pyspark.sql import Window
 
     agg_fn = F.avg if agg == "avg" else F.sum
     keys = list(keys)
@@ -242,13 +236,8 @@ def tree_rollup_pg(
     cols = [*keys, path_col, *carry, *values]
     w = Window.partitionBy(*keys, path_col)
 
-    # base term: the leaves; UNION dedups the seed rows too
-    levels = [
-        leaf_rows(df, path_col, keys).select(*cols).dropDuplicates().localCheckpoint()
-    ]
-    while True:
-        seen = reduce(DataFrame.unionByName, levels)
-        wp = levels[-1].where(F.size(F.col(path_col)) > 0).withColumn(
+    def generation(last: DataFrame, seen: DataFrame, _: int) -> DataFrame:
+        wp = last.where(F.size(F.col(path_col)) > 0).withColumn(
             path_col, F.slice(F.col(path_col), 1, F.size(F.col(path_col)) - 1)
         )
         gen = wp.select(
@@ -257,25 +246,17 @@ def tree_rollup_pg(
             *carry,
             *[agg_fn(F.col(v)).over(w).alias(v) for v in values],
         ).dropDuplicates()
-        # UNION semantics: drop rows already emitted (NULLs compare
-        # equal). gen derives from the last level of seen, so alias
-        # both sides to keep the self-join unambiguous.
+        # gen derives from the last level of seen, so alias both sides
+        # to keep the self-join unambiguous
         g, s = gen.alias("__g"), seen.alias("__s")
-        cond = None
-        for c in cols:
-            eq = F.col(f"__g.{c}").eqNullSafe(F.col(f"__s.{c}"))
-            cond = eq if cond is None else (cond & eq)
-        obs = Observation()
-        new = (
-            g.join(s, on=cond, how="left_anti")
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint()
+        cond = reduce(
+            Column.__and__,
+            [F.col(f"__g.{c}").eqNullSafe(F.col(f"__s.{c}")) for c in cols],
         )
-        if obs.get["n"] == 0:
-            break
-        levels.append(new)
+        return g.join(s, on=cond, how="left_anti")
 
-    # the empty generation was not appended: seen holds every row
-    return seen.groupBy(*keys, path_col, *carry).agg(
+    # base term: the leaves; UNION dedups the seed rows too
+    seed = leaf_rows(df, path_col, keys).select(*cols).dropDuplicates()
+    return semi_naive(seed, generation).groupBy(*keys, path_col, *carry).agg(
         *[agg_fn(F.col(v)).alias(v) for v in values]
     )

@@ -12713,9 +12713,9 @@ def kcore_members_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     find reachable blobs; the k-core keeps only MUTUALLY
     corroborated cores, shedding tendrils and chains; for dedup
     graphs that is "template families", for entity graphs
-    "well-attested clusters"). FIXED 6 peel rounds (idempotent past
-    the fixpoint; the engine re-counts the last two rounds and
-    raises if unconverged — loud, never silently wrong) over the
+    "well-attested clusters"). At most 6 peel rounds (idempotent past
+    the fixpoint; the engine stops at the fixpoint and raises if 6
+    rounds do not reach it — loud, never silently wrong) over the
     SAME certified MinHash pair CTE B3/B13/B111 use; per round one
     degree aggregation with node-sized state
     (operators/graph.py kcore_members). FULL oracle."""

@@ -19,6 +19,7 @@ from nass_summary_spark.operators.rollup import (
     path_prefixes,
     path_rollup,
     tree_rollup_avg,
+    tree_rollup_pg,
 )
 from nass_summary_spark.operators.similarity import knn_bruteforce, knn_lsh
 from nass_summary_spark.operators.weighted import fractional_weighted_rollup
@@ -62,6 +63,62 @@ def test_tree_rollup_avg_of_avgs(spark):
     got = {tuple(r["p"]): r["v"] for r in out.collect()}
     assert got[("A",)] == 2.0
     assert got[()] == 6.0  # avg-of-avgs, NOT avg of leaves (14/3)
+
+
+def test_tree_rollup_pg_rounds_read_only_checkpoints(spark, monkeypatch):
+    """Every generation after the seed is planned over the checkpointed
+    levels only: no round's input reaches back to the source relation
+    (bounded lineage — a generation re-deriving the source made the
+    NASS rollups quadratic in depth)."""
+    from nass_summary_spark.functions import fixpoint
+
+    def scans(frame):
+        leaves = frame._jdf.queryExecution().analyzed().collectLeaves()
+        return {
+            (leaf.nodeName(), leaf.rdd().id())
+            for leaf in (leaves.apply(i) for i in range(leaves.length()))
+        }
+
+    inputs, checkpoints = [], set()
+    real_round = fixpoint._round
+
+    def spy(frame, metric):
+        inputs.append(scans(frame))
+        out, m = real_round(frame, metric)
+        checkpoints.update(scans(out))
+        return out, m
+
+    monkeypatch.setattr(fixpoint, "_round", spy)
+    df = spark.createDataFrame(
+        [("k", ["A", "X"], 1.0), ("k", ["A", "Y"], 3.0), ("k", ["B"], 10.0)],
+        "g string, p array<string>, v double",
+    )
+    out = tree_rollup_pg(df, "p", keys=["g"], values=["v"])
+    got = {tuple(r["p"]): r["v"] for r in out.collect()}
+    # generation 1: A = avg(1, 3), () = 10; generation 2: () = 2
+    assert got == {("A", "X"): 1.0, ("A", "Y"): 3.0, ("B",): 10.0,
+                   ("A",): 2.0, (): 6.0}
+    # seed, two generations that add rows, one that adds none
+    assert len(inputs) == 4
+    assert inputs[0] == scans(df)
+    for rnd in inputs[1:]:
+        assert rnd <= checkpoints and not rnd & scans(df), rnd
+
+
+def test_observation_lives_only_in_fixpoint():
+    """Round loops share functions/fixpoint.py: no other module of the
+    package hand-rolls its own observed-checkpoint round."""
+    from pathlib import Path
+
+    import nass_summary_spark
+
+    root = Path(nass_summary_spark.__file__).parent
+    users = sorted(
+        p.relative_to(root).as_posix()
+        for p in root.rglob("*.py")
+        if "Observation(" in p.read_text()
+    )
+    assert users == ["functions/fixpoint.py"]
 
 
 def test_total_and_sum_merge_greatest_and_flag(spark):
@@ -239,6 +296,16 @@ def test_connected_components(spark):
     out = {r["id"]: r["component"] for r in connected_components(pairs).collect()}
     # chain 4-1-2-3 collapses to min id 1; 7-9 to 7
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 9: 7}
+
+
+def test_connected_components_raises_when_not_converged(spark):
+    from nass_summary_spark.operators.dedup import connected_components
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 6)], ["id_a", "id_b"]
+    )
+    with pytest.raises(RuntimeError, match="not converged after 1 rounds"):
+        connected_components(chain, max_iter=1)
 
 
 def test_knn_ivf_recall(spark):
@@ -1911,6 +1978,23 @@ def test_fellegi_sunter_em_marginalizes_missing(spark):
     for i, f in enumerate(["f1", "f2", "f3"]):
         assert abs(got[f]["m_est"] - m[i]) < 0.03, (f, got[f]["m_est"])
         assert abs(got[f]["u_est"] - u[i]) < 0.03, (f, got[f]["u_est"])
+
+
+def test_fellegi_sunter_em_quotes_field_names(spark):
+    """A field name that is not a bare SQL identifier fits exactly like
+    the same data under a plain name (the E-step renders SQL text)."""
+    from nass_summary_spark.operators.linkage import fellegi_sunter_em
+
+    rows = [(1, 1)] * 6 + [(1, 0)] * 3 + [(0, 1)] * 4 + [(0, 0)] * 20
+
+    def fit(name):
+        df = spark.createDataFrame(rows, [f"agree_{name}", "agree_zip"])
+        return {
+            r["field"].replace(name, "f"): (r["m_est"], r["u_est"], r["lam"])
+            for r in fellegi_sunter_em(df, [name, "zip"], n_iter=3).collect()
+        }
+
+    assert fit("first-name") == fit("first_name")
 
 
 def test_fellegi_sunter_null_semantics(spark):
