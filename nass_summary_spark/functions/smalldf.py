@@ -15,9 +15,10 @@ not).
 
 Supported field types: int, bigint, double, string, boolean,
 array<double> — the model-relation types the index family persists
-(``_SUPPORTED_TYPES``; validated at parse time on every code path,
-including empty ``rows``). Values must be driver-small (the
-expression ships with the plan)."""
+(``lits.LITERAL_TYPES``; validated at parse time on every code path,
+including empty ``rows``). Values and field names are spelled by
+``functions/lits.py``. Values must be driver-small (the expression
+ships with the plan)."""
 
 from __future__ import annotations
 
@@ -25,36 +26,14 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-
-#: The model-relation types the index family persists. Parsing and
-#: rendering both validate against this set, so a parameterized type
-#: (e.g. ``decimal(10,2)``) fails loudly up front on every code path
-#: — including the empty-``rows`` one, which never reaches
-#: ``_render``.
-_SUPPORTED_TYPES = frozenset(
-    {"int", "bigint", "double", "string", "boolean", "array<double>"}
+from nass_summary_spark.functions.lits import (
+    LITERAL_TYPES,
+    ident,
+    literal_sql,
+    string_sql,
 )
-
-
-def _render(value, ftype: str) -> str:
-    if value is None:
-        return f"CAST(NULL AS {ftype})"
-    if ftype == "int":
-        return str(int(value))
-    if ftype == "bigint":
-        return f"{int(value)}L"
-    if ftype == "double":
-        # repr round-trips the exact double; D marks a double literal
-        return f"{float(value)!r}D"
-    if ftype == "string":
-        escaped = str(value).replace("\\", "\\\\").replace("'", "\\'")
-        return f"'{escaped}'"
-    if ftype == "boolean":
-        return "true" if value else "false"
-    if ftype == "array<double>":
-        return "array(" + ",".join(f"{float(x)!r}D" for x in value) + ")"
-    raise ValueError(f"local_struct_df: unsupported field type {ftype!r}")
 
 
 def local_struct_df(
@@ -62,31 +41,35 @@ def local_struct_df(
 ) -> DataFrame:
     """Build a small DataFrame from driver-local ``rows`` as one
     JVM-side expression. ``schema`` is a DDL string like
-    ``"cell int, pos int, value double"``; every job over the result
-    runs without a Python stage (unlike ``createDataFrame``)."""
-    fields = []
-    for part in schema.split(","):
-        name, ftype = part.strip().split(maxsplit=1)
-        ftype = ftype.strip().lower()
-        if ftype not in _SUPPORTED_TYPES:
+    ``"cell int, pos int, value double"``, parsed by Spark's own DDL
+    parser (backtick-quote names that are not bare identifiers:
+    ``"`first name` double"``); every job over the result runs
+    without a Python stage (unlike ``createDataFrame``)."""
+    parsed = StructType.fromDDL(schema)
+    if not isinstance(parsed, StructType):
+        raise ValueError(f"local_struct_df: not a field list: {schema!r}")
+    fields = [(f.name, f.dataType.simpleString()) for f in parsed.fields]
+    for _, ftype in fields:
+        # validated up front, so the empty-rows path fails loudly too
+        if ftype not in LITERAL_TYPES:
             raise ValueError(
                 f"local_struct_df: unsupported field type {ftype!r}"
             )
-        fields.append((name, ftype))
     if not rows:
         # explode(array()) cannot carry a struct type; produce the
-        # empty frame through a filtered literal row instead — one
-        # selectExpr item per parsed field, never re-split from a
-        # rendered string
+        # empty frame through a filtered literal row instead
         return (
             spark.range(1)
-            .selectExpr(*[f"CAST(NULL AS {t}) AS {n}" for n, t in fields])
+            .selectExpr(
+                *[f"CAST(NULL AS {t}) AS {ident(n)}" for n, t in fields]
+            )
             .where(F.lit(False))
         )
     structs = ",".join(
         "named_struct("
         + ",".join(
-            f"'{n}',{_render(v, t)}" for (n, t), v in zip(fields, row)
+            f"{string_sql(n)},{literal_sql(v, t)}"
+            for (n, t), v in zip(fields, row)
         )
         + ")"
         for row in rows
@@ -94,5 +77,5 @@ def local_struct_df(
     return (
         spark.range(1)
         .select(F.expr(f"explode(array({structs}))").alias("__s"))
-        .select(*[F.col(f"__s.{n}").alias(n) for n, _ in fields])
+        .select("__s.*")
     )

@@ -36,9 +36,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nass_summary_spark.functions.smalldf import local_struct_df
 from pyspark.sql.functions import broadcast
 
+from nass_summary_spark.functions.lits import ident, nearest_rank_sql
+from nass_summary_spark.functions.smalldf import local_struct_df
 from nass_summary_spark.functions.vectors import cosine_similarity
 from nass_summary_spark.operators.similarity import (
     assign_cells,
@@ -290,15 +291,10 @@ def ann_index_probe(
     so a crash-replayed batch (already appended to the index) probes
     identically to its first run; a post-rank filter would instead
     shift rank numbers and drop rows below k."""
-    from nass_summary_spark.operators.similarity import (
-        cell_distance_rank_sql,
-    )
-
     centroids = load_centroids(spark, index_path)
-    # nearest-by-L2 cell ordering, same rule as assign_cells — one
-    # SQL expr string (per-element F.lit is a py4j tarpit at k·dim)
+    # nearest-by-L2 cell ordering, same rule as assign_cells
     probed = F.expr(
-        f"slice({cell_distance_rank_sql(vec_col, centroids)}, 1, {int(nprobe)})"
+        f"slice({nearest_rank_sql(ident(vec_col), centroids)}, 1, {int(nprobe)})"
     )
     q = queries.select(
         F.col(id_col).alias("query_id"),

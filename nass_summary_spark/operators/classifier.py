@@ -54,7 +54,12 @@ import decimal
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from nass_summary_spark.functions.lits import bigint_array_sql, bigint_map_sql
+from nass_summary_spark.functions.lits import (
+    bigint_array,
+    bigint_array_sql,
+    bigint_map_sql,
+    double_sql,
+)
 from nass_summary_spark.functions.smalldf import local_struct_df
 from nass_summary_spark.functions.text import ngrams_from_words, words
 from nass_summary_spark.functions.vectors import token_hash64
@@ -430,7 +435,7 @@ def logreg_train(
 
     view = f"__logreg_feats_{uuid.uuid4().hex}"
     feats_aug.createOrReplaceTempView(view)
-    sc_lit = f"{float(TRAIN_SCALE)!r}D"
+    sc_lit = double_sql(TRAIN_SCALE)
     # ONE streaming pass per round: the unbounded window over the
     # cache's own (id)-clustering computes the per-doc znum and
     # recovers the label riding on the bias row (MAX over the group —
@@ -619,7 +624,7 @@ def score_columns_weighted(
                 f"score_columns_weighted: bucket {b} outside "
                 f"[0, {n_buckets})"
             )
-    lut = F.expr("array(" + ",".join(f"{w}L" for w in dense) + ")")
+    lut = bigint_array(dense)
     tc = F.col(text_col) if isinstance(text_col, str) else text_col
     if gram_mode == "chars":
         from nass_summary_spark.functions.text import char_ngrams

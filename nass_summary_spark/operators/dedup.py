@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from nass_summary_spark.functions.fixpoint import until_stable
 from nass_summary_spark.functions.layout import spread_narrow_scan
+from nass_summary_spark.functions.lits import bigint_sql
 from nass_summary_spark.functions.text import word_shingles, words
 from nass_summary_spark.functions.vectors import (
     MERSENNE_61,
@@ -462,7 +463,10 @@ def minhash_signatures(
     # BIGINT arithmetic — h is BIGINT so the products/mods promote
     # the same way with L-suffix literals
     min_aggs = [
-        F.expr(f"MIN((h * {a}L + {b}L) % {MERSENNE_61}L) AS __m{i}")
+        F.expr(
+            f"MIN((h * {bigint_sql(a)} + {bigint_sql(b)})"
+            f" % {bigint_sql(MERSENNE_61)}) AS __m{i}"
+        )
         for i, (a, b) in enumerate(perms)
     ]
     sig = "array(" + ",".join(f"__m{i}" for i in range(num_perm)) + ")"
@@ -630,7 +634,8 @@ def simhash_pairs(
     for b in range(64):
         val = (1 << b) if b < 63 else -(1 << 63)
         fp_terms.append(
-            f"(CASE WHEN __o{b} * 2 >= __n THEN {val}L ELSE CAST(0 AS BIGINT) END)"
+            f"(CASE WHEN __o{b} * 2 >= __n THEN {bigint_sql(val)}"
+            " ELSE CAST(0 AS BIGINT) END)"
         )
     fp_sql = "CAST(0 AS BIGINT) + " + " + ".join(fp_terms)
     fp = votes.select("id", F.expr(fp_sql).alias("fp")).persist()

@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nass_summary_spark.functions.lits import bigint_sql, string_sql
+
 # ---------------------------------------------------------------------------
 # vertex-array helpers (pure Column expressions)
 # ---------------------------------------------------------------------------
@@ -902,12 +904,10 @@ def nearest_ring_centroid(
     # per-element F.lit()/F.struct() costs ~75k py4j round-trips at
     # 1000 zones (measured 14s of pure driver time); a single
     # F.expr string is one round-trip and parses in milliseconds.
-    def _sq(s: str) -> str:
-        return "'" + s.replace("'", "''") + "'"
-
     lut = F.expr(
         "array(" + ",".join(
-            f"named_struct('cx2',{cx}L,'cy2',{cy}L,'k',{_sq(k)})"
+            f"named_struct('cx2',{bigint_sql(cx)},'cy2',{bigint_sql(cy)},"
+            f"'k',{string_sql(k)})"
             for k, cx, cy in cents_sorted
         ) + ")"
     )

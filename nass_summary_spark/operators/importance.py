@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from nass_summary_spark.functions.layout import spread_narrow_scan
+from nass_summary_spark.functions.lits import bigint_array
 from nass_summary_spark.functions.text import ngrams_from_words, words
 from nass_summary_spark.functions.vectors import token_hash64
 
@@ -217,7 +218,7 @@ def dsir_score_columns(
                 f"dsir_score_columns: bucket {b} outside [0, {num_buckets})"
             )
         dense[int(b)] = int(w)
-    lut = F.expr("array(" + ",".join(f"{w}L" for w in dense) + ")")
+    lut = bigint_array(dense)
     tc = F.col(text_col) if isinstance(text_col, str) else text_col
     grams = ngrams_from_words(words(tc), 2)
     score_q = F.aggregate(

@@ -41,6 +41,7 @@ from collections.abc import Mapping, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nass_summary_spark.functions.lits import double_sql, ident
 from nass_summary_spark.functions.smalldf import local_struct_df
 from pyspark.sql.functions import broadcast
 
@@ -432,7 +433,7 @@ def _em_params_frame(
     param_cols = (
         ["lam"] + [f"m_{f}" for f in fields] + [f"u_{f}" for f in fields]
     )
-    schema_str = ", ".join(f"{c} double" for c in param_cols)
+    schema_str = ", ".join(f"{ident(c)} double" for c in param_cols)
     vals: dict[str, float | None] = {
         "lam": float(init_lambda),
         **{f"m_{f}": float(init_m) for f in fields},
@@ -446,9 +447,9 @@ def _em_params_frame(
         )
 
     # The E-step posterior is rendered per iteration as ONE parsed SQL
-    # expression with the params inlined as double LITERALS (repr
-    # round-trips the exact double; NULLs — possible only on empty
-    # candidates — render as typed NULLs). Literal inlining removes
+    # expression with the params inlined as double LITERALS
+    # (lits.double_sql; NULLs — possible only on empty candidates —
+    # render as typed NULLs). Literal inlining removes
     # the per-iteration crossJoin + broadcast build of the params
     # frame AND its localCheckpoint, so an EM iteration is exactly ONE
     # job: the 2F+1 aggregation over the checkpointed pattern
@@ -460,28 +461,25 @@ def _em_params_frame(
     # chained-CTE EM oracles replay the fit and would hash-fail on
     # any drift. The M-step aggregates reference only pattern columns
     # and ``w``, so they are built ONCE (the py4j-tax lesson).
-    def _dl(v: float | None) -> str:
-        return "CAST(NULL AS DOUBLE)" if v is None else f"{float(v)!r}D"
-
     def _w_sql(cur: dict[str, float | None]) -> str:
         # three-way CASE with ELSE 1.0: a MISSING comparison is
         # marginalized out of the mixture likelihood (factor 1 in
         # both classes) — the correct EM treatment under MCAR; a
         # plain two-way form would count NULL as DISAGREE
-        num = [_dl(cur["lam"])]
-        den = [f"(1.0D - {_dl(cur['lam'])})"]
+        num = [double_sql(cur["lam"])]
+        den = [f"(1.0D - {double_sql(cur['lam'])})"]
         for f in fields:
-            # backtick-quoted: a field name need not be a bare SQL
-            # identifier (``first-name``)
-            a = "`" + f"agree_{f}".replace("`", "``") + "`"
+            # quoted: a field name need not be a bare SQL identifier
+            # (``first-name``, ``first name``)
+            a = ident(f"agree_{f}")
             num.append(
-                f"(CASE WHEN {a} = 1 THEN {_dl(cur[f'm_{f}'])}"
-                f" WHEN {a} = 0 THEN (1.0D - {_dl(cur[f'm_{f}'])})"
+                f"(CASE WHEN {a} = 1 THEN {double_sql(cur[f'm_{f}'])}"
+                f" WHEN {a} = 0 THEN (1.0D - {double_sql(cur[f'm_{f}'])})"
                 " ELSE 1.0D END)"
             )
             den.append(
-                f"(CASE WHEN {a} = 1 THEN {_dl(cur[f'u_{f}'])}"
-                f" WHEN {a} = 0 THEN (1.0D - {_dl(cur[f'u_{f}'])})"
+                f"(CASE WHEN {a} = 1 THEN {double_sql(cur[f'u_{f}'])}"
+                f" WHEN {a} = 0 THEN (1.0D - {double_sql(cur[f'u_{f}'])})"
                 " ELSE 1.0D END)"
             )
         n = " * ".join(num)

@@ -32,9 +32,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nass_summary_spark.functions.lits import (
-    double_array,
     double_array2d,
     double_array2d_sql,
+    ident,
+    nearest_rank_sql,
     sqdist_lit_sql,
 )
 from nass_summary_spark.functions.smalldf import local_struct_df
@@ -112,20 +113,24 @@ def pq_train(
         .collect()
     )
     x = np.asarray([[float(v) for v in r["v"]] for r in rows])
-    books: list[list[list[float]]] = []
-    for s in range(m):
-        sub = x[:, s * dsub : (s + 1) * dsub]
-        # deterministic init: first ksub distinct-ish sample rows
-        c = sub[:ksub].copy()
-        for _ in range(n_iter):
-            d2 = ((sub[:, None, :] - c[None]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for j in range(ksub):
-                mask = a == j
-                if mask.any():
-                    c[j] = sub[mask].mean(axis=0)
-        books.append([[float(v) for v in row] for row in c])
-    return books
+    books = [_lloyd(x[:, s * dsub : (s + 1) * dsub], ksub, n_iter) for s in range(m)]
+    return [[[float(v) for v in row] for row in c] for c in books]
+
+
+def _lloyd(data, k: int, iters: int):
+    """Driver-side numpy Lloyd's k-means over the rows of ``data``:
+    deterministic init from the first ``k`` rows, ``iters`` rounds of
+    nearest-centroid assignment and mean update; an empty cell keeps
+    its centroid. Returns the ``k × dim`` centroid array."""
+    c = data[:k].copy()
+    for _ in range(iters):
+        d2 = ((data[:, None, :] - c[None]) ** 2).sum(axis=2)
+        a = d2.argmin(axis=1)
+        for j in range(k):
+            mask = a == j
+            if mask.any():
+                c[j] = data[mask].mean(axis=0)
+    return c
 
 
 def _lut_columns(vec_sql: str, books: list[list[list[float]]], prefix: str = "lut"):
@@ -153,32 +158,6 @@ def _lut_columns(vec_sql: str, books: list[list[list[float]]], prefix: str = "lu
     ]
 
 
-def _nearest_code(subvec, centroids: list[list[float]]):
-    """Index of the nearest centroid — an ``array_sort`` over ksub
-    literal (distance, index) structs, evaluated JVM-side."""
-    scored = F.array_sort(
-        F.array(
-            *[
-                F.struct(
-                    F.aggregate(
-                        F.zip_with(
-                            subvec,
-                            double_array(c),
-                            lambda v, p: (v.cast("double") - p)
-                            * (v.cast("double") - p),
-                        ),
-                        F.lit(0.0),
-                        lambda acc, x: acc + x,
-                    ).alias("d"),
-                    F.lit(i).cast("int").alias("c"),
-                )
-                for i, c in enumerate(centroids)
-            ]
-        )
-    )
-    return scored[0]["c"]
-
-
 def pq_encode(
     df: DataFrame,
     id_col: str,
@@ -203,8 +182,11 @@ def pq_encode(
     if not arrow:
         out = df.select(F.col(id_col), F.col(vec_col))
         for s, book in enumerate(codebooks):
-            sub = F.slice(F.col(vec_col), s * dsub + 1, dsub)
-            out = out.withColumn(f"code{s}", _nearest_code(sub, book))
+            sub = f"slice({ident(vec_col)},{s * dsub + 1},{dsub})"
+            out = out.withColumn(
+                f"code{s}",
+                F.expr(f"element_at({nearest_rank_sql(sub, book)}, 1).cell"),
+            )
         return out.drop(vec_col)
 
     from typing import Iterator
@@ -295,7 +277,7 @@ def _adc_rank(
         # distributed LUT build: one row per query carrying its m
         # ksub-length tables; the codebooks are the only literals
         lut_rel = queries.select(
-            F.col(id_col).alias("query_id"), *_lut_columns(f"`{vec_col}`", books)
+            F.col(id_col).alias("query_id"), *_lut_columns(ident(vec_col), books)
         )
         dist = None
         for s in range(m):
@@ -443,21 +425,10 @@ def _ivfpq_train(
     )
     x = np.asarray([[float(v) for v in r["v"]] for r in rows])
 
-    def lloyd(data, kk, iters):
-        c = data[:kk].copy()
-        for _ in range(iters):
-            d2 = ((data[:, None, :] - c[None]) ** 2).sum(axis=2)
-            a = d2.argmin(axis=1)
-            for j in range(kk):
-                mask = a == j
-                if mask.any():
-                    c[j] = data[mask].mean(axis=0)
-        return c
-
-    coarse = lloyd(x, n_cells, n_iter)
+    coarse = _lloyd(x, n_cells, n_iter)
     resid = x - coarse[((x[:, None, :] - coarse[None]) ** 2).sum(axis=2).argmin(axis=1)]
     books = [
-        lloyd(resid[:, s * dsub : (s + 1) * dsub], ksub, n_iter) for s in range(m)
+        _lloyd(resid[:, s * dsub : (s + 1) * dsub], ksub, n_iter) for s in range(m)
     ]
     return (
         [[float(v) for v in c] for c in coarse],
@@ -533,7 +504,6 @@ def _ivfpq_rank(
     code_id_col = code_id_col or id_col
     m = len(books_l)
     dsub = len(books_l[0][0])
-    n_cells = len(coarse_l)
     coarse = np.asarray(coarse_l)
     collect_queries = _resolve_collect(queries, collect_queries)
 
@@ -578,26 +548,14 @@ def _ivfpq_rank(
         lut_side = F.broadcast(probe_df)
     else:
         # distributed probe assignment + LUT build: nearest-nprobe
-        # cells via an array_sort over (distance, cell) structs, the
-        # per-probe residual via the coarse-centroid literal, and the
-        # m ksub-length tables as expressions in the query scan
-        # coarse (distance, cell) structs and the per-probe residual
-        # rendered as SQL text — the per-cell HOF builds cost 2 py4j
-        # lambda creations each (see lits.sqdist_lit_sql); fold
-        # arithmetic unchanged
-        cd = F.expr(
-            "array("
-            + ",".join(
-                f"named_struct('d',{sqdist_lit_sql(f'`{vec_col}`', coarse_l[c])},"
-                f"'cell',CAST({c} AS INT))"
-                for c in range(n_cells)
-            )
-            + ")"
-        )
+        # cells (lits.nearest_rank_sql), the per-probe residual via
+        # the coarse-centroid literal, and the m ksub-length tables as
+        # expressions in the query scan
+        cd = F.expr(nearest_rank_sql(ident(vec_col), coarse_l))
         probes_rel = queries.select(
             F.col(id_col).alias("query_id"),
             F.col(vec_col).alias("__qv"),
-            F.explode(F.slice(F.array_sort(cd), 1, nprobe)).alias("p"),
+            F.explode(F.slice(cd, 1, nprobe)).alias("p"),
         ).select("query_id", "__qv", F.col("p.cell").alias("cell"))
         resid_sql = (
             f"zip_with(`__qv`,element_at({double_array2d_sql(coarse_l)},"

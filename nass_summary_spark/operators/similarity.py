@@ -19,7 +19,12 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from nass_summary_spark.functions.lits import dot_lit_sql, sqdist_lit_sql
+from nass_summary_spark.functions.lits import (
+    bigint_sql,
+    dot_lit_sql,
+    ident,
+    nearest_rank_sql,
+)
 from nass_summary_spark.functions.vectors import cosine_similarity
 
 
@@ -53,7 +58,7 @@ def _sign_bucket(vec_sql: str, planes: list[list[float]]):
     (dot_lit_sql), so bucket values are unchanged."""
     terms = " + ".join(
         f"(CASE WHEN {dot_lit_sql(vec_sql, plane)} >= 0 "
-        f"THEN {1 << i}L ELSE 0L END)"
+        f"THEN {bigint_sql(1 << i)} ELSE 0L END)"
         for i, plane in enumerate(planes)
     )
     return F.expr(f"CAST(0 AS BIGINT) + {terms}")
@@ -122,7 +127,7 @@ def knn_lsh(
     def bucketize(df: DataFrame, idc: str, out_id: str) -> DataFrame:
         buckets = F.array(
             *[
-                F.struct(F.lit(t).alias("table"), _sign_bucket(f"`{vec_col}`", planes).alias("bucket"))
+                F.struct(F.lit(t).alias("table"), _sign_bucket(ident(vec_col), planes).alias("bucket"))
                 for t, planes in enumerate(tables)
             ]
         )
@@ -219,7 +224,7 @@ def knn_ivf(
         scored = F.expr(
             "array("
             + ",".join(
-                f"named_struct('neg',-({dot_lit_sql(f'`{vec_col}`', c)}),"
+                f"named_struct('neg',-({dot_lit_sql(ident(vec_col), c)}),"
                 f"'cell',CAST({i} AS INT))"
                 for i, c in enumerate(centroids)
             )
@@ -253,47 +258,14 @@ def knn_ivf(
     )
 
 
-def centroid_matrix_sql(centroids: list[list[float]]) -> str:
-    """The k×dim centroid matrix as ONE SQL array-of-arrays literal.
-    Building it from per-element ``F.lit`` costs ~k·dim py4j
-    round-trips (the r5 nearest_zone tarpit — measured seconds of
-    pure driver time at 512 elements); one expr string parses in
-    milliseconds and constant-folds identically."""
-    return (
-        "array("
-        + ",".join(
-            "array(" + ",".join(f"{float(x)!r}D" for x in c) + ")"
-            for c in centroids
-        )
-        + ")"
-    )
-
-
-def cell_distance_rank_sql(vec_col: str, centroids: list[list[float]]) -> str:
-    """SQL expr: cells sorted ascending by squared L2 distance of
-    ``vec_col`` to each centroid (tie → lower cell id) — the shared
-    ranking rule of :func:`assign_cells` (take the first) and the
-    IVF probe (take the first nprobe). Arithmetic is byte-identical
-    to the previous per-literal form: (CAST(v AS DOUBLE) − p)²
-    accumulated left-to-right from 0.0. ``vec_col`` is backtick-
-    quoted so names F.col accepts (spaces, keywords) keep working;
-    dotted names need the caller to pre-alias (SQL identifier
-    semantics)."""
-    return f"""array_sort(transform({centroid_matrix_sql(centroids)},
-      (c, i) -> named_struct(
-        'd', aggregate(zip_with(`{vec_col}`, c,
-               (v, p) -> (CAST(v AS DOUBLE) - p) * (CAST(v AS DOUBLE) - p)),
-             0D, (acc, x) -> acc + x),
-        'cell', CAST(i AS INT))))"""
-
-
 def assign_cells(df: DataFrame, vec_col: str, centroids: list[list[float]]) -> DataFrame:
     """Nearest-centroid assignment: adds ``cell`` (int) and ``dist2``
     (double) columns. Centroids are one literal SQL expression —
     broadcast with the plan itself, so assignment is a pure map
-    stage (and the plan builds in milliseconds at any k·dim)."""
+    stage (and the plan builds in milliseconds at any k·dim). Ties
+    go to the lower cell (lits.nearest_rank_sql)."""
     best = F.expr(
-        f"element_at({cell_distance_rank_sql(vec_col, centroids)}, 1)"
+        f"element_at({nearest_rank_sql(ident(vec_col), centroids)}, 1)"
     )
     return (
         df.withColumn("__best", best)
@@ -387,20 +359,7 @@ def semantic_dedup_pairs(
     embedding-level dedup at scale. Returns a SUBSET of the exact
     pairs (never invents one); recall is measured in tests.
     """
-    # the whole (distance, cell) struct array in ONE parse — the
-    # per-centroid _sq_dist HOF build cost 2 py4j lambda creations
-    # per cell (see lits.sqdist_lit_sql); fold arithmetic unchanged
-    scored = F.array_sort(
-        F.expr(
-            "array("
-            + ",".join(
-                f"named_struct('d',{sqdist_lit_sql(f'`{vec_col}`', c)},"
-                f"'cell',CAST({i} AS INT))"
-                for i, c in enumerate(centroids)
-            )
-            + ")"
-        )
-    )
+    scored = F.expr(nearest_rank_sql(ident(vec_col), centroids))
     assigned = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("vec"),

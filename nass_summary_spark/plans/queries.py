@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from nass_summary_spark.functions.lits import ident
 from nass_summary_spark.functions.parsing import epoch_micros, safe_number
 from nass_summary_spark.functions.text import (
     BPE_ISH_RE,
@@ -453,7 +454,7 @@ def crosstab_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     }
     out = wide
     for old, new in renames.items():
-        out = out.withColumn(new, F.col(f"`{old}`").cast("double")).drop(old)
+        out = out.withColumn(new, F.col(ident(old)).cast("double")).drop(old)
     return out
 
 

@@ -1982,7 +1982,8 @@ def test_fellegi_sunter_em_marginalizes_missing(spark):
 
 def test_fellegi_sunter_em_quotes_field_names(spark):
     """A field name that is not a bare SQL identifier fits exactly like
-    the same data under a plain name (the E-step renders SQL text)."""
+    the same data under a plain name (the E-step renders SQL text, the
+    parameter frame a DDL schema)."""
     from nass_summary_spark.operators.linkage import fellegi_sunter_em
 
     rows = [(1, 1)] * 6 + [(1, 0)] * 3 + [(0, 1)] * 4 + [(0, 0)] * 20
@@ -1994,7 +1995,27 @@ def test_fellegi_sunter_em_quotes_field_names(spark):
             for r in fellegi_sunter_em(df, [name, "zip"], n_iter=3).collect()
         }
 
-    assert fit("first-name") == fit("first_name")
+    assert fit("first-name") == fit("first name") == fit("first_name")
+
+
+def test_assign_cells_on_backticked_column(spark):
+    """A vector column whose name holds a backtick is quoted, not
+    spliced: cells and distances match the same data under a plain
+    name."""
+    from nass_summary_spark.operators.similarity import assign_cells
+
+    # [0.5, 0.5] is equidistant from all three: the tie goes to cell 0
+    rows = [([0.0, 0.0],), ([1.0, 0.9],), ([0.1, 1.0],), ([0.5, 0.5],)]
+    centroids = [[0.0, 0.0], [1.0, 1.0], [0.0, 1.0]]
+
+    def cells(name):
+        df = spark.createDataFrame(rows, [name])
+        out = assign_cells(df, name, centroids)
+        return sorted((r["cell"], r["dist2"]) for r in out.collect())
+
+    got = cells("v`x")
+    assert got == cells("v")
+    assert [c for c, _ in got] == [0, 0, 1, 2]
 
 
 def test_fellegi_sunter_null_semantics(spark):
