@@ -18,11 +18,6 @@ from pyspark.sql import functions as F
 SUPPRESSED_RE = r"^\s*\(.*\)\s*$"
 
 
-def is_suppressed(value: Column | str) -> Column:
-    """True when a NASS value string is a suppression marker."""
-    return F.col(value).rlike(SUPPRESSED_RE) if isinstance(value, str) else value.rlike(SUPPRESSED_RE)
-
-
 def safe_number(value: Column | str) -> Column:
     """Parse a NASS value string to double, NULL for suppressed /
     unparsable values.

@@ -1,5 +1,5 @@
 from nass_summary_spark.operators.rollup import leaf_rows, path_prefixes, path_rollup
-from nass_summary_spark.operators.merge import total_and_sum_merge
+from nass_summary_spark.operators.merge import presence_catalog, total_and_sum_merge
 from nass_summary_spark.operators.pivot import class_pivot, crosstab
 from nass_summary_spark.operators.fallback import multilevel_fallback
 from nass_summary_spark.operators.weighted import fractional_weighted_rollup
@@ -21,6 +21,7 @@ __all__ = [
     "path_rollup",
     "leaf_rows",
     "total_and_sum_merge",
+    "presence_catalog",
     "class_pivot",
     "crosstab",
     "multilevel_fallback",

@@ -335,22 +335,6 @@ def _ear_clip(pts) -> list[tuple[int, int, int]]:
     return tris
 
 
-def _general_clip_area(subject, clip) -> float:
-    """Plain-Python area of ``subject ∩ clip`` for an ARBITRARY
-    simple clip ring (either winding): orient CCW, ear-clip into
-    triangles, sum the certified convex-piece areas. The triangles
-    partition the clip interior, so the piece areas add exactly (up
-    to IEEE summation; callers landing on integer closed forms round
-    once at the end)."""
-    pts = list(clip)
-    if _signed_area2_py(pts) < 0:
-        pts = pts[::-1]
-    return sum(
-        _sh_clip_area(subject, [pts[a], pts[b], pts[c]])
-        for a, b, c in _ear_clip(pts)
-    )
-
-
 def intersection_area_general(subject: Column, clip: Column) -> Column:
     """Area of ``subject ∩ clip`` for an ARBITRARY simple clip ring —
     lifts ``clip_convex``'s convex-ring restriction (real county/zone
@@ -429,20 +413,6 @@ def point_in_poly(px: Column, py: Column, ring: Column) -> Column:
             F.lit(1),
         ).otherwise(F.lit(0)),
     )
-    return hits % 2 == 1
-
-
-def _pip_py(px, py, ring) -> bool:
-    # mirrors point_in_poly's expression order exactly
-    n = len(ring)
-    hits = 0
-    for i in range(n):
-        a = ring[i]
-        b = ring[(i + 1) % n]
-        if (a[1] > py) != (b[1] > py) and px < a[0] + (py - a[1]) * (
-            b[0] - a[0]
-        ) / (b[1] - a[1]):
-            hits += 1
     return hits % 2 == 1
 
 

@@ -4,12 +4,20 @@ Reference: ``harvest_total_and_sum`` (nass.sql:236-249) FULL OUTER
 JOINs directly-reported statistics with leaf-rollup-derived ones and
 reconciles with ``greatest``; ``yield_total_and_sum`` (nass.sql:360)
 and ``price_total_and_sum`` (nass.sql:438) use ``coalesce``
-(reported wins, derived fills gaps).
+(reported wins, derived fills gaps). Callers of
+:func:`total_and_sum_merge`: the three ``plans.nass.*_total_and_sum``
+functions and the ``total_and_sum_merge`` query.
+
+``commodity_list`` (nass.sql:453-464) FULL OUTER JOINs the distinct
+commodity sets of three views into a presence catalog. Callers of
+:func:`presence_catalog`: ``plans.nass.commodity_list`` and the
+``catalog_presence`` query.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -29,7 +37,10 @@ def total_and_sum_merge(
 
     how='greatest' → ``greatest(t.v, s.v)`` (null-tolerant, like SQL
     GREATEST which skips NULLs); how='coalesce' → reported wins.
+    Any other ``how`` raises ``ValueError``.
     """
+    if how not in ("greatest", "coalesce"):
+        raise ValueError(f"how must be greatest or coalesce, got {how!r}")
     t = reported.select(
         *keys, F.lit(True).alias("__rep"), *[F.col(v).alias(f"__t_{v}") for v in values]
     )
@@ -42,6 +53,22 @@ def total_and_sum_merge(
         merged = F.greatest(tv, sv) if how == "greatest" else F.coalesce(tv, sv)
         cols += [tv.alias(f"t_{v}"), sv.alias(f"s_{v}"), merged.alias(v)]
     return joined.select(*cols)
+
+
+def presence_catalog(key: str, sets: Mapping[str, DataFrame]) -> DataFrame:
+    """The presence-catalog shape: the distinct ``key`` values of each
+    frame in ``sets`` (name -> frame), FULL OUTER JOINed on ``key``,
+    with one boolean column per name that is true where the key
+    occurs in that frame."""
+    marks = [f"__in{i}" for i in range(len(sets))]
+    frames = [
+        df.select(key).distinct().withColumn(m, F.lit(True))
+        for m, df in zip(marks, sets.values())
+    ]
+    joined = reduce(lambda a, b: a.join(b, on=key, how="full_outer"), frames)
+    return joined.select(
+        key, *[F.col(m).isNotNull().alias(name) for m, name in zip(marks, sets)]
+    )
 
 
 def snapshot_diff(

@@ -4,12 +4,15 @@ Reference shapes:
 - ``yield_by_type`` (nass.sql:77-106): per-class aggregates FULL
   OUTER JOINed into one wide row — in Spark this is conditional
   aggregation (``agg(avg(when(cls, v)))``): one scan, one shuffle,
-  no joins, map-side partials.
+  no joins, map-side partials. Callers: ``plans.nass.yield_by_type``
+  and the ``irrigation_split`` query.
 - ``swap_net`` / ``swap_price`` / ``swap_yield`` (swap.sql:215-397):
   a location × commodity ``crosstab()`` matrix —
   ``groupBy().pivot(col, values).agg()``. Passing the explicit value
   list skips Spark's extra distinct-scan job and keeps the column
   set stable (the reference also hardcodes the column list).
+  Callers: ``plans.swap.run_swap_pipeline`` (the three crosstabs) and
+  the ``crosstab_matrix`` query.
 """
 
 from __future__ import annotations

@@ -31,20 +31,19 @@ from pyspark.sql import functions as F
 from nass_summary_spark.functions.fixpoint import semi_naive
 
 
-def path_prefixes(path: Column | str, include_empty: bool = True, include_self: bool = True) -> Column:
-    """All prefixes of an ``array<string>`` path.
+def path_prefixes(path: Column | str, include_self: bool = True) -> Column:
+    """All prefixes of an ``array<string>`` path, the empty one first.
 
     ``['A','B','C']`` → ``[[], ['A'], ['A','B'], ['A','B','C']]``
-    (bounds controlled by the flags).
+    (the path itself only with ``include_self``).
     """
     col = F.col(path) if isinstance(path, str) else path
-    lo = 0 if include_empty else 1
     hi = F.size(col) if include_self else F.size(col) - 1
-    # guard: Spark's sequence(lo, hi) runs DESCENDING when hi < lo,
-    # which would fabricate bogus prefixes for short paths
+    # guard: Spark's sequence(0, hi) runs DESCENDING when hi < 0,
+    # which would fabricate bogus prefixes for an empty path
     return F.when(
-        hi >= F.lit(lo),
-        F.transform(F.sequence(F.lit(lo), hi), lambda n: F.slice(col, 1, n)),
+        hi >= F.lit(0),
+        F.transform(F.sequence(F.lit(0), hi), lambda n: F.slice(col, 1, n)),
     ).otherwise(F.array().cast("array<array<string>>"))
 
 
@@ -53,9 +52,6 @@ def path_rollup(
     path_col: str,
     keys: Sequence[str],
     aggs: dict[str, tuple[str, str]],
-    include_empty: bool = True,
-    include_self: bool = True,
-    prefix_out: str = "path",
     string_sep: str | None = None,
     max_depth: int | None = None,
 ) -> DataFrame:
@@ -65,8 +61,6 @@ def path_rollup(
     ----------
     aggs: output_name -> (agg_fn, input_col); agg_fn in
         {sum, avg, max, min, count}.
-    prefix_out: name of the output prefix column (``array<string>``,
-        or joined string when ``string_sep`` is set).
     string_sep: when set, prefixes are emitted as ``sep``-joined
         STRINGS before the shuffle. Grouping/shuffling on strings is
         markedly cheaper than on arrays (~3.5× on the hash aggregate
@@ -79,32 +73,32 @@ def path_rollup(
         Paths longer than max_depth contribute only their first
         max_depth prefixes.
 
-    Each input row contributes to every prefix of its ``path_col``;
-    the result has one row per (keys, prefix).
+    Each input row contributes to every prefix of its ``path_col``,
+    the empty one and the path itself included; the result has one
+    row per (keys, prefix), the prefix in column ``path``
+    (``array<string>``, or the joined string when ``string_sep`` is
+    set).
     """
     col = F.col(path_col)
-    if string_sep is not None and max_depth is not None and include_self:
-        lo = 0 if include_empty else 1
+    if string_sep is not None and max_depth is not None:
         all_prefixes = F.array(
-            *[F.concat_ws(string_sep, F.slice(col, 1, i)) for i in range(lo, max_depth + 1)]
+            *[F.concat_ws(string_sep, F.slice(col, 1, i)) for i in range(max_depth + 1)]
         )
-        prefixes = F.slice(all_prefixes, 1, F.size(col) + (1 - lo))
+        prefixes = F.slice(all_prefixes, 1, F.size(col) + 1)
     else:
-        prefixes = path_prefixes(
-            path_col, include_empty=include_empty, include_self=include_self
-        )
+        prefixes = path_prefixes(path_col)
         if string_sep is not None:
             # lambda touches only its own variable — stays linear
             prefixes = F.transform(prefixes, lambda p: F.array_join(p, string_sep))
     exploded = df.select(
         *keys,
-        F.explode(prefixes).alias(prefix_out),
+        F.explode(prefixes).alias("path"),
         *[F.col(c).alias(c) for c in {src for _, src in aggs.values()} if c not in keys],
     )
     agg_exprs = [
         getattr(F, fn)(F.col(src)).alias(name) for name, (fn, src) in aggs.items()
     ]
-    return exploded.groupBy(*keys, prefix_out).agg(*agg_exprs)
+    return exploded.groupBy(*keys, "path").agg(*agg_exprs)
 
 
 def leaf_rows(df: DataFrame, path_col: str, keys: Sequence[str]) -> DataFrame:
@@ -119,9 +113,7 @@ def leaf_rows(df: DataFrame, path_col: str, keys: Sequence[str]) -> DataFrame:
     parents = (
         df.select(
             *keys,
-            F.explode(
-                path_prefixes(path_col, include_empty=True, include_self=False)
-            ).alias(path_col),
+            F.explode(path_prefixes(path_col, include_self=False)).alias(path_col),
         )
         .distinct()
     )
@@ -133,7 +125,7 @@ def tree_rollup_avg(
     path_col: str,
     keys: Sequence[str],
     values: Sequence[str],
-    max_depth: int | None = None,
+    max_depth: int,
 ) -> DataFrame:
     """Average-of-averages tree rollup (yield_by_leaves
     `nass.sql:322`, price_by_leaves `nass.sql:409` semantics): a
@@ -152,12 +144,9 @@ def tree_rollup_avg(
     Unlike sum-rollups this is inherently level-ordered, but the
     depth of real taxonomies is tiny (≤ 5 for NASS commodities), so
     the loop is bounded and each level is one narrow aggregation.
-    ``max_depth`` defaults to one driver-side scalar lookup.
+    ``max_depth`` is the length of the longest path; rows with longer
+    paths are ignored.
     """
-    if max_depth is None:
-        max_depth = (
-            df.select(F.max(F.size(F.col(path_col))).alias("d")).collect()[0]["d"] or 0
-        )
     keys = list(keys)
     avgs = [F.avg(F.col(v)).alias(v) for v in values]
     level = df.where(F.size(F.col(path_col)) == max_depth).select(

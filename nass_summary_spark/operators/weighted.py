@@ -5,6 +5,9 @@ zones by area fraction; county statistics are re-aggregated to zones
 as ``sum(value * fraction) having sum > 0``. The geometry
 (PostGIS ``st_area``) produces the weight table; the relational part
 is a weighted re-aggregation, which is what this operator provides.
+Callers: ``plans.cmz.cmz_commodity_total_harvest`` and the
+``fractional_weighted_rollup`` query; both round first and then
+apply the ``> 0`` filter themselves.
 
 Weight tables are tiny (one row per (child, parent) pair of a
 geographic crosswalk) → always broadcast; the fact side aggregates
@@ -28,24 +31,13 @@ def fractional_weighted_rollup(
     weight_col: str,
     keys: Sequence[str],
     values: Sequence[str],
-    min_total: float | None = 0.0,
-    cast_int: bool = False,
 ) -> DataFrame:
     """Reassign ``facts`` rows keyed by ``child_key`` to
-    ``parent_key`` groups with fractional weights and sum.
-
-    cast_int mirrors the reference's ``::integer`` output casts
-    (nass_cmz.sql:22-24); ``min_total`` mirrors ``having sum>0``.
-    """
+    ``parent_key`` groups with fractional weights and sum:
+    one ``sum(v * weight)`` per value, grouped by
+    (``parent_key``, ``keys``)."""
     w = broadcast(weights.select(child_key, parent_key, weight_col))
     joined = facts.join(w, on=child_key, how="inner")
-    aggs = []
-    for v in values:
-        expr = F.sum(F.col(v) * F.col(weight_col))
-        if cast_int:
-            expr = expr.cast("bigint")
-        aggs.append(expr.alias(v))
-    out = joined.groupBy(parent_key, *keys).agg(*aggs)
-    if min_total is not None and values:
-        out = out.where(F.col(values[-1]) > min_total)
-    return out
+    return joined.groupBy(parent_key, *keys).agg(
+        *[F.sum(F.col(v) * F.col(weight_col)).alias(v) for v in values]
+    )

@@ -72,8 +72,6 @@ def cmz_commodity_total_harvest(
         weight_col="fraction",
         keys=["commodity", "year"],
         values=["irrigated", "non_irr", "total"],
-        min_total=None,
-        cast_int=False,
     )
 
     # ``::integer`` on numeric ROUNDS in PostgreSQL (half away from

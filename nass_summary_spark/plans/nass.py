@@ -16,8 +16,12 @@ declarative DataFrame plan: hierarchy rollups replay the reference
 recursion exactly — including PostgreSQL's generation-cohort
 evaluation quirks — via tree_rollup_pg (operators/rollup.py; this
 is what the reference's shipped CSV exports encode, and the yield
-chain matches commodity_yield.csv 100%), pivots use conditional
-aggregation or groupBy().pivot(), and small sides are broadcast.
+chain matches commodity_yield.csv 100%), and small sides are
+broadcast. Each recurring reference shape is built by its one
+operator: the per-class pivot (operators/pivot.py), the
+county → district → state fallback (operators/fallback.py), the
+reported-vs-derived merge and the presence catalog
+(operators/merge.py).
 """
 
 from __future__ import annotations
@@ -28,12 +32,15 @@ from pyspark.sql.functions import broadcast
 
 from nass_summary_spark.functions.parsing import (
     commodity_name,
+    dataitem_paths,
     location_code,
     safe_number,
     strip_measured_in,
 )
-from nass_summary_spark.operators.merge import total_and_sum_merge
-from nass_summary_spark.operators.rollup import path_rollup, tree_rollup_pg
+from nass_summary_spark.operators.fallback import multilevel_fallback
+from nass_summary_spark.operators.merge import presence_catalog, total_and_sum_merge
+from nass_summary_spark.operators.pivot import class_pivot
+from nass_summary_spark.operators.rollup import tree_rollup_pg
 from nass_summary_spark.sources.readers import trim_all_strings
 
 #: Quick Stats CSV headers → canonical column names
@@ -180,27 +187,22 @@ _PRACTICE_TOTAL = ["ALL PRODUCTION PRACTICES", "IN THE OPEN"]
 
 def yield_by_type(explicit_yield_df: DataFrame) -> DataFrame:
     """nass.yield_by_type (nass.sql:77-106): per-practice-class
-    average yields in one conditional aggregation (the reference
-    FULL OUTER JOINs three subqueries; identical result, one
-    shuffle)."""
+    average yields in one conditional aggregation. The reference
+    FULL OUTER JOINs three grouped subqueries, so each key occurs
+    once per class and the class pivot gives the identical result
+    in one shuffle."""
     p = F.col("prodn_practice_desc")
-    return (
-        explicit_yield_df.where(
-            p.isin(_PRACTICE_NON_IRR + _PRACTICE_IRR + _PRACTICE_TOTAL)
-        )
-        .groupBy("year", "commodity", "location", "unit")
-        .agg(
-            F.round(F.avg(F.when(p.isin(_PRACTICE_NON_IRR), F.col("value"))), 2).alias(
-                "nonirrigated"
-            ),
-            F.round(F.avg(F.when(p.isin(_PRACTICE_IRR), F.col("value"))), 2).alias(
-                "irrigated"
-            ),
-            F.round(F.avg(F.when(p.isin(_PRACTICE_TOTAL), F.col("value"))), 2).alias(
-                "total"
-            ),
-        )
+    classes = {
+        "nonirrigated": p.isin(_PRACTICE_NON_IRR),
+        "irrigated": p.isin(_PRACTICE_IRR),
+        "total": p.isin(_PRACTICE_TOTAL),
+    }
+    keys = ["year", "commodity", "location", "unit"]
+    rows = explicit_yield_df.where(
+        p.isin(_PRACTICE_NON_IRR + _PRACTICE_IRR + _PRACTICE_TOTAL)
     )
+    wide = class_pivot(rows, keys, classes, "value", agg_fn="avg")
+    return wide.select(*keys, *[F.round(F.col(c), 2).alias(c) for c in classes])
 
 
 def stats_location(quickstats: DataFrame) -> DataFrame:
@@ -213,15 +215,15 @@ def stats_location(quickstats: DataFrame) -> DataFrame:
         & (F.col("program") == "CENSUS")
         & _not_suppressed()
     )
-    di = F.split(F.col("dataitem"), " - ")
+    commodity_a, item_a = dataitem_paths("dataitem")
     return df.select(
         F.col("commodity"),
         location_code("statefips", "countycode", "agdistrictcode").alias("location"),
         F.col("year"),
         safe_number("value").alias("value"),
-        F.split(F.element_at(di, 1), ", ").alias("commodity_a"),
-        F.split(F.element_at(di, 2), ", ").alias("item_a"),
-        F.element_at(di, 2).alias("item"),
+        commodity_a.alias("commodity_a"),
+        item_a.alias("item_a"),
+        F.element_at(F.split(F.col("dataitem"), " - "), 2).alias("item"),
         F.col("dataitem"),
     ).distinct()
 
@@ -368,12 +370,22 @@ def harvest_total_and_sum(hli: DataFrame) -> DataFrame:
     )
 
 
+def _with_display_name(df: DataFrame, *cols: str) -> DataFrame:
+    """The display name of the commodity_harvest, commodity_yield and
+    commodity_price views: the commodity and its subcommodity path
+    joined with ``', '``, as ``commodity``, followed by ``cols``."""
+    return df.select(
+        F.array_join(F.concat(F.array("commodity"), "subcommodity"), ", ").alias(
+            "commodity"
+        ),
+        *cols,
+    )
+
+
 def commodity_harvest(hts: DataFrame) -> DataFrame:
     """nass.commodity_harvest (nass.sql:251-257)."""
-    return hts.select(
-        F.array_join(
-            F.concat(F.array("commodity"), "subcommodity"), ", "
-        ).alias("commodity"),
+    return _with_display_name(
+        hts,
         "location",
         "year",
         "reported",
@@ -481,10 +493,8 @@ def yield_total_and_sum(yli: DataFrame) -> DataFrame:
 
 def commodity_yield(yts: DataFrame) -> DataFrame:
     """nass.commodity_yield (nass.sql:378-383)."""
-    return yts.select(
-        F.array_join(F.concat(F.array("commodity"), "subcommodity"), ", ").alias(
-            "commodity"
-        ),
+    return _with_display_name(
+        yts,
         "location",
         "year",
         "unit",
@@ -552,34 +562,14 @@ def price_total_and_sum(ploc: DataFrame) -> DataFrame:
 
 def commodity_price(pts: DataFrame) -> DataFrame:
     """nass.commodity_price (nass.sql:446-451)."""
-    return pts.select(
-        F.array_join(F.concat(F.array("commodity"), "subcommodity"), ", ").alias(
-            "commodity"
-        ),
-        "location",
-        "year",
-        "unit",
-        "price",
-    )
+    return _with_display_name(pts, "location", "year", "unit", "price")
 
 
 def commodity_list(
     ch: DataFrame, cy: DataFrame, cp: DataFrame
 ) -> DataFrame:
     """nass.commodity_list (nass.sql:453-464): presence catalog."""
-    h = ch.select("commodity").distinct().withColumn("__h", F.lit(True))
-    y = cy.select("commodity").distinct().withColumn("__y", F.lit(True))
-    p = cp.select("commodity").distinct().withColumn("__p", F.lit(True))
-    return (
-        h.join(y, on="commodity", how="full_outer")
-        .join(p, on="commodity", how="full_outer")
-        .select(
-            "commodity",
-            F.col("__h").isNotNull().alias("harvest"),
-            F.col("__y").isNotNull().alias("yield"),
-            F.col("__p").isNotNull().alias("price"),
-        )
-    )
+    return presence_catalog("commodity", {"harvest": ch, "yield": cy, "price": cp})
 
 
 def commodity_county_yield(
@@ -630,11 +620,14 @@ def commodity_county_yield(
             F.round(F.avg("none"), 2).alias("st_none"),
         )
     )
-    al = (
-        f.join(broadcast(u), on="commodity")
-        .join(broadcast(c), on=["commodity", "fips", "unit"], how="left")
-        .join(broadcast(a), on=["commodity", "adc", "unit"], how="left")
-        .join(broadcast(s), on=["commodity", "state", "unit"], how="left")
+    al = multilevel_fallback(
+        f.join(broadcast(u), on="commodity"),
+        [
+            (c, ["commodity", "fips", "unit"], "county_yield"),
+            (a, ["commodity", "adc", "unit"], "ad_yield"),
+            (s, ["commodity", "state", "unit"], "st_yield"),
+        ],
+        out_col="__grain_yield",
     )
     return al.join(
         sy, on=["commodity", "state", "unit"], how="full_outer"
@@ -644,7 +637,7 @@ def commodity_county_yield(
         "fips",
         "adc",
         "state",
-        F.coalesce("county_yield", "ad_yield", "st_yield", "st_partial").alias("yield"),
+        F.coalesce("__grain_yield", "st_partial").alias("yield"),
         "county_yield",
         "ad_yield",
         "st_yield",

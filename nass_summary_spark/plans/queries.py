@@ -26,6 +26,7 @@ from pyspark.sql.functions import broadcast
 
 from nass_summary_spark.functions.lits import ident
 from nass_summary_spark.functions.parsing import epoch_micros, safe_number
+from nass_summary_spark.functions.smalldf import local_struct_df
 from nass_summary_spark.functions.text import (
     BPE_ISH_RE,
     LANG_STOPWORDS,
@@ -44,7 +45,7 @@ from nass_summary_spark.operators.dedup import (
     simhash_pairs,
 )
 from nass_summary_spark.operators.fallback import multilevel_fallback
-from nass_summary_spark.operators.merge import total_and_sum_merge
+from nass_summary_spark.operators.merge import presence_catalog, total_and_sum_merge
 from nass_summary_spark.operators.pivot import class_pivot, crosstab
 from nass_summary_spark.operators.rollup import path_rollup
 from nass_summary_spark.operators.similarity import (
@@ -172,7 +173,6 @@ def harvest_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         path_col="path_arr",
         keys=[],
         aggs={"total_qty_dec": ("sum", "q"), "n_items": ("count", "q")},
-        prefix_out="path",
         string_sep=", ",
         max_depth=2,
     )
@@ -218,7 +218,6 @@ def rollup_unit_price(spark: SparkSession, sf_dir: str) -> DataFrame:
         path_col="path_arr",
         keys=[],
         aggs={"ep_sum": ("sum", "ep"), "q_sum": ("sum", "q")},
-        prefix_out="path",
         string_sep=", ",
         max_depth=2,
     )
@@ -610,7 +609,6 @@ def fractional_weighted_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         weight_col="frac",
         keys=[],
         values=["qty"],
-        min_total=None,
     )
     return out.select(
         "s_nationkey", F.round(F.col("qty"), 4).alias("weighted_qty")
@@ -631,20 +629,9 @@ def fractional_weighted_rollup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 def catalog_presence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Presence catalog (commodity_list, nass.sql:453): FULL OUTER
     JOIN of distinct key sets with boolean flags."""
-    c = _t(spark, sf_dir, "customer").select(
-        F.col("c_nationkey").alias("nationkey")
-    ).distinct().withColumn("__c", F.lit(True))
-    s = _t(spark, sf_dir, "supplier").select(
-        F.col("s_nationkey").alias("nationkey")
-    ).distinct().withColumn("__s", F.lit(True))
-    return (
-        c.join(s, on="nationkey", how="full_outer")
-        .select(
-            "nationkey",
-            F.col("__c").isNotNull().alias("has_customer"),
-            F.col("__s").isNotNull().alias("has_supplier"),
-        )
-    )
+    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
+    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
+    return presence_catalog("nationkey", {"has_customer": c, "has_supplier": s})
 
 
 @query(
@@ -2325,7 +2312,7 @@ def range_join_tiers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nass_summary_spark.operators.range_join import range_join_bucketed
 
     li = _t(spark, sf_dir, "lineitem").select("l_quantity")
-    tiers = spark.createDataFrame(_QTY_TIERS, ["tier", "lo", "hi"])
+    tiers = local_struct_df(spark, "tier string, lo double, hi double", _QTY_TIERS)
     joined = range_join_bucketed(
         li, "l_quantity", tiers, "lo", "hi", bucket_width=5.0,
         broadcast_intervals=True,
@@ -12346,7 +12333,6 @@ def domain_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministically from (source, doc_id) since the corpus has no
     URL column; the oracle replays regexp, blocklist, and cap
     verbatim. FULL oracle."""
-    from nass_summary_spark.functions.smalldf import local_struct_df
     from nass_summary_spark.operators.domain import domain_gate
 
     docs = _t(spark, sf_dir, "documents").select(

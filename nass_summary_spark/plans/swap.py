@@ -5,7 +5,8 @@ county → ag-district → state fallback, the irrigated/non-irrigated
 yield apportionment, and the location × commodity crosstab exports.
 
 Inputs are the nass-schema outputs (plans/nass.py) plus the
-usda_api table.
+usda_api table. The location × commodity crosstabs go through
+``operators.pivot.crosstab``.
 """
 
 from __future__ import annotations
@@ -15,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from nass_summary_spark.functions.parsing import commodity_name, safe_number
+from nass_summary_spark.functions.smalldf import local_struct_df
+from nass_summary_spark.operators.pivot import crosstab
 
 #: swap.counties (swap.sql:5-10) — the study-area county FIPS list.
 SWAP_COUNTIES = [
@@ -55,11 +58,11 @@ SWAP_COMMODITIES = [
 
 
 def counties_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(c,) for c in SWAP_COUNTIES], ["location"])
+    return local_struct_df(spark, "location string", [(c,) for c in SWAP_COUNTIES])
 
 
 def commodity_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame([(c,) for c in SWAP_COMMODITIES], ["commodity"])
+    return local_struct_df(spark, "commodity string", [(c,) for c in SWAP_COMMODITIES])
 
 
 def commodity_price_state(usda_api: DataFrame) -> DataFrame:
@@ -343,21 +346,6 @@ def swap_table(hy: DataFrame) -> DataFrame:
     return non_irr.unionByName(irr).unionByName(whole)
 
 
-def swap_crosstab(
-    swap_df: DataFrame, value_col: str, commodities: list[str]
-) -> DataFrame:
-    """swap_net / swap_price / swap_yield (swap.sql:215-351):
-    location × commodity matrix of one swap column. ``commodities``
-    is the pivot value list — the sorted distinct commodity set,
-    like the reference's hardcoded column list."""
-    return (
-        swap_df.groupBy("location")
-        .pivot("commodity", commodities)
-        .agg(F.first(value_col))
-        .orderBy("location")
-    )
-
-
 def run_swap_pipeline(
     spark: SparkSession,
     commodity_harvest: DataFrame,
@@ -376,10 +364,19 @@ def run_swap_pipeline(
     hpy = harvest_production_yield(commodity_harvest, commodities)
     hy = harvest_yield(h2012, counties, county_adc_df, yavg, hpy, ap, mp)
     sw = swap_table(hy)
-    # one dimension-sized collect shared by the three crosstabs
+    # swap_net / swap_price / swap_yield (swap.sql:215-351): location ×
+    # commodity matrices of one swap column each. The pivot values are
+    # the sorted distinct commodity set (like the reference's
+    # hardcoded column list), one dimension-sized collect for all three
     pivot_values = sorted(
         r["commodity"] for r in sw.select("commodity").distinct().collect()
     )
+
+    def matrix(value_col: str) -> DataFrame:
+        return crosstab(
+            sw, ["location"], "commodity", pivot_values, value_col, agg_fn="first"
+        ).orderBy("location")
+
     return {
         "commodity_price": price,
         "commodity_avg_price": ap,
@@ -389,7 +386,7 @@ def run_swap_pipeline(
         "harvest_production_yield": hpy,
         "harvest_yield": hy,
         "swap": sw,
-        "swap_net": swap_crosstab(sw, "acres", pivot_values),
-        "swap_price": swap_crosstab(sw, "price", pivot_values),
-        "swap_yield": swap_crosstab(sw, "yield", pivot_values),
+        "swap_net": matrix("acres"),
+        "swap_price": matrix("price"),
+        "swap_yield": matrix("yield"),
     }

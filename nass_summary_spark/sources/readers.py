@@ -110,11 +110,6 @@ def read_parquet_evolving(
     return spark.read.schema(target_schema).parquet(path)
 
 
-def load_tables(spark: SparkSession, sf_dir: str, names: Sequence[str]) -> dict[str, DataFrame]:
-    """Load the driver test tables from a scale-factor directory."""
-    return {n: spark.read.parquet(f"{sf_dir}/{n}.parquet") for n in names}
-
-
 def read_orc(spark: SparkSession, path: str, columns: Sequence[str] | None = None) -> DataFrame:
     """ORC source; column pruning and predicate pushdown work exactly
     as for parquet (both are columnar with per-stripe statistics)."""

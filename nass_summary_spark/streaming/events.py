@@ -30,6 +30,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from nass_summary_spark.functions.smalldf import local_struct_df
+
 
 def ensure_event_time(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Cast an event-time column to TIMESTAMP if it arrived as
@@ -299,7 +301,9 @@ EVENT_TYPE_DIM: list[tuple[str, str, float]] = [
 
 
 def _event_type_dim(spark) -> DataFrame:
-    return spark.createDataFrame(EVENT_TYPE_DIM, ["event_type", "category", "weight"])
+    return local_struct_df(
+        spark, "event_type string, category string, weight double", EVENT_TYPE_DIM
+    )
 
 
 def enrich_join_batch(events: DataFrame) -> DataFrame:

@@ -12,7 +12,7 @@ from nass_summary_spark.operators.dedup import (
     ngram_jaccard_pairs,
 )
 from nass_summary_spark.operators.fallback import multilevel_fallback
-from nass_summary_spark.operators.merge import total_and_sum_merge
+from nass_summary_spark.operators.merge import presence_catalog, total_and_sum_merge
 from nass_summary_spark.operators.pivot import class_pivot, crosstab
 from nass_summary_spark.operators.rollup import (
     leaf_rows,
@@ -35,8 +35,9 @@ def test_path_rollup_sums(spark):
     df = spark.createDataFrame(
         [(["A", "X"], 1.0), (["A", "Y"], 2.0), (["B"], 4.0)], ["p", "v"]
     )
-    out = path_rollup(df, "p", keys=[], aggs={"v": ("sum", "v")}, prefix_out="p")
-    got = {tuple(r["p"]): r["v"] for r in out.collect()}
+    out = path_rollup(df, "p", keys=[], aggs={"v": ("sum", "v")})
+    assert out.columns == ["path", "v"]
+    got = {tuple(r["path"]): r["v"] for r in out.collect()}
     assert got == {
         (): 7.0,
         ("A",): 3.0,
@@ -121,6 +122,26 @@ def test_observation_lives_only_in_fixpoint():
     assert users == ["functions/fixpoint.py"]
 
 
+def test_plans_build_pivots_only_through_operators():
+    """Crosstabs and class pivots are built by operators/pivot.py: no
+    module under plans/ calls DataFrame ``.pivot(`` itself."""
+    import ast
+    from pathlib import Path
+
+    import nass_summary_spark
+
+    plans = Path(nass_summary_spark.__file__).parent / "plans"
+    callers = sorted(
+        f"{p.name}:{node.lineno}"
+        for p in plans.rglob("*.py")
+        for node in ast.walk(ast.parse(p.read_text()))
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "pivot"
+    )
+    assert callers == []
+
+
 def test_total_and_sum_merge_greatest_and_flag(spark):
     t = spark.createDataFrame([("a", 5.0), ("b", None)], ["k", "v"])
     s = spark.createDataFrame([("a", 3.0), ("c", 7.0)], ["k", "v"])
@@ -133,6 +154,34 @@ def test_total_and_sum_merge_greatest_and_flag(spark):
     out = {r["k"]: r["v"] for r in
            total_and_sum_merge(t, s, ["k"], ["v"], how="coalesce").collect()}
     assert out == {"a": 5.0, "b": 7.0, "d": 2.0}
+    # a misspelt reconciliation fails instead of silently coalescing
+    with pytest.raises(ValueError, match="greatest or coalesce"):
+        total_and_sum_merge(t, s, ["k"], ["v"], how="max")
+
+
+def test_presence_catalog_three_sets(spark):
+    a = spark.createDataFrame([("x",), ("x",), ("y",)], "k string")
+    b = spark.createDataFrame([("x",), ("z",)], "k string")
+    c = spark.createDataFrame([("x",)], "k string")
+    out = presence_catalog("k", {"in_a": a, "in_b": b, "in_c": c})
+    assert out.columns == ["k", "in_a", "in_b", "in_c"]
+    got = {r["k"]: (r["in_a"], r["in_b"], r["in_c"]) for r in out.collect()}
+    # x in all three sets, y only in a, z only in b; one row per key
+    assert got == {
+        "x": (True, True, True),
+        "y": (True, False, False),
+        "z": (False, True, False),
+    }
+    assert out.count() == 3
+    # an empty set contributes a column that is false on every key
+    empty = spark.createDataFrame([], "k string")
+    out = presence_catalog("k", {"in_a": a, "in_b": b, "in_e": empty})
+    got = {r["k"]: (r["in_a"], r["in_b"], r["in_e"]) for r in out.collect()}
+    assert got == {
+        "x": (True, True, False),
+        "y": (True, False, False),
+        "z": (False, True, False),
+    }
 
 
 def test_class_pivot(spark):
@@ -175,7 +224,7 @@ def test_fractional_weighted_rollup(spark):
         ["child", "parent", "w"],
     )
     out = fractional_weighted_rollup(
-        facts, weights, "child", "parent", "w", keys=[], values=["v"], min_total=0.0
+        facts, weights, "child", "parent", "w", keys=[], values=["v"]
     )
     got = {r["parent"]: r["v"] for r in out.collect()}
     assert got == {"P": 25.0, "Q": 5.0}

@@ -64,14 +64,15 @@ def test_path_rollup_parent_equals_sum_of_descendant_rows(spark, rows):
     df = spark.createDataFrame(rows, ["path", "v"])
     got = {
         tuple(r["path"]): r["total"]
-        for r in path_rollup(df, "path", [], {"total": ("sum", "v")},
-                             include_empty=False).collect()
+        for r in path_rollup(df, "path", [], {"total": ("sum", "v")}).collect()
     }
-    # sequential definition: every prefix accumulates every row it prefixes
+    # sequential definition: every prefix accumulates every row it
+    # prefixes, the empty prefix (the root) included
     want: Counter = Counter()
     for path, v in rows:
-        for i in range(1, len(path) + 1):
+        for i in range(0, len(path) + 1):
             want[tuple(path[:i])] += v
+    assert got[()] == sum(v for _, v in rows)
     assert got == dict(want)
 
 
