@@ -1,13 +1,14 @@
 """Filesystem-agnostic directory maintenance via Hadoop's FS API.
 
-Index and table maintenance (compaction, ANN rebalance) ends with a
-validated-rewrite + two-rename swap. Doing the swap with
-``os.rename``/``shutil.rmtree`` silently limits maintenance to
-local-filesystem paths: an index at an ``hdfs://`` or ``s3a://``
-location would build and probe fine (those go through Spark readers/
-writers) but fail at the swap. Every mutation here goes through the
-same ``org.apache.hadoop.fs.FileSystem`` the session's readers use,
-so the swap works wherever the data does — the pattern
+Index and table maintenance (compaction, index rebalance/retrain)
+ends with a validated-rewrite + two-rename swap; a persisted index is
+rebuilt whole into a sibling and swapped in as ONE directory. Doing
+the swap with ``os.rename``/``shutil.rmtree`` silently limits
+maintenance to local-filesystem paths: an index at an ``hdfs://`` or
+``s3a://`` location would build and probe fine (those go through
+Spark readers/writers) but fail at the swap. Every mutation here goes
+through the same ``org.apache.hadoop.fs.FileSystem`` the session's
+readers use, so the swap works wherever the data does — the pattern
 ``streaming.dedup_stream`` already uses for its replay markers.
 
 Object-store note: ``FileSystem.rename`` on S3A is a copy-and-delete
@@ -56,14 +57,14 @@ def swap_in(
     live_path: str,
     tmp_path: str,
     backup_suffix: str,
-    keep_backup: bool,
 ) -> str:
     """Replace ``live_path`` with ``tmp_path`` via two renames,
-    parking the old directory at ``live_path + backup_suffix``
-    (removed unless ``keep_backup``). Returns the backup path. The
-    caller must have VALIDATED ``tmp_path`` already — a crash
-    between the renames leaves the old data intact under the backup
-    sibling for manual recovery."""
+    parking the old directory at ``live_path + backup_suffix`` and
+    removing it once both renames succeed. Returns the backup path.
+    The caller must have VALIDATED ``tmp_path`` already — a failed
+    second rename restores the live directory, and a crash between
+    the renames leaves the old data intact under the backup sibling
+    for manual recovery."""
     live = live_path.rstrip("/")
     backup = live + backup_suffix
     fs, jlive = hadoop_fs(spark, live)
@@ -82,6 +83,5 @@ def swap_in(
             f"swap_in: rename {tmp_path} -> {live} failed; original "
             "directory restored"
         )
-    if not keep_backup:
-        fs.delete(jbackup, True)
+    fs.delete(jbackup, True)
     return backup

@@ -23,9 +23,10 @@ probe cells by L2 distance to the stored centroids (the same metric
 ``assign_cells``/Lloyd use); the extend cycle assigns new vectors
 with the STORED quantizer so tomorrow's queries see them; a drifted
 ingest measurably unbalances the cells and ``rebalance_ann_index``
-(re-train + re-encode + validated directory swap — the compaction
-analog for distribution drift) restores both the balance and the
-probe-pruning/parity properties.  Note:
+(the compaction analog for distribution drift: rebuild the whole
+index from its own codes into a sibling directory, validate, and
+publish it with one directory swap) restores both the balance and
+the probe-pruning/parity properties.  Note:
 ``similarity.knn_ivf`` ranks probe cells by DOT PRODUCT, so at
 ``nprobe < k_cells`` it may probe different cells than this index
 and return different neighbors — the two agree only at full probe.
@@ -66,21 +67,13 @@ def build_ann_index(
     Lloyd iterations over every vector would dominate build cost for
     zero recall gain. ENCODING still covers the full corpus (one
     assignment map stage + the partitioned write)."""
-    spark = df.sparkSession
     train = (
         df.select(F.col(id_col), F.col(vec_col))
         .orderBy(F.xxhash64(F.col(id_col)))
         .limit(train_rows)
     )
     centroids, _ = kmeans_train(train, id_col, vec_col, k=k_cells, n_iter=n_iter)
-    rows = [
-        (int(c), int(p), float(v))
-        for c, vec in enumerate(centroids)
-        for p, v in enumerate(vec)
-    ]
-    local_struct_df(
-        spark, "cell int, pos int, value double", rows
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
+    _write_centroids(df.sparkSession, index_path, centroids)
     (
         assign_cells(
             df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
@@ -92,6 +85,23 @@ def build_ann_index(
         .partitionBy("cell")
         .parquet(f"{index_path}/codes")
     )
+
+
+def _write_centroids(
+    spark: SparkSession, index_path: str, centroids: list[list[float]]
+) -> None:
+    """Persist the k×dim coarse quantizer as ``centroids/`` (shared
+    with the IVFADC index, which stores its coarse quantizer the
+    same way)."""
+    local_struct_df(
+        spark,
+        "cell int, pos int, value double",
+        [
+            (int(c), int(p), float(v))
+            for c, vec in enumerate(centroids)
+            for p, v in enumerate(vec)
+        ],
+    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
 
 
 def load_centroids(spark: SparkSession, index_path: str) -> list[list[float]]:
@@ -190,73 +200,54 @@ def rebalance_ann_index(
     k_cells: int | None = None,
     n_iter: int = 5,
     train_rows: int = 4096,
-    keep_backup: bool = False,
 ) -> dict:
     """Re-train the quantizer on the CURRENT stored vectors and
     re-encode every code — the compaction analog for distribution
     drift, completing the index family's maintenance pair (the band
     table has ``compact_table``; this is its ANN twin).
 
-    Reads only the codes table (never the corpus source), trains a
-    fresh Lloyd quantizer on the same deterministic xxhash64 sample
-    rule as ``build_ann_index``, re-encodes into SIBLING directories,
-    VALIDATES (re-read row count must equal the source count — a bad
-    rewrite aborts with the live index untouched), then swaps both
-    directories in with renames, codes first.  Same maintenance
-    contract as ``sources/writers.py compact_table``: there is a
-    sub-millisecond window during the renames in which a concurrent
-    probe can see mixed generations (new codes under old centroids →
-    wrong pruning, not wrong data) — run in a quiet window, or put
-    the index behind a manifest-pointer table format.  A crash
-    mid-swap leaves the previous generation intact under the
-    ``__pre_rebalance`` siblings for manual recovery.  All directory
-    mutations go through Hadoop's FileSystem API (``functions.fsio``)
-    so an index at an ``hdfs://``/``s3a://`` path rebalances the
-    same way it builds and probes.
+    Reads only the codes table (never the corpus source) and rebuilds
+    the WHOLE index from it with :func:`build_ann_index` (same
+    xxhash64 ``train_rows`` sample rule, stored ``k_cells`` unless
+    given) into the empty sibling ``<index_path>__rebalancing``.
+    The new generation is VALIDATED (its codes row count must equal
+    the source count — a bad rewrite removes the sibling and aborts
+    with the live index untouched), then published with ONE
+    ``swap_in`` of the index directory: centroids and codes change
+    together, so no reader can pair new codes with old centroids.
+    During the swap's two renames the index path is briefly absent,
+    so a concurrent probe fails loudly rather than scoring a mixed
+    index — run in a quiet window, or put the index behind a
+    manifest-pointer table format.  A crash between the renames
+    leaves the previous generation whole under
+    ``<index_path>__pre_rebalance`` for manual recovery.  All
+    directory mutations go through Hadoop's FileSystem API
+    (``functions.fsio``) so an index at an ``hdfs://``/``s3a://``
+    path rebalances the same way it builds and probes.
 
     Returns ``{"rows", "imbalance_before", "imbalance_after"}`` for
     the caller's audit log."""
     from nass_summary_spark.functions.fsio import remove_dir, swap_in
 
     before = cell_balance_audit(spark, index_path)
-    if k_cells is None:
-        k_cells = before["k_cells"]
-    codes_path = f"{index_path}/codes"
-    cent_path = f"{index_path}/centroids"
-    codes = spark.read.parquet(codes_path).select("id", "vec")
+    codes = spark.read.parquet(f"{index_path}/codes").select("id", "vec")
     rows = codes.count()
-    train = codes.orderBy(F.xxhash64(F.col("id"))).limit(train_rows)
-    centroids, _ = kmeans_train(train, "id", "vec", k=k_cells, n_iter=n_iter)
-
-    tmp_codes = codes_path + "__rebalancing"
-    (
-        assign_cells(codes, "vec", centroids)
-        .select("id", "vec", "cell")
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp_codes)
+    tmp = index_path.rstrip("/") + "__rebalancing"
+    remove_dir(spark, tmp)
+    build_ann_index(
+        codes, "id", "vec", tmp,
+        k_cells=before["k_cells"] if k_cells is None else k_cells,
+        n_iter=n_iter, train_rows=train_rows,
     )
-    rewritten = spark.read.parquet(tmp_codes).count()
+    rewritten = spark.read.parquet(f"{tmp}/codes").count()
     if rewritten != rows:
-        remove_dir(spark, tmp_codes)
+        remove_dir(spark, tmp)
         raise RuntimeError(
             f"rebalance_ann_index validation failed for {index_path}: "
             f"re-encoded {rewritten} rows, expected {rows}; live index "
             "left untouched"
         )
-    tmp_cent = cent_path + "__rebalancing"
-    local_struct_df(
-        spark,
-        "cell int, pos int, value double",
-        [
-            (int(c), int(p), float(v))
-            for c, vec in enumerate(centroids)
-            for p, v in enumerate(vec)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_cent)
-
-    swap_in(spark, codes_path, tmp_codes, "__pre_rebalance", keep_backup)
-    swap_in(spark, cent_path, tmp_cent, "__pre_rebalance", keep_backup)
+    swap_in(spark, index_path, tmp, "__pre_rebalance")
     after = cell_balance_audit(spark, index_path)
     return {
         "rows": rows,

@@ -1306,11 +1306,13 @@ class PrefixGroupSkewWarning(UserWarning):
 
 
 class _CacheHandle:
-    """Releases the relations an operator persisted; the returned
-    DataFrame still references them, so the operator can't unpersist
-    them itself — callers that materialize the output call
-    :meth:`unpersist` afterwards (long-lived sessions otherwise
-    accumulate one cached relation pair per call)."""
+    """Releases the relations an operator persisted (the prefix-filter
+    join here, the incremental MinHash probe in ``dedup_index``); the
+    returned DataFrame still references them, so the operator can't
+    unpersist them itself — callers that materialize the output (the
+    streaming foreachBatch) call :meth:`unpersist` afterwards
+    (long-lived sessions otherwise accumulate one cached relation
+    pair per call). Non-blocking, like ``DataFrame.unpersist()``."""
 
     def __init__(self, *dfs: DataFrame) -> None:
         self._dfs = dfs

@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nass_summary_spark.operators.dedup import (
+    _CacheHandle,
     band_entries,
     estimated_jaccard,
     minhash_signatures,
@@ -143,22 +144,6 @@ def extend_minhash_index(
         sig.unpersist()
 
 
-class _ProbeHandle:
-    """Releases every relation a probe cycle persisted (the batch
-    signatures and the candidate-pair set).  Callers that MATERIALIZE
-    the pairs (the streaming foreachBatch) call :meth:`unpersist`
-    afterwards so a long-running stream doesn't leak one cached
-    relation per micro-batch; the blocking flag is False, matching
-    ``DataFrame.unpersist()``'s default."""
-
-    def __init__(self, *dfs: DataFrame) -> None:
-        self._dfs = dfs
-
-    def unpersist(self) -> None:
-        for df in self._dfs:
-            df.unpersist()
-
-
 def incremental_minhash_pairs(
     spark: SparkSession,
     new_df: DataFrame,
@@ -216,7 +201,7 @@ def _incremental_minhash_pairs_with_handle(
     num_perm: int = 32,
     bands: int = 8,
     threshold: float = 0.5,
-) -> "tuple[DataFrame, _ProbeHandle]":
+) -> "tuple[DataFrame, _CacheHandle]":
     """:func:`incremental_minhash_pairs` plus a handle over every
     relation the probe persisted (batch signatures + candidate
     pairs), so a caller that MATERIALIZES the pairs (the streaming
@@ -336,4 +321,4 @@ def _incremental_minhash_pairs_with_handle(
         .where(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
-    return pairs, _ProbeHandle(new_sig, cand)
+    return pairs, _CacheHandle(new_sig, cand)

@@ -31,8 +31,11 @@ maintenance is re-train + re-encode: extend assigns and encodes with
 the STORED model so codes stay comparable, a ``fitness/`` sidecar
 records the build-time residual quantization error,
 :func:`ivfpq_codebook_audit` re-measures it on the current corpus,
-and :func:`retrain_ivfpq_index` repairs drift with the
-``rebalance_ann_index`` validated-swap contract.
+and :func:`retrain_ivfpq_index` repairs drift the
+``rebalance_ann_index`` way: rebuild the whole index with
+:func:`build_ivfpq_index` into a sibling directory, validate, and
+publish it with one directory swap, so no reader ever pairs new
+centroids or codebooks with old codes.
 
 No reference counterpart (the reference is a SQL summary pipeline);
 method from public literature (Jégou TPAMI'11).
@@ -45,10 +48,19 @@ from pyspark.sql import functions as F
 
 from nass_summary_spark.functions.smalldf import local_struct_df
 
+from nass_summary_spark.operators.ann_index import _write_centroids
 from nass_summary_spark.operators.pq import (
     _ivfpq_encode,
     _ivfpq_rank,
     _ivfpq_train,
+)
+from nass_summary_spark.operators.pq_index import (
+    FITNESS_SAMPLE,
+    _fitness_audit,
+    _pq_mse,
+    _read_fitness,
+    _write_codebooks,
+    _write_fitness,
 )
 
 
@@ -65,10 +77,10 @@ def build_ivfpq_index(
     sample_size: int = 65536,
 ) -> None:
     """Train coarse quantizer + residual codebooks on the
-    deterministic sample, then persist the model and the encoded
-    corpus (cell-partitioned). Training is sample-bounded; ENCODING
-    covers the full corpus (one Arrow map stage + the partitioned
-    write)."""
+    deterministic sample, then persist the model, the encoded corpus
+    (cell-partitioned) and the fitness sidecar. Training is
+    sample-bounded; ENCODING covers the full corpus (one Arrow map
+    stage + the partitioned write)."""
     if dim % m:
         raise ValueError("dim must be divisible by m")
     spark = df.sparkSession
@@ -76,25 +88,8 @@ def build_ivfpq_index(
         df, id_col, vec_col, dim, n_cells=k_cells, m=m, ksub=ksub,
         n_iter=n_iter, sample_size=sample_size,
     )
-    local_struct_df(
-        spark,
-        "cell int, pos int, value double",
-        [
-            (int(c), int(p), float(v))
-            for c, cent in enumerate(coarse_l)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/centroids")
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books_l)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
+    _write_centroids(spark, index_path, coarse_l)
+    _write_codebooks(spark, index_path, books_l)
     local_struct_df(
         spark,
         "dim int, m int, ksub int, k_cells int",
@@ -111,96 +106,8 @@ def build_ivfpq_index(
     )
     _write_fitness(
         spark, index_path,
-        _ivfpq_mse(df, id_col, vec_col, coarse_l, books_l, FITNESS_SAMPLE),
-        FITNESS_SAMPLE,
+        _pq_mse(df, id_col, vec_col, books_l, FITNESS_SAMPLE, coarse=coarse_l),
     )
-
-
-#: fitness sample bound — see pq_index.FITNESS_SAMPLE (the fitness
-#: job runs inside every build and must stay cheap)
-FITNESS_SAMPLE = 4096
-
-
-def _ivfpq_mse(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    coarse_l: list[list[float]],
-    books_l: list[list[list[float]]],
-    sample_size: int = FITNESS_SAMPLE,
-) -> float:
-    """Mean RESIDUAL quantization error of the stored model over the
-    deterministic training-rule sample: assign each sampled vector to
-    its nearest coarse cell, subtract that centroid, and sum the
-    per-subspace distances to the nearest residual codeword —
-    ||v − (centroid[cell] + reconstruction)||². One Arrow-batched
-    numpy pass (the ``_ivfpq_encode`` matrix shapes; Spark HOFs run
-    interpreted and measured ~100× slower here), one sample-bounded
-    job. Per-row errors have a fixed numpy reduction order, so
-    build-time and audit-time calls on the same corpus return the
-    identical double."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    dsub = len(books_l[0][0])
-    coarse = [list(map(float, c)) for c in coarse_l]
-    bks = [[list(map(float, c)) for c in b] for b in books_l]
-
-    def _err(vs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        cc = np.asarray(coarse)
-        cbs = [np.asarray(b) for b in bks]
-        x = np.vstack(vs.to_numpy()).astype("float64")
-        cells = ((x[:, None, :] - cc[None]) ** 2).sum(axis=2).argmin(axis=1)
-        rv = x - cc[cells]
-        out = np.zeros(len(x))
-        for s, cb in enumerate(cbs):
-            sub = rv[:, s * dsub : (s + 1) * dsub]
-            d2 = ((sub[:, None, :] - cb[None]) ** 2).sum(axis=2)
-            out += d2.min(axis=1)
-        return pd.Series(out)
-
-    _err.__annotations__ = {"vs": pd.Series, "return": pd.Series}
-    udf = pandas_udf(_err, "double").asNondeterministic()
-    sample = (
-        df.select(
-            F.col(vec_col).alias("__v"),
-            F.xxhash64(F.col(id_col)).alias("__h"),
-        )
-        .orderBy("__h")
-        .limit(int(sample_size))
-    )
-    row = (
-        sample.select(udf(F.col("__v")).alias("__e"))
-        .agg(F.avg("__e").alias("mse"))
-        .collect()[0]
-    )
-    return float(row["mse"]) if row["mse"] is not None else 0.0
-
-
-def _write_fitness(
-    spark: SparkSession, index_path: str, mse: float, sample_n: int,
-    suffix: str = "",
-) -> None:
-    local_struct_df(
-        spark, "mse double, sample_n bigint",
-        [(float(mse), int(sample_n))],
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{index_path}/fitness{suffix}"
-    )
-
-
-def _read_fitness(spark: SparkSession, index_path: str) -> dict:
-    try:
-        r = spark.read.parquet(f"{index_path}/fitness").collect()[0]
-    except Exception as exc:
-        raise ValueError(
-            f"ivfpq_index at {index_path} has no fitness sidecar "
-            "(built before drift auditing existed) — "
-            "retrain_ivfpq_index or rebuild to establish the reference"
-        ) from exc
-    return {"mse": float(r["mse"]), "sample_n": int(r["sample_n"])}
 
 
 def ivfpq_codebook_audit(
@@ -218,15 +125,10 @@ def ivfpq_codebook_audit(
     longer fit the ingest distribution (silent ADC recall decay) —
     :func:`retrain_ivfpq_index` is due. Needs the raw corpus; cost
     is one sample-bounded job."""
-    spark = df.sparkSession
-    coarse_l, books_l, _params = load_ivfpq_model(spark, index_path)
-    ref = _read_fitness(spark, index_path)
-    now = _ivfpq_mse(df, id_col, vec_col, coarse_l, books_l, sample_size)
-    return {
-        "mse_now": now,
-        "mse_build": ref["mse"],
-        "drift_ratio": (now / ref["mse"]) if ref["mse"] > 0.0 else 1.0,
-    }
+    coarse_l, books_l, _params = load_ivfpq_model(df.sparkSession, index_path)
+    return _fitness_audit(
+        df, id_col, vec_col, index_path, books_l, sample_size, coarse=coarse_l
+    )
 
 
 def retrain_ivfpq_index(
@@ -236,86 +138,51 @@ def retrain_ivfpq_index(
     index_path: str,
     n_iter: int = 4,
     sample_size: int = 65536,
-    keep_backup: bool = False,
 ) -> dict:
     """Re-train the full IVFADC model (coarse quantizer AND residual
     codebooks) on the CURRENT corpus and re-encode — the drift repair
     for this index, combining what ``rebalance_ann_index`` does for
-    cells with what ``retrain_pq_index`` does for codebooks. Fresh
-    model under the STORED geometry, re-encode into SIBLING
-    directories, VALIDATE row count, swap centroids → codebooks →
-    codes → fitness via ``functions.fsio`` (previous generation
-    parked under ``__pre_retrain``). Needs the raw corpus ``df`` —
-    codes cannot be decoded back to vectors.
+    cells with what ``retrain_pq_index`` does for codebooks. The
+    WHOLE index is rebuilt by :func:`build_ivfpq_index` under the
+    STORED geometry into the empty sibling
+    ``<index_path>__retraining``, VALIDATED (codes row count must
+    equal the corpus count — a bad rewrite removes the sibling and
+    aborts with the live index untouched), and published with ONE
+    ``swap_in`` of the index directory via ``functions.fsio``.
+    Centroids, codebooks, codes and fitness therefore change
+    together; during the two renames the index path is briefly
+    absent, so a concurrent probe fails loudly instead of scoring a
+    mixed index. A crash between the renames leaves the previous
+    generation whole under ``<index_path>__pre_retrain``. Needs the
+    raw corpus ``df`` — codes cannot be decoded back to vectors.
 
-    Returns ``{"rows", "mse_before", "mse_after"}``."""
+    Returns ``{"rows", "mse_before", "mse_after"}``; ``mse_after`` is
+    the new generation's fitness sidecar."""
     from nass_summary_spark.functions.fsio import remove_dir, swap_in
 
     spark = df.sparkSession
     old_coarse, old_books, params = load_ivfpq_model(spark, index_path)
-    mse_before = _ivfpq_mse(
-        df, id_col, vec_col, old_coarse, old_books, FITNESS_SAMPLE
+    mse_before = _pq_mse(
+        df, id_col, vec_col, old_books, FITNESS_SAMPLE, coarse=old_coarse
     )
-    coarse_l, books_l = _ivfpq_train(
-        df, id_col, vec_col, params["dim"], n_cells=params["k_cells"],
+    tmp = index_path.rstrip("/") + "__retraining"
+    remove_dir(spark, tmp)
+    build_ivfpq_index(
+        df, id_col, vec_col, tmp, params["dim"], k_cells=params["k_cells"],
         m=params["m"], ksub=params["ksub"], n_iter=n_iter,
         sample_size=sample_size,
     )
-    tmp_codes = f"{index_path}/codes__retraining"
-    (
-        _ivfpq_encode(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "id", "vec", coarse_l, books_l,
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell")
-        .parquet(tmp_codes)
-    )
     rows = df.count()
-    rewritten = spark.read.parquet(tmp_codes).count()
+    rewritten = spark.read.parquet(f"{tmp}/codes").count()
     if rewritten != rows:
-        remove_dir(spark, tmp_codes)
+        remove_dir(spark, tmp)
         raise RuntimeError(
             f"retrain_ivfpq_index validation failed for {index_path}: "
             f"re-encoded {rewritten} rows, expected {rows}; live index "
             "left untouched"
         )
-    tmp_cent = f"{index_path}/centroids__retraining"
-    local_struct_df(
-        spark,
-        "cell int, pos int, value double",
-        [
-            (int(c), int(p), float(v))
-            for c, cent in enumerate(coarse_l)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_cent)
-    tmp_books = f"{index_path}/codebooks__retraining"
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books_l)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_books)
-    mse_after = _ivfpq_mse(
-        df, id_col, vec_col, coarse_l, books_l, FITNESS_SAMPLE
-    )
-    _write_fitness(
-        spark, index_path, mse_after, FITNESS_SAMPLE, suffix="__retraining"
-    )
-    swap_in(spark, f"{index_path}/centroids", tmp_cent,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/codebooks", tmp_books,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/codes", tmp_codes,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/fitness",
-            f"{index_path}/fitness__retraining",
-            "__pre_retrain", keep_backup)
+    mse_after = _read_fitness(spark, tmp)
+    swap_in(spark, index_path, tmp, "__pre_retrain")
     return {
         "rows": rows,
         "mse_before": mse_before,
@@ -388,8 +255,8 @@ def extend_ivfpq_index(
 ) -> None:
     """Append new vectors, assigned and residual-encoded with the
     STORED model (codes must stay comparable to what queries
-    ADC-score against). Under drift, re-train by rebuilding — the
-    IVF rebalance analog."""
+    ADC-score against). Under drift, re-train with
+    :func:`retrain_ivfpq_index` — the IVF rebalance analog."""
     coarse_l, books_l, _params = load_ivfpq_model(
         df.sparkSession, index_path
     )

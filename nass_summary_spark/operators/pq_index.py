@@ -24,8 +24,11 @@ Layout at ``index_path``:
   the stored codebooks forever, so as the corpus distribution moves
   the reconstruction error — and with it ADC recall — decays with
   no loud signal. :func:`pq_codebook_audit` re-measures against this
-  row; :func:`retrain_pq_index` is the repair (re-train + validated
-  re-encode + swap, the ``rebalance_ann_index`` pattern).
+  row; :func:`retrain_pq_index` is the repair (rebuild the whole
+  index with :func:`build_pq_index` into a sibling directory,
+  validate, publish with one directory swap — the
+  ``rebalance_ann_index`` pattern, so no reader ever pairs new
+  codebooks with old codes).
 
 Evidence (tests/test_pq_index.py): a disk probe is row-identical to
 the in-memory ``ann_topk_pq`` (both train on the same deterministic
@@ -61,24 +64,15 @@ def build_pq_index(
     sample_size: int = 65536,
 ) -> None:
     """Train codebooks on the deterministic sample and persist
-    codebooks + params + the encoded corpus. Training cost is
-    sample-bounded; ENCODING covers the full corpus (one Arrow map
-    stage + the write)."""
+    codebooks + params + the encoded corpus + the fitness sidecar.
+    Training cost is sample-bounded; ENCODING covers the full corpus
+    (one Arrow map stage + the write)."""
     spark = df.sparkSession
     books = pq_train(
         df, id_col, vec_col, dim, m=m, ksub=ksub, n_iter=n_iter,
         sample_size=sample_size,
     )
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
+    _write_codebooks(spark, index_path, books)
     local_struct_df(
         spark, "dim int, m int, ksub int", [(int(dim), int(m), int(ksub))]
     ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/params")
@@ -89,9 +83,7 @@ def build_pq_index(
         .parquet(f"{index_path}/codes")
     )
     _write_fitness(
-        spark, index_path,
-        _pq_mse(df, id_col, vec_col, books, FITNESS_SAMPLE),
-        FITNESS_SAMPLE,
+        spark, index_path, _pq_mse(df, id_col, vec_col, books, FITNESS_SAMPLE)
     )
 
 
@@ -104,34 +96,62 @@ def build_pq_index(
 FITNESS_SAMPLE = 4096
 
 
+def _write_codebooks(
+    spark: SparkSession, index_path: str, books: list[list[list[float]]]
+) -> None:
+    """Persist the m×ksub×dsub codebooks as ``codebooks/`` (shared
+    with the IVFADC index, whose residual codebooks have the same
+    layout)."""
+    local_struct_df(
+        spark,
+        "subspace int, code int, pos int, value double",
+        [
+            (int(s), int(c), int(p), float(v))
+            for s, book in enumerate(books)
+            for c, cent in enumerate(book)
+            for p, v in enumerate(cent)
+        ],
+    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/codebooks")
+
+
 def _pq_mse(
     df: DataFrame,
     id_col: str,
     vec_col: str,
     books: list[list[list[float]]],
     sample_size: int = FITNESS_SAMPLE,
+    coarse: list[list[float]] | None = None,
 ) -> float:
     """Mean quantization error of ``books`` over the deterministic
     training-rule sample of ``df`` (``orderBy(xxhash64(id)).limit``)
     — per vector, the summed per-subspace distance to the NEAREST
-    centroid, i.e. ||v − reconstruction(encode(v))||². Evaluated as
-    one Arrow-batched numpy pass (the same batch×ksub distance
-    matrix shape ``pq_encode`` uses — Spark HOFs run interpreted and
-    measured ~100× slower here); one sample-bounded job, never the
-    full corpus. Per-row errors are order-independent (fixed numpy
-    reduction order per row), so build-time and audit-time calls on
-    the same corpus return the identical double."""
+    centroid, i.e. ||v − reconstruction(encode(v))||². With a
+    ``coarse`` quantizer (the IVFADC index) each vector is first
+    replaced by its residual against the nearest coarse centroid, so
+    the error is ||v − (centroid[cell] + reconstruction)||².
+    Evaluated as one Arrow-batched numpy pass (the same batch×ksub
+    distance matrix shape ``pq_encode`` uses — Spark HOFs run
+    interpreted and measured ~100× slower here); one sample-bounded
+    job, never the full corpus. Per-row errors are order-independent
+    (fixed numpy reduction order per row), so build-time and
+    audit-time calls on the same corpus return the identical
+    double."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
     dsub = len(books[0][0])
     bks = [[list(map(float, c)) for c in b] for b in books]
+    cents = None if coarse is None else [list(map(float, c)) for c in coarse]
 
     def _err(vs: pd.Series) -> pd.Series:
         import numpy as np
 
         cbs = [np.asarray(b) for b in bks]
         x = np.vstack(vs.to_numpy()).astype("float64")
+        if cents is not None:
+            cc = np.asarray(cents)
+            cells = ((x[:, None, :] - cc[None]) ** 2).sum(axis=2).argmin(axis=1)
+            x = x - cc[cells]
         out = np.zeros(len(x))
         for s, cb in enumerate(cbs):
             sub = x[:, s * dsub : (s + 1) * dsub]
@@ -157,28 +177,45 @@ def _pq_mse(
     return float(row["mse"]) if row["mse"] is not None else 0.0
 
 
-def _write_fitness(
-    spark: SparkSession, index_path: str, mse: float, sample_n: int,
-    suffix: str = "",
-) -> None:
+def _write_fitness(spark: SparkSession, index_path: str, mse: float) -> None:
     local_struct_df(
         spark, "mse double, sample_n bigint",
-        [(float(mse), int(sample_n))],
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{index_path}/fitness{suffix}"
-    )
+        [(float(mse), int(FITNESS_SAMPLE))],
+    ).coalesce(1).write.mode("overwrite").parquet(f"{index_path}/fitness")
 
 
-def _read_fitness(spark: SparkSession, index_path: str) -> dict:
+def _read_fitness(spark: SparkSession, index_path: str) -> float:
+    """The build-time mse recorded in ``index_path``'s fitness sidecar."""
     try:
         r = spark.read.parquet(f"{index_path}/fitness").collect()[0]
     except Exception as exc:
         raise ValueError(
-            f"pq_index at {index_path} has no fitness sidecar (built "
-            "before drift auditing existed) — retrain_pq_index or "
-            "rebuild to establish the reference"
+            f"index at {index_path} has no fitness sidecar (built "
+            "before drift auditing existed) — retrain or rebuild it to "
+            "establish the reference"
         ) from exc
-    return {"mse": float(r["mse"]), "sample_n": int(r["sample_n"])}
+    return float(r["mse"])
+
+
+def _fitness_audit(
+    df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    index_path: str,
+    books: list[list[list[float]]],
+    sample_size: int,
+    coarse: list[list[float]] | None = None,
+) -> dict:
+    """Re-measure the stored model's error on the current corpus
+    against the build-time fitness sidecar (both persisted PQ-family
+    audits)."""
+    ref = _read_fitness(df.sparkSession, index_path)
+    now = _pq_mse(df, id_col, vec_col, books, sample_size, coarse)
+    return {
+        "mse_now": now,
+        "mse_build": ref,
+        "drift_ratio": (now / ref) if ref > 0.0 else 1.0,
+    }
 
 
 def pq_codebook_audit(
@@ -197,15 +234,8 @@ def pq_codebook_audit(
     ADC distances — and recall — have silently degraded and
     :func:`retrain_pq_index` is due. Needs the corpus because the
     index stores only 8-byte codes; cost is one sample-bounded job."""
-    spark = df.sparkSession
-    books, _params = load_pq_codebooks(spark, index_path)
-    ref = _read_fitness(spark, index_path)
-    now = _pq_mse(df, id_col, vec_col, books, sample_size)
-    return {
-        "mse_now": now,
-        "mse_build": ref["mse"],
-        "drift_ratio": (now / ref["mse"]) if ref["mse"] > 0.0 else 1.0,
-    }
+    books, _params = load_pq_codebooks(df.sparkSession, index_path)
+    return _fitness_audit(df, id_col, vec_col, index_path, books, sample_size)
 
 
 def retrain_pq_index(
@@ -215,70 +245,49 @@ def retrain_pq_index(
     index_path: str,
     n_iter: int = 4,
     sample_size: int = 65536,
-    keep_backup: bool = False,
 ) -> dict:
     """Re-train the codebooks on the CURRENT corpus and re-encode —
     the drift repair completing the maintenance pair
     (``compact_table`` restores file sizes; this restores codebook
-    fitness). Same contract as ``rebalance_ann_index``: fresh model
-    under the STORED geometry, re-encode into SIBLING directories,
-    VALIDATE (re-read row count must equal the corpus count — a bad
-    rewrite aborts with the live index untouched), swap via
-    ``functions.fsio`` (works on hdfs://s3a:// paths), previous
-    generation parked under ``__pre_retrain`` (``keep_backup``).
-    Unlike the IVF rebalance this needs the raw corpus ``df`` — the
-    codes table cannot be decoded back to vectors.
+    fitness). Same contract as ``rebalance_ann_index``: the WHOLE
+    index is rebuilt by :func:`build_pq_index` under the STORED
+    geometry into the empty sibling ``<index_path>__retraining``,
+    VALIDATED (its codes row count must equal the corpus count — a
+    bad rewrite removes the sibling and aborts with the live index
+    untouched), and published with ONE ``swap_in`` of the index
+    directory via ``functions.fsio`` (works on hdfs://s3a:// paths).
+    Codebooks, codes and fitness therefore change together; during
+    the two renames the index path is briefly absent, so a
+    concurrent probe fails loudly instead of scoring a mixed index.
+    A crash between the renames leaves the previous generation whole
+    under ``<index_path>__pre_retrain``. Unlike the IVF rebalance
+    this needs the raw corpus ``df`` — the codes table cannot be
+    decoded back to vectors.
 
-    Returns ``{"rows", "mse_before", "mse_after"}``."""
+    Returns ``{"rows", "mse_before", "mse_after"}``; ``mse_after`` is
+    the new generation's fitness sidecar."""
     from nass_summary_spark.functions.fsio import remove_dir, swap_in
 
     spark = df.sparkSession
     old_books, params = load_pq_codebooks(spark, index_path)
     mse_before = _pq_mse(df, id_col, vec_col, old_books, FITNESS_SAMPLE)
-    books = pq_train(
-        df, id_col, vec_col, params["dim"], m=params["m"],
+    tmp = index_path.rstrip("/") + "__retraining"
+    remove_dir(spark, tmp)
+    build_pq_index(
+        df, id_col, vec_col, tmp, params["dim"], m=params["m"],
         ksub=params["ksub"], n_iter=n_iter, sample_size=sample_size,
     )
-    tmp_codes = f"{index_path}/codes__retraining"
-    (
-        pq_encode(
-            df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),
-            "id", "vec", books,
-        )
-        .write.mode("overwrite")
-        .parquet(tmp_codes)
-    )
     rows = df.count()
-    rewritten = spark.read.parquet(tmp_codes).count()
+    rewritten = spark.read.parquet(f"{tmp}/codes").count()
     if rewritten != rows:
-        remove_dir(spark, tmp_codes)
+        remove_dir(spark, tmp)
         raise RuntimeError(
             f"retrain_pq_index validation failed for {index_path}: "
             f"re-encoded {rewritten} rows, expected {rows}; live index "
             "left untouched"
         )
-    tmp_books = f"{index_path}/codebooks__retraining"
-    local_struct_df(
-        spark,
-        "subspace int, code int, pos int, value double",
-        [
-            (int(s), int(c), int(p), float(v))
-            for s, book in enumerate(books)
-            for c, cent in enumerate(book)
-            for p, v in enumerate(cent)
-        ],
-    ).coalesce(1).write.mode("overwrite").parquet(tmp_books)
-    mse_after = _pq_mse(df, id_col, vec_col, books, FITNESS_SAMPLE)
-    _write_fitness(
-        spark, index_path, mse_after, FITNESS_SAMPLE, suffix="__retraining"
-    )
-    swap_in(spark, f"{index_path}/codebooks", tmp_books,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/codes", tmp_codes,
-            "__pre_retrain", keep_backup)
-    swap_in(spark, f"{index_path}/fitness",
-            f"{index_path}/fitness__retraining",
-            "__pre_retrain", keep_backup)
+    mse_after = _read_fitness(spark, tmp)
+    swap_in(spark, index_path, tmp, "__pre_retrain")
     return {
         "rows": rows,
         "mse_before": mse_before,
@@ -347,7 +356,8 @@ def extend_pq_index(
     must stay comparable to what queries ADC-score against). Like
     any appending sink, periodic compaction restores file sizes;
     under distribution drift the quantization error grows — re-train
-    by rebuilding, the PQ analog of ``rebalance_ann_index``."""
+    with :func:`retrain_pq_index`, the PQ analog of
+    ``rebalance_ann_index``."""
     books, _params = load_pq_codebooks(df.sparkSession, index_path)
     (
         pq_encode(df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec")),

@@ -25,10 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from nass_summary_spark.functions.lits import ident
-from nass_summary_spark.functions.parsing import epoch_micros, safe_number
+from nass_summary_spark.functions.parsing import epoch_micros
 from nass_summary_spark.functions.smalldf import local_struct_df
 from nass_summary_spark.functions.text import (
-    BPE_ISH_RE,
     LANG_STOPWORDS,
     bpe_ish_token_count,
     langid_best,

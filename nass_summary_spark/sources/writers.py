@@ -100,7 +100,6 @@ def compact_table(
     path: str,
     partition_by: Sequence[str] | None = None,
     target_file_bytes: int = 128 * 1024 * 1024,
-    keep_backup: bool = False,
 ) -> dict:
     """Small-files compaction — the table-maintenance pass every
     long-lived ingest needs (streaming sinks, incremental partition
@@ -127,9 +126,8 @@ def compact_table(
     pointer atomically (the reference's truncate-and-reload
     ``nass.mk:17`` is this same swap done inside a SQL transaction).
     A crash between the renames leaves the data intact under the
-    ``__pre_compact`` sibling for manual recovery.
-    ``keep_backup=True`` retains that sibling even on success until
-    the caller confirms and deletes it.
+    ``__pre_compact`` sibling for manual recovery; a successful swap
+    removes it.
 
     Returns {"files_before", "files_after", "rows"} for the caller's
     audit log.  Listing and the swap go through Hadoop's FileSystem
@@ -171,7 +169,7 @@ def compact_table(
             f"{rewritten} rows, expected {rows}; original left untouched"
         )
 
-    swap_in(spark, path, tmp, "__pre_compact", keep_backup)
+    swap_in(spark, path, tmp, "__pre_compact")
     return {
         "files_before": len(before),
         "files_after": len(list_data_files(spark, path)),

@@ -14,17 +14,11 @@ session state must evict, so every stream twin takes an explicit
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     DoubleType,
-    IntegerType,
     LongType,
-    StringType,
     StructField,
     StructType,
     TimestampType,

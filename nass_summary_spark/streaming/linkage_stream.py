@@ -222,7 +222,6 @@ def refresh_linkage_params(
     kl_threshold: float = 0.05,
     n_iter: int = 5,
     salt: int = 1,
-    keep_backup: bool = False,
 ) -> dict:
     """Periodic EM refresh of the frozen weights (the maintenance
     pass completing C25, the ann/pq retrain analog for model
@@ -274,12 +273,12 @@ def refresh_linkage_params(
     swap_in(
         spark, f"{reference_path}/params",
         f"{reference_path}/params__refreshing",
-        "__pre_refresh", keep_backup,
+        "__pre_refresh",
     )
     swap_in(
         spark, f"{reference_path}/pattern_hist",
         f"{reference_path}/pattern_hist__refreshing",
-        "__pre_refresh", keep_backup,
+        "__pre_refresh",
     )
     return {
         "kl": kl, "refreshed": True,

@@ -87,7 +87,6 @@ def consolidate_stream_sketches(
     sketch_path: str,
     keys: list[str],
     up_to_batch: int,
-    keep_backup: bool = False,
 ) -> dict:
     """Sketch-table COMPACTION by merging, not file rewriting: fold
     every per-batch shard directory with ``batch_id <= up_to_batch``
@@ -104,8 +103,8 @@ def consolidate_stream_sketches(
     directory count drops to one per consolidation horizon.
 
     Crash safety: the merged generation is validated (group count
-    re-read from the rewrite must match the merge input), staged in a
-    sibling directory, swapped in over ``batch_id=<up_to_batch>`` via
+    re-read from the rewrite must match the merge input; a mismatch
+    removes the rewrite and raises), staged in a sibling directory, swapped in over ``batch_id=<up_to_batch>`` via
     the Hadoop FS rename pair (functions/fsio.swap_in), and ONLY THEN
     are the other absorbed directories removed. A crash before the
     swap leaves every original directory intact; a crash between the
@@ -149,19 +148,17 @@ def consolidate_stream_sketches(
     merged.write.mode("overwrite").parquet(tmp)
     n_groups = spark.read.parquet(tmp).count()
     n_expected = old.select(*keys).distinct().count()
+    from nass_summary_spark.functions.fsio import remove_dir, swap_in
+
     if n_groups != n_expected:
+        remove_dir(spark, tmp)
         raise RuntimeError(
             f"consolidate_stream_sketches: rewrite has {n_groups} groups,"
             f" merge input has {n_expected}; aborting with the original"
             " shard directories untouched"
         )
-    from nass_summary_spark.functions.fsio import remove_dir, swap_in
-
     live = f"{sketch_path}/batch_id={up_to_batch}"
-    swap_in(
-        spark, live, tmp, backup_suffix="__pre_consolidate",
-        keep_backup=keep_backup,
-    )
+    swap_in(spark, live, tmp, backup_suffix="__pre_consolidate")
     for d in dirs:
         if _os.path.normpath(d) != _os.path.normpath(live):
             remove_dir(spark, d)

@@ -23,3 +23,32 @@ def spark(tmp_path_factory):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
+
+
+class _LossyRewriteSession:
+    """Session stand-in for maintenance calls: every attribute is the
+    real session's, except that ``read.parquet`` of a path containing
+    ``marker`` (a staged rewrite) keeps only its first row — a rewrite
+    that lost rows, so the validate-before-swap branch runs."""
+
+    def __init__(self, spark, marker: str) -> None:
+        self._spark = spark
+        self._marker = marker
+
+    def __getattr__(self, name):
+        return getattr(self._spark, name)
+
+    @property
+    def read(self):
+        return self
+
+    def parquet(self, *paths):
+        df = self._spark.read.parquet(*paths)
+        return df.limit(1) if any(self._marker in p for p in paths) else df
+
+
+@pytest.fixture
+def lossy_rewrite_session(spark):
+    """``lossy_rewrite_session(marker)`` -> a session whose reads of a
+    staged rewrite (a path containing ``marker``) lose rows."""
+    return lambda marker: _LossyRewriteSession(spark, marker)

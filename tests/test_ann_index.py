@@ -248,21 +248,44 @@ def test_rebalance_restores_balance_and_parity_after_drift(
     assert "dynamicpruning" in plan.lower(), plan[:2000]
 
 
-def test_rebalance_validation_aborts_untouched(spark, tmp_path, emb):
+def test_rebalance_validation_aborts_untouched(
+    spark, tmp_path, emb, lossy_rewrite_session
+):
     """A rewrite that loses rows must abort BEFORE the swap with the
     live index intact — simulated by racing a concurrent writer is
-    flaky, so instead pin the validation arithmetic directly: the
-    function re-reads its own rewrite, and a clean run (counts agree)
-    swaps while leaving no __rebalancing / __pre_rebalance litter."""
+    flaky, so instead the session's read of the staged generation
+    drops rows: the call must raise, remove its sibling and leave
+    every live table row-equal. A clean run (counts agree) then swaps
+    while leaving no __rebalancing / __pre_rebalance litter."""
     import os
 
     from nass_summary_spark.operators.ann_index import rebalance_ann_index
 
     idx = str(tmp_path / "ann")
     build_ann_index(emb, "vec_id", "embedding", idx, k_cells=4, n_iter=2)
+
+    def snap():
+        return {
+            t: sorted(map(tuple, spark.read.parquet(f"{idx}/{t}").collect()))
+            for t in ("centroids", "codes")
+        }
+
+    before = snap()
+    with pytest.raises(RuntimeError, match="validation failed"):
+        rebalance_ann_index(
+            lossy_rewrite_session("__rebalancing"), idx, n_iter=2
+        )
+    assert snap() == before
+    assert sorted(os.listdir(tmp_path)) == ["ann"]
+
     rebalance_ann_index(spark, idx, n_iter=2)
     left = set(os.listdir(idx))
     assert left == {"codes", "centroids"}, left
+    siblings = [
+        d for d in os.listdir(tmp_path)
+        if "__rebalancing" in d or "__pre_rebalance" in d
+    ]
+    assert siblings == [], siblings
 
 
 def test_codes_compaction_preserves_probe(spark, tmp_path, emb):

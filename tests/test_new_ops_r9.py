@@ -389,6 +389,46 @@ def test_sketch_consolidation_preserves_rollup(spark, sf_dir, tmp_path):
     assert report2["batches_merged"] == 1 and report2["groups"] == 0
 
 
+def test_sketch_consolidation_check_failure_cleans_up(
+    spark, sf_dir, tmp_path, lossy_rewrite_session
+):
+    """A merged rewrite that fails the group-count check must raise,
+    remove its staged ``__consolidating_batch_id_N`` directory, and
+    leave every shard directory and rollup exactly as before."""
+    import os
+
+    from nass_summary_spark.operators.distinct_sketch import (
+        build_distinct_sketches,
+    )
+    from nass_summary_spark.streaming.sketch_stream import (
+        consolidate_stream_sketches,
+        rollup_stream_sketches,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    sk = str(tmp_path / "sketches")
+    for b in range(3):
+        build_distinct_sketches(
+            docs.where(F.col("doc_id") % 3 == b), ["source"], "doc_id"
+        ).write.mode("overwrite").parquet(f"{sk}/batch_id={b}")
+
+    def snap():
+        return sorted(
+            (r["source"], r["n_rows"], r["est_distinct"])
+            for r in rollup_stream_sketches(spark, sk, ["source"]).collect()
+        )
+
+    before = snap()
+    assert len(before) > 1  # a one-row rewrite must fail the check
+    with pytest.raises(RuntimeError, match="groups"):
+        consolidate_stream_sketches(
+            lossy_rewrite_session("__consolidating"), sk, ["source"],
+            up_to_batch=2,
+        )
+    assert sorted(os.listdir(sk)) == [f"batch_id={b}" for b in range(3)]
+    assert snap() == before
+
+
 # ---------------------------------------------------------------------------
 # mergeable log-histogram quantile sketch
 # ---------------------------------------------------------------------------
