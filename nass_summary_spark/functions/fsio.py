@@ -8,8 +8,8 @@ maintenance to local-filesystem paths: an index at an ``hdfs://`` or
 ``s3a://`` location would build and probe fine (those go through
 Spark readers/writers) but fail at the swap. Every mutation here goes
 through the same ``org.apache.hadoop.fs.FileSystem`` the session's
-readers use, so the swap works wherever the data does — the pattern
-``streaming.dedup_stream`` already uses for its replay markers.
+readers use, so the swap works wherever the data does — as do the
+shard listings and replay markers of ``streaming.sink``.
 
 Object-store note: ``FileSystem.rename`` on S3A is a copy-and-delete
 (not atomic); the swap window widens from sub-millisecond to

@@ -32,8 +32,6 @@ from nass_summary_spark.functions.text import word_shingles, words
 from nass_summary_spark.functions.vectors import (
     MERSENNE_61,
     hamming64,
-    minhash_signature,
-    simhash64,
     token_hash64,
 )
 

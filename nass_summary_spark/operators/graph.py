@@ -34,7 +34,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nass_summary_spark.functions.fixpoint import semi_naive, until_stable
-from nass_summary_spark.functions.layout import spread_narrow_scan
 
 
 def pagerank(

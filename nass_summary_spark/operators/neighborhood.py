@@ -30,7 +30,7 @@ neighborhood join is an EQUI-join on ``rank + d`` for d ∈ [1, w−1]
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 

@@ -58,7 +58,7 @@ from nass_summary_spark.streaming.events import (
     funnel_batch,
     rate_per_window_batch,
     sessionize_batch,
-    windowed_agg_batch,
+    windowed_agg,
 )
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
@@ -1474,8 +1474,8 @@ def multimodal_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# C-block: streaming twins (batch-equivalent checked by the oracle;
-# the readStream twins are exercised in tests/)
+# C-block: streaming stages on at-rest data (checked by the oracle;
+# the same stages over readStream frames are exercised in tests/)
 # ---------------------------------------------------------------------------
 
 @query(
@@ -1489,7 +1489,7 @@ def multimodal_resize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def events_windowed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling-window aggregation (C1)."""
-    return windowed_agg_batch(_t(spark, sf_dir, "events"), window="1 hour")
+    return windowed_agg(_t(spark, sf_dir, "events"), window="1 hour")
 
 
 @query(
@@ -2453,13 +2453,13 @@ def _enrich_oracle() -> str:
 
 @query("events_enrich", oracle=_enrich_oracle())
 def events_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment join (C6), batch twin: events joined
-    to a broadcast catalog dimension, weighted per-category totals.
-    The streaming twin (same plan re-executed per micro-batch) is
-    parity-tested in tests/test_streaming.py."""
-    from nass_summary_spark.streaming.events import enrich_join_batch
+    """Stream-static enrichment join (C6): events joined to a
+    broadcast catalog dimension, weighted per-category totals. The
+    same function on a stream (the plan re-executed per micro-batch)
+    is parity-tested in tests/test_streaming.py."""
+    from nass_summary_spark.streaming.events import enrich_join
 
-    return enrich_join_batch(_t(spark, sf_dir, "events"))
+    return enrich_join(_t(spark, sf_dir, "events"))
 
 
 @query(
@@ -2508,13 +2508,13 @@ def unattributed_clicks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream attribution join (C7), batch twin: purchases
-    attributed to same-user clicks within a 30-minute lookback, then
-    per-user totals. The watermarked streaming twin (bounded join
+    """Stream-stream attribution join (C7): purchases attributed to
+    same-user clicks within a 30-minute lookback, then per-user
+    totals. The same join on a stream (watermarked, bounded join
     state) is parity-tested in tests/test_streaming.py."""
-    from nass_summary_spark.streaming.events import attribution_pairs_batch
+    from nass_summary_spark.streaming.events import attribution_pairs
 
-    pairs = attribution_pairs_batch(_t(spark, sf_dir, "events"))
+    pairs = attribution_pairs(_t(spark, sf_dir, "events"))
     return pairs.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_attributed"),
         dsum("purchase_value", "attributed_value"),
@@ -4253,17 +4253,17 @@ def geo_points_in_zones_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def geo_zone_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed zone occupancy (C11 batch twin): the geometry stage
-    composed with event-time windowing — events as points, grid
-    spatial join assigns containing zones (pure-HOF ray-cast: the
-    deterministic JVM path the STREAM twin also runs), tumbling
-    hourly counts + exact DECIMAL value mass per zone. The stream
-    twin (streaming/events.py zone_window_stream: static broadcast
-    zones, watermarked windowed agg) is parity-tested against this
-    exact plan in tests/test_streaming.py."""
-    from nass_summary_spark.streaming.events import zone_window_batch
+    """Windowed zone occupancy (C11): the geometry stage composed
+    with event-time windowing — events as points, grid spatial join
+    assigns containing zones (pure-HOF ray-cast: the deterministic
+    JVM path a stream also runs), tumbling hourly counts + exact
+    DECIMAL value mass per zone. streaming/events.py zone_window on
+    a stream (static broadcast zones, watermarked windowed agg) is
+    parity-tested against this exact plan in
+    tests/test_streaming.py."""
+    from nass_summary_spark.streaming.events import zone_window
 
-    return zone_window_batch(
+    return zone_window(
         _t(spark, sf_dir, "events"), _zone_rects(spark, sf_dir)
     )
 
@@ -5092,16 +5092,16 @@ def source_drift_kl_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quality_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming quality gate, batch twin (C12): the SAME per-row
-    HOF scoring expression the stream stage runs (stateless, no
-    shuffle - classifier.score_columns, pinned equal to the B50
-    aggregation path in tests) + the keep filter. The stream twin
-    (streaming/quality.py, append mode, no state) is parity-tested
+    """Streaming quality gate (C12) on at-rest documents: the SAME
+    per-row HOF scoring expression the stream stage runs (stateless,
+    no shuffle - classifier.score_columns, pinned equal to the B50
+    aggregation path in tests) + the keep filter. The same function
+    on a stream (append mode, no state) is parity-tested
     in tests/test_streaming.py; this row gives the scoring
     expression itself driver-grade oracle evidence."""
-    from nass_summary_spark.streaming.quality import quality_gate_batch
+    from nass_summary_spark.streaming.quality import quality_gate
 
-    return quality_gate_batch(_t(spark, sf_dir, "documents"))
+    return quality_gate(_t(spark, sf_dir, "documents"))
 
 
 @query(
@@ -5641,7 +5641,7 @@ def late_data_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     10-minute bucket 0-2 batches late — the heavy-tailed arrival
     shape real pipelines tune watermarks against. The oracle replays
     the batch-level running-max watermark exactly; the streaming twin
-    (windowed_agg_stream + harvest_drop_metrics) is parity-tested in
+    (windowed_agg on a stream + harvest_drop_metrics) is parity-tested in
     tests/test_streaming.py against numRowsDroppedByWatermark."""
     from nass_summary_spark.functions.parsing import epoch_micros
     from nass_summary_spark.streaming.events import late_data_metrics_batch
@@ -5685,24 +5685,24 @@ def late_data_metrics_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def stream_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed distribution-drift monitor, batch twin (C13): KL of
+    """Windowed distribution-drift monitor (C13): KL of
     each hour window's event_type distribution against the corpus
     baseline - the alert that catches an ingest slice going off-
-    distribution WHILE it streams. The stream twin runs the same
-    plan split at its only stateful seam: ONE watermarked windowed
+    distribution WHILE it streams. On a stream the same plan
+    splits at its only stateful seam: ONE watermarked windowed
     count (state bounded by horizon x type cardinality), with the KL
     finish as a foreachBatch projection over finalized windows (the
-    C9 pattern; drift_finish is shared verbatim by both twins -
+    C9 pattern; drift_finish is the same projection in both modes -
     streaming/events.py). Stream-vs-batch parity is pinned in
     tests/test_streaming.py."""
     from nass_summary_spark.streaming.events import (
         drift_finish,
-        drift_window_counts_batch,
+        drift_window_counts,
         type_baseline,
     )
 
     ev = _t(spark, sf_dir, "events")
-    counts = drift_window_counts_batch(ev)
+    counts = drift_window_counts(ev)
     return drift_finish(counts, type_baseline(ev))
 
 
@@ -6911,7 +6911,7 @@ def canonical_entities_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def trending_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Windowed trending top-k, batch twin (C14): the most active
+    """Windowed trending top-k (C14): the most active
     users per hour window - the 'trending hashtags' shape. Stage 1
     is ONE watermarked windowed count keyed by the HIGH-cardinality
     user dimension (state = horizon x active users - the stress case
@@ -6923,11 +6923,11 @@ def trending_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit before the exchange."""
     from nass_summary_spark.streaming.events import (
         trending_finish,
-        trending_window_counts_batch,
+        trending_window_counts,
     )
 
     ev = _t(spark, sf_dir, "events")
-    return trending_finish(trending_window_counts_batch(ev), k=3)
+    return trending_finish(trending_window_counts(ev), k=3)
 
 
 @query(

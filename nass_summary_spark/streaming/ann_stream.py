@@ -15,10 +15,10 @@ the day-0 corpus — Lloyd needs data, so unlike the MinHash twin the
 index cannot bootstrap empty). Re-train + re-encode offline when
 drift accumulates, like any IVF deployment.
 
-Exactly-once: idempotent per-batch overwrite of the neighbor sink;
-the index append is marker-guarded through Hadoop's FileSystem API
-(works on hdfs/s3a, same rationale as dedup_stream). The probe is
-replay-proof by construction: a replayed batch's own vectors may
+Exactly-once (shard layout and replay rule: streaming/sink.py): the
+neighbors are a shard table and the index append runs once per batch
+id (``sink.apply_once``). What is specific here: the probe is
+replay-proof by construction — a replayed batch's own vectors may
 already be in the index, so the probe EXCLUDES the batch's ids from
 the candidate side (anti-join, batch-sized broadcast).
 
@@ -38,7 +38,11 @@ from nass_summary_spark.operators.ann_index import (
     ann_index_probe,
     extend_ann_index,
 )
-from nass_summary_spark.streaming.dedup_stream import _hadoop_fs
+from nass_summary_spark.streaming.sink import (
+    apply_once,
+    start_batches,
+    write_shard,
+)
 
 
 def ann_ingest_stream(
@@ -52,37 +56,24 @@ def ann_ingest_stream(
     nprobe: int = 2,
 ) -> StreamingQuery:
     """Start the probe-then-extend cycle over a vector stream.
-    Neighbors for batch N land under ``{neighbors_path}/batch_id=N``
-    (idempotent overwrite); the index grows under ``index_path``.
+    Neighbors land in the shard table ``neighbors_path`` (read it
+    with ``sink.read_shards``); the index grows under ``index_path``.
     ``build_ann_index`` must have run on a seed corpus first."""
 
     def probe_and_extend(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, marker = _hadoop_fs(
-            spark, f"{index_path}/_applied/batch_id={batch_id}"
-        )
         new_ids = batch_df.select(F.col(id_col).alias("id")).distinct()
         # replay-proofing: candidates that ARE this batch (present
         # only if a crash-replay already appended it) are excluded
         # BEFORE ranking, so the replayed probe is row-identical
-        ann_index_probe(
+        neighbors = ann_index_probe(
             spark, batch_df, id_col, vec_col, index_path,
             k=k, nprobe=nprobe, exclude_ids=new_ids,
-        ).write.mode("overwrite").parquet(
-            f"{neighbors_path}/batch_id={batch_id}"
         )
-        if not fs.exists(marker):
-            extend_ann_index(batch_df, id_col, vec_col, index_path)
-            fs.mkdirs(marker)
+        write_shard(neighbors, neighbors_path, batch_id)
+        apply_once(
+            spark, index_path, batch_id,
+            lambda: extend_ann_index(batch_df, id_col, vec_col, index_path),
+        )
 
-    return (
-        sdf.writeStream.foreachBatch(probe_and_extend)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_stream_neighbors(spark, neighbors_path: str) -> DataFrame:
-    """All per-batch neighbor readouts emitted so far."""
-    return spark.read.parquet(f"{neighbors_path}/batch_id=*")
+    return start_batches(sdf, probe_and_extend, checkpoint_path)

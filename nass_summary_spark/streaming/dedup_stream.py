@@ -11,18 +11,12 @@ disk, exactly-once-extended via the checkpointed batch id), which is
 how a production ingest firehose near-dups against a 100 TB history
 without keeping signatures in executor memory.
 
-Exactly-once note: foreachBatch can REPLAY a batch after a crash.
-The pair sink is idempotent (overwrite per batch_id directory, the
-write_partial_summary pattern), the probe itself is replay-proof
-(``incremental_minhash_pairs`` anti-joins the batch's own ids out of
-the index side, so a batch that already reached the index probes
-identically), and the index extension is guarded by recording
-applied batch ids under ``{index}/_applied/batch_id=N`` so a
-replayed batch skips the duplicate append. The one unguarded window
-— a crash between the append finishing and the marker landing —
-duplicates index rows for that batch only; a transactional table
-format closes it with a real commit protocol (same caveat as
-sources/writers.py compact_table's rename window).
+Exactly-once (shard layout and replay rule: streaming/sink.py): the
+pairs are a shard table and the index append runs once per batch id
+(``sink.apply_once``). What is specific here: the probe itself is
+replay-proof — ``incremental_minhash_pairs`` anti-joins the batch's
+own ids out of the index side, so a batch that already reached the
+index probes identically.
 
 Correctness evidence: parity with the batch operator —
 tests/test_dedup_index.py pins incremental == from-scratch B3, and
@@ -39,18 +33,11 @@ from nass_summary_spark.operators.dedup_index import (
     _incremental_minhash_pairs_with_handle,
     extend_minhash_index,
 )
-
-
-def _hadoop_fs(spark, path: str):
-    """(FileSystem, Path) for ``path`` — marker existence/creation
-    must go through Hadoop's filesystem layer, not ``os.path``: with
-    an hdfs:// or s3a:// index the local-FS check is silently
-    always-False and every crash-replay would re-append the batch
-    (the exact duplication the marker exists to prevent). Shared
-    implementation in :mod:`nass_summary_spark.functions.fsio`."""
-    from nass_summary_spark.functions.fsio import hadoop_fs
-
-    return hadoop_fs(spark, path)
+from nass_summary_spark.streaming.sink import (
+    apply_once,
+    start_batches,
+    write_shard,
+)
 
 
 def minhash_dedup_stream(
@@ -66,16 +53,13 @@ def minhash_dedup_stream(
     threshold: float = 0.5,
 ) -> StreamingQuery:
     """Start the probe-then-extend cycle over a document stream.
-    Pairs for batch N land under ``{pairs_path}/batch_id=N``
-    (idempotent overwrite); the index grows under ``index_path``.
+    Pairs land in the shard table ``pairs_path`` (read it with
+    ``sink.read_shards``); the index grows under ``index_path``.
     The index must exist (``build_minhash_index``, possibly on an
     empty frame) before the stream starts."""
 
     def probe_and_extend(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        fs, marker = _hadoop_fs(
-            spark, f"{index_path}/_applied/batch_id={batch_id}"
-        )
         # probe first: replay-proof regardless of whether this batch
         # already reached the index (see module docstring)
         pairs, probe_handle = _incremental_minhash_pairs_with_handle(
@@ -83,15 +67,14 @@ def minhash_dedup_stream(
             n=n, num_perm=num_perm, bands=bands, threshold=threshold,
         )
         try:
-            pairs.write.mode("overwrite").parquet(
-                f"{pairs_path}/batch_id={batch_id}"
-            )
-            if not fs.exists(marker):
-                extend_minhash_index(
+            write_shard(pairs, pairs_path, batch_id)
+            apply_once(
+                spark, index_path, batch_id,
+                lambda: extend_minhash_index(
                     batch_df, id_col, text_col, index_path,
                     n=n, num_perm=num_perm, bands=bands,
-                )
-                fs.mkdirs(marker)
+                ),
+            )
         finally:
             # the pair write materialized every consumer of the
             # cached batch signatures + candidate set — release them,
@@ -99,14 +82,4 @@ def minhash_dedup_stream(
             # micro-batch
             probe_handle.unpersist()
 
-    return (
-        sdf.writeStream.foreachBatch(probe_and_extend)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_stream_pairs(spark, pairs_path: str) -> DataFrame:
-    """All pairs emitted so far, across batches."""
-    return spark.read.parquet(f"{pairs_path}/batch_id=*")
+    return start_batches(sdf, probe_and_extend, checkpoint_path)

@@ -2,8 +2,8 @@
 operators/domain.py (B153), for ingest-time curation: documents
 arrive in micro-batches and the per-host document cap must hold
 ACROSS batches, so the gate carries state — a persisted per-host
-count table, maintained with the same per-``batch_id``-overwrite
-replay protocol as the sketch ingests (C28/C30).
+count table, kept as a shard table of per-batch count DELTAS
+(streaming/sink.py).
 
 Cap semantics under streaming are ARRIVAL-ORDER by nature: the first
 ``max_per_host`` documents a host ships are kept, later ones are
@@ -14,16 +14,13 @@ order globally; the stream ranks by (batch, hash-within-batch) —
 the parity pytest pins the stream output row-for-row against an
 independent sequential replay of that definition.
 
-Exactly-once: both writes of a batch (the gated output and the
-host-count DELTA) go to their own ``batch_id=N`` directories with
-overwrite; prior counts are read only from deltas with id < N, so a
-crash-replay rewrites identical bytes and never double-counts.
+Exactly-once: the gated output and the host-count delta are both
+shard tables; prior counts are read only from deltas with id < N, so
+a crash-replay of batch N sees the counts its first attempt saw and
+never counts itself.
 """
 
 from __future__ import annotations
-
-import glob as _glob
-import re as _re
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -31,6 +28,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 from nass_summary_spark.operators.domain import extract_host
 from nass_summary_spark.operators.sampling import id_bucket
+from nass_summary_spark.streaming.sink import (
+    read_shards,
+    shard_ids,
+    start_batches,
+    write_shard,
+)
 
 _STATE_SCHEMA = "host string, cnt bigint"
 
@@ -38,17 +41,11 @@ _STATE_SCHEMA = "host string, cnt bigint"
 def _prior_counts(
     spark: SparkSession, state_path: str, batch_id: int
 ) -> DataFrame:
-    dirs = [
-        d
-        for d in _glob.glob(f"{state_path}/batch_id=*")
-        if _re.search(r"batch_id=(\d+)$", d)
-        and int(d.rsplit("=", 1)[1]) < batch_id
-    ]
-    if not dirs:
+    ids = [i for i in shard_ids(spark, state_path) if i < batch_id]
+    if not ids:
         return spark.createDataFrame([], _STATE_SCHEMA)
     return (
-        spark.read.schema(_STATE_SCHEMA)
-        .parquet(*dirs)
+        read_shards(spark, state_path, ids)
         .groupBy("host")
         .agg(F.sum("cnt").cast("bigint").alias("cnt"))
     )
@@ -69,7 +66,8 @@ def domain_gate_stream(
     Per batch: host extraction (map-only), broadcast blocklist join,
     within-batch deterministic rank per host (the B20 hash order),
     shifted by the host's persisted prior count — then one overwrite
-    of the gated output and one of the count delta. State is
+    of the gated output and one of the count delta, each a shard
+    table (read the output with ``sink.read_shards``). State is
     host-sized; the corpus never rescans.
     """
     cap = int(max_per_host)
@@ -109,27 +107,10 @@ def domain_gate_stream(
             .when(F.col("host_rank") > cap, F.lit("capped"))
             .otherwise(F.lit("kept")),
         ).drop("__blocked", "__rn", "__prior")
-        gated.write.mode("overwrite").parquet(
-            f"{out_path}/batch_id={batch_id}"
-        )
+        write_shard(gated, out_path, batch_id)
         delta = staged.groupBy("host").agg(
             F.count(F.lit(1)).cast("bigint").alias("cnt")
         )
-        delta.write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
+        write_shard(delta, state_path, batch_id)
 
-    return (
-        sdf.writeStream.foreachBatch(gate_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_gated(spark: SparkSession, out_path: str) -> DataFrame:
-    """The gated output across all batches (batch_id is the arrival
-    partition)."""
-    return spark.read.option("basePath", out_path).parquet(
-        f"{out_path}/batch_id=*"
-    )
+    return start_batches(sdf, gate_batch, checkpoint_path)

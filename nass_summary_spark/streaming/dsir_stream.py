@@ -101,7 +101,7 @@ def load_dsir_reference(
     return lam, int(meta["n_tot"]), int(meta["t_tot"]), nb, int(meta["lam_scale"])
 
 
-def dsir_gate_batch(
+def dsir_gate(
     docs: DataFrame,
     lam_q: dict[int, int],
     n_tot: int,
@@ -111,8 +111,8 @@ def dsir_gate_batch(
     num_buckets: int = NUM_BUCKETS,
     lam_scale: int = LAM_SCALE,
 ) -> DataFrame:
-    """Score + gate a static frame with the frozen model (the batch
-    twin): keeps rows at or above the frozen corpus-mean log ratio."""
+    """Score + gate a static or streaming frame with the frozen model:
+    keeps rows at or above the frozen corpus-mean log ratio."""
     n, score_q, keep = dsir_score_columns(
         text_col, lam_q, n_tot, t_tot, num_buckets, lam_scale
     )
@@ -122,21 +122,3 @@ def dsir_gate_batch(
         score_q.alias("score_q"),
         keep.alias("keep"),
     ).where(F.col("keep"))
-
-
-def dsir_gate_stream(
-    docs_stream: DataFrame,
-    lam_q: dict[int, int],
-    n_tot: int,
-    t_tot: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_buckets: int = NUM_BUCKETS,
-    lam_scale: int = LAM_SCALE,
-) -> DataFrame:
-    """Streaming twin: the identical stateless projection on a
-    streaming frame."""
-    return dsir_gate_batch(
-        docs_stream, lam_q, n_tot, t_tot, id_col, text_col,
-        num_buckets, lam_scale,
-    )

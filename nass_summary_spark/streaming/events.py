@@ -1,15 +1,21 @@
 """Event-stream operators (SURVEY.md §2 C1–C4).
 
-Each operator comes in two twins with identical semantics:
-- ``*_batch``: a DataFrame over at-rest data — this is what the
-  DuckDB oracle checks;
-- ``*_stream``: the Structured Streaming version (``readStream`` →
-  watermark → stateful op) — verified in tests by running the file
-  stream to completion and comparing to the batch twin.
+Each stage is ONE function that accepts a static or a streaming
+frame. On at-rest data it is the plan the DuckDB oracle checks; on a
+``readStream`` frame it is the Structured Streaming stage, verified
+in tests by running the file stream to completion and comparing to
+the same function over the static frame. A stage with event-time
+state takes a ``watermark`` lateness and applies it only when the
+input ``isStreaming`` (:func:`_watermarked`): at 100 TB/day of
+events the window / join state must evict, while a static frame
+keeps exactly its batch plan.
 
-Watermarks bound state: at 100 TB/day of events the window /
-session state must evict, so every stream twin takes an explicit
-``watermark`` lateness.
+Two stages keep a ``*_batch``/``*_stream`` pair because the stream
+form is a different operator, not the same plan with a watermark:
+``sessionize`` (a lag window over a sorted user partition vs the
+built-in ``session_window`` aggregation) and ``unattributed_clicks``
+(an anti join vs a watermarked outer join, the only form a stream
+can emit "no purchase followed").
 """
 
 from __future__ import annotations
@@ -40,10 +46,25 @@ def ensure_event_time(events: DataFrame, ts_col: str = "ts") -> DataFrame:
     return events
 
 
-def windowed_agg_batch(events: DataFrame, window: str = "1 hour") -> DataFrame:
-    """Tumbling-window count/sum per event type."""
+def _watermarked(
+    events: DataFrame, watermark: str, ts_col: str = "ts"
+) -> DataFrame:
+    """Watermark a STREAMING frame on ``ts_col`` (cast to TIMESTAMP
+    first, see :func:`ensure_event_time`); a static frame is returned
+    unchanged, so a stage's batch plan carries no watermark node."""
+    if not events.isStreaming:
+        return events
+    return ensure_event_time(events, ts_col).withWatermark(ts_col, watermark)
+
+
+def windowed_agg(
+    events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
+) -> DataFrame:
+    """Tumbling-window count/sum per event type. On a stream in
+    append mode each (window, type) row lands once, when the
+    watermark passes the window end."""
     return (
-        events.groupBy(
+        _watermarked(events, watermark).groupBy(
             F.window(F.col("ts"), window).alias("w"),
             F.col("event_type"),
         )
@@ -180,19 +201,6 @@ def harvest_drop_metrics(query) -> list[dict]:
     return out
 
 
-def windowed_agg_stream(events: DataFrame, window: str = "1 hour", watermark: str = "2 hours") -> DataFrame:
-    """Streaming twin of :func:`windowed_agg_batch`."""
-    return (
-        ensure_event_time(events).withWatermark("ts", watermark)
-        .groupBy(F.window(F.col("ts"), window).alias("w"), F.col("event_type"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.round(F.sum("value"), 4).alias("sum_value"),
-        )
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -300,10 +308,13 @@ def _event_type_dim(spark) -> DataFrame:
     )
 
 
-def enrich_join_batch(events: DataFrame) -> DataFrame:
-    """Stream-static enrichment, batch twin: events joined to the
-    event-type dimension (broadcast — the dim is catalog-sized) and
-    aggregated to weighted per-category totals."""
+def enrich_join(events: DataFrame) -> DataFrame:
+    """Stream-static enrichment (C6): events joined to the event-type
+    dimension (broadcast — the dim is catalog-sized) and aggregated
+    to weighted per-category totals. On a stream it needs no
+    watermark: the static side is fixed per micro-batch (Spark
+    re-plans the broadcast each batch, picking up dim updates) and
+    aggregation state is bounded by category cardinality."""
     dim = F.broadcast(_event_type_dim(events.sparkSession))
     return (
         events.join(dim, "event_type")
@@ -347,30 +358,22 @@ def _attribution_cond():
 _ATTR_COLS = ["user_id", "click_id", "click_ts", "purchase_id", "purchase_ts", "purchase_value"]
 
 
-def attribution_pairs_batch(events: DataFrame) -> DataFrame:
-    """Stream-stream join (C7), batch twin: purchases attributed to
-    same-user clicks within the lookback window. Executes as a hash
-    equi-join on user_id with the time bound as residual — the join
-    key is the user, so both sides co-partition on one shuffle."""
-    clicks, purchases = _attribution_sides(events)
-    purchases = purchases.withColumnRenamed("user_id", "__p_user")
-    cond = (F.col("user_id") == F.col("__p_user")) & _attribution_cond()
-    return clicks.join(purchases, cond).select(*_ATTR_COLS)
-
-
-def attribution_pairs_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
-    """Streaming twin: a watermarked stream-stream inner join. The
-    time-range predicate lives IN the join condition — that is what
-    lets Spark derive a state-eviction constraint (buffered clicks
-    are dropped once the purchase watermark passes click_ts +
-    window), so join state is bounded by (rate × lookback), not by
-    stream length."""
+def attribution_pairs(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+    """Stream-stream join (C7): purchases attributed to same-user
+    clicks within the lookback window. Executes as a hash equi-join
+    on user_id with the time bound as residual — the join key is the
+    user, so both sides co-partition on one shuffle. On a stream both
+    sides are watermarked; the time-range predicate lives IN the join
+    condition, which is what lets Spark derive a state-eviction
+    constraint (buffered clicks are dropped once the purchase
+    watermark passes click_ts + window), so join state is bounded by
+    (rate × lookback), not by stream length."""
     clicks, purchases = _attribution_sides(events)
     purchases = purchases.withColumnRenamed("user_id", "__p_user")
     cond = (F.col("user_id") == F.col("__p_user")) & _attribution_cond()
     return (
-        ensure_event_time(clicks, "click_ts").withWatermark("click_ts", watermark)
-        .join(ensure_event_time(purchases, "purchase_ts").withWatermark("purchase_ts", watermark), cond)
+        _watermarked(clicks, watermark, "click_ts")
+        .join(_watermarked(purchases, watermark, "purchase_ts"), cond)
         .select(*_ATTR_COLS)
     )
 
@@ -405,37 +408,13 @@ def unattributed_clicks_stream(
     clicks, purchases = _attribution_sides(events)
     purchases = purchases.withColumnRenamed("user_id", "__p_user")
     cond = (F.col("user_id") == F.col("__p_user")) & _attribution_cond()
-    joined = (
-        ensure_event_time(clicks, "click_ts")
-        .withWatermark("click_ts", watermark)
-        .join(
-            ensure_event_time(purchases, "purchase_ts").withWatermark(
-                "purchase_ts", watermark
-            ),
-            cond,
-            "left_outer",
-        )
+    joined = _watermarked(clicks, watermark, "click_ts").join(
+        _watermarked(purchases, watermark, "purchase_ts"),
+        cond,
+        "left_outer",
     )
     return joined.where(F.col("purchase_id").isNull()).select(
         "user_id", "click_id", "click_ts"
-    )
-
-
-def enrich_join_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin: a stream-static join needs no watermark (the
-    static side is fixed per micro-batch; Spark re-plans the
-    broadcast each batch, picking up dim updates). Aggregation state
-    is bounded by category cardinality."""
-    dim = F.broadcast(_event_type_dim(events.sparkSession))
-    return (
-        events.join(dim, "event_type")
-        .groupBy("category")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(
-                (F.col("value") * F.col("weight")).cast("decimal(18,2)")
-            ).cast("double").alias("weighted_value"),
-        )
     )
 
 
@@ -519,54 +498,27 @@ def _event_points(events: DataFrame) -> DataFrame:
     ).withColumn("y", ((k * 71) % 1000 + 0.5).cast("double"))
 
 
-def zone_window_batch(
-    events: DataFrame, zones: DataFrame, window: str = "1 hour"
-) -> DataFrame:
-    """Windowed zone occupancy, batch twin (C11): events become
-    points, the grid spatial join assigns containing zones
-    (operators/geo.py), and a tumbling window counts per (window,
-    zone). ``arrow=False``: the pure-HOF ray-cast keeps the plan
-    fully deterministic/JVM — required for the streaming twin, and
-    micro-batch volumes never reach the Arrow path's break-even."""
-    from nass_summary_spark.operators.geo import points_in_polygons
-
-    hits = points_in_polygons(
-        _event_points(events), zones, 64.0, ring_col="zone_ring", arrow=False
-    )
-    return (
-        hits.groupBy(F.window(F.col("ts"), window).alias("w"), F.col("cmz"))
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,2)"))
-            .cast("double")
-            .alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "cmz",
-            "n_events",
-            "sum_value",
-        )
-    )
-
-
-def zone_window_stream(
+def zone_window(
     events: DataFrame,
     zones: DataFrame,
     window: str = "1 hour",
     watermark: str = "2 hours",
 ) -> DataFrame:
-    """Streaming twin of :func:`zone_window_batch`: the zone table is
-    STATIC (broadcast re-planned per micro-batch, like
-    enrich_join_stream) while events stream; the watermark bounds
-    windowed-aggregation state. The spatial join side is identical
-    code — geometry composes with Structured Streaming because it is
-    just a broadcast equi-join plus a deterministic JVM predicate."""
+    """Windowed zone occupancy (C11): events become points, the grid
+    spatial join assigns containing zones (operators/geo.py), and a
+    tumbling window counts per (window, zone). ``arrow=False``: the
+    pure-HOF ray-cast keeps the plan fully deterministic/JVM —
+    required on a stream, and micro-batch volumes never reach the
+    Arrow path's break-even. On a stream the zone table stays STATIC
+    (broadcast re-planned per micro-batch, like :func:`enrich_join`)
+    and the watermark bounds windowed-aggregation state: geometry
+    composes with Structured Streaming because it is just a
+    broadcast equi-join plus a deterministic JVM predicate."""
     from nass_summary_spark.operators.geo import points_in_polygons
 
-    ev = ensure_event_time(events).withWatermark("ts", watermark)
     hits = points_in_polygons(
-        _event_points(ev), zones, 64.0, ring_col="zone_ring", arrow=False
+        _event_points(_watermarked(events, watermark)),
+        zones, 64.0, ring_col="zone_ring", arrow=False,
     )
     return (
         hits.groupBy(F.window(F.col("ts"), window).alias("w"), F.col("cmz"))
@@ -585,29 +537,16 @@ def zone_window_stream(
     )
 
 
-def drift_window_counts_batch(
-    events: DataFrame, window: str = "1 hour"
-) -> DataFrame:
-    """C13, stage 1 (batch twin): per-(window, event_type) counts —
-    the single aggregation the stream twin runs with a watermark."""
-    return (
-        events.groupBy(
-            F.window(F.col("ts"), window).alias("w"), F.col("event_type")
-        )
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n")
-    )
-
-
-def drift_window_counts_stream(
+def drift_window_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """C13, stage 1 (stream twin): ONE watermarked windowed
-    aggregation — the only stateful stage of the drift monitor, state
-    bounded by watermark horizon × type cardinality."""
-    ev = ensure_event_time(events).withWatermark("ts", watermark)
+    """C13, stage 1: per-(window, event_type) counts — on a stream the
+    only stateful stage of the drift monitor, state bounded by
+    watermark horizon × type cardinality."""
     return (
-        ev.groupBy(F.window(F.col("ts"), window).alias("w"), F.col("event_type"))
+        _watermarked(events, watermark).groupBy(
+            F.window(F.col("ts"), window).alias("w"), F.col("event_type")
+        )
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n")
     )
@@ -616,7 +555,7 @@ def drift_window_counts_stream(
 def drift_finish(counts: DataFrame, baseline: DataFrame, round_dp: int = 8) -> DataFrame:
     """C13, stage 2: per-window KL divergence of the window's
     event_type distribution against a BASELINE distribution
-    (event_type, p).  A pure batch projection shared by both twins —
+    (event_type, p).  A pure batch projection over stage 1's counts —
     in streaming it runs inside foreachBatch on the finalized window
     rows (the C9 pattern), so no multi-level streaming aggregation is
     needed.  Types absent from a window contribute no term (their
@@ -662,28 +601,17 @@ def type_baseline(events: DataFrame) -> DataFrame:
     )
 
 
-def trending_window_counts_batch(
-    events: DataFrame, window: str = "1 hour"
-) -> DataFrame:
-    """C14, stage 1 (batch twin): per-(window, user) event counts —
-    the single watermarked aggregation of the streaming twin."""
-    return (
-        events.groupBy(F.window(F.col("ts"), window).alias("w"), F.col("user_id"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "user_id", "n")
-    )
-
-
-def trending_window_counts_stream(
+def trending_window_counts(
     events: DataFrame, window: str = "1 hour", watermark: str = "2 hours"
 ) -> DataFrame:
-    """C14, stage 1 (stream twin): watermarked windowed counts keyed
-    by a HIGH-cardinality dimension (users) — state bounded by
-    watermark horizon × active users, the stress case the
-    low-cardinality drift monitor (C13) doesn't exercise."""
-    ev = ensure_event_time(events).withWatermark("ts", watermark)
+    """C14, stage 1: per-(window, user) event counts — on a stream,
+    watermarked windowed counts keyed by a HIGH-cardinality dimension
+    (users): state bounded by watermark horizon × active users, the
+    stress case the low-cardinality drift monitor (C13) doesn't
+    exercise."""
     return (
-        ev.groupBy(F.window(F.col("ts"), window).alias("w"), F.col("user_id"))
+        _watermarked(events, watermark)
+        .groupBy(F.window(F.col("ts"), window).alias("w"), F.col("user_id"))
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("window_start"), "user_id", "n")
     )
@@ -691,7 +619,7 @@ def trending_window_counts_stream(
 
 def trending_finish(counts: DataFrame, k: int = 3) -> DataFrame:
     """C14, stage 2: per-window top-k by count (total-order
-    tie-break) — a pure ranking projection shared by both twins; in
+    tie-break) — a pure ranking projection over stage 1's counts; in
     streaming it runs inside foreachBatch over finalized windows
     (the C9/C13 pattern).  Compiles to a partial WindowGroupLimit
     before the exchange, like every other top-k in the repo."""

@@ -12,10 +12,10 @@ aggregation state, no watermark, survives any uptime. A multilingual
 crawl firehose keeps only target-language documents at ingest
 instead of paying a batch pass later.
 
-Parity evidence (tests/test_new_ops_r9.py): the stream twin is
-row-identical to the batch ``score_documents_weighted`` scorer with
-the same frozen weights over any micro-batch split — the C12b
-contract applied to the langid model.
+Parity evidence (tests/test_new_ops_r9.py): the gate is row-identical
+to the batch ``score_documents_weighted`` scorer with the same frozen
+weights, on a static frame and over any micro-batch split of a
+stream — the C12b contract applied to the langid model.
 """
 
 from __future__ import annotations
@@ -28,7 +28,7 @@ from nass_summary_spark.operators.classifier import (
 )
 
 
-def langid_gate_batch(
+def langid_gate(
     docs: DataFrame,
     weights: dict[int, int],
     denom: float,
@@ -37,8 +37,8 @@ def langid_gate_batch(
     text_col: str = "text",
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Score + gate a static frame with the frozen langid model (the
-    batch twin): keeps documents the model calls target-language."""
+    """Score + gate a static or streaming frame with the frozen langid
+    model: keeps documents the model calls target-language."""
     n_feats, prob = score_columns_weighted(
         text_col, weights, denom, bias, gram_mode="chars"
     )
@@ -49,20 +49,4 @@ def langid_gate_batch(
             prob.alias("lang_prob"),
         )
         .where(F.col("lang_prob") >= F.lit(threshold))
-    )
-
-
-def langid_gate_stream(
-    docs_stream: DataFrame,
-    weights: dict[int, int],
-    denom: float,
-    bias: float = 0.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Streaming twin: the identical stateless projection on a
-    streaming frame — append-mode, no state."""
-    return langid_gate_batch(
-        docs_stream, weights, denom, bias, id_col, text_col, threshold
     )

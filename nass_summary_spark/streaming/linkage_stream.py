@@ -15,10 +15,13 @@ and makes every batch's output a pure projection over one blocked
 equi-join — no aggregation, no state, nothing held between batches.
 
 Exactly-once: the scorer mutates nothing (the reference is static),
-so idempotent per-batch overwrite of the match sink is the whole
-story — a replayed batch rewrites identical rows. The params sidecar
-fails loudly when m- and u-mappings disagree on the field set
-(the mixed-generation guard of the index family, applied to model
+so the shard-table overwrite of streaming/sink.py is the whole story.
+The model directory (``model/params`` + its drift baseline
+``model/pattern_hist``) is ONE generation: the EM refresh stages a
+whole new model directory and publishes it with one swap, so new
+weights never sit next to an old baseline. The loader fails loudly
+when m- and u-mappings disagree on the field set (the
+mixed-generation guard of the index family, applied to model
 parameters).
 
 Parity evidence (tests/test_streaming.py): scoring is per-pair with
@@ -36,6 +39,17 @@ from pyspark.sql.streaming import StreamingQuery
 
 from nass_summary_spark.functions.smalldf import local_struct_df
 from nass_summary_spark.operators.linkage import fellegi_sunter_scores
+from nass_summary_spark.streaming.sink import start_batches, write_shard
+
+
+def _write_params(
+    spark: SparkSession, fields, m_probs, u_probs, model_dir: str
+) -> None:
+    local_struct_df(
+        spark,
+        "field string, m double, u double",
+        [(f, float(m_probs[f]), float(u_probs[f])) for f in fields],
+    ).coalesce(1).write.mode("overwrite").parquet(f"{model_dir}/params")
 
 
 def build_linkage_reference(
@@ -49,7 +63,7 @@ def build_linkage_reference(
     """Persist the entity master plus its frozen Fellegi–Sunter
     parameters under ``path``: ``reference/`` (id, block and
     comparison columns only — pruned at write so probes never scan
-    unrelated master columns), ``params/`` (field, m, u) and
+    unrelated master columns), ``model/params/`` (field, m, u) and
     ``meta/`` (ref_id, block_col). Fails loudly when the m- and
     u-mappings disagree on fields."""
     if set(m_probs) != set(u_probs):
@@ -64,11 +78,7 @@ def build_linkage_reference(
         .write.mode("overwrite")
         .parquet(f"{path}/reference")
     )
-    local_struct_df(
-        spark,
-        "field string, m double, u double",
-        [(f, float(m_probs[f]), float(u_probs[f])) for f in fields],
-    ).coalesce(1).write.mode("overwrite").parquet(f"{path}/params")
+    _write_params(spark, fields, m_probs, u_probs, f"{path}/model")
     local_struct_df(
         spark, "ref_id string, block_col string", [(ref_id, block_col)]
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/meta")
@@ -80,7 +90,7 @@ def load_linkage_reference(
     """Read back ``(reference, ref_id, block_col, m_probs,
     u_probs)`` — params and meta are model-sized collects."""
     meta = spark.read.parquet(f"{path}/meta").collect()[0]
-    rows = spark.read.parquet(f"{path}/params").collect()
+    rows = spark.read.parquet(f"{path}/model/params").collect()
     m_probs = {r["field"]: r["m"] for r in rows}
     u_probs = {r["field"]: r["u"] for r in rows}
     reference = spark.read.parquet(f"{path}/reference")
@@ -106,8 +116,8 @@ def linkage_stream(
     salt: int = 1,
 ) -> StreamingQuery:
     """Score each micro-batch of arriving records against the stored
-    reference with its frozen weights. Matches for batch N land under
-    ``{matches_path}/batch_id=N`` (idempotent overwrite).
+    reference with its frozen weights. Matches land in the shard
+    table ``matches_path`` (read it with ``sink.read_shards``).
     ``build_linkage_reference`` must have run first."""
 
     def score_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -115,24 +125,13 @@ def linkage_stream(
         ref, ref_id, block_col, m_probs, u_probs = load_linkage_reference(
             spark, reference_path
         )
-        fellegi_sunter_scores(
+        matches = fellegi_sunter_scores(
             batch_df, ref, arrival_id, ref_id, block_col, m_probs,
             threshold=threshold, salt=salt, u_probs=u_probs,
-        ).write.mode("overwrite").parquet(
-            f"{matches_path}/batch_id={batch_id}"
         )
+        write_shard(matches, matches_path, batch_id)
 
-    return (
-        sdf.writeStream.foreachBatch(score_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_stream_matches(spark: SparkSession, matches_path: str) -> DataFrame:
-    """All per-batch match readouts emitted so far."""
-    return spark.read.parquet(f"{matches_path}/batch_id=*")
+    return start_batches(sdf, score_batch, checkpoint_path)
 
 
 # ---------------------------------------------------------------------------
@@ -159,20 +158,24 @@ def _pattern_hist(cand: DataFrame, fields) -> DataFrame:
     )
 
 
-def persist_pattern_histogram(
-    cand: DataFrame, fields, reference_path: str, suffix: str = ""
-) -> None:
-    """Persist the seed candidate relation's agreement-pattern
-    histogram under ``{reference_path}/pattern_hist`` — the drift
-    baseline :func:`pattern_drift_kl` compares against. Call it once
-    with the same candidates the initial EM fit (or prior choice)
-    was based on."""
+def _write_pattern_hist(cand: DataFrame, fields, model_dir: str) -> None:
     (
         _pattern_hist(cand, list(fields))
         .coalesce(1)
         .write.mode("overwrite")
-        .parquet(f"{reference_path}/pattern_hist{suffix}")
+        .parquet(f"{model_dir}/pattern_hist")
     )
+
+
+def persist_pattern_histogram(
+    cand: DataFrame, fields, reference_path: str
+) -> None:
+    """Persist the seed candidate relation's agreement-pattern
+    histogram under ``{reference_path}/model/pattern_hist`` — the
+    drift baseline :func:`pattern_drift_kl` compares against. Call it
+    once with the same candidates the initial EM fit (or prior
+    choice) was based on."""
+    _write_pattern_hist(cand, fields, f"{reference_path}/model")
 
 
 def pattern_drift_kl(
@@ -189,7 +192,7 @@ def pattern_drift_kl(
     fields = list(fields)
     keys = [f"agree_{f}" for f in fields]
     spark = cand.sparkSession
-    stored = spark.read.parquet(f"{reference_path}/pattern_hist")
+    stored = spark.read.parquet(f"{reference_path}/model/pattern_hist")
     cur = _pattern_hist(cand, fields)
     joined = (
         cur.withColumnRenamed("cnt", "c_cur")
@@ -228,16 +231,18 @@ def refresh_linkage_params(
     parameters): block the accumulated ``arrivals`` against the
     stored reference, measure pattern drift vs the persisted
     baseline, and when it exceeds ``kl_threshold`` re-fit
-    Fellegi–Sunter by EM on the CURRENT candidates and swap the
-    params sidecar (validated sibling write + Hadoop-FS rename, the
-    index-family contract) together with a new drift baseline.
+    Fellegi–Sunter by EM on the CURRENT candidates. The new params
+    and their new drift baseline are staged together in
+    ``model__refreshing`` and published with ONE Hadoop-FS swap of
+    the ``model`` directory (the index-family contract), so a failure
+    leaves either the old pair or the new pair, never a mix.
     Scores stay comparable WITHIN a generation; a refresh starts a
     new generation — which is the point (the old weights no longer
     describe the arrivals).
 
     Returns ``{"kl", "refreshed", "m_probs", "u_probs"}`` (the live
     mappings after the call)."""
-    from nass_summary_spark.functions.fsio import swap_in
+    from nass_summary_spark.functions import fsio
     from nass_summary_spark.operators.linkage import (
         blocked_agreements,
         em_params,
@@ -260,26 +265,10 @@ def refresh_linkage_params(
         }
     em = fellegi_sunter_em(cand, fields, n_iter=n_iter)
     new_m, new_u = em_params(em)
-    local_struct_df(
-        spark,
-        "field string, m double, u double",
-        [(f, float(new_m[f]), float(new_u[f])) for f in fields],
-    ).coalesce(1).write.mode("overwrite").parquet(
-        f"{reference_path}/params__refreshing"
-    )
-    persist_pattern_histogram(
-        cand, fields, reference_path, suffix="__refreshing"
-    )
-    swap_in(
-        spark, f"{reference_path}/params",
-        f"{reference_path}/params__refreshing",
-        "__pre_refresh",
-    )
-    swap_in(
-        spark, f"{reference_path}/pattern_hist",
-        f"{reference_path}/pattern_hist__refreshing",
-        "__pre_refresh",
-    )
+    staged = f"{reference_path}/model__refreshing"
+    _write_params(spark, fields, new_m, new_u, staged)
+    _write_pattern_hist(cand, fields, staged)
+    fsio.swap_in(spark, f"{reference_path}/model", staged, "__pre_refresh")
     return {
         "kl": kl, "refreshed": True,
         "m_probs": new_m, "u_probs": new_u,

@@ -13,10 +13,10 @@ the batch aggregation path — so the stream stage is STATELESS
 that keeps no state survives any uptime; this is the property that
 makes classifier curation deployable as ingest middleware.
 
-Batch twin = the same projection on a static frame; the stream twin
-is parity-tested against it in tests/test_streaming.py, and the
-expression itself is pinned equal to the oracle-checked B50
-aggregation path in tests/test_new_ops_r3.py.
+One function gates a static or a streaming frame; the streamed
+output is parity-tested against the static one in
+tests/test_streaming.py, and the expression itself is pinned equal to
+the oracle-checked B50 aggregation path in tests/test_new_ops_r3.py.
 """
 
 from __future__ import annotations
@@ -27,13 +27,13 @@ from pyspark.sql import functions as F
 from nass_summary_spark.operators.classifier import score_columns
 
 
-def quality_gate_batch(
+def quality_gate(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Score + gate a static document frame (the batch twin).
+    """Score + gate a document frame (static or streaming).
 
     Two plan hazards of "filter on an expensive computed column"
     (both profiled): the optimizer pushes the keep-filter — carrying
@@ -78,18 +78,7 @@ def quality_gate_batch(
     )
 
 
-def quality_gate_stream(
-    docs_stream: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Streaming twin: identical projection on a streaming frame —
-    stateless, append-mode."""
-    return quality_gate_batch(docs_stream, id_col, text_col, threshold)
-
-
-def quality_gate_batch_weighted(
+def quality_gate_weighted(
     docs: DataFrame,
     weights: dict[int, int],
     denom: float,
@@ -118,20 +107,4 @@ def quality_gate_batch_weighted(
             prob.alias("quality_prob"),
         )
         .where(F.col("quality_prob") >= F.lit(threshold))
-    )
-
-
-def quality_gate_stream_weighted(
-    docs_stream: DataFrame,
-    weights: dict[int, int],
-    denom: float,
-    bias: float = 0.0,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Streaming twin of the trained-model gate — the identical
-    stateless projection on a streaming frame."""
-    return quality_gate_batch_weighted(
-        docs_stream, weights, denom, bias, id_col, text_col, threshold
     )

@@ -9,15 +9,15 @@ the KB-sized sketch table on disk (no streaming aggregation state,
 no watermark), exactly the C23 posture with sketches instead of
 signatures.
 
-Exactly-once: foreachBatch can replay a batch after a crash. Every
-batch writes to its own ``batch_id=N`` partition directory with
-overwrite, so a replay rewrites identical bytes (HLL sketch images
-are deterministic for a given input multiset under deterministic
-partitioning of the batch — and even if executor scheduling produced
-a different-but-equivalent image, the MERGED estimate is identical
-by the union law pinned in tests). No marker protocol is needed
-because the sink is a pure per-batch overwrite — idempotence by
-construction, the write_partial_summary pattern.
+Exactly-once: every table here is a shard table (layout and replay
+rule: streaming/sink.py), and a sketch, counter or count shard is a
+pure function of its batch, so no applied-batch marker is needed. A
+replayed HLL shard may differ in image bytes under different
+executor scheduling, but the MERGED estimate is identical by the
+union law pinned in tests — and HLL union is idempotent, so even a
+shard merged twice changes no estimate. The count-min, quantile and
+SPRT tables are SUMS: there a double merge double-counts, and the
+overwrite of the replayed batch's own shard is what prevents it.
 
 Parity evidence (tests/test_streaming.py): rollup over the streamed
 shard sketches ≡ the batch rollup over the whole corpus (exact at
@@ -35,6 +35,13 @@ from nass_summary_spark.operators.distinct_sketch import (
     build_distinct_sketches,
     rollup_distinct,
 )
+from nass_summary_spark.streaming.sink import (
+    read_shards,
+    shard_ids,
+    shard_path,
+    start_batches,
+    write_shard,
+)
 
 
 def sketch_ingest_stream(
@@ -48,29 +55,13 @@ def sketch_ingest_stream(
     """Maintain the persisted per-(keys, batch) sketch table from a
     document stream. Stateless between batches: each batch is one
     map-side-combinable aggregation (≤ |keys-groups| rows out) and
-    one partition-directory overwrite."""
+    one shard overwrite."""
 
     def build_and_append(batch_df: DataFrame, batch_id: int) -> None:
-        shards = build_distinct_sketches(batch_df, keys, id_col, lg_k=lg_k)
-        (
-            shards.write.mode("overwrite").parquet(
-                f"{sketch_path}/batch_id={batch_id}"
-            )
-        )
+        shard = build_distinct_sketches(batch_df, keys, id_col, lg_k=lg_k)
+        write_shard(shard, sketch_path, batch_id)
 
-    return (
-        sdf.writeStream.foreachBatch(build_and_append)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def read_stream_sketches(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """The persisted shard-sketch table (one row per (keys, batch))."""
-    return spark.read.option("basePath", sketch_path).parquet(
-        f"{sketch_path}/batch_id=*"
-    )
+    return start_batches(sdf, build_and_append, checkpoint_path)
 
 
 def rollup_stream_sketches(
@@ -79,7 +70,7 @@ def rollup_stream_sketches(
     """Distinct-count rollup over ONLY the persisted sketches —
     never the raw corpus (the B114 rollup applied to the streamed
     shards)."""
-    return rollup_distinct(read_stream_sketches(spark, sketch_path), by)
+    return rollup_distinct(read_shards(spark, sketch_path), by)
 
 
 def consolidate_stream_sketches(
@@ -89,8 +80,9 @@ def consolidate_stream_sketches(
     up_to_batch: int,
 ) -> dict:
     """Sketch-table COMPACTION by merging, not file rewriting: fold
-    every per-batch shard directory with ``batch_id <= up_to_batch``
-    into ONE consolidated shard under ``batch_id=<up_to_batch>``.
+    every shard with id <= ``up_to_batch`` into ONE consolidated
+    shard with id ``up_to_batch``, which must name an existing shard
+    (``ValueError`` otherwise, before anything is written).
 
     This is the maintenance pass the accreting ingest needs (VERDICT
     r8 item 5): months of micro-batches leave thousands of KB-sized
@@ -104,17 +96,17 @@ def consolidate_stream_sketches(
 
     Crash safety: the merged generation is validated (group count
     re-read from the rewrite must match the merge input; a mismatch
-    removes the rewrite and raises), staged in a sibling directory, swapped in over ``batch_id=<up_to_batch>`` via
-    the Hadoop FS rename pair (functions/fsio.swap_in), and ONLY THEN
-    are the other absorbed directories removed. A crash before the
+    removes the rewrite and raises), staged in a sibling directory,
+    swapped in over shard ``up_to_batch`` via the Hadoop FS rename
+    pair (functions/fsio.swap_in), and ONLY THEN are the other
+    absorbed shards removed. A crash before the
     swap leaves every original directory intact; a crash between the
     swap and the removals leaves ABSORBED shards duplicated next to
     the consolidated one — for the DISTINCT estimates this window is
     harmless (HLL union is idempotent: merging a sketch twice is the
     same sketch), but the per-group ``n_rows`` sum double-counts
-    until the leftover ``batch_id=*`` directories (all < the
-    consolidated id) are removed, which a re-run's directory listing
-    makes obvious. A transactional table format closes the window
+    until the leftover shards (all < the consolidated id) are
+    removed, which a re-run's shard listing makes obvious. A transactional table format closes the window
     with a real commit protocol — the same caveat as compact_table
     and the dedup-index extend marker. Run in a quiet window. The
     stream's checkpoint is untouched: new batches keep appending
@@ -123,23 +115,20 @@ def consolidate_stream_sketches(
 
     Returns {"batches_merged", "groups", "consolidated_batch_id"}.
     """
-    import glob as _glob
-    import os as _os
-    import re as _re
-
-    dirs = sorted(
-        d
-        for d in _glob.glob(f"{sketch_path}/batch_id=*")
-        if _re.search(r"batch_id=(\d+)$", d)
-        and int(d.rsplit("=", 1)[1]) <= up_to_batch
-    )
-    if len(dirs) < 2:
+    all_ids = shard_ids(spark, sketch_path)
+    if up_to_batch not in all_ids:
+        raise ValueError(
+            f"consolidate_stream_sketches: up_to_batch={up_to_batch} names"
+            f" no shard of {sketch_path} (shards: {all_ids})"
+        )
+    ids = [i for i in all_ids if i <= up_to_batch]
+    if len(ids) < 2:
         return {
-            "batches_merged": len(dirs),
+            "batches_merged": len(ids),
             "groups": 0,
             "consolidated_batch_id": up_to_batch,
         }
-    old = spark.read.parquet(*dirs)
+    old = read_shards(spark, sketch_path, ids)
     merged = old.groupBy(*keys).agg(
         F.expr("hll_union_agg(sketch)").alias("sketch"),
         F.sum("n_rows").cast("bigint").alias("n_rows"),
@@ -157,13 +146,14 @@ def consolidate_stream_sketches(
             f" merge input has {n_expected}; aborting with the original"
             " shard directories untouched"
         )
-    live = f"{sketch_path}/batch_id={up_to_batch}"
-    swap_in(spark, live, tmp, backup_suffix="__pre_consolidate")
-    for d in dirs:
-        if _os.path.normpath(d) != _os.path.normpath(live):
-            remove_dir(spark, d)
+    swap_in(
+        spark, shard_path(sketch_path, up_to_batch), tmp,
+        backup_suffix="__pre_consolidate",
+    )
+    for i in ids[:-1]:
+        remove_dir(spark, shard_path(sketch_path, i))
     return {
-        "batches_merged": len(dirs),
+        "batches_merged": len(ids),
         "groups": n_groups,
         "consolidated_batch_id": up_to_batch,
     }
@@ -185,15 +175,13 @@ def countmin_ingest_stream(
     """Maintain a persisted per-(keys, batch) count-min counter table
     from a stream — the frequency analog of
     :func:`sketch_ingest_stream`. Each batch is one combinable
-    aggregation to ≤ depth x width counter rows and one
-    partition-directory overwrite.
+    aggregation to ≤ depth x width counter rows and one shard
+    overwrite.
 
     Exactly-once nuance vs the HLL table: CMS counters are SUMS, so
     double-merging a replayed batch WOULD double-count (HLL union is
-    idempotent; addition is not). The per-``batch_id`` overwrite
-    protocol carries the weight here — a replay rewrites the same
-    directory with identical counters (the build is deterministic
-    for a batch multiset), never appends next to it.
+    idempotent; addition is not) — the shard overwrite carries the
+    weight here, and the build is deterministic for a batch multiset.
     """
     from nass_summary_spark.operators.countmin import build_countmin
 
@@ -201,16 +189,9 @@ def countmin_ingest_stream(
         shard = build_countmin(
             batch_df, keys, item_col, depth=depth, width=width
         )
-        shard.write.mode("overwrite").parquet(
-            f"{sketch_path}/batch_id={batch_id}"
-        )
+        write_shard(shard, sketch_path, batch_id)
 
-    return (
-        sdf.writeStream.foreachBatch(build_and_append)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(sdf, build_and_append, checkpoint_path)
 
 
 def rollup_stream_countmin(
@@ -220,9 +201,7 @@ def rollup_stream_countmin(
     ADDITION over counter rows only, never raw data."""
     from nass_summary_spark.operators.countmin import merge_countmin
 
-    shards = spark.read.option("basePath", sketch_path).parquet(
-        f"{sketch_path}/batch_id=*"
-    )
+    shards = read_shards(spark, sketch_path)
     return merge_countmin(shards.drop("batch_id"), by)
 
 
@@ -242,13 +221,11 @@ def quantile_ingest_stream(
     (VERDICT r9 item 3: B114-HLL has C28, B134-CMS has C30; this
     closes the quantile table's streaming lifecycle). Each batch is
     one combinable aggregation to ≤ groups × 512 bucket rows and one
-    partition-directory overwrite.
+    shard overwrite.
 
     Exactly-once: bucket counts are SUMS like the CMS counters, so
-    the per-``batch_id`` overwrite protocol carries replay safety —
-    a replayed batch rewrites the same directory with identical
-    counts (the bucket map is deterministic integer arithmetic per
-    row), never appends beside it. Merge is ADDITION
+    the shard overwrite carries replay safety (the bucket map is
+    deterministic integer arithmetic per row). Merge is ADDITION
     (merge_log_histograms), so any later rollup reads only the
     bucket relation.
     """
@@ -258,16 +235,9 @@ def quantile_ingest_stream(
 
     def build_and_append(batch_df: DataFrame, batch_id: int) -> None:
         shard = build_log_histogram(batch_df, keys, value_col)
-        shard.write.mode("overwrite").parquet(
-            f"{sketch_path}/batch_id={batch_id}"
-        )
+        write_shard(shard, sketch_path, batch_id)
 
-    return (
-        sdf.writeStream.foreachBatch(build_and_append)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(sdf, build_and_append, checkpoint_path)
 
 
 def rollup_stream_quantiles(
@@ -284,9 +254,7 @@ def rollup_stream_quantiles(
         merge_log_histograms,
     )
 
-    shards = spark.read.option("basePath", sketch_path).parquet(
-        f"{sketch_path}/batch_id=*"
-    )
+    shards = read_shards(spark, sketch_path)
     merged = merge_log_histograms(shards.drop("batch_id"), by)
     return histogram_quantiles(merged, by, pcts)
 
@@ -309,8 +277,7 @@ def sprt_ingest_stream(
     while data arrives); this twin gives the batch sprt_monitor its
     ingest path with the same merge-is-addition lifecycle as
     C30/C31: per batch one combinable (arm, period) aggregation
-    overwritten into the batch's own directory, rollup = ADDITION —
-    a replayed batch rewrites identical counts, never double-counts.
+    written as the batch's own shard, rollup = ADDITION.
 
     ``time_col``: a Column mapping events to periods (e.g. epoch
     day). ``success_pred``: a boolean Column marking successes.
@@ -323,16 +290,9 @@ def sprt_ingest_stream(
             F.count(F.lit(1)).cast("bigint").alias("n"),
             F.sum(success_pred.cast("int")).cast("bigint").alias("x"),
         )
-        shard.write.mode("overwrite").parquet(
-            f"{state_path}/batch_id={batch_id}"
-        )
+        write_shard(shard, state_path, batch_id)
 
-    return (
-        sdf.writeStream.foreachBatch(build)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
+    return start_batches(sdf, build, checkpoint_path)
 
 
 def sprt_decision_from_stream(
@@ -350,9 +310,7 @@ def sprt_decision_from_stream(
     of arrivals exactly (BIGINT end to end; parity-pinned)."""
     from nass_summary_spark.operators.experiment import sprt_monitor
 
-    shards = spark.read.option("basePath", state_path).parquet(
-        f"{state_path}/batch_id=*"
-    )
+    shards = read_shards(spark, state_path)
     merged = shards.groupBy("arm", "t").agg(
         F.sum("n").cast("bigint").alias("n"),
         F.sum("x").cast("bigint").alias("x"),

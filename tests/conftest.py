@@ -20,14 +20,39 @@ def spark(tmp_path_factory):
     yield s
 
 
+def await_stream(q, timeout: float) -> None:
+    """Wait for streaming query ``q`` to finish. A query still running
+    after ``timeout`` seconds is stopped and the test fails, so a slow
+    stream never compares partial output nor outlives its test."""
+    if not q.awaitTermination(timeout):
+        q.stop()
+        pytest.fail(f"stream {q.name or q.id} did not finish in {timeout}s")
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"
 
 
+class _LossyReader:
+    """``DataFrameReader`` whose ``parquet`` of a path containing
+    ``marker`` keeps only the first row; ``option`` chains."""
+
+    def __init__(self, reader, marker: str) -> None:
+        self._reader = reader
+        self._marker = marker
+
+    def option(self, key, value):
+        return _LossyReader(self._reader.option(key, value), self._marker)
+
+    def parquet(self, *paths):
+        df = self._reader.parquet(*paths)
+        return df.limit(1) if any(self._marker in p for p in paths) else df
+
+
 class _LossyRewriteSession:
     """Session stand-in for maintenance calls: every attribute is the
-    real session's, except that ``read.parquet`` of a path containing
+    real session's, except that ``read...parquet`` of a path containing
     ``marker`` (a staged rewrite) keeps only its first row — a rewrite
     that lost rows, so the validate-before-swap branch runs."""
 
@@ -40,11 +65,7 @@ class _LossyRewriteSession:
 
     @property
     def read(self):
-        return self
-
-    def parquet(self, *paths):
-        df = self._spark.read.parquet(*paths)
-        return df.limit(1) if any(self._marker in p for p in paths) else df
+        return _LossyReader(self._spark.read, self._marker)
 
 
 @pytest.fixture

@@ -22,6 +22,7 @@ from nass_summary_spark.operators.phash import (
     neardup_pairs_dhash,
     synthesize_bmp_pattern_blobs,
 )
+from tests.conftest import await_stream
 
 
 def _ids(spark, n):
@@ -429,6 +430,71 @@ def test_sketch_consolidation_check_failure_cleans_up(
     assert snap() == before
 
 
+def _three_sketch_shards(spark, sf_dir, sk):
+    from nass_summary_spark.operators.distinct_sketch import (
+        build_distinct_sketches,
+    )
+    from nass_summary_spark.streaming.sink import write_shard
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    for b in range(3):
+        write_shard(
+            build_distinct_sketches(
+                docs.where(F.col("doc_id") % 3 == b), ["source"], "doc_id"
+            ),
+            sk,
+            b,
+        )
+
+
+def test_sketch_consolidation_on_file_uri_merges_all_shards(
+    spark, sf_dir, tmp_path
+):
+    """The shard listing goes through the table's Hadoop filesystem:
+    a ``file://`` sketch table (like an ``hdfs://`` or ``s3a://`` one)
+    consolidates all of its shards, with the rollup unchanged."""
+    import os
+
+    from nass_summary_spark.streaming.sketch_stream import (
+        consolidate_stream_sketches,
+        rollup_stream_sketches,
+    )
+
+    sk = str(tmp_path / "sketches")
+    _three_sketch_shards(spark, sf_dir, sk)
+    uri = f"file://{sk}"
+
+    def snap():
+        return sorted(
+            (r["source"], r["n_rows"], r["est_distinct"])
+            for r in rollup_stream_sketches(spark, uri, ["source"]).collect()
+        )
+
+    before = snap()
+    report = consolidate_stream_sketches(spark, uri, ["source"], up_to_batch=2)
+    assert report["batches_merged"] == 3 and report["groups"] == len(before)
+    assert sorted(os.listdir(sk)) == ["batch_id=2"]
+    assert snap() == before
+
+
+def test_sketch_consolidation_rejects_unknown_up_to_batch(
+    spark, sf_dir, tmp_path
+):
+    """An ``up_to_batch`` that names no shard is refused before any
+    write: no staging directory, every shard untouched."""
+    import os
+
+    from nass_summary_spark.streaming.sketch_stream import (
+        consolidate_stream_sketches,
+    )
+
+    sk = str(tmp_path / "sketches")
+    _three_sketch_shards(spark, sf_dir, sk)
+    with pytest.raises(ValueError, match="up_to_batch=7"):
+        consolidate_stream_sketches(spark, sk, ["source"], up_to_batch=7)
+    assert sorted(os.listdir(sk)) == [f"batch_id={b}" for b in range(3)]
+
+
 # ---------------------------------------------------------------------------
 # mergeable log-histogram quantile sketch
 # ---------------------------------------------------------------------------
@@ -515,10 +581,7 @@ def test_langid_gate_stream_matches_batch_scorer(
         trained_weights_map,
     )
     from nass_summary_spark.plans.queries import _langid_marked_docs
-    from nass_summary_spark.streaming.langid import (
-        langid_gate_batch,
-        langid_gate_stream,
-    )
+    from nass_summary_spark.streaming.langid import langid_gate
 
     docs = _langid_marked_docs(spark, sf_dir).persist()
     w = logreg_train(
@@ -529,7 +592,7 @@ def test_langid_gate_stream_matches_batch_scorer(
 
     # (1) per-row char-gram LUT form == aggregated char-gram scorer
     gate = (
-        langid_gate_batch(docs, wmap, denom=float(TRAIN_SCALE), threshold=0.0)
+        langid_gate(docs, wmap, denom=float(TRAIN_SCALE), threshold=0.0)
         .toPandas()
         .sort_values("id", ignore_index=True)
     )
@@ -553,7 +616,7 @@ def test_langid_gate_stream_matches_batch_scorer(
     plain.write.mode("overwrite").parquet(d)
     stream_in = spark.readStream.schema(plain.schema).parquet(d)
     q = (
-        langid_gate_stream(
+        langid_gate(
             stream_in, wmap, denom=float(TRAIN_SCALE), threshold=0.5
         )
         .writeStream.format("memory")
@@ -562,14 +625,14 @@ def test_langid_gate_stream_matches_batch_scorer(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = (
         spark.table("langid_gate_t")
         .toPandas()
         .sort_values("id", ignore_index=True)
     )
     want = (
-        langid_gate_batch(plain, wmap, denom=float(TRAIN_SCALE), threshold=0.5)
+        langid_gate(plain, wmap, denom=float(TRAIN_SCALE), threshold=0.5)
         .toPandas()
         .sort_values("id", ignore_index=True)
     )

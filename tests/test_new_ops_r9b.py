@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from nass_summary_spark.operators.experiment import ks_drift
 from nass_summary_spark.operators.stats import acf_lags, spearman_corr
+from tests.conftest import await_stream
 
 
 # ---------------------------------------------------------------------------
@@ -563,7 +564,7 @@ def test_countmin_stream_matches_direct_build(
         .parquet(d)
     )
     q = countmin_ingest_stream(stream_in, [], "user_id", sk, ck)
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
     merged = {
         (r["row"], r["bucket"]): r["cnt"]

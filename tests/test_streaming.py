@@ -1,5 +1,7 @@
-"""Structured Streaming twins: run each stream against the real
-events data via a file source and check parity with the batch twin."""
+"""Streaming stages: run each stage as a stream over the real events
+data via a file source and check parity with the same function (or,
+for the two stages that keep a ``*_batch``/``*_stream`` pair, its
+batch twin) over the static frame."""
 
 from __future__ import annotations
 
@@ -10,9 +12,10 @@ from nass_summary_spark.streaming.events import (
     sessionize_batch,
     sessionize_stream,
     stream_dedup,
-    windowed_agg_batch,
-    windowed_agg_stream,
+    windowed_agg,
 )
+from nass_summary_spark.streaming.sink import read_shards
+from tests.conftest import await_stream
 
 
 @pytest.fixture(scope="module")
@@ -39,7 +42,7 @@ def _run_stream(spark, sdf, name):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     return spark.table(name)
 
 
@@ -47,9 +50,9 @@ def test_windowed_agg_stream_matches_batch(spark, events_batch, events_dir):
     schema = events_batch.schema
     stream_in = spark.readStream.schema(schema).parquet(events_dir)
     got = _run_stream(
-        spark, windowed_agg_stream(stream_in, "1 hour", watermark="10 hours"), "win_t"
+        spark, windowed_agg(stream_in, "1 hour", watermark="10 hours"), "win_t"
     ).toPandas()
-    want = windowed_agg_batch(events_batch, "1 hour").toPandas()
+    want = windowed_agg(events_batch, "1 hour").toPandas()
     key = ["window_start", "event_type"]
     got = got.sort_values(key, ignore_index=True)[want.columns]
     want = want.sort_values(key, ignore_index=True)
@@ -121,7 +124,7 @@ def test_stream_dedup_streaming_mode(spark, events_batch, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("dedup_t").count()
     assert got == events_batch.select("event_id").distinct().count()
 
@@ -141,7 +144,7 @@ def test_stateful_running_user_stats(spark, events_batch, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     import pandas as pd
 
     got = (
@@ -201,7 +204,7 @@ def test_running_user_stats_evicts_idle_keys(spark, tmp_path_factory):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     progress = [p for p in q.recentProgress if p.get("stateOperators")]
     assert progress, "no state-operator progress recorded"
     final_state_rows = progress[-1]["stateOperators"][0]["numRowsTotal"]
@@ -236,7 +239,6 @@ def test_late_data_metrics_match_streaming_watermark_drops(
     from nass_summary_spark.streaming.events import (
         harvest_drop_metrics,
         late_data_metrics_batch,
-        windowed_agg_stream,
     )
 
     base = str(tmp_path_factory.mktemp("late"))
@@ -267,14 +269,14 @@ def test_late_data_metrics_match_streaming_watermark_drops(
         .parquet(base)
     )
     q = (
-        windowed_agg_stream(stream_in, window="1 hour", watermark="10 minutes")
+        windowed_agg(stream_in, window="1 hour", watermark="10 minutes")
         .writeStream.format("memory")
         .queryName("late_t")
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
     batch_df = spark.createDataFrame(
         pd.DataFrame(rows, columns=["b", "user_id", "ts", "event_type", "value"])
@@ -309,12 +311,12 @@ def test_late_data_metrics_match_streaming_watermark_drops(
 
 
 def test_enrich_join_stream_matches_batch(spark, events_batch, events_dir):
-    from nass_summary_spark.streaming.events import enrich_join_batch, enrich_join_stream
+    from nass_summary_spark.streaming.events import enrich_join
 
     schema = events_batch.schema
     stream_in = spark.readStream.schema(schema).parquet(events_dir)
-    got = _run_stream(spark, enrich_join_stream(stream_in), "enrich_t").toPandas()
-    want = enrich_join_batch(events_batch).toPandas()
+    got = _run_stream(spark, enrich_join(stream_in), "enrich_t").toPandas()
+    want = enrich_join(events_batch).toPandas()
     got = got.sort_values("category", ignore_index=True)[want.columns]
     want = want.sort_values("category", ignore_index=True)
     assert got.equals(want)
@@ -324,24 +326,21 @@ def test_attribution_stream_matches_batch(spark, events_batch, events_dir):
     """Stream-stream join parity: the watermarked attribution join
     (append mode — stream-stream joins emit, they don't revise)
     produces exactly the batch join's pair set."""
-    from nass_summary_spark.streaming.events import (
-        attribution_pairs_batch,
-        attribution_pairs_stream,
-    )
+    from nass_summary_spark.streaming.events import attribution_pairs
 
     schema = events_batch.schema
     stream_in = spark.readStream.schema(schema).parquet(events_dir)
     q = (
-        attribution_pairs_stream(stream_in, watermark="1 hour")
+        attribution_pairs(stream_in, watermark="1 hour")
         .writeStream.format("memory")
         .queryName("attr_t")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("attr_t").toPandas()
-    want = attribution_pairs_batch(events_batch).toPandas()
+    want = attribution_pairs(events_batch).toPandas()
     key = ["click_id", "purchase_id"]
     got = got.sort_values(key, ignore_index=True)[want.columns]
     want = want.sort_values(key, ignore_index=True)
@@ -415,7 +414,7 @@ def test_unattributed_clicks_stream_matches_batch(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(240)
+    await_stream(q, 240)
     got = {
         cid
         for cid in spark.table("unattr_t").toPandas()["click_id"].astype(int)
@@ -451,7 +450,7 @@ def test_stream_parquet_sink_exactly_once_across_restarts(
             .select("event_id", "ts", "user_id", "event_type", "value")
         )
         q = stream_to_parquet(sdf, out_dir, ckpt)
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
     run_once()
     got1 = spark.read.parquet(out_dir)
@@ -471,7 +470,7 @@ def test_incremental_windowed_summary_appends_finalized_windows_once(
     """Two waves (chronological), two runs of the same checkpointed
     query: finalized windows land exactly once and match the batch
     aggregate."""
-    from nass_summary_spark.streaming.sink import incremental_windowed_summary
+    from nass_summary_spark.streaming.sink import stream_to_parquet
 
     base = tmp_path_factory.mktemp("incr_summary")
     in_dir, out_dir, ckpt = str(base / "in"), str(base / "out"), str(base / "ckpt")
@@ -491,8 +490,8 @@ def test_incremental_windowed_summary_appends_finalized_windows_once(
             .option("maxFilesPerTrigger", 2)
             .parquet(in_dir)
         )
-        q = incremental_windowed_summary(sdf, out_dir, ckpt)
-        q.awaitTermination(180)
+        q = stream_to_parquet(windowed_agg(sdf), out_dir, ckpt)
+        await_stream(q, 180)
 
     run_once()
     n1 = spark.read.parquet(out_dir).count()
@@ -508,7 +507,7 @@ def test_incremental_windowed_summary_appends_finalized_windows_once(
     assert got.select("window_start", "event_type").distinct().count() == n2
     # ...and every emitted row matches the batch twin exactly
     batch = (
-        windowed_agg_batch(events_batch, window="1 hour")
+        windowed_agg(events_batch, window="1 hour")
         .withColumnRenamed("n_events", "batch_n")
         .withColumnRenamed("sum_value", "batch_sum")
     )
@@ -549,7 +548,7 @@ def test_upsert_keyed_summary_exactly_once_and_replay_safe(
             .parquet(in_dir)
         )
         q = upsert_keyed_summary(sdf, out_dir, ckpt)
-        q.awaitTermination(120)
+        await_stream(q, 120)
 
     run_once()
     wave2.write.mode("append").parquet(in_dir)
@@ -624,7 +623,7 @@ def test_funnel_stream_matches_batch(spark, events_batch, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = (
         spark.table("funnel_t")
         .toPandas()
@@ -643,20 +642,17 @@ def test_zone_window_stream_matches_batch(spark, events_batch, events_dir):
     static broadcast zones + watermarked windowed agg must equal the
     batch twin exactly."""
     from nass_summary_spark.plans.queries import _zone_rects
-    from nass_summary_spark.streaming.events import (
-        zone_window_batch,
-        zone_window_stream,
-    )
+    from nass_summary_spark.streaming.events import zone_window
 
     zones = _zone_rects(spark, "/root/testdata/sf0.001")
     schema = events_batch.schema
     stream_in = spark.readStream.schema(schema).parquet(events_dir)
     got = _run_stream(
         spark,
-        zone_window_stream(stream_in, zones, watermark="10 hours"),
+        zone_window(stream_in, zones, watermark="10 hours"),
         "zone_win_t",
     ).toPandas()
-    want = zone_window_batch(events_batch, zones).toPandas()
+    want = zone_window(events_batch, zones).toPandas()
     assert len(want) > 0
     key = ["window_start", "cmz"]
     got = got.sort_values(key, ignore_index=True)[want.columns]
@@ -668,10 +664,7 @@ def test_quality_gate_stream_matches_batch(spark, sf_dir, tmp_path_factory):
     """C12: the streaming quality gate (stateless per-row classifier
     scoring + filter, append mode, no watermark/state) must emit
     exactly the batch gate's rows."""
-    from nass_summary_spark.streaming.quality import (
-        quality_gate_batch,
-        quality_gate_stream,
-    )
+    from nass_summary_spark.streaming.quality import quality_gate
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     d = str(tmp_path_factory.mktemp("docs_stream"))
@@ -679,16 +672,16 @@ def test_quality_gate_stream_matches_batch(spark, sf_dir, tmp_path_factory):
 
     stream_in = spark.readStream.schema(docs.schema).parquet(d)
     q = (
-        quality_gate_stream(stream_in)
+        quality_gate(stream_in)
         .writeStream.format("memory")
         .queryName("quality_gate_t")
         .outputMode("append")  # stateless: append needs no watermark
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("quality_gate_t").toPandas()
-    want = quality_gate_batch(docs).toPandas()
+    want = quality_gate(docs).toPandas()
     assert len(want) > 0
     got = got.sort_values("id", ignore_index=True)[want.columns]
     want = want.sort_values("id", ignore_index=True)
@@ -701,8 +694,7 @@ def test_stream_drift_counts_match_batch(spark, events_batch, events_dir):
     the shared drift_finish projection then yields identical KL."""
     from nass_summary_spark.streaming.events import (
         drift_finish,
-        drift_window_counts_batch,
-        drift_window_counts_stream,
+        drift_window_counts,
         type_baseline,
     )
 
@@ -710,10 +702,10 @@ def test_stream_drift_counts_match_batch(spark, events_batch, events_dir):
     stream_in = spark.readStream.schema(schema).parquet(events_dir)
     got_counts = _run_stream(
         spark,
-        drift_window_counts_stream(stream_in, watermark="10 hours"),
+        drift_window_counts(stream_in, watermark="10 hours"),
         "drift_counts_t",
     )
-    want_counts = drift_window_counts_batch(events_batch)
+    want_counts = drift_window_counts(events_batch)
     key = ["window_start", "event_type"]
     g = got_counts.toPandas().sort_values(key, ignore_index=True)
     w = want_counts.toPandas().sort_values(key, ignore_index=True)[g.columns]
@@ -763,7 +755,7 @@ def test_rate_limit_stream_matches_batch(spark, events_batch, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = (
         spark.table("bucket_t")
         .toPandas()
@@ -810,7 +802,7 @@ def test_ewma_stream_matches_batch_operator(spark, events_batch, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = {(r["series_key"], r["ts_us"]): r["ewma"]
            for r in spark.table("ewma_t").collect()}
     want_df = ewma_smooth(
@@ -857,18 +849,17 @@ def test_trending_counts_stream_matches_batch(spark, events_batch, events_dir):
     identically."""
     from nass_summary_spark.streaming.events import (
         trending_finish,
-        trending_window_counts_batch,
-        trending_window_counts_stream,
+        trending_window_counts,
     )
 
     schema = events_batch.schema
     stream_in = spark.readStream.schema(schema).parquet(events_dir)
     got = _run_stream(
         spark,
-        trending_window_counts_stream(stream_in, watermark="10 hours"),
+        trending_window_counts(stream_in, watermark="10 hours"),
         "trending_counts_t",
     )
-    want = trending_window_counts_batch(events_batch)
+    want = trending_window_counts(events_batch)
     key = ["window_start", "user_id"]
     g = got.toPandas().sort_values(key, ignore_index=True)
     w = want.toPandas().sort_values(key, ignore_index=True)[g.columns]
@@ -937,7 +928,7 @@ def test_temporal_join_on_stream_matches_batch(spark, events_batch, events_dir):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = {
         (r["event_id"], r["version"], r["cfg"])
         for r in spark.table("temporal_t").collect()
@@ -985,10 +976,7 @@ def test_minhash_dedup_stream_union_parity(spark, tmp_path):
 
     from nass_summary_spark.operators.dedup import minhash_lsh_pairs
     from nass_summary_spark.operators.dedup_index import build_minhash_index
-    from nass_summary_spark.streaming.dedup_stream import (
-        minhash_dedup_stream,
-        read_stream_pairs,
-    )
+    from nass_summary_spark.streaming.dedup_stream import minhash_dedup_stream
 
     docs = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1016,11 +1004,11 @@ def test_minhash_dedup_stream_union_parity(spark, tmp_path):
         stream_in, idx, str(tmp_path / "pairs"), str(tmp_path / "ckpt"),
         n=3, num_perm=32, bands=8, threshold=0.35,
     )
-    q.awaitTermination(300)
+    await_stream(q, 300)
 
     got = {
         (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in read_stream_pairs(spark, str(tmp_path / "pairs")).collect()
+        for r in read_shards(spark, str(tmp_path / "pairs")).collect()
     }
     want = {
         (r["id_a"], r["id_b"], r["est_jaccard"])
@@ -1046,10 +1034,7 @@ def test_ann_ingest_stream_matches_sequential_batches(spark, tmp_path):
         load_centroids,
     )
     from nass_summary_spark.operators.similarity import knn_bruteforce
-    from nass_summary_spark.streaming.ann_stream import (
-        ann_ingest_stream,
-        read_stream_neighbors,
-    )
+    from nass_summary_spark.streaming.ann_stream import ann_ingest_stream
 
     emb = spark.read.parquet(
         "/root/testdata/sf0.001/embeddings.parquet"
@@ -1075,11 +1060,11 @@ def test_ann_ingest_stream_matches_sequential_batches(spark, tmp_path):
         idx, str(tmp_path / "nn"), str(tmp_path / "ckpt"),
         id_col="vec_id", vec_col="embedding", k=5, nprobe=2,
     )
-    q.awaitTermination(300)
+    await_stream(q, 300)
 
     got = {
         (r["query_id"], r["rank"], r["neighbor_id"], r["cosine"])
-        for r in read_stream_neighbors(spark, str(tmp_path / "nn")).collect()
+        for r in read_shards(spark, str(tmp_path / "nn")).collect()
     }
     # replay the same micro-batches through the batch operators; the
     # file-source delivers one file per trigger in ARRIVAL (mtime)
@@ -1135,7 +1120,6 @@ def test_linkage_stream_union_parity(spark, tmp_path):
     from nass_summary_spark.streaming.linkage_stream import (
         build_linkage_reference,
         linkage_stream,
-        read_stream_matches,
     )
 
     cust = spark.read.parquet(
@@ -1179,13 +1163,11 @@ def test_linkage_stream_union_parity(spark, tmp_path):
         refp, str(tmp_path / "matches"), str(tmp_path / "ckpt"),
         "aid", threshold=-100.0,
     )
-    q.awaitTermination(300)
+    await_stream(q, 300)
 
     got = {
         (r["aid"], r["rid"], r["score"])
-        for r in read_stream_matches(
-            spark, str(tmp_path / "matches")
-        ).collect()
+        for r in read_shards(spark, str(tmp_path / "matches")).collect()
     }
     want = {
         (r["aid"], r["rid"], r["score"])
@@ -1305,6 +1287,92 @@ def test_linkage_em_refresh_detects_drift_and_refits(spark, tmp_path):
     assert pattern_drift_kl(drift_cand, fields, refp) < 0.01
 
 
+def test_linkage_refresh_failed_swap_leaves_one_generation(
+    spark, tmp_path, monkeypatch
+):
+    """The EM refresh publishes the new weights and their drift
+    baseline together: with ``fsio.swap_in`` failing on its k-th call,
+    the reference afterwards serves either the pre-refresh pair or the
+    refreshed pair — never new weights next to the old baseline."""
+    import shutil
+
+    from nass_summary_spark.functions import fsio
+    from nass_summary_spark.operators.linkage import (
+        blocked_agreements,
+        em_params,
+        fellegi_sunter_em,
+    )
+    from nass_summary_spark.streaming.linkage_stream import (
+        build_linkage_reference,
+        load_linkage_reference,
+        pattern_drift_kl,
+        persist_pattern_histogram,
+        refresh_linkage_params,
+    )
+
+    cust = spark.read.parquet(
+        "/root/testdata/sf0.001/customer.parquet"
+    ).select(
+        "c_custkey",
+        F.col("c_nationkey").alias("blk"),
+        F.col("c_mktsegment").alias("seg"),
+        (F.col("c_acctbal") < 0).alias("debt"),
+    )
+    ref = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
+        "c_custkey", "rid"
+    )
+    seed = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
+        "c_custkey", "aid"
+    )
+    fields = ["seg", "debt"]
+    seed_cand = blocked_agreements(seed, ref, "aid", "rid", "blk", fields)
+    m0, u0 = em_params(fellegi_sunter_em(seed_cand, fields, n_iter=3))
+    pristine = str(tmp_path / "pristine")
+    build_linkage_reference(ref, "rid", "blk", m0, u0, pristine)
+    persist_pattern_histogram(seed_cand, fields, pristine)
+
+    drifted = seed.withColumn("seg", F.lit("ZZZ-DRIFTED"))
+    drift_cand = blocked_agreements(
+        drifted, ref, "aid", "rid", "blk", fields
+    ).cache()
+
+    def snap(path):
+        _ref, _rid, _blk, m, u = load_linkage_reference(spark, path)
+        return m, u, pattern_drift_kl(drift_cand, fields, path)
+
+    def refresh(path):
+        return refresh_linkage_params(drifted, path, "aid", kl_threshold=0.05)
+
+    fresh = str(tmp_path / "fresh")
+    shutil.copytree(pristine, fresh)
+    assert refresh(fresh)["refreshed"] is True
+    old_gen, new_gen = snap(pristine), snap(fresh)
+    assert old_gen[:2] != new_gen[:2] and old_gen[2] > 0.05 > new_gen[2]
+
+    real_swap_in = fsio.swap_in
+    for k in (1, 2):
+        path = str(tmp_path / f"ref{k}")
+        shutil.copytree(pristine, path)
+        calls = []
+
+        def flaky_swap_in(*args, **kwargs):
+            calls.append(args[1])
+            if len(calls) == k:
+                raise RuntimeError(f"injected swap_in failure (call {k})")
+            return real_swap_in(*args, **kwargs)
+
+        monkeypatch.setattr(fsio, "swap_in", flaky_swap_in)
+        try:
+            refresh(path)
+            failed = False
+        except RuntimeError as exc:
+            assert "injected swap_in failure" in str(exc)
+            failed = True
+        monkeypatch.setattr(fsio, "swap_in", real_swap_in)
+        assert snap(path) == (old_gen if failed else new_gen), (k, calls)
+    drift_cand.unpersist()
+
+
 def test_trained_model_gate_stream_matches_weighted_scorer(
     spark, sf_dir, tmp_path_factory
 ):
@@ -1324,10 +1392,7 @@ def test_trained_model_gate_stream_matches_weighted_scorer(
         trained_bias,
         trained_weights_map,
     )
-    from nass_summary_spark.streaming.quality import (
-        quality_gate_batch_weighted,
-        quality_gate_stream_weighted,
-    )
+    from nass_summary_spark.streaming.quality import quality_gate_weighted
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     labeled = docs.withColumn(
@@ -1338,7 +1403,7 @@ def test_trained_model_gate_stream_matches_weighted_scorer(
     assert -1 in wmap  # bias row rides in the map
 
     # (1) per-row LUT form == aggregated scorer, row for row
-    gate = quality_gate_batch_weighted(
+    gate = quality_gate_weighted(
         docs, wmap, denom=float(TRAIN_SCALE), threshold=0.0
     ).toPandas().sort_values("id", ignore_index=True)
     agg = (
@@ -1357,7 +1422,7 @@ def test_trained_model_gate_stream_matches_weighted_scorer(
     docs.write.mode("overwrite").parquet(d)
     stream_in = spark.readStream.schema(docs.schema).parquet(d)
     q = (
-        quality_gate_stream_weighted(
+        quality_gate_weighted(
             stream_in, wmap, denom=float(TRAIN_SCALE), threshold=0.02
         )
         .writeStream.format("memory")
@@ -1366,9 +1431,9 @@ def test_trained_model_gate_stream_matches_weighted_scorer(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("quality_gate_w_t").toPandas()
-    want = quality_gate_batch_weighted(
+    want = quality_gate_weighted(
         docs, wmap, denom=float(TRAIN_SCALE), threshold=0.02
     ).toPandas()
     got = got.sort_values("id", ignore_index=True)[want.columns]
@@ -1392,8 +1457,7 @@ def test_dsir_gate_stream_matches_batch_and_aggregated_path(
     from nass_summary_spark.operators.importance import dsir_scores
     from nass_summary_spark.streaming.dsir_stream import (
         build_dsir_reference,
-        dsir_gate_batch,
-        dsir_gate_stream,
+        dsir_gate,
         load_dsir_reference,
     )
 
@@ -1409,7 +1473,7 @@ def test_dsir_gate_stream_matches_batch_and_aggregated_path(
         r["doc_id"]: r
         for r in dsir_scores(docs, "doc_id", "text", target).collect()
     }
-    gated = dsir_gate_batch(docs, lam, n_tot, t_tot).collect()
+    gated = dsir_gate(docs, lam, n_tot, t_tot).collect()
     kept_agg = {i for i, r in agg.items() if r["keep"]}
     assert {r["id"] for r in gated} == kept_agg and kept_agg
     for r in gated:
@@ -1420,16 +1484,16 @@ def test_dsir_gate_stream_matches_batch_and_aggregated_path(
     docs.write.mode("overwrite").parquet(d)
     stream_in = spark.readStream.schema(docs.schema).parquet(d)
     q = (
-        dsir_gate_stream(stream_in, lam, n_tot, t_tot)
+        dsir_gate(stream_in, lam, n_tot, t_tot)
         .writeStream.format("memory")
         .queryName("dsir_gate_t")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("dsir_gate_t").toPandas()
-    want = dsir_gate_batch(docs, lam, n_tot, t_tot).toPandas()
+    want = dsir_gate(docs, lam, n_tot, t_tot).toPandas()
     got = got.sort_values("id", ignore_index=True)[want.columns]
     want = want.sort_values("id", ignore_index=True)
     assert got.equals(want)
@@ -1475,7 +1539,6 @@ def test_sketch_ingest_stream_matches_batch_rollup(
         rollup_distinct,
     )
     from nass_summary_spark.streaming.sketch_stream import (
-        read_stream_sketches,
         rollup_stream_sketches,
         sketch_ingest_stream,
     )
@@ -1493,9 +1556,9 @@ def test_sketch_ingest_stream_matches_batch_rollup(
         .parquet(d)
     )
     q = sketch_ingest_stream(stream_in, ["source"], "doc_id", sk, ck)
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
-    shards = read_stream_sketches(spark, sk)
+    shards = read_shards(spark, sk)
     assert shards.select("batch_id").distinct().count() >= 2
 
     got = {
@@ -1535,10 +1598,7 @@ def test_conformal_threshold_deploys_on_streaming_gate(
     from nass_summary_spark.operators.sampling import id_bucket
     from nass_summary_spark.plans.queries import QUERIES, _logreg_labeled_docs
     from nass_summary_spark.plans.queries import _TS_ITER, _TS_LR
-    from nass_summary_spark.streaming.quality import (
-        quality_gate_batch_weighted,
-        quality_gate_stream_weighted,
-    )
+    from nass_summary_spark.streaming.quality import quality_gate_weighted
 
     thr = QUERIES["threshold_select"](spark, sf_dir).collect()[0]["threshold"]
     docs = _logreg_labeled_docs(spark, sf_dir)
@@ -1554,7 +1614,7 @@ def test_conformal_threshold_deploys_on_streaming_gate(
     incoming.write.mode("overwrite").parquet(d)
     stream_in = spark.readStream.schema(incoming.schema).parquet(d)
     q = (
-        quality_gate_stream_weighted(
+        quality_gate_weighted(
             stream_in, weights, float(TRAIN_SCALE), bias, threshold=thr
         )
         .writeStream.format("memory")
@@ -1563,9 +1623,9 @@ def test_conformal_threshold_deploys_on_streaming_gate(
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
     got = spark.table("conformal_gate_t").toPandas()
-    want = quality_gate_batch_weighted(
+    want = quality_gate_weighted(
         incoming, weights, float(TRAIN_SCALE), bias, threshold=thr
     ).toPandas()
     assert len(want) > 0 and len(want) < incoming.count()
@@ -1608,9 +1668,9 @@ def test_quantile_ingest_stream_matches_batch_rollup(
         .parquet(d)
     )
     q = quantile_ingest_stream(stream_in, ["source"], "n_chars", sk, ck)
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
-    shards = spark.read.option("basePath", sk).parquet(f"{sk}/batch_id=*")
+    shards = read_shards(spark, sk)
     assert shards.select("batch_id").distinct().count() >= 2
 
     got = sorted(
@@ -1660,10 +1720,7 @@ def test_domain_gate_stream_matches_sequential_replay(
     from nass_summary_spark.functions.smalldf import local_struct_df
     from nass_summary_spark.operators.domain import extract_host
     from nass_summary_spark.operators.sampling import id_bucket
-    from nass_summary_spark.streaming.domain_stream import (
-        domain_gate_stream,
-        read_gated,
-    )
+    from nass_summary_spark.streaming.domain_stream import domain_gate_stream
 
     def mk_docs(lo, hi):
         rows = [
@@ -1692,9 +1749,9 @@ def test_domain_gate_stream_matches_sequential_replay(
     q = domain_gate_stream(
         stream_in, "url", "doc_id", bl, 12, out, state, ck
     )
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
-    gated = read_gated(spark, out)
+    gated = read_shards(spark, out)
     assert gated.select("batch_id").distinct().count() >= 2
 
     def replay_expected(gated_df):
@@ -1760,8 +1817,8 @@ def test_domain_gate_stream_matches_sequential_replay(
     q2 = domain_gate_stream(
         stream_in2, "url", "doc_id", bl, 12, out, state, ck
     )
-    q2.awaitTermination(120)
-    gated2 = read_gated(spark, out)
+    await_stream(q2, 120)
+    gated2 = read_shards(spark, out)
     assert gated2.count() == 90
     got2 = {
         r["doc_id"]: (r["host"], r["host_rank"], r["disposition"])
@@ -1773,6 +1830,49 @@ def test_domain_gate_stream_matches_sequential_replay(
         if d >= 60 and disp == "kept" and h.startswith("h")
     ]
     assert not late_kept  # every non-blocked host filled its cap early
+
+
+def test_domain_gate_stream_caps_across_batches_on_file_uris(
+    spark, tmp_path_factory
+):
+    """The cross-batch cap reads the prior count deltas through the
+    state table's Hadoop filesystem: with ``file://`` URIs for the
+    output, state and checkpoint (as with ``hdfs://`` or ``s3a://``),
+    no host keeps more than the cap across batches."""
+    from pyspark.sql import functions as F
+
+    from nass_summary_spark.functions.smalldf import local_struct_df
+    from nass_summary_spark.streaming.domain_stream import domain_gate_stream
+
+    rows = [(i, f"https://www.h{i % 3}.example.com/p/{i}") for i in range(90)]
+    src = str(tmp_path_factory.mktemp("dgu_in"))
+    spark.createDataFrame(rows, "doc_id long, url string").repartition(
+        3
+    ).write.mode("overwrite").parquet(src)
+    out, state, ck = (
+        f"file://{tmp_path_factory.mktemp(name)}"
+        for name in ("dgu_out", "dgu_state", "dgu_ck")
+    )
+    bl = local_struct_df(spark, "host string", [("spam.example.net",)])
+    q = domain_gate_stream(
+        spark.readStream.schema("doc_id long, url string")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src),
+        "url", "doc_id", bl, 12, out, state, ck,
+    )
+    await_stream(q, 120)
+
+    gated = read_shards(spark, out)
+    assert gated.count() == 90
+    assert gated.select("batch_id").distinct().count() >= 2
+    kept = {
+        r["host"]: r["count"]
+        for r in gated.where(F.col("disposition") == "kept")
+        .groupBy("host")
+        .count()
+        .collect()
+    }
+    assert sorted(kept.values()) == [12, 12, 12]
 
 
 def test_sprt_stream_matches_batch_monitor(spark, sf_dir, tmp_path_factory):
@@ -1806,9 +1906,9 @@ def test_sprt_stream_matches_batch_monitor(spark, sf_dir, tmp_path_factory):
         .parquet(d)
     )
     q = sprt_ingest_stream(stream_in, "event_type", day, ok, st, ck)
-    q.awaitTermination(120)
+    await_stream(q, 120)
 
-    shards = spark.read.option("basePath", st).parquet(f"{st}/batch_id=*")
+    shards = read_shards(spark, st)
     assert shards.select("batch_id").distinct().count() >= 2
 
     got = sorted(
@@ -1828,3 +1928,53 @@ def test_sprt_stream_matches_batch_monitor(spark, sf_dir, tmp_path_factory):
         ).collect()
     )
     assert got == want and got
+
+
+def test_shard_protocol_spelled_only_in_sink():
+    """The per-batch shard protocol lives in ``streaming/sink.py``:
+    no other module of the package builds a ``batch_id=`` path, calls
+    ``foreachBatch`` or sets ``availableNow``, and no streaming module
+    lists directories with ``glob``."""
+    import ast
+    from pathlib import Path
+
+    import nass_summary_spark
+
+    root = Path(nass_summary_spark.__file__).parent
+    users, globbers = set(), set()
+    for p in root.rglob("*.py"):
+        rel = p.relative_to(root).as_posix()
+        tree = ast.parse(p.read_text())
+        docstrings = {
+            id(n.body[0].value)
+            for n in ast.walk(tree)
+            if isinstance(
+                n,
+                (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef),
+            )
+            and n.body
+            and isinstance(n.body[0], ast.Expr)
+            and isinstance(n.body[0].value, ast.Constant)
+        }
+        for n in ast.walk(tree):
+            if (
+                isinstance(n, ast.Constant)
+                and isinstance(n.value, str)
+                and "batch_id=" in n.value
+                and id(n) not in docstrings
+            ) or (
+                isinstance(n, ast.Attribute) and n.attr == "foreachBatch"
+            ) or (
+                isinstance(n, ast.keyword) and n.arg == "availableNow"
+            ):
+                users.add(rel)
+            if rel.startswith("streaming/") and (
+                (
+                    isinstance(n, ast.Import)
+                    and any(a.name == "glob" for a in n.names)
+                )
+                or (isinstance(n, ast.ImportFrom) and n.module == "glob")
+            ):
+                globbers.add(rel)
+    assert sorted(users) == ["streaming/sink.py"]
+    assert not globbers
