@@ -3,9 +3,10 @@
 Scale posture (the reason each variant exists):
 - exact: one hash-groupBy shuffle over fixed-width digests — never
   shuffle raw document text.
-- n-gram Jaccard: exact set-similarity via a shared-shingle candidate
-  join; candidate pairs are bounded by shingle co-occurrence, and the
-  join key is a 64-bit shingle hash, not the shingle string.
+- n-gram Jaccard: exact set-similarity via the one prefix-filter join
+  (``prefix_filter_join``); candidate pairs are bounded by prefix
+  width, not shingle co-occurrence, and the join key is a 48-bit
+  shingle hash, not the shingle string.
 - MinHash+LSH: constant-size signatures + banding → candidate pairs
   ~linear in corpus size; the only shuffle keys are (band, bucket
   hash). This is the 100 TB path.
@@ -76,39 +77,23 @@ def ngram_jaccard_pairs(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    prefix_filter: bool = False,
 ) -> DataFrame:
     """Exact n-gram-shingle Jaccard similarity join.
 
-    Default path: explode distinct shingles → self-join on the
-    64-bit shingle hash (id_a < id_b) → |A∩B| per pair → Jaccard
-    with |A∪B| = |A|+|B|−|A∩B|. One pair-generating shuffle; joined
-    rows are bounded by Σ df(s)² over shingles, which is fine while
-    shingle document-frequencies stay modest (true of this corpus —
-    max df ≈ 25).
+    Builds the distinct ``(id, 48-bit shingle hash)`` relation and
+    hands it to :func:`prefix_filter_join`, the one exact
+    set-similarity join; the join key is the fixed-width hash, never
+    the shingle string. Returns ``(id_a, id_b, jaccard)`` for
+    ``id_a < id_b``, ``jaccard`` rounded to 6 digits.
 
-    ``prefix_filter=True`` switches candidate generation to PREFIX
-    FILTERING (AllPairs/PPJoin family) — the heavy-tail scale path
-    for real corpora where boilerplate shingles appear in millions
-    of documents and the direct self-join explodes. Each document's
-    shingles are sorted by one global total order (document
-    frequency asc, hash tie-break) and only the first
-    ``|A| − ⌈τ·|A|⌉ + 1`` join: for a pair with Jaccard ≥ τ, at most
-    ``(1−τ)·|A|`` of A's shingles miss B, so the first shared
-    shingle sits inside BOTH prefixes — no qualifying pair is lost,
-    while frequent shingles (which sort last) never enter the join.
-    Candidates then pass a BOUNDARY-KEY SUFFIX FILTER (PPJoin+
-    family): the in-prefix positional range plus the suffix size of
-    the smaller-boundary side upper-bounds the true overlap, killing
-    the coincidental-single-shingle candidates (~500× the real pairs
-    on this corpus) while still fixed-width rows; only the survivors
-    ship their shingle arrays to exact-intersection verification.
-    Singleton shingles (df = 1) are pruned before the array build —
-    they can't match and only matter through the separately-carried
-    true set sizes. Both paths return identical results (tested);
-    the trade is a few cheap bounded shuffles (8.5 MB total at
-    sf0.1, vs 48.7 MB for the r3 direct-join plan) for immunity to
-    shingle skew.
+    A pair is kept when its Jaccard J >= ``threshold`` exactly (the
+    integer-ratio test of :func:`prefix_filter_join`, on the threshold
+    taken to 6 decimals), not when
+    ``round(J, 6) >= threshold`` as earlier revisions did. The two
+    rules differ only when 0 < threshold - J < 5e-7, which at
+    threshold 0.2 needs a union of more than 400,000 shingles
+    (|a/b - 1/5| >= 1/(5b)). A threshold outside (0, 1] raises
+    ``ValueError``.
     """
     # corpus-scale scans spread the shingle/hash CPU by split; a
     # narrow (single-split) scan is round-robined first so the sweep
@@ -117,317 +102,12 @@ def ngram_jaccard_pairs(
     staged = spread_narrow_scan(
         df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
     )
-    # persist the (id, hash) relation: it feeds 2-3 plan branches
-    # (frequency, candidate sides, sizes) and re-deriving it re-runs
-    # the shingle explode + md5 per branch — the most expensive
-    # map-side work in the operator. Fixed-width rows (16 bytes),
-    # MEMORY_AND_DISK, so at corpus scale it spills rather than OOMs.
-    sh = (
-        staged.select(
-            "id",
-            F.explode(word_shingles("__text", n)).alias("shingle"),
-        )
-        .select("id", token_hash64("shingle", bits=48).alias("sh"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    sh = staged.select(
+        "id", F.explode(word_shingles("__text", n)).alias("shingle")
+    ).select("id", token_hash64("shingle", bits=48).alias("sh"))
+    return prefix_filter_join(sh, "id", "sh", threshold).select(
+        "id_a", "id_b", F.col("jac").alias("jaccard")
     )
-    # materialize EAGERLY: the relation feeds several branches that
-    # surface as concurrent broadcast futures downstream, and each
-    # build racing a LAZY persist re-runs the whole shingle explode +
-    # md5 sweep independently (the racing-broadcast-rebuild disease —
-    # the profile showed the same scan stage executed 4x). The count
-    # is the materialization one consumer would pay anyway.
-    sh.count()
-    # NOT persisted (r10 A/B): the doc-count-sized sizes relation is
-    # referenced by both Jaccard-denominator joins, and each broadcast
-    # build re-aggregates it from the cached sh relation — but
-    # persisting it strips the aggregate's size estimate, flipping
-    # those joins to sort-merge (two extra pair-relation exchanges;
-    # measured 4.3 → 10.6s steady at sf0.1). The duplicate aggregation
-    # only arises at scales where sizes is broadcastable, where the
-    # re-aggregation over the cache is proportionally cheap.
-    sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("n_sh"))
-
-    if prefix_filter:
-        # every pruning bound below subtracts EPS before a ceil /
-        # >= comparison: the bounds are rational in the threshold
-        # (e.g. required overlap t/(1+t)*(|A|+|B|)) and float64
-        # evaluation can land a hair ABOVE the exact value (0.2/1.2
-        # * 72 = 12.000000000000002), which would ceil to 13 and
-        # prune a pair sitting exactly at the threshold. EPS makes
-        # every filter conservative-only: never drops a qualifying
-        # pair, at worst admits one more candidate to verification.
-        EPS = 1e-6
-        freq = sh.groupBy("sh").agg(F.count(F.lit(1)).alias("df"))
-        # SINGLETON PRUNING: a shingle with df = 1 appears in exactly
-        # ONE document (shingles are per-doc distinct), so it can
-        # never match in the candidate join and contributes zero to
-        # every intersection — it only matters through the TRUE set
-        # size |A|, which the ``sizes`` relation carries separately.
-        # Dropping singletons BEFORE the per-doc array build shrinks
-        # the array exchange by the singleton fraction — on natural
-        # corpora most shingles are unique (the head of a heavy-
-        # tailed df distribution), so this is the dominant term at
-        # corpus scale; the dense synthetic bench corpus (avg df 9.6,
-        # 207 singletons of 27k distinct shingles) barely moves,
-        # which is the worst case for this pruning, not the typical
-        # one. Exactness is untouched: in the
-        # (df, sh)-ascending total order all singletons sort FIRST
-        # (df=1 < 2), so the j-th surviving element sits at full
-        # position j + u (u = |A| − |survivors|); positions, prefix
-        # lengths, and boundary keys below are all expressed in FULL
-        # coordinates via that shift. A doc whose full prefix ends
-        # inside its singleton run provably has no qualifying pair
-        # (the first shared shingle of any τ-pair lies in both
-        # prefixes, and singletons are never shared), so emitting no
-        # prefix rows for it is exact, not an approximation.
-        #
-        # ONE (now singleton-free) shuffle builds each doc's shingle
-        # set sorted by the global (df, sh) total order; prefix +
-        # positions are then pure array projections (no window
-        # passes, and the same arrays serve candidate verification
-        # below). Per doc we also keep the BOUNDARY KEY — the
-        # (df, sh) struct of the first element AFTER the prefix
-        # (null if the prefix covers the whole surviving set) — and
-        # the suffix size: the suffix filter below needs them. The
-        # sizes join rides the same id-partitioning as the groupBy
-        # (both are post-shuffle hash(id) relations): no extra
-        # exchange.
-        arrs = (
-            sh.join(freq.where(F.col("df") >= 2), "sh")
-            .groupBy("id")
-            .agg(F.array_sort(F.collect_list(F.struct("df", "sh"))).alias("__s"))
-            .join(sizes, "id")
-            .withColumn("__u", (F.col("n_sh") - F.size("__s")).cast("int"))
-            .withColumn(
-                "plen",
-                F.greatest(
-                    (
-                        F.col("n_sh")
-                        - F.ceil(F.lit(threshold) * F.col("n_sh") - EPS)
-                        + 1
-                        - F.col("__u")
-                    ).cast("int"),
-                    F.lit(0),
-                ),
-            )
-            .select(
-                "id",
-                F.transform("__s", lambda s: s["sh"]).alias("arr"),
-                F.col("n_sh").cast("int").alias("n_sh"),
-                "plen",
-                "__u",
-                F.get("__s", F.col("plen")).alias("bval"),  # 0-based → arr[plen+1]
-                (F.size("__s") - F.col("plen")).alias("sfx"),
-            )
-            .persist(StorageLevel.MEMORY_AND_DISK)
-        )
-        # same eager-materialization rationale as ``sh`` above: arrs
-        # feeds the prefix explode, both candidate-join sides and the
-        # verification joins — racing futures against a lazy persist
-        # replay the array build per consumer
-        arrs.count()
-        prefix = arrs.select(
-            "id",
-            "n_sh",
-            "__u",
-            F.posexplode(F.slice("arr", 1, F.col("plen"))).alias("__p", "sh"),
-        ).select(
-            "id", "sh", (F.col("__p") + 1 + F.col("__u")).alias("pos"), "n_sh"
-        )
-        # candidate join with the two PPJoin pruning filters inline,
-        # both applied PER MATCHED ROW inside the join condition:
-        #  - LENGTH: Jaccard >= t needs t*|A| <= |B| (and symmetric);
-        #  - POSITION (per-row): overlap o implies the FIRST shared
-        #    shingle s* (in the global (df, sh) order) has pos <=
-        #    |X| - o + 1 on BOTH sides simultaneously (all o common
-        #    shingles sort >= s* in each doc's array), so s*'s
-        #    matched row always survives
-        #        1 + min(|A|-pos_a, |B|-pos_b) >= ceil(t/(1+t)(|A|+|B|))
-        #    and no qualifying pair is lost. Filtering per row
-        #    (instead of post-aggregation on min positions, as
-        #    earlier revisions did) kills non-qualifying matches
-        #    BEFORE the pair aggregation, shrinking its exchange by
-        #    ~60% measured; and because arrays are sorted by the one
-        #    global order, min(pos) over the SURVIVING rows of a
-        #    qualifying pair still equals s*'s position on both
-        #    sides — the positional bounds downstream stay exact.
-        # The aggregation itself carries ONLY (id_a, id_b, min_pa,
-        # min_pb): sizes and boundary data re-attach from the tiny
-        # per-doc ``bnd`` relation in the suffix-filter joins that
-        # run anyway, keeping the widest exchange of the operator at
-        # 4 fixed-width fields per row.
-        # No probe-width repartition before the candidate join any
-        # more: the per-row positional filter cut the pair-expansion
-        # CPU ~60%, and with the engine free to broadcast the built
-        # side the probe inherits the SCAN's partitioning (splits
-        # bounded by maxPartitionBytes), which spreads fine. Dropping
-        # the forced round-robin pass let AQE broadcast-plan the
-        # whole filter chain: the operator's total shuffle fell
-        # 25.4 → 8.5 MB at sf0.1 with byte-identical output and
-        # unchanged wall time. ``par`` still pins the verification
-        # probe width below.
-        par = df.sparkSession.sparkContext.defaultParallelism
-        cand = (
-            prefix.alias("pa")
-            .join(
-                prefix.alias("pb"),
-                (F.col("pa.sh") == F.col("pb.sh"))
-                & (F.col("pa.id") < F.col("pb.id"))
-                & (F.col("pb.n_sh") >= F.lit(threshold) * F.col("pa.n_sh") - EPS)
-                & (F.col("pa.n_sh") >= F.lit(threshold) * F.col("pb.n_sh") - EPS)
-                & (
-                    1
-                    + F.least(
-                        F.col("pa.n_sh") - F.col("pa.pos"),
-                        F.col("pb.n_sh") - F.col("pb.pos"),
-                    )
-                    >= F.ceil(
-                        F.lit(threshold)
-                        / (1 + threshold)
-                        * (F.col("pa.n_sh") + F.col("pb.n_sh"))
-                        - EPS
-                    )
-                ),
-            )
-            .groupBy(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
-            # the two min-positions PACKED into one long: for a
-            # qualifying pair, the first shared shingle s* minimizes
-            # pos on BOTH sides simultaneously (arrays share one
-            # global order), so min(pos_a·2³¹ + pos_b) is exactly
-            # (min_pa, min_pb). For non-qualifying pairs the unpacked
-            # values may belong to a non-minimal row — harmless: the
-            # downstream filters only need validity for qualifying
-            # pairs (a false positive just reaches verification).
-            # One agg slot instead of two → ~20% off the operator's
-            # largest exchange.
-            .agg(
-                F.min(
-                    F.shiftleft(F.col("pa.pos").cast("long"), 31)
-                    + F.col("pb.pos")
-                ).alias("__mp")
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.shiftrightunsigned("__mp", 31).alias("min_pa"),
-                (F.col("__mp") % F.lit(2147483648)).alias("min_pb"),
-            )
-        )
-        # SUFFIX FILTER (the PPJoin+ idea via boundary keys): split
-        # the common shingles of a candidate pair into those lying in
-        # BOTH full prefixes and the rest.
-        #  - in-both-prefixes commons occupy positions in
-        #    [min_pos, pend] on each side (pend = full prefix end =
-        #    __u + plen; min_pos = the first shared shingle's
-        #    position, exact for qualifying pairs per the candidate
-        #    join note), so their count is at most
-        #    min(pend_a - min_pa, pend_b - min_pb) + 1;
-        #  - every other common sorts >= the SMALLER boundary key v
-        #    (the (df, sh) struct right after the prefix), and on v's
-        #    own side those are (at most) its suffix elements.
-        # Hence conservatively:
-        #     overlap <= min(pend−min_pos)+1 + sfx(smaller boundary)
-        # (boundary ties → both sides' suffixes → least; a side with
-        # no suffix has boundary +inf). Pairs whose bound can't reach
-        # the required overlap ceil(t/(1+t)·(|A|+|B|)) die HERE as
-        # fixed-width rows — before any shingle array is shipped to
-        # verification. Integer arithmetic except the EPS-guarded
-        # ceil, so the filter is conservative-only (never drops a
-        # qualifying pair). The two bound joins shuffle only the
-        # 4-field candidate relation (~40 B/row) and the per-doc
-        # boundary relation (~40 B/doc, now also carrying n_sh and
-        # pend so sizes never ride the wide pair exchange) —
-        # corpus-scale safe, no broadcast of doc-count-sized data.
-        bnd = arrs.select(
-            "id", "bval", "sfx", "n_sh", (F.col("__u") + F.col("plen")).alias("pend")
-        )
-        sfx_sel = (
-            F.when(F.col("bva").isNull() & F.col("bvb").isNull(), F.lit(0))
-            .when(F.col("bva").isNull(), F.col("sfb"))
-            .when(F.col("bvb").isNull(), F.col("sfa"))
-            .when(F.col("bva") < F.col("bvb"), F.col("sfa"))
-            .when(F.col("bva") > F.col("bvb"), F.col("sfb"))
-            .otherwise(F.least("sfa", "sfb"))
-        )
-        cand = (
-            cand.join(
-                bnd.select(
-                    F.col("id").alias("id_a"),
-                    F.col("bval").alias("bva"),
-                    F.col("sfx").alias("sfa"),
-                    F.col("n_sh").alias("pna"),
-                    F.col("pend").alias("pea"),
-                ),
-                "id_a",
-            )
-            .join(
-                bnd.select(
-                    F.col("id").alias("id_b"),
-                    F.col("bval").alias("bvb"),
-                    F.col("sfx").alias("sfb"),
-                    F.col("n_sh").alias("pnb"),
-                    F.col("pend").alias("peb"),
-                ),
-                "id_b",
-            )
-            .where(
-                F.least(
-                    F.col("pea") - F.col("min_pa"), F.col("peb") - F.col("min_pb")
-                )
-                + 1
-                + sfx_sel
-                >= F.ceil(
-                    F.lit(threshold) / (1 + threshold) * (F.col("pna") + F.col("pnb"))
-                    - EPS
-                )
-            )
-            .select("id_a", "id_b")
-        )
-        # verify with the per-doc shingle ARRAYS (KB-sized rows, one
-        # per doc) instead of re-joining the exploded shingle
-        # relation — that re-join materializes |sh(A)| rows per
-        # candidate pair (~50x the candidate count) where the arrays
-        # move each doc's set once per pair and intersect JVM-side.
-        inter = (
-            cand.repartition(par)  # same probe-width pinning
-            .join(
-                arrs.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a")),
-                "id_a",
-            )
-            .join(
-                arrs.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b")),
-                "id_b",
-            )
-            .select(
-                "id_a",
-                "id_b",
-                F.size(F.array_intersect("arr_a", "arr_b")).alias("n_common"),
-            )
-            .where(F.col("n_common") > 0)
-        )
-    else:
-        a = sh.alias("a")
-        b = sh.alias("b")
-        inter = (
-            a.join(
-                b, (F.col("a.sh") == F.col("b.sh")) & (F.col("a.id") < F.col("b.id"))
-            )
-            .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-            .agg(F.count(F.lit(1)).alias("n_common"))
-        )
-    out = (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("n_sh", "n_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("n_sh", "n_b"), "id_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out
 
 
 def minhash_signatures(
@@ -866,8 +546,8 @@ def containment_pairs(
     filter, adapted to the one-sided bound (B needs no length
     filter: containment in a huge B is exactly the case we hunt).
     Verification is exact: sorted hashed-shingle arrays intersected
-    per candidate.  EPS guards the ceil boundary (conservative-only,
-    as in ngram_jaccard_pairs).
+    per candidate.  EPS guards the ceil boundary (conservative-only:
+    it can admit a candidate, never drop a qualifying pair).
 
     Returns (id_a, id_b, containment) — id_a is the contained side;
     self-pairs excluded, both directions reported when both hold.
@@ -916,7 +596,7 @@ def containment_pairs(
             )
         ).alias("__p", "sh"),
     ).select("id_a", "sh")
-    # pin the probe width (same rationale as ngram_jaccard_pairs:
+    # pin the probe width (same rationale as prefix_filter_join:
     # AQE coalesces the candidate join to a few partitions, blind to
     # the pair-expansion + array-intersect CPU those tasks feed;
     # round-robin keeps hot shingles spread)
@@ -1325,20 +1005,14 @@ def prefix_filter_join(
     id_col: str,
     token_col: str,
     threshold: float,
-    round_to: int = 6,
     max_prefix_group: int | None = None,
 ) -> DataFrame:
     """:func:`prefix_filter_join_with_handle` without the cache
-    handle — one-shot callers (the demo query, notebooks). Repeated
+    handle — one-shot callers (the queries, notebooks). Repeated
     callers in a long-lived session should use the handle variant
     and unpersist after their final action."""
     out, _handle = prefix_filter_join_with_handle(
-        tokens,
-        id_col,
-        token_col,
-        threshold,
-        round_to=round_to,
-        max_prefix_group=max_prefix_group,
+        tokens, id_col, token_col, threshold, max_prefix_group
     )
     return out
 
@@ -1348,95 +1022,131 @@ def prefix_filter_join_with_handle(
     id_col: str,
     token_col: str,
     threshold: float,
-    round_to: int = 6,
     max_prefix_group: int | None = None,
 ) -> "tuple[DataFrame, _CacheHandle]":
-    """Jaccard-threshold set-similarity join with PREFIX FILTERING
-    (the PPJoin/AllPairs principle, Bayardo et al. 2007 / Xiao et
-    al. 2008) — the LOSSLESS alternative to MinHash banding (B3):
-    banding is probabilistic (a true pair can miss every band);
-    prefix filtering is exact — if ``J(A,B) >= t`` the two sets MUST
-    share a token within their first ``|S| - ceil(t*|S|) + 1``
-    tokens under any single global token order. Candidates generated
-    from prefixes only, then verified with the exact Jaccard.
+    """Exact Jaccard-threshold set-similarity join — the engine's one
+    exact set-similarity join (:func:`ngram_jaccard_pairs` calls it on
+    hashed shingles). PREFIX FILTERING (AllPairs/PPJoin+, Bayardo et
+    al. 2007 / Xiao et al. 2008) makes it the LOSSLESS alternative to
+    MinHash banding (B3): banding is probabilistic (a true pair can
+    miss every band), while if ``J(A,B) >= t`` the two sets MUST share
+    a token within their first ``|S| - ceil(t*|S|) + 1`` tokens under
+    any single global token order.
 
-    Ordering by ascending global frequency (rarest first, token
-    tie-break) makes prefixes collide as rarely as possible — the
-    standard trick that turns the quadratic common-token join into a
-    near-linear one (a stopword shared by every document never
-    enters a prefix unless a set is nearly all stopwords). Scale
-    shape: one combinable token-frequency aggregation; per-SET
-    windows (bounded by set size, never corpus size) pick prefixes;
-    the candidate join runs over the prefix relation only;
-    verification joins the full token lists for candidate pairs
-    alone. Everything is deterministic integer arithmetic — and the
-    demo oracle is the BRUTE-FORCE all-pairs Jaccard, so a gate pass
-    certifies losslessness, not just plausibility.
+    The order is ascending global frequency (rarest first, token
+    tie-break), so prefixes collide as rarely as possible and a token
+    shared by most sets never enters a prefix — candidate volume is
+    bounded by the prefix width instead of the sum of squared token
+    frequencies. Stages:
 
-    ``tokens``: a (id, token) relation, distinct per pair.
-    Output: ``id_a, id_b, n_a, n_b, inter, jac`` for pairs with
-    ``jac >= threshold``.
+    1. singleton pruning — a token held by one set can never match;
+       it counts only through the true set size;
+    2. one shuffle builds each set's surviving tokens as an array in
+       the global order; prefix, positions and the boundary key are
+       array projections;
+    3. the prefix self-join applies the LENGTH filter and the
+       POSITIONAL filter per matched row, inside the join condition;
+    4. the boundary-key SUFFIX filter bounds each candidate's overlap
+       from fixed-width per-set data;
+    5. survivors are verified by intersecting the two token arrays.
 
-    ``max_prefix_group``: optional cap on how many sets may share
-    one prefix token before that token stops generating candidates —
-    the link_prediction hub-cap analog for COPY-EXPLODED corpora
-    (SCALING.md r9s2: a corpus that is mostly mutual near-dups has
-    quadratic TRUE output, and its hottest prefix tokens drive the
-    blowup). With a cap the join is lossless only for pairs whose
-    prefixes contain at least one sub-cap token; pairs detectable
-    solely through capped tokens are dropped — the deliberate,
-    bounded-cost trade (run exact/URL dedup first if those pairs
-    matter). Default None = strictly lossless.
+    Every bound is integer arithmetic on the threshold as the exact
+    ratio ``num/den`` (:func:`_threshold_ratio`): an overlap ``o`` of
+    sets of sizes ``|A|, |B|`` reaches ``J >= t`` iff
+    ``o*(num+den) >= num*(|A|+|B|)``, and the kept pairs satisfy
+    ``inter*den >= num*union`` — never a rounded double, so pairs
+    exactly at the threshold are kept.
+
+    ``tokens``: an (id, token) relation, distinct per pair; tokens of
+    any orderable type. Output: ``id_a, id_b, n_a, n_b, inter, jac``
+    (``id_a < id_b``, ``jac`` rounded to 6 digits), unordered. A
+    threshold outside (0, 1] raises ``ValueError``.
+
+    Guardrail: the prefix-group profile (how many sets hold each
+    prefix token) is aggregated before the candidate join. Uncapped,
+    a group above ``PREFIX_GROUP_WARN_THRESHOLD`` sets raises a
+    :class:`PrefixGroupSkewWarning` — that group alone contributes up
+    to C(g,2) candidate pairs. ``max_prefix_group`` caps the group
+    instead — the link_prediction hub-cap analog for COPY-EXPLODED
+    corpora (SCALING.md r9s2: a corpus that is mostly mutual near-dups
+    has quadratic TRUE output): a token held by more prefixes stops
+    generating candidates, and the cap's reach is logged. With a cap
+    the join is lossless for pairs whose first shared token (in the
+    global order) is sub-cap; pairs whose first shared token is
+    capped are dropped — the deliberate, bounded-cost trade (run
+    exact/URL dedup first if those pairs matter). Default None =
+    strictly lossless.
     """
-    # the token relation feeds four branches (frequency table, rank
-    # join, and both verification sides) and is usually an explode
-    # pipeline — persist it or every branch replays the explode
-    # against the source (measured 25 parquet scans unpersisted).
-    # Materialize the cache EAGERLY: the first action's plan carries
-    # several broadcast subqueries over `tokens`, and concurrent
-    # broadcast-future jobs racing on a not-yet-materialized cache
-    # each recompute the upstream explode (profiled: three
-    # simultaneous full tokenize jobs). One count() runs it once;
-    # every later branch reads the cache.
-    tokens = tokens.persist()
-    tokens.count()
-    freq = tokens.groupBy(token_col).agg(
-        F.count(F.lit(1)).alias("__tf")
-    )
-    tf = tokens.join(freq, token_col)
-    sizes = tokens.groupBy(id_col).agg(
-        F.count(F.lit(1)).cast("bigint").alias("__n")
-    )
-    order = Window.partitionBy(id_col).orderBy(
-        F.col("__tf").asc(), F.col(token_col).asc()
-    )
-    ranked = tf.select(
-        id_col,
-        token_col,
-        F.row_number().over(order).alias("__pos"),
-    ).join(sizes, id_col)
-    # prefix length |S| - ceil(t|S|) + 1; ceil via integer arithmetic
-    # so both engines agree at every set size (no float ceil)
     t_num, t_den = _threshold_ratio(threshold)
-    # double division + floor (not integer div) so the oracle's
-    # FLOOR(x / 1000000.0) is the literally identical expression;
-    # n * t_num stays far below 2^53, so the double floor is exact
-    ceil_tn = F.floor(
-        (F.col("__n") * F.lit(t_num) + F.lit(t_den - 1))
-        / F.lit(float(t_den))
-    ).cast("bigint")
-    # both sides of the candidate self-join read this relation
-    prefix = ranked.where(
-        F.col("__pos") <= F.col("__n") - ceil_tn + F.lit(1)
-    ).select(id_col, token_col).persist()
-    # Guardrail: the prefix-group profile is a vocabulary-sized
-    # aggregation over the (persisted, reused) prefix relation, so
-    # auditing it is cheap relative to the candidate join it
-    # predicts. Uncapped + a hot group → loud warning (the quadratic
-    # regime); capped → surface what the cap dropped as a metric.
-    pf = prefix.groupBy(token_col).agg(
-        F.count(F.lit(1)).alias("__pg")
+
+    def reaches(overlap, n_a, n_b):
+        # an overlap (or an upper bound on it) admits J >= t
+        return overlap.cast("bigint") * (t_num + t_den) >= (n_a + n_b) * t_num
+
+    # the token relation feeds the frequency table, the set sizes and
+    # the array build, and is usually an explode pipeline: persist it
+    # so no later action replays the explode against the source
+    toks = tokens.select(
+        F.col(id_col).alias("id"), F.col(token_col).alias("tok")
+    ).persist()
+    freq = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
+    # NOT persisted (r10 A/B): persisting the set-size aggregate strips
+    # its size estimate and flips the joins that read it to sort-merge
+    sizes = toks.groupBy("id").agg(F.count(F.lit(1)).alias("n"))
+    # SINGLETON PRUNING: a token with df = 1 lies in ONE set, so it
+    # never matches and adds nothing to any intersection; it matters
+    # only through the true set size n, carried by ``sizes``. Dropping
+    # singletons before the array build shrinks the array exchange by
+    # the singleton fraction (most tokens of a natural corpus). In the
+    # (df, tok) order all singletons sort FIRST, so the j-th surviving
+    # element sits at full position j + u (u = n - |survivors|);
+    # positions, prefix lengths and boundary keys below are in FULL
+    # coordinates via that shift. A set whose full prefix ends inside
+    # its singleton run has no qualifying pair (the first shared token
+    # lies in both prefixes, and singletons are never shared), so it
+    # emits no prefix rows — exact, not an approximation.
+    # Per set: the prefix length in surviving coordinates (plen), the
+    # BOUNDARY KEY (the (df, tok) struct right after the prefix, null
+    # when the prefix covers the surviving set) and the suffix size.
+    ceil_tn = F.expr(
+        f"(n * {bigint_sql(t_num)} + {bigint_sql(t_den - 1)})"
+        f" div {bigint_sql(t_den)}"
     )
+    arrs = (
+        toks.join(freq.where(F.col("df") >= 2), "tok")
+        .groupBy("id")
+        .agg(F.array_sort(F.collect_list(F.struct("df", "tok"))).alias("__s"))
+        .join(sizes, "id")
+        .withColumn("__u", (F.col("n") - F.size("__s")).cast("int"))
+        .withColumn(
+            "plen",
+            F.greatest(
+                (F.col("n") - ceil_tn + 1 - F.col("__u")).cast("int"), F.lit(0)
+            ),
+        )
+        .select(
+            "id",
+            F.transform("__s", lambda s: s["tok"]).alias("arr"),
+            "n",
+            "plen",
+            "__u",
+            F.get("__s", F.col("plen")).alias("bval"),  # 0-based → arr[plen+1]
+            (F.size("__s") - F.col("plen")).alias("sfx"),
+        )
+        .persist()
+    )
+    prefix = arrs.select(
+        "id",
+        "n",
+        "__u",
+        F.posexplode(F.slice("arr", 1, F.col("plen"))).alias("__p", "tok"),
+    ).select("id", "tok", (F.col("__p") + 1 + F.col("__u")).alias("pos"), "n")
+    # Guardrail: the prefix-group profile is a vocabulary-sized
+    # aggregation over the arrays, cheap next to the candidate join it
+    # predicts, and its job is the build's one eager job: it fills the
+    # token and array caches. Uncapped + a hot group → loud warning
+    # (the quadratic regime); capped → log what the cap dropped.
+    pf = prefix.groupBy("tok").agg(F.count(F.lit(1)).alias("__pg"))
     if max_prefix_group is None:
         warn_at = int(PREFIX_GROUP_WARN_THRESHOLD)
         hot = pf.where(F.col("__pg") > F.lit(warn_at)).agg(
@@ -1465,69 +1175,141 @@ def prefix_filter_join_with_handle(
             _LOG.warning(
                 "prefix_filter_join: max_prefix_group=%d capped %d "
                 "token group(s); <=%d candidate pairs were only "
-                "reachable through capped tokens (pairs with a "
-                "sub-cap prefix token are still found).",
+                "reachable through capped tokens (pairs whose first "
+                "shared token is sub-cap are still found).",
                 cap,
                 dropped["n_capped"],
                 dropped["pair_bound"],
             )
         # no broadcast hint: the prefix-token frequency relation is
         # vocabulary-sized — let AQE pick the strategy
-        prefix = (
-            prefix.join(pf, token_col)
-            .where(F.col("__pg") <= F.lit(cap))
-            .select(id_col, token_col)
+        prefix = prefix.join(pf.where(F.col("__pg") <= F.lit(cap)), "tok").drop(
+            "__pg"
         )
+    # candidate join with the two PPJoin filters applied PER MATCHED
+    # ROW inside the join condition:
+    #  - LENGTH: J >= t needs t*|A| <= |B| (and symmetric);
+    #  - POSITION: overlap o puts the FIRST shared token s* (in the
+    #    global order) at pos <= |X| - o + 1 on BOTH sides (all o
+    #    common tokens sort >= s* in each array), so s*'s row always
+    #    satisfies reaches(1 + min(|A|-pos_a, |B|-pos_b)) and no
+    #    qualifying pair is lost. Filtering per row kills
+    #    non-qualifying matches before the pair aggregation (~60%
+    #    smaller exchange, measured), and because the arrays share one
+    #    global order, min(pos) over the surviving rows of a
+    #    qualifying pair is still s*'s position on both sides.
+    # The aggregation carries ONLY (id_a, id_b, min_pa, min_pb); sizes
+    # and boundary data re-attach from the per-set ``bnd`` relation in
+    # the suffix-filter joins. No probe-width repartition before this
+    # join: with the built side broadcastable the probe inherits the
+    # scan's partitioning, and dropping the forced round-robin let AQE
+    # broadcast-plan the filter chain (shuffle 25.4 → 8.5 MB at sf0.1).
+    pa, pb = prefix.alias("pa"), prefix.alias("pb")
     cand = (
-        prefix.alias("a")
-        .join(
-            prefix.alias("b"),
-            (F.col(f"a.{token_col}") == F.col(f"b.{token_col}"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+        pa.join(
+            pb,
+            (F.col("pa.tok") == F.col("pb.tok"))
+            & (F.col("pa.id") < F.col("pb.id"))
+            & (F.col("pb.n") * t_den >= F.col("pa.n") * t_num)
+            & (F.col("pa.n") * t_den >= F.col("pb.n") * t_num)
+            & reaches(
+                1
+                + F.least(
+                    F.col("pa.n") - F.col("pa.pos"), F.col("pb.n") - F.col("pb.pos")
+                ),
+                F.col("pa.n"),
+                F.col("pb.n"),
+            ),
         )
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
+        .groupBy(F.col("pa.id").alias("id_a"), F.col("pb.id").alias("id_b"))
+        # the two min-positions PACKED into one long: for a qualifying
+        # pair s* minimizes pos on BOTH sides at once, so
+        # min(pos_a·2³¹ + pos_b) is exactly (min_pa, min_pb); for other
+        # pairs the unpacked values may come from a non-minimal row —
+        # harmless, a false positive only reaches verification. One agg
+        # slot instead of two → ~20% off the largest exchange.
+        .agg(
+            F.min(
+                F.shiftleft(F.col("pa.pos").cast("long"), 31) + F.col("pb.pos")
+            ).alias("__mp")
         )
-        .distinct()
-    )
-    ta = tokens.select(
-        F.col(id_col).alias("id_a"), F.col(token_col).alias("__t")
-    )
-    tb = tokens.select(
-        F.col(id_col).alias("id_b"), F.col(token_col).alias("__t")
-    )
-    inter = (
-        cand.join(ta, "id_a")
-        .join(tb, ["id_b", "__t"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("inter"))
-    )
-    sa = sizes.select(
-        F.col(id_col).alias("id_a"), F.col("__n").alias("n_a")
-    )
-    sb = sizes.select(
-        F.col(id_col).alias("id_b"), F.col("__n").alias("n_b")
-    )
-    scored = inter.join(sa, "id_a").join(sb, "id_b")
-    union = F.col("n_a") + F.col("n_b") - F.col("inter")
-    jac = F.col("inter").cast("double") / union.cast("double")
-    # threshold on the exact integer ratio (inter*den >= num*union),
-    # never the rounded double
-    keep = F.col("inter") * F.lit(t_den) >= F.lit(t_num) * union
-    out = (
-        scored.where(keep)
         .select(
             "id_a",
             "id_b",
-            "n_a",
-            "n_b",
-            "inter",
-            F.round(jac, round_to).alias("jac"),
+            F.shiftrightunsigned("__mp", 31).alias("min_pa"),
+            (F.col("__mp") % F.lit(2147483648)).alias("min_pb"),
         )
-        .orderBy("id_a", "id_b")
     )
-    return out, _CacheHandle(tokens, prefix)
+    # SUFFIX FILTER (PPJoin+ via boundary keys): split a candidate's
+    # common tokens into those in BOTH full prefixes and the rest.
+    #  - the in-both-prefixes commons occupy positions in [min_pos,
+    #    pend] on each side (pend = __u + plen, the full prefix end),
+    #    so there are at most min(pend_a - min_pa, pend_b - min_pb) + 1;
+    #  - every other common sorts >= the SMALLER boundary key v, and
+    #    on v's own side those are (at most) its suffix elements.
+    # Hence overlap <= min(pend - min_pos) + 1 + sfx(smaller boundary)
+    # (boundary ties → least of both suffixes; a side with no suffix
+    # has boundary +inf). Pairs whose bound can't reach the threshold
+    # die here as fixed-width rows, before any array ships to
+    # verification; the two bound joins move only the 4-field
+    # candidate rows and the per-set boundary rows.
+    bnd = arrs.select(
+        "id", "bval", "sfx", "n", (F.col("__u") + F.col("plen")).alias("pend")
+    )
+    sfx_sel = (
+        F.when(F.col("bva").isNull() & F.col("bvb").isNull(), F.lit(0))
+        .when(F.col("bva").isNull(), F.col("sfb"))
+        .when(F.col("bvb").isNull(), F.col("sfa"))
+        .when(F.col("bva") < F.col("bvb"), F.col("sfa"))
+        .when(F.col("bva") > F.col("bvb"), F.col("sfb"))
+        .otherwise(F.least("sfa", "sfb"))
+    )
+
+    def side(s):
+        return bnd.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("bval").alias(f"bv{s}"),
+            F.col("sfx").alias(f"sf{s}"),
+            F.col("n").alias(f"n_{s}"),
+            F.col("pend").alias(f"pe{s}"),
+        )
+
+    cand = (
+        cand.join(side("a"), "id_a")
+        .join(side("b"), "id_b")
+        .where(
+            reaches(
+                F.least(F.col("pea") - F.col("min_pa"), F.col("peb") - F.col("min_pb"))
+                + 1
+                + sfx_sel,
+                F.col("n_a"),
+                F.col("n_b"),
+            )
+        )
+        .select("id_a", "id_b", "n_a", "n_b")
+    )
+    # verify with the per-set token ARRAYS (one row per set, moved once
+    # per pair and intersected JVM-side) instead of re-joining the
+    # exploded token relation (~50x the candidate count in rows). The
+    # probe width is pinned: AQE would coalesce the verification join
+    # to a few partitions, blind to the array-intersect CPU they feed.
+    par = tokens.sparkSession.sparkContext.defaultParallelism
+    scored = (
+        cand.repartition(par)
+        .join(arrs.select(F.col("id").alias("id_a"), F.col("arr").alias("arr_a")), "id_a")
+        .join(arrs.select(F.col("id").alias("id_b"), F.col("arr").alias("arr_b")), "id_b")
+        .withColumn("inter", F.size(F.array_intersect("arr_a", "arr_b")).cast("bigint"))
+    )
+    union = F.col("n_a") + F.col("n_b") - F.col("inter")
+    out = scored.where(F.col("inter") * t_den >= union * t_num).select(
+        "id_a",
+        "id_b",
+        "n_a",
+        "n_b",
+        "inter",
+        F.round(F.col("inter").cast("double") / union.cast("double"), 6).alias("jac"),
+    )
+    return out, _CacheHandle(toks, arrs)
 
 
 def _threshold_ratio(threshold: float) -> tuple[int, int]:

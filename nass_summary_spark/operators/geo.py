@@ -416,57 +416,6 @@ def point_in_poly(px: Column, py: Column, ring: Column) -> Column:
     return hits % 2 == 1
 
 
-def point_in_poly_arrow(px: Column, py: Column, ring: Column) -> Column:
-    """Arrow-batched twin of ``point_in_poly`` (same motivation as
-    ``intersection_area_arrow``: Spark HOFs evaluate interpreted;
-    per-batch Python is far cheaper at 100k+ candidate rows, and the
-    ring crosses the boundary as bare float arrays — see
-    ``_ring_xy``). Same expression order ⇒ identical booleans;
-    evaluate-once barrier applied like the clip UDF."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    def _batch(pxs, pys, xss, yss):
-        # candidate batches repeat the same few rings thousands of
-        # times (every point in a polygon's cells carries that
-        # polygon's ring): group by ring bytes and run the crossing
-        # test VECTORIZED over each ring's points. Same expression
-        # order per element as the scalar/HOF forms ⇒ identical
-        # booleans (edges with ay == by fail the straddle test, so
-        # their inf/nan intercepts never contribute).
-        px = pxs.to_numpy()
-        py = pys.to_numpy()
-        out = np.zeros(len(px), dtype=bool)
-        groups: dict[bytes, list[int]] = {}
-        for i, (xs_i, ys_i) in enumerate(zip(xss, yss)):
-            groups.setdefault(xs_i.tobytes() + ys_i.tobytes(), []).append(i)
-        for idxs in groups.values():
-            idx = np.asarray(idxs)
-            xs_r = np.asarray(xss.iloc[idxs[0]], dtype=np.float64)
-            ys_r = np.asarray(yss.iloc[idxs[0]], dtype=np.float64)
-            x = px[idx]
-            y = py[idx]
-            hits = np.zeros(len(idx), dtype=np.int64)
-            n = len(xs_r)
-            for i in range(n):
-                ax, ay = xs_r[i], ys_r[i]
-                bx, by = xs_r[(i + 1) % n], ys_r[(i + 1) % n]
-                straddle = (ay > y) != (by > y)
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    xint = ax + (y - ay) * (bx - ax) / (by - ay)
-                hits += (straddle & (x < xint)).astype(np.int64)
-            out[idx] = (hits % 2) == 1
-        return pd.Series(out)
-
-    _batch.__annotations__ = {
-        "pxs": pd.Series, "pys": pd.Series, "xss": pd.Series,
-        "yss": pd.Series, "return": pd.Series,
-    }
-    xs, ys = _ring_xy(ring)
-    return pandas_udf(_batch, "boolean").asNondeterministic()(px, py, xs, ys)
-
-
 def points_in_polygons(
     points: DataFrame,
     polys: DataFrame,

@@ -873,9 +873,12 @@ def dedup_exact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _JACCARD_THRESHOLD = 0.2
 
-@query(
-    "dedup_ngram_jaccard",
-    oracle=f"""
+
+def _ngram_jaccard_oracle(threshold: float) -> str:
+    """Brute-force shared-shingle Jaccard self-join in DuckDB: the
+    ``dedup_ngram_jaccard`` oracle at any threshold (the tests replay
+    it at theirs)."""
+    return f"""
     WITH w AS (
       SELECT doc_id, {_DD_WORDS} AS ws FROM documents
     ),
@@ -894,19 +897,23 @@ _JACCARD_THRESHOLD = 0.2
     FROM inter
     JOIN sizes na ON id_a = na.doc_id
     JOIN sizes nb ON id_b = nb.doc_id
-    WHERE ROUND(CAST(c AS DOUBLE) / CAST(na.n + nb.n - c AS DOUBLE), 6) >= {_JACCARD_THRESHOLD}
-    """,
-)
+    WHERE ROUND(CAST(c AS DOUBLE) / CAST(na.n + nb.n - c AS DOUBLE), 6) >= {threshold}
+    """
+
+
+@query("dedup_ngram_jaccard", oracle=_ngram_jaccard_oracle(_JACCARD_THRESHOLD))
 def dedup_ngram_jaccard_q(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """n-gram Jaccard near-dup (B2), lossless AllPairs/PPJoin
-    prefix-filter mode: each doc contributes only its rarest
-    ceil((1-τ)·|doc|)+1 shingles to the candidate join, so candidate
-    volume is bounded by the prefix width instead of Σdf² — the
-    skew-immune shape for heavy-tailed corpora. Output is identical
-    to the plain shared-shingle join (tested both ways)."""
+    """n-gram Jaccard near-dup (B2) through the one exact prefix-filter
+    join (operators/dedup.py prefix_filter_join): each doc contributes
+    only its rarest |doc| - ceil(τ·|doc|) + 1 shingles to the candidate
+    join, so candidate volume is bounded by the prefix width instead of
+    Σdf² — the skew-immune shape for heavy-tailed corpora. The oracle is
+    the brute-force shared-shingle self-join, so a gate pass certifies
+    the filters lost nothing (the tests also replay it at thresholds
+    0.3 and, on a boilerplate-skewed corpus, 0.2)."""
     return ngram_jaccard_pairs(
         _t(spark, sf_dir, "documents"), "doc_id", "text", n=3,
-        threshold=_JACCARD_THRESHOLD, prefix_filter=True,
+        threshold=_JACCARD_THRESHOLD,
     )
 
 
@@ -7710,8 +7717,7 @@ def dedup_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     gold = ngram_jaccard_pairs(
-        docs, "doc_id", "text", n=3,
-        threshold=_JACCARD_THRESHOLD, prefix_filter=True,
+        docs, "doc_id", "text", n=3, threshold=_JACCARD_THRESHOLD,
     ).select("id_a", "id_b")
     pred = minhash_lsh_pairs(
         docs, "doc_id", "text", n=3, num_perm=32, bands=8, threshold=0.35,
@@ -11483,16 +11489,16 @@ def freq_cap_gate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def prefix_filter_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOSSLESS set-similarity join via prefix filtering (B142,
-    PPJoin/AllPairs): Jaccard >= 0.5 shingle-set pairs with
-    candidates drawn ONLY from rarest-first token prefixes — the
-    exact alternative to B3's probabilistic banding (a true pair can
-    miss every MinHash band; it can never escape the prefix bound).
-    The oracle is the BRUTE-FORCE all-pairs Jaccard, so a gate pass
-    certifies the filter lost nothing (25 planted near-dup pairs at
-    sf0.01; the brute-force candidate join touches 11.5k pairs, the
-    prefix join far fewer). One combinable token-frequency shuffle;
-    prefix windows are set-size-bounded; a corpus-wide common
-    shingle never enters a prefix
+    AllPairs/PPJoin+): Jaccard >= 0.5 pairs of word-trigram string
+    sets with candidates drawn ONLY from rarest-first token prefixes,
+    pruned by the length, positional and suffix filters and verified
+    exactly — the exact alternative to B3's probabilistic banding (a
+    true pair can miss every MinHash band; it can never escape the
+    prefix bound). The same operator serves dedup_ngram_jaccard on
+    hashed shingles. The oracle is the BRUTE-FORCE all-pairs Jaccard,
+    so a gate pass certifies the filters lost nothing (25 planted
+    near-dup pairs at sf0.01; the brute-force candidate join touches
+    11.5k pairs, the prefix join far fewer)
     (operators/dedup.py prefix_filter_join). FULL oracle."""
     from nass_summary_spark.functions.layout import spread_narrow_scan
     from nass_summary_spark.functions.text import word_shingles
@@ -11504,7 +11510,9 @@ def prefix_filter_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens = spread_narrow_scan(docs.select("doc_id", "text")).select(
         "doc_id", F.explode(word_shingles("text", 3)).alias("tok")
     )
-    return prefix_filter_join(tokens, "doc_id", "tok", threshold=0.5)
+    return prefix_filter_join(tokens, "doc_id", "tok", threshold=0.5).orderBy(
+        "id_a", "id_b"
+    )
 
 
 def _zorder_oracle() -> str:

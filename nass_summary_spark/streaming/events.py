@@ -261,7 +261,11 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30, watermark: str =
             F.session_window(F.col("ts"), f"{gap_minutes} minutes").alias("w"),
             F.col("user_id"),
         )
-        .agg(F.count(F.lit(1)).alias("n_events"), F.round(F.sum("value"), 4).alias("sum_value"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            # decimal sum, as sessionize_batch: exact and order-independent
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("double").alias("sum_value"),
+        )
         .select(
             "user_id",
             F.col("w.start").alias("session_start"),
@@ -274,11 +278,13 @@ def sessionize_stream(events: DataFrame, gap_minutes: int = 30, watermark: str =
 
 def stream_dedup(events: DataFrame, id_col: str = "event_id", watermark: str = "1 hour") -> DataFrame:
     """Exactly-once-by-key dedup within the watermark horizon
-    (``dropDuplicatesWithinWatermark`` keeps state bounded)."""
-    deduped = ensure_event_time(events).withWatermark("ts", watermark)
-    if hasattr(deduped, "dropDuplicatesWithinWatermark") and events.isStreaming:
-        return deduped.dropDuplicatesWithinWatermark([id_col])
-    return deduped.dropDuplicates([id_col])
+    (``dropDuplicatesWithinWatermark`` keeps state bounded). A static
+    frame is deduplicated as is: no watermark, ``ts`` keeps its type."""
+    if events.isStreaming:
+        return _watermarked(events, watermark).dropDuplicatesWithinWatermark(
+            [id_col]
+        )
+    return events.dropDuplicates([id_col])
 
 
 def rate_per_window_batch(events: DataFrame, window: str = "1 hour", slide: str = "30 minutes") -> DataFrame:

@@ -311,23 +311,6 @@ class TestPointInPoly:
     def test_winding_independent(self, spark):
         assert self._pip(spark, [(2, 2)], list(reversed(SQUARE4))) == [True]
 
-    def test_arrow_twin_identical(self, spark):
-        rng = random.Random(31)
-        rows = []
-        for i in range(300):
-            ring = _ring(
-                [(0, 0), (7, 0), (7, 3), (4, 3), (4, 7), (0, 7)]
-            )  # concave
-            rows.append(
-                (i, rng.uniform(-1, 8), rng.uniform(-1, 8), ring)
-            )
-        df = spark.createDataFrame(rows, f"id int, x double, y double, r {RING_T}")
-        diff = df.where(
-            geo.point_in_poly(F.col("x"), F.col("y"), F.col("r"))
-            != geo.point_in_poly_arrow(F.col("x"), F.col("y"), F.col("r"))
-        )
-        assert diff.count() == 0
-
     def test_join_matches_naive(self, spark):
         rng = random.Random(13)
         zones = [

@@ -620,13 +620,19 @@ def test_prefix_filter_matches_bruteforce(spark):
                 dup.discard(sorted(dup)[0])
             sets[d + 1000] = dup
     rows = [(i, t) for i, s in sets.items() for t in s]
-    tokens = spark.createDataFrame(rows, ["id", "tok"])
-    for t in (0.5, 0.8):
-        got = {
-            (r["id_a"], r["id_b"]): r["inter"]
-            for r in prefix_filter_join(tokens, "id", "tok", t).collect()
-        }
-        assert got == _brute_jaccard_pairs(sets, t)  # lossless
+    # the same sets with bigint tokens (the hashed-shingle input of
+    # ngram_jaccard_pairs)
+    int_rows = [(i, int(t[1:]) * 7919) for i, t in rows]
+    for tokens in (
+        spark.createDataFrame(rows, ["id", "tok"]),
+        spark.createDataFrame(int_rows, "id long, tok long"),
+    ):
+        for t in (0.2, 0.5, 0.8, 1.0):
+            got = {
+                (r["id_a"], r["id_b"]): r["inter"]
+                for r in prefix_filter_join(tokens, "id", "tok", t).collect()
+            }
+            assert got == _brute_jaccard_pairs(sets, t)  # lossless
 
 
 def test_prefix_filter_exact_duplicates(spark):

@@ -1036,37 +1036,50 @@ def test_duplicated_spans_finds_exact_shared_substring(spark):
     assert 3 not in got
 
 
-def test_jaccard_prefix_filter_path_identical(spark, sf_dir):
-    """The prefix-filtered candidate generation must return exactly
-    the same pairs as the direct self-join (prefix filtering is
-    lossless for Jaccard >= tau)."""
+def _jaccard_oracle_rows(docs, threshold):
+    """The dedup_ngram_jaccard oracle (a brute-force shared-shingle
+    self-join) run in DuckDB over ``docs`` at ``threshold``."""
+    import duckdb
+
+    from nass_summary_spark.plans.queries import _ngram_jaccard_oracle
+
+    con = duckdb.connect()
+    con.register("documents", docs.select("doc_id", "text").toPandas())
+    return sorted(
+        (int(a), int(b), float(j))
+        for a, b, j in con.execute(_ngram_jaccard_oracle(threshold)).fetchall()
+    )
+
+
+def _jaccard_rows(docs, threshold):
     from nass_summary_spark.operators.dedup import ngram_jaccard_pairs
 
+    return sorted(
+        (r["id_a"], r["id_b"], r["jaccard"])
+        for r in ngram_jaccard_pairs(
+            docs, "doc_id", "text", threshold=threshold
+        ).collect()
+    )
+
+
+def test_jaccard_prefix_filter_path_identical(spark, sf_dir):
+    """Prefix filtering is lossless for Jaccard >= tau: the pairs equal
+    the brute-force oracle's."""
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    key = lambda r: (r["id_a"], r["id_b"], r["jaccard"])  # noqa: E731
-    direct = sorted(
-        ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.3).collect(), key=key
-    )
-    prefixed = sorted(
-        ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.3, prefix_filter=True
-        ).collect(),
-        key=key,
-    )
-    assert [key(r) for r in direct] == [key(r) for r in prefixed]
-    assert len(direct) > 0
+    got = _jaccard_rows(docs, 0.3)
+    assert got == _jaccard_oracle_rows(docs, 0.3)
+    assert len(got) > 0
 
 
-def test_jaccard_prefix_filter_identical_on_skewed_exact_threshold(spark, sf_dir):
+def test_jaccard_prefix_filter_identical_on_skewed_exact_threshold(
+    spark, sf_dir
+):
     """Regression: a hot boilerplate suffix (df in the hundreds)
     creates many pairs whose Jaccard sits EXACTLY at the threshold;
-    the PPJoin bounds are rational in tau and float64 ceil landed a
-    hair above the exact value (0.2/1.2*72 -> 12.000000000000002 ->
-    ceil 13), silently pruning threshold-exact pairs. The EPS guards
-    must keep both modes byte-identical on this shape."""
+    float bounds rational in tau (0.2/1.2*72 -> 12.000000000000002 ->
+    ceil 13) once pruned them. The integer-ratio bounds must keep
+    every one: the pairs equal the brute-force oracle's."""
     from pyspark.sql import functions as F
-
-    from nass_summary_spark.operators.dedup import ngram_jaccard_pairs
 
     boiler = (
         "this content is provided under the standard license terms "
@@ -1082,19 +1095,19 @@ def test_jaccard_prefix_filter_identical_on_skewed_exact_threshold(spark, sf_dir
             ).otherwise(F.col("text")),
         )
     )
-    key = lambda r: (r["id_a"], r["id_b"], r["jaccard"])  # noqa: E731
-    direct = sorted(
-        ngram_jaccard_pairs(docs, "doc_id", "text", threshold=0.2).collect(), key=key
-    )
-    prefixed = sorted(
-        ngram_jaccard_pairs(
-            docs, "doc_id", "text", threshold=0.2, prefix_filter=True
-        ).collect(),
-        key=key,
-    )
-    assert [key(r) for r in direct] == [key(r) for r in prefixed]
+    got = _jaccard_rows(docs, 0.2)
+    assert got == _jaccard_oracle_rows(docs, 0.2)
     # the skewed corpus must actually exercise threshold-exact pairs
-    assert any(r["jaccard"] == 0.2 for r in direct)
+    assert any(j == 0.2 for _, _, j in got)
+
+
+def test_ngram_jaccard_rejects_threshold_outside_unit_interval(spark):
+    from nass_summary_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
+    for t in (0.0, 1.5):
+        with pytest.raises(ValueError, match="threshold"):
+            ngram_jaccard_pairs(docs, "doc_id", "text", threshold=t)
 
 
 def test_pack_sequences_invariants(spark, sf_dir):

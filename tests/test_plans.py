@@ -383,3 +383,31 @@ def test_r9_plan_shapes(spark, sf_dir):
     plan = plan_of(spark, sf_dir, "mixture_schedule")
     assert "CartesianProduct" not in plan
     assert plan.count("BroadcastHashJoin") >= 1
+
+
+def _build_jobs(spark, label: str, build) -> int:
+    """Spark jobs started while ``build()`` constructs a DataFrame
+    (no action runs), counted through the status tracker by job
+    group. The session cache is cleared first, so an earlier build of
+    the same relation cannot stand in for this one's eager jobs."""
+    sc = spark.sparkContext
+    spark.catalog.clearCache()
+    group = f"build-only-{label}"
+    sc.setJobGroup(group, "build without an action")
+    try:
+        build()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_jaccard_join_build_jobs_pinned(spark, sf_dir):
+    """The exact Jaccard join (``prefix_filter_join``) is eager by
+    design, and only so far: building either query runs the table
+    read's schema job and the prefix-group guardrail (one action,
+    counted with its adaptive-execution stage jobs) and nothing else.
+    A further eager job during build fails here."""
+    for name in ("dedup_ngram_jaccard", "prefix_filter_join"):
+        n = _build_jobs(spark, name, lambda: QUERIES[name](spark, sf_dir))
+        assert n == 14, (name, n)

@@ -74,7 +74,7 @@ def test_sessionize_stream_matches_batch(spark, events_batch, events_dir):
     want = want.sort_values(key, ignore_index=True)
     assert len(got) == len(want)
     assert got["n_events"].tolist() == want["n_events"].tolist()
-    assert got["sum_value"].tolist() == pytest.approx(want["sum_value"].tolist())
+    assert got["sum_value"].tolist() == want["sum_value"].tolist()
 
 
 def test_dynamic_sessions_native_stream_matches_batch(
@@ -1978,3 +1978,15 @@ def test_shard_protocol_spelled_only_in_sink():
                 globbers.add(rel)
     assert sorted(users) == ["streaming/sink.py"]
     assert not globbers
+
+
+def test_stream_dedup_static_frame_unwatermarked(spark, sf_dir, events_batch):
+    """On a static frame stream_dedup is a plain keyed dedup: ``ts``
+    keeps its input type and the stream_dedup query's optimized plan
+    carries no watermark."""
+    from nass_summary_spark.plans.queries import QUERIES
+
+    out = stream_dedup(events_batch, id_col="event_id")
+    assert out.schema["ts"].dataType == events_batch.schema["ts"].dataType
+    plan = QUERIES["stream_dedup"](spark, sf_dir)._jdf.queryExecution()
+    assert "EventTimeWatermark" not in plan.optimizedPlan().toString()

@@ -559,7 +559,10 @@ def main() -> None:
         merge_countmin,
         probe_countmin,
     )
-    from nass_summary_spark.operators.dedup import prefix_filter_join
+    from nass_summary_spark.operators.dedup import (
+        ngram_jaccard_pairs,
+        prefix_filter_join,
+    )
     from nass_summary_spark.operators.encoding import dp_noisy_counts
     from nass_summary_spark.operators.experiment import (
         drift_panel,
@@ -601,6 +604,8 @@ def main() -> None:
     cases["prefix_filter_join"] = lambda d, li, o: prefix_filter_join(
         d.select("doc_id", F.explode(word_shingles("text", 3)).alias("tok")),
         "doc_id", "tok", 0.5)
+    cases["ngram_jaccard"] = lambda d, li, o: ngram_jaccard_pairs(
+        d, "doc_id", "text", n=3, threshold=0.2)
     cases["bpe_merges"] = lambda d, li, o: bpe_train_distributed(
         d, "text", n_merges=6)
     cases["zorder_layout"] = lambda d, li, o: zorder_layout(

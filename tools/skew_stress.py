@@ -149,10 +149,7 @@ def main() -> None:
 
     ops = {
         "jaccard_prefix": lambda d: ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.2, prefix_filter=True
-        ),
-        "jaccard_direct": lambda d: ngram_jaccard_pairs(
-            d, "doc_id", "text", n=3, threshold=0.2, prefix_filter=False
+            d, "doc_id", "text", n=3, threshold=0.2
         ),
         "minhash_lsh": lambda d: minhash_lsh_pairs(
             d, "doc_id", "text", n=3, num_perm=32, bands=8, threshold=0.35
