@@ -52,24 +52,6 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return F.when(den > 0, num / den)
 
 
-def minhash_signature(shingles: Column | str, perms: list[tuple[int, int]]) -> Column:
-    """MinHash signature: for each permutation (a, b), the min of
-    ``(a*h(s) + b) mod 2^61-1`` over the shingle set.
-
-    Returns ``array<bigint>`` of length len(perms). Permutation
-    coefficients are plain Python ints chosen deterministically by the
-    caller (no runtime randomness), so signatures are reproducible and
-    oracle-checkable.
-
-    Overflow discipline: h is 32-bit and a, b < 2^31, so
-    a*h + b < 2^63 — stays inside signed-64 arithmetic in every
-    engine.
-    """
-    sh = _col(shingles)
-    hashes = F.transform(sh, lambda s: token_hash64(s, bits=32))
-    return minhash_signature_from_hashes(hashes, perms)
-
-
 def minhash_signature_from_hashes(hashes: Column | str, perms: list[tuple[int, int]]) -> Column:
     """MinHash signature over a pre-computed ``array<bigint>`` of
     token hashes. Callers should materialize the hash array as its

@@ -26,6 +26,14 @@ single-row aggregate estimates every u_f (map-side combinable,
 broadcast back), and scoring is a pure projection. At 100 TB the
 only wide operation is the blocking join itself.
 
+Fitted parameters live on the driver: the EM fit returns them as a
+dict, and every EM scorer inlines them as double literals into ONE
+parsed SQL expression — the posterior through :func:`_w_sql` (the
+E-step the fit itself evaluates on the pattern histogram), the
+log-likelihood score through :func:`_log_weight_sql` (shared with
+:func:`fellegi_sunter_scores`). Scoring a pair is a projection over
+the blocking join; no parameter frame is joined back.
+
 Determinism / oracle: agreements are exact equality on the given
 columns, u_f is an AVG over the candidate relation clamped to
 [1/(2n), 1-1/(2n)] (the usual guard against ln(0) when a field
@@ -45,6 +53,15 @@ from nass_summary_spark.functions.lits import double_sql, ident
 from nass_summary_spark.functions.smalldf import local_struct_df
 from pyspark.sql.functions import broadcast
 
+# EM starting point (λ, every m_f, every u_f)
+_INIT_LAMBDA, _INIT_M, _INIT_U = 0.1, 0.9, 0.1
+# each M-step output is ROUND(·, _ROUND_DP) then clamped to
+# [_EPS, 1-_EPS] in both engines (see fellegi_sunter_em)
+_ROUND_DP = 12
+_EPS = 1e-06
+# scores, posteriors and the audited u columns
+_ROUND_TO = 6
+
 
 def blocked_agreements(
     left: DataFrame,
@@ -61,68 +78,15 @@ def blocked_agreements(
     ``CAST(l.f = r.f AS INT)`` — the comparison-vector relation both
     Fellegi–Sunter consumers share (:func:`fellegi_sunter_scores`
     scores it with known weights, :func:`fellegi_sunter_em` estimates
-    the weights from it). Fields must be non-null on both sides (a
-    NULL comparison yields a NULL indicator, which the scorers do not
-    interpret). ``salt`` spreads a hot block over S tasks — see
-    :func:`fellegi_sunter_scores` for the contract.
-
-    ``left_id`` and ``right_id`` must DIFFER: the output carries one
-    column per id, so equal names (e.g. self-linkage where both
-    frames call it ``id``) would yield a duplicate-named, ambiguous
-    frame downstream — alias one side first (``.withColumnRenamed``)
-    and the loud guard here keeps the mistake from propagating
-    (mirrors the params-guard posture; the streaming scorer passes
-    user-supplied arrival/reference id names straight through to
-    this check)."""
-    if left_id == right_id:
-        raise ValueError(
-            "blocked_agreements: left_id and right_id must differ "
-            f"(both are {left_id!r}); rename one side's id column "
-            "before linking, e.g. right.withColumnRenamed"
-            f"({left_id!r}, {left_id + '_r'!r})"
-        )
-    lhs = left.select(
-        F.col(left_id).alias("__lid"),
-        F.col(block_col).alias("__blk"),
-        *[F.col(f).alias(f"__l_{f}") for f in fields],
-    )
-    # The block join's pair expansion (and the pattern/score work
-    # fused into the same stage) runs at the LEFT relation's
-    # partition count: when the right side broadcasts, the stage
-    # inherits the raw scan split, which for a small input is 1-2
-    # tasks carrying the whole O(|block|²) expansion (plan-verified —
-    # the dominant cost of every EM query at sf0.1). One record-sized
-    # round-robin exchange is noise next to the quadratic expansion
-    # it balances, and it also evens out uneven input splits
-    # (guide §2.5).
-    lhs = lhs.repartition(
-        int(left.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    )
-    rhs = right.select(
-        F.col(right_id).alias("__rid"),
-        F.col(block_col).alias("__blk"),
-        *[F.col(f).alias(f"__r_{f}") for f in fields],
-    )
-    if salt > 1:
-        lhs = lhs.withColumn(
-            "__salt", F.pmod(F.xxhash64(F.col("__lid")), F.lit(int(salt)))
-        )
-        rhs = rhs.withColumn(
-            "__salt", F.explode(F.sequence(F.lit(0), F.lit(int(salt) - 1)))
-        ).withColumn("__salt", F.col("__salt").cast("long"))
-        cand = lhs.join(rhs, ["__blk", "__salt"])
-    else:
-        cand = lhs.join(rhs, "__blk")
-    return cand.select(
-        F.col("__lid").alias(left_id),
-        F.col("__rid").alias(right_id),
-        *[
-            (F.col(f"__l_{f}") == F.col(f"__r_{f}"))
-            .cast("int")
-            .alias(f"agree_{f}")
-            for f in fields
-        ],
-    )
+    the weights from it). A NULL on either side yields a NULL
+    indicator: the EM fit and the posterior marginalize it, the
+    log-likelihood scores propagate it (the threshold drops the
+    pair) unless ``null_as_no_info`` gives it zero weight.
+    :func:`blocked_agreements_union` with this one rule — ids must
+    differ, ``salt`` as there."""
+    return blocked_agreements_union(
+        left, right, left_id, right_id, [block_col], fields, salt=salt
+    ).drop("rule")
 
 
 def blocked_agreements_union(
@@ -152,11 +116,21 @@ def blocked_agreements_union(
     Each rule stays ONE equi-join; ``salt`` spreads hot blocks per
     the :func:`fellegi_sunter_scores` contract. Feed the result to
     the scorers via their ``u_probs``-frozen form or to
-    :func:`fellegi_sunter_em` (both consume agree_<f> relations)."""
+    :func:`fellegi_sunter_em` (both consume agree_<f> relations).
+
+    ``left_id`` and ``right_id`` must DIFFER: the output carries one
+    column per id, so equal names (e.g. self-linkage where both
+    frames call it ``id``) would yield a duplicate-named, ambiguous
+    frame downstream — alias one side first (``.withColumnRenamed``)
+    and the loud guard here keeps the mistake from propagating (the
+    streaming scorer passes user-supplied arrival/reference id names
+    straight through to this check)."""
     if left_id == right_id:
         raise ValueError(
-            "blocked_agreements_union: left_id and right_id must differ "
-            f"(both are {left_id!r})"
+            "blocked_agreements: left_id and right_id must differ "
+            f"(both are {left_id!r}); rename one side's id column "
+            "before linking, e.g. right.withColumnRenamed"
+            f"({left_id!r}, {left_id + '_r'!r})"
         )
     if not block_cols:
         raise ValueError("blocked_agreements_union: no blocking rules")
@@ -165,13 +139,21 @@ def blocked_agreements_union(
         left.sparkSession.conf.get("spark.sql.shuffle.partitions")
     )
     for i, bc in enumerate(block_cols):
+        # The block join's pair expansion (and the pattern/score work
+        # fused into the same stage) runs at the LEFT relation's
+        # partition count: when the right side broadcasts, the stage
+        # inherits the raw scan split, which for a small input is 1-2
+        # tasks carrying the whole O(|block|²) expansion (plan-verified
+        # — the dominant cost of every EM query at sf0.1). One
+        # record-sized round-robin exchange is noise next to the
+        # quadratic expansion it balances, and it also evens out
+        # uneven input splits (guide §2.5).
         lhs = left.select(
             F.col(left_id).alias("__lid"),
             F.col(bc).alias("__blk"),
             *[F.col(f).alias(f"__l_{f}") for f in fields],
             *[F.col(b).alias(f"__lb_{j}") for j, b in enumerate(block_cols[:i])],
-        ).repartition(nparts)  # see blocked_agreements: the pair
-        # expansion runs at this side's partition count
+        ).repartition(nparts)
         rhs = right.select(
             F.col(right_id).alias("__rid"),
             F.col(bc).alias("__blk"),
@@ -214,6 +196,24 @@ def blocked_agreements_union(
     return out
 
 
+def _log_weight_sql(
+    f: str, m_sql: str, u_sql: str, null_as_no_info: bool
+) -> str:
+    """Field ``f``'s Fellegi–Sunter log-likelihood weight as Spark SQL
+    text, with m and u given as SQL (a double literal, or the column
+    that carries the estimate). Three-way, NOT two-way: a NULL
+    agreement must never fall into the disagree branch (a missing
+    field is not evidence of mismatch) — it either propagates NULL
+    (the pair's score is NULL and the threshold filter drops it) or,
+    with ``null_as_no_info``, contributes zero."""
+    a = ident(f"agree_{f}")
+    return (
+        f"(CASE WHEN {a} = 1 THEN ln({m_sql}) - ln({u_sql})"
+        f" WHEN {a} = 0 THEN ln(1.0D - {m_sql}) - ln(1.0D - {u_sql})"
+        + (" ELSE 0.0D END)" if null_as_no_info else " END)")
+    )
+
+
 def fellegi_sunter_scores(
     left: DataFrame,
     right: DataFrame,
@@ -222,7 +222,6 @@ def fellegi_sunter_scores(
     block_col: str,
     m_probs: Mapping[str, float],
     threshold: float = 0.0,
-    round_to: int = 6,
     salt: int = 1,
     u_probs: Mapping[str, float] | None = None,
     null_as_no_info: bool = False,
@@ -283,9 +282,8 @@ def fellegi_sunter_scores(
     )
 
     if u_probs is not None:
-        scored = cand.select(
-            "*", *[F.lit(float(u_probs[f])).alias(f"u_{f}") for f in fields]
-        )
+        scored = cand
+        u_sql = {f: double_sql(float(u_probs[f])) for f in fields}
     else:
         # one single-row reduction estimates every u_f at once; the
         # clamp bound rides along so both sides of the ln are derived
@@ -305,186 +303,95 @@ def fellegi_sunter_scores(
             ],
         )
         scored = cand.join(broadcast(stats))
-    # three-way, NOT when/otherwise: a NULL agreement must never fall
-    # into the disagree branch (a missing field is not evidence of
-    # mismatch) — it either propagates NULL (default: the pair fails
-    # the threshold filter) or contributes zero (null_as_no_info)
-    weight_terms = []
-    for f, m in m_probs.items():
-        term = F.when(
-            F.col(f"agree_{f}") == 1,
-            F.log(F.lit(float(m))) - F.log(F.col(f"u_{f}")),
-        ).when(
-            F.col(f"agree_{f}") == 0,
-            F.log(F.lit(1.0 - float(m)))
-            - F.log(F.lit(1.0) - F.col(f"u_{f}")),
-        )
-        if null_as_no_info:
-            term = term.otherwise(F.lit(0.0))
-        weight_terms.append(term)
-    score = weight_terms[0]
-    for t in weight_terms[1:]:
-        score = score + t
+        u_sql = {f: ident(f"u_{f}") for f in fields}
+    score = " + ".join(
+        _log_weight_sql(f, double_sql(float(m)), u_sql[f], null_as_no_info)
+        for f, m in m_probs.items()
+    )
     return (
-        scored.withColumn("score", F.round(score, round_to))
+        scored.withColumn("score", F.round(F.expr(score), _ROUND_TO))
         .where(F.col("score") >= threshold)
         .select(
             F.col("__lid").alias(left_id),
             F.col("__rid").alias(right_id),
             *[F.col(f"agree_{f}") for f in fields],
-            *[F.round(F.col(f"u_{f}"), round_to).alias(f"u_{f}") for f in fields],
+            *[
+                F.round(F.expr(u_sql[f]), _ROUND_TO).alias(f"u_{f}")
+                for f in fields
+            ],
             "score",
         )
     )
 
 
-def fellegi_sunter_em(
-    candidates: DataFrame,
-    fields: Sequence[str],
-    n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
-) -> DataFrame:
-    """Unsupervised EM estimation of the Fellegi–Sunter parameters
-    (the Splink / Winkler default when no labeled priors exist): fit
-    the two-class conditional-independence mixture
-
-        P(γ) = λ·∏ m_f^{γ_f}(1-m_f)^{1-γ_f}
-             + (1-λ)·∏ u_f^{γ_f}(1-u_f)^{1-γ_f}
-
-    over the agreement vectors of ``candidates`` (the output of
-    :func:`blocked_agreements`). Returns one row per field:
-    ``(field, m_est, u_est, lam)``.
-
-    Missing comparisons: a NULL agreement is MARGINALIZED — factor 1
-    in both class likelihoods, and the field's M-step restricts to
-    patterns where it is observed — the correct EM treatment under
-    missingness-completely-at-random (a NULL must never count as
-    disagreement, which silently biases m̂ down; pinned by the
-    planted-missingness pytest).
-
-    Scale shape — the Splink trick: pairs sharing an agreement
-    PATTERN share their E-step weight, so ONE map-side-combinable
-    groupBy reduces the candidate relation (the only full-data pass,
-    however many trillions of pairs) to a ≤2^F-row pattern histogram,
-    checkpointed once. Each EM iteration is then one small driver
-    round trip: the E-step posterior is rendered as one SQL expression
-    with the current parameters inlined as literals, one aggregation
-    over the histogram computes the 2F+1 M-step sums, and ``.first()``
-    brings the new parameters back. The iteration count is fixed
-    (``n_iter``), so there is no exit metric to observe.
-
-    Determinism / oracle: each M-step output is ``ROUND(·,
-    round_dp)`` then clamped to ``[eps, 1-eps]`` in BOTH engines —
-    the rounding pins every iteration bit-for-bit across engines
-    (sums over ≤2^F doubles differ only in final ulps, absorbed at
-    12 dp) and the clamp keeps a saturated parameter (a field that
-    the weighted pairs always/never agree on) from zeroing an E-step
-    product. Replay: :func:`fellegi_sunter_em_oracle_sql`."""
-    params = _em_params_frame(
-        candidates, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
+def pattern_histogram(candidates: DataFrame, fields: Sequence[str]) -> DataFrame:
+    """Agreement-pattern histogram ``(agree_<f>..., cnt bigint)`` of a
+    candidate relation: ≤ 3^F rows (each indicator 1, 0 or NULL) —
+    the Splink sufficient statistic the EM fit folds trillions of
+    pairs into, and the drift signal of the streaming refresh. The
+    one full-data pass of a fit; one map-side-combinable groupBy."""
+    return candidates.groupBy(*[f"agree_{f}" for f in fields]).agg(
+        F.count(F.lit(1)).alias("cnt")
     )
-    # unpivot via ONE explode so the final plan references the EM
-    # chain once — a per-field union would replay the whole
-    # iteration tree F times in the plan
-    return params.select(
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(f).alias("field"),
-                        F.col(f"m_{f}").alias("m_est"),
-                        F.col(f"u_{f}").alias("u_est"),
-                    )
-                    for f in fields
-                ]
+
+
+def _w_sql(fields: Sequence[str], p: Mapping[str, float]) -> str:
+    """The E-step posterior P(match | γ) as ONE Spark SQL expression
+    over the ``agree_<f>`` columns, with the parameters ``p`` (keys
+    ``lam``, ``m_<f>``, ``u_<f>``) inlined as double literals. The
+    fit evaluates it on the pattern histogram every iteration;
+    :func:`fellegi_sunter_em_posteriors` evaluates it on the pairs.
+    Three-way CASE with ELSE 1.0: a MISSING comparison is
+    marginalized out of the mixture likelihood (factor 1 in both
+    classes) — the correct EM treatment under MCAR; a plain two-way
+    form would count NULL as DISAGREE."""
+    num = [double_sql(p["lam"])]
+    den = [f"(1.0D - {double_sql(p['lam'])})"]
+    for f in fields:
+        # quoted: a field name need not be a bare SQL identifier
+        # (``first-name``, ``first name``)
+        a = ident(f"agree_{f}")
+        for out, v in ((num, p[f"m_{f}"]), (den, p[f"u_{f}"])):
+            out.append(
+                f"(CASE WHEN {a} = 1 THEN {double_sql(v)}"
+                f" WHEN {a} = 0 THEN (1.0D - {double_sql(v)})"
+                " ELSE 1.0D END)"
             )
-        ).alias("x"),
-        F.col("lam"),
-    ).select("x.field", "x.m_est", "x.u_est", "lam")
+    n = " * ".join(num)
+    d = " * ".join(den)
+    return f"({n}) / (({n}) + ({d}))"
 
 
-def _em_params_frame(
-    candidates: DataFrame,
-    fields: Sequence[str],
-    n_iter: int,
-    init_lambda: float,
-    init_m: float,
-    init_u: float,
-    round_dp: int,
-    eps: float,
-) -> DataFrame:
-    """The EM fit as a SINGLE-ROW frame ``(lam, m_<f>..., u_<f>...)``
-    — shared by :func:`fellegi_sunter_em` (unpivots it) and
-    :func:`fellegi_sunter_em_scores` (broadcasts it back onto the
-    candidates)."""
-    spark = candidates.sparkSession
-    agree_cols = [f"agree_{f}" for f in fields]
-    # the only full-data pass: trillions of pairs fold into ≤2^F rows
-    pat = (
-        candidates.groupBy(*agree_cols)
-        .agg(F.count(F.lit(1)).cast("double").alias("cnt"))
-        .localCheckpoint()
-    )
+def em_fit(
+    hist: DataFrame, fields: Sequence[str], n_iter: int
+) -> dict[str, float]:
+    """The EM fit over a :func:`pattern_histogram`: the final
+    parameters as a driver-side dict ``{lam, m_<f>..., u_<f>...}``.
+
+    The histogram is checkpointed once; each iteration is then exactly
+    ONE job — the 2F+1 M-step aggregation over it, with the E-step
+    posterior rendered by :func:`_w_sql` from the current parameters —
+    whose single row is collected and re-rendered. The M-step
+    aggregates reference only pattern columns and ``w``, so they are
+    built ONCE (the py4j-tax lesson)."""
+    pat = hist.select(
+        *[f"agree_{f}" for f in fields], F.col("cnt").cast("double")
+    ).localCheckpoint()
     param_cols = (
         ["lam"] + [f"m_{f}" for f in fields] + [f"u_{f}" for f in fields]
     )
-    schema_str = ", ".join(f"{ident(c)} double" for c in param_cols)
-    vals: dict[str, float | None] = {
-        "lam": float(init_lambda),
-        **{f"m_{f}": float(init_m) for f in fields},
-        **{f"u_{f}": float(init_u) for f in fields},
+    vals: dict[str, float] = {
+        "lam": _INIT_LAMBDA,
+        **{f"m_{f}": _INIT_M for f in fields},
+        **{f"u_{f}": _INIT_U for f in fields},
     }
-    lo, hi = float(eps), 1.0 - float(eps)
 
     def _mstep(expr):
         return F.least(
-            F.greatest(F.round(expr, round_dp), F.lit(lo)), F.lit(hi)
+            F.greatest(F.round(expr, _ROUND_DP), F.lit(_EPS)),
+            F.lit(1.0 - _EPS),
         )
 
-    # The E-step posterior is rendered per iteration as ONE parsed SQL
-    # expression with the params inlined as double LITERALS
-    # (lits.double_sql; NULLs — possible only on empty candidates —
-    # render as typed NULLs). Literal inlining removes
-    # the per-iteration crossJoin + broadcast build of the params
-    # frame AND its localCheckpoint, so an EM iteration is exactly ONE
-    # job: the 2F+1 aggregation over the checkpointed pattern
-    # histogram, whose single row is collected and re-rendered. The
-    # parsed CASE/multiply chain is the same left-associated tree the
-    # former Column build produced (constant subtrees like 1.0 - m
-    # fold to the identical double), so every posterior — and hence
-    # every ROUND(round_dp)-quantized parameter — is unchanged; the
-    # chained-CTE EM oracles replay the fit and would hash-fail on
-    # any drift. The M-step aggregates reference only pattern columns
-    # and ``w``, so they are built ONCE (the py4j-tax lesson).
-    def _w_sql(cur: dict[str, float | None]) -> str:
-        # three-way CASE with ELSE 1.0: a MISSING comparison is
-        # marginalized out of the mixture likelihood (factor 1 in
-        # both classes) — the correct EM treatment under MCAR; a
-        # plain two-way form would count NULL as DISAGREE
-        num = [double_sql(cur["lam"])]
-        den = [f"(1.0D - {double_sql(cur['lam'])})"]
-        for f in fields:
-            # quoted: a field name need not be a bare SQL identifier
-            # (``first-name``, ``first name``)
-            a = ident(f"agree_{f}")
-            num.append(
-                f"(CASE WHEN {a} = 1 THEN {double_sql(cur[f'm_{f}'])}"
-                f" WHEN {a} = 0 THEN (1.0D - {double_sql(cur[f'm_{f}'])})"
-                " ELSE 1.0D END)"
-            )
-            den.append(
-                f"(CASE WHEN {a} = 1 THEN {double_sql(cur[f'u_{f}'])}"
-                f" WHEN {a} = 0 THEN (1.0D - {double_sql(cur[f'u_{f}'])})"
-                " ELSE 1.0D END)"
-            )
-        n = " * ".join(num)
-        d = " * ".join(den)
-        return f"({n}) / (({n}) + ({d}))"
     # M-step denominators restrict to patterns where the field is
     # OBSERVED (+ agree*0.0 propagates NULL into the skipped sum
     # terms) — summing all rows would bias m/u toward 0 under
@@ -519,13 +426,57 @@ def _em_params_frame(
         ],
     ]
     for _ in range(int(n_iter)):
-        j = pat.withColumn("w", F.expr(_w_sql(vals)))
+        j = pat.withColumn("w", F.expr(_w_sql(fields, vals)))
         row = j.agg(*agg_exprs).first()
         vals = {c: row[c] for c in param_cols}
+    return vals
+
+
+def fellegi_sunter_em(
+    candidates: DataFrame,
+    fields: Sequence[str],
+    n_iter: int = 5,
+) -> DataFrame:
+    """Unsupervised EM estimation of the Fellegi–Sunter parameters
+    (the Splink / Winkler default when no labeled priors exist): fit
+    the two-class conditional-independence mixture
+
+        P(γ) = λ·∏ m_f^{γ_f}(1-m_f)^{1-γ_f}
+             + (1-λ)·∏ u_f^{γ_f}(1-u_f)^{1-γ_f}
+
+    over the agreement vectors of ``candidates`` (the output of
+    :func:`blocked_agreements`), starting from λ=0.1, m=0.9, u=0.1.
+    Returns one row per field: ``(field, m_est, u_est, lam)``.
+
+    Missing comparisons: a NULL agreement is MARGINALIZED — factor 1
+    in both class likelihoods, and the field's M-step restricts to
+    patterns where it is observed — the correct EM treatment under
+    missingness-completely-at-random (a NULL must never count as
+    disagreement, which silently biases m̂ down; pinned by the
+    planted-missingness pytest).
+
+    Scale shape — the Splink trick: pairs sharing an agreement
+    PATTERN share their E-step weight, so ONE map-side-combinable
+    groupBy reduces the candidate relation (the only full-data pass,
+    however many trillions of pairs) to a ≤2^F-row pattern histogram,
+    checkpointed once. Each EM iteration is then one small driver
+    round trip (:func:`em_fit`). The iteration count is fixed
+    (``n_iter``), so there is no exit metric to observe.
+
+    Determinism / oracle: each M-step output is ``ROUND(·, 12)`` then
+    clamped to ``[1e-6, 1-1e-6]`` in BOTH engines — the rounding pins
+    every iteration bit-for-bit across engines (sums over ≤2^F
+    doubles differ only in final ulps, absorbed at 12 dp) and the
+    clamp keeps a saturated parameter (a field that the weighted
+    pairs always/never agree on) from zeroing an E-step product; on
+    empty candidates every parameter sits at the clamp floor (both
+    engines' GREATEST skips the NULL sum). Replay:
+    :func:`fellegi_sunter_em_oracle_sql`."""
+    p = em_fit(pattern_histogram(candidates, fields), fields, n_iter)
     return local_struct_df(
-        spark,
-        schema_str,
-        [tuple(vals[c] for c in param_cols)],
+        candidates.sparkSession,
+        "field string, m_est double, u_est double, lam double",
+        [(f, p[f"m_{f}"], p[f"u_{f}"], p["lam"]) for f in fields],
     )
 
 
@@ -534,12 +485,6 @@ def fellegi_sunter_em_scores(
     fields: Sequence[str],
     threshold: float = 0.0,
     n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
-    round_to: int = 6,
     id_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """End-to-end UNSUPERVISED linkage: fit the EM mixture on the
@@ -551,40 +496,27 @@ def fellegi_sunter_em_scores(
     :func:`blocked_agreements` output; ``id_cols`` names its id
     columns (default: the first two columns). Output
     ``(id..., agree_<f>..., score)`` for pairs with score ≥
-    threshold.
+    threshold. A NULL agreement nulls the score and the threshold
+    drops the pair; use the posterior variant for missing-tolerant
+    ranking.
 
     Plan shape: the fit is the ≤2^F-histogram EM (one full-data
-    groupBy); scoring broadcasts the single-row estimate back onto
-    the candidate relation — a pure projection, no second wide
-    operation. Every ln/division is runtime IEEE double arithmetic
-    both engines execute identically, so the full fit+score pipeline
-    replays exactly in DuckDB
-    (:func:`fellegi_sunter_em_scores_oracle_sql`)."""
+    groupBy); scoring inlines the estimate as literals
+    (:func:`_log_weight_sql`, the :func:`fellegi_sunter_scores`
+    weights) — a pure projection over the blocking join. Every
+    ln/division is IEEE double arithmetic both engines execute
+    identically, so the full fit+score pipeline replays exactly in
+    DuckDB (:func:`fellegi_sunter_em_scores_oracle_sql`)."""
     ids = list(id_cols) if id_cols else list(candidates.columns[:2])
-    params = _em_params_frame(
-        candidates, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
-    )
-    scored = candidates.join(broadcast(params))
-    # three-way: a NULL agreement nulls the score and the threshold
-    # drops the pair (it must never take the disagree branch); use
-    # the posterior variant for missing-tolerant ranking
-    terms = [
-        F.when(
-            F.col(f"agree_{f}") == 1,
-            F.log(F.col(f"m_{f}")) - F.log(F.col(f"u_{f}")),
-        ).when(
-            F.col(f"agree_{f}") == 0,
-            F.log(F.lit(1.0) - F.col(f"m_{f}"))
-            - F.log(F.lit(1.0) - F.col(f"u_{f}")),
+    p = em_fit(pattern_histogram(candidates, fields), fields, n_iter)
+    score = " + ".join(
+        _log_weight_sql(
+            f, double_sql(p[f"m_{f}"]), double_sql(p[f"u_{f}"]), False
         )
         for f in fields
-    ]
-    score = terms[0]
-    for t in terms[1:]:
-        score = score + t
+    )
     return (
-        scored.withColumn("score", F.round(score, round_to))
+        candidates.withColumn("score", F.round(F.expr(score), _ROUND_TO))
         .where(F.col("score") >= threshold)
         .select(*ids, *[f"agree_{f}" for f in fields], "score")
     )
@@ -595,12 +527,6 @@ def fellegi_sunter_em_posteriors(
     fields: Sequence[str],
     threshold: float = 0.5,
     n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
-    round_to: int = 6,
     id_cols: Sequence[str] | None = None,
 ) -> DataFrame:
     """Posterior match probability per candidate pair — the quantity
@@ -611,93 +537,27 @@ def fellegi_sunter_em_posteriors(
                      / (that + (1-λ̂)·∏ û^γ(1-û)^{1-γ})
 
     i.e. the E-step of iteration n_iter+1, evaluated on the PAIRS
-    instead of the pattern histogram. Unlike the log-likelihood
-    score (unbounded, prior-free), the posterior folds the estimated
-    prevalence λ̂ in and lands in [0, 1], so ``threshold=0.5`` means
-    "more likely a match than not under the fitted model".
-    Same plan shape as :func:`fellegi_sunter_em_scores`: the fit's
-    one histogram groupBy, then a broadcast of the single-row
-    estimate back onto the candidates — a pure projection. A MISSING
-    comparison is marginalized (factor 1 in both classes, matching
-    the fit), so the posterior is computed from the pair's observed
-    fields and the prior — the missing-tolerant ranking the
-    log-likelihood score variant deliberately is not. Replay:
+    instead of the pattern histogram (the same :func:`_w_sql` text).
+    Unlike the log-likelihood score (unbounded, prior-free), the
+    posterior folds the estimated prevalence λ̂ in and lands in
+    [0, 1], so ``threshold=0.5`` means "more likely a match than not
+    under the fitted model". Same plan shape as
+    :func:`fellegi_sunter_em_scores`: the fit's one histogram
+    groupBy, then the estimate inlined as literals — a pure
+    projection over the blocking join. A MISSING comparison is
+    marginalized (factor 1 in both classes, matching the fit), so the
+    posterior is computed from the pair's observed fields and the
+    prior — the missing-tolerant ranking the log-likelihood score
+    variant deliberately is not. Replay:
     :func:`fellegi_sunter_em_posteriors_oracle_sql`."""
     ids = list(id_cols) if id_cols else list(candidates.columns[:2])
-    params = _em_params_frame(
-        candidates, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
-    )
-    j = candidates.join(broadcast(params))
-    num = F.col("lam")
-    den = F.lit(1.0) - F.col("lam")
-    for f in fields:
-        # same marginalization as the fit: a MISSING comparison is
-        # factor 1 in BOTH classes, so the posterior is computed from
-        # the pair's observed fields (and the prior) only
-        num = num * F.when(
-            F.col(f"agree_{f}") == 1, F.col(f"m_{f}")
-        ).when(
-            F.col(f"agree_{f}") == 0, F.lit(1.0) - F.col(f"m_{f}")
-        ).otherwise(F.lit(1.0))
-        den = den * F.when(
-            F.col(f"agree_{f}") == 1, F.col(f"u_{f}")
-        ).when(
-            F.col(f"agree_{f}") == 0, F.lit(1.0) - F.col(f"u_{f}")
-        ).otherwise(F.lit(1.0))
+    p = em_fit(pattern_histogram(candidates, fields), fields, n_iter)
     return (
-        j.withColumn("posterior", F.round(num / (num + den), round_to))
+        candidates.withColumn(
+            "posterior", F.round(F.expr(_w_sql(fields, p)), _ROUND_TO)
+        )
         .where(F.col("posterior") >= threshold)
         .select(*ids, *[f"agree_{f}" for f in fields], "posterior")
-    )
-
-
-def fellegi_sunter_em_posteriors_oracle_sql(
-    cand_sql: str,
-    fields: Sequence[str],
-    id_cols: Sequence[str],
-    threshold: float = 0.5,
-    n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
-    round_to: int = 6,
-) -> str:
-    """Replay of :func:`fellegi_sunter_em_posteriors`: the EM chain
-    followed by the E-step posterior over the candidate relation."""
-    ctes = _em_cte_chain(
-        cand_sql, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
-    )
-    num_factors = " * ".join(
-        f"(CASE WHEN c.agree_{f} = 1 THEN p.m_{f}"
-        f" WHEN c.agree_{f} = 0 THEN 1.0 - p.m_{f}"
-        f" ELSE 1.0 END)"
-        for f in fields
-    )
-    den_factors = " * ".join(
-        f"(CASE WHEN c.agree_{f} = 1 THEN p.u_{f}"
-        f" WHEN c.agree_{f} = 0 THEN 1.0 - p.u_{f}"
-        f" ELSE 1.0 END)"
-        for f in fields
-    )
-    ids = ", ".join(id_cols)
-    agrees = ", ".join(f"agree_{f}" for f in fields)
-    return (
-        "WITH "
-        + ",\n".join(ctes)
-        + f"""
-    SELECT {ids}, {agrees}, posterior FROM (
-      SELECT c.*, ROUND(num / (num + den), {round_to}) AS posterior
-      FROM (
-        SELECT c.*,
-               p.lam * {num_factors} AS num,
-               (1.0 - p.lam) * {den_factors} AS den
-        FROM cand c CROSS JOIN it{int(n_iter)} p
-      ) c
-    ) WHERE posterior >= {_dlit(threshold)}"""
     )
 
 
@@ -712,6 +572,12 @@ def em_params(em_result: DataFrame) -> tuple[dict, dict]:
     )
 
 
+# ---------------------------------------------------------------------------
+# DuckDB replays. They keep their own SQL on purpose (functions/lits.py
+# says why): the tests compare the Spark side against them.
+# ---------------------------------------------------------------------------
+
+
 def _dlit(x: float) -> str:
     """Render a double literal so BOTH engines parse it as DOUBLE.
     DuckDB parses a bare decimal literal (``0.1``) as DECIMAL, not
@@ -723,44 +589,42 @@ def _dlit(x: float) -> str:
     return f"CAST({float(x)!r} AS DOUBLE)"
 
 
+def _mixture_sql(fields: Sequence[str], a: str, p: str) -> tuple[str, str]:
+    """The two class likelihoods ``(num, den)`` of an agreement
+    vector — λ·∏ m-factors and (1-λ)·∏ u-factors, a missing
+    comparison factor 1 — with the agreements read from alias ``a``
+    and the parameters from alias ``p``."""
+
+    def factors(k: str) -> str:
+        return " * ".join(
+            f"(CASE WHEN {a}.agree_{f} = 1 THEN {p}.{k}_{f}"
+            f" WHEN {a}.agree_{f} = 0 THEN 1.0 - {p}.{k}_{f}"
+            f" ELSE 1.0 END)"
+            for f in fields
+        )
+
+    return f"{p}.lam * {factors('m')}", f"(1.0 - {p}.lam) * {factors('u')}"
+
+
 def _em_cte_chain(
-    cand_sql: str,
-    fields: Sequence[str],
-    n_iter: int,
-    init_lambda: float,
-    init_m: float,
-    init_u: float,
-    round_dp: int,
-    eps: float,
+    cand_sql: str, fields: Sequence[str], n_iter: int
 ) -> list[str]:
     """The shared EM-replay CTE list: ``cand`` → ``pat`` histogram →
     ``it0..it{n_iter}`` parameter rows. Callers append their own
     final SELECT (unpivot for the fit, scoring projection for
     fit-then-predict)."""
-    lo, hi = float(eps), 1.0 - float(eps)
     agree_list = ", ".join(f"agree_{f}" for f in fields)
     inits = ", ".join(
-        [f"{_dlit(init_lambda)} AS lam"]
-        + [f"{_dlit(init_m)} AS m_{f}" for f in fields]
-        + [f"{_dlit(init_u)} AS u_{f}" for f in fields]
+        [f"{_dlit(_INIT_LAMBDA)} AS lam"]
+        + [f"{_dlit(_INIT_M)} AS m_{f}" for f in fields]
+        + [f"{_dlit(_INIT_U)} AS u_{f}" for f in fields]
     )
-    num_factors = " * ".join(
-        f"(CASE WHEN p.agree_{f} = 1 THEN prev.m_{f}"
-        f" WHEN p.agree_{f} = 0 THEN 1.0 - prev.m_{f}"
-        f" ELSE 1.0 END)"
-        for f in fields
-    )
-    den_factors = " * ".join(
-        f"(CASE WHEN p.agree_{f} = 1 THEN prev.u_{f}"
-        f" WHEN p.agree_{f} = 0 THEN 1.0 - prev.u_{f}"
-        f" ELSE 1.0 END)"
-        for f in fields
-    )
+    num, den = _mixture_sql(fields, "p", "prev")
 
     def _mstep(expr: str) -> str:
         return (
-            f"LEAST(GREATEST(ROUND({expr}, {round_dp}),"
-            f" {_dlit(lo)}), {_dlit(hi)})"
+            f"LEAST(GREATEST(ROUND({expr}, {_ROUND_DP}),"
+            f" {_dlit(_EPS)}), {_dlit(1.0 - _EPS)})"
         )
 
     ctes = [
@@ -792,9 +656,7 @@ def _em_cte_chain(
         ctes.append(
             f"""w{k} AS (
       SELECT *, num / (num + den) AS w FROM (
-        SELECT p.*,
-               prev.lam * {num_factors} AS num,
-               (1.0 - prev.lam) * {den_factors} AS den
+        SELECT p.*, {num} AS num, {den} AS den
         FROM pat p CROSS JOIN it{k - 1} prev
       )
     )"""
@@ -803,25 +665,30 @@ def _em_cte_chain(
     return ctes
 
 
+def _posterior_sql(fields: Sequence[str], n_iter: int, threshold: float) -> str:
+    """The candidates (``cand``) with their E-step ``posterior`` under
+    the fitted ``it{n_iter}`` parameters, kept at ``>= threshold``."""
+    num, den = _mixture_sql(fields, "c", "p")
+    return f"""SELECT * FROM (
+      SELECT c.*, ROUND(num / (num + den), {_ROUND_TO}) AS posterior
+      FROM (
+        SELECT c.*, {num} AS num, {den} AS den
+        FROM cand c CROSS JOIN it{int(n_iter)} p
+      ) c
+    ) WHERE posterior >= {_dlit(threshold)}"""
+
+
 def fellegi_sunter_em_oracle_sql(
     cand_sql: str,
     fields: Sequence[str],
     n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
 ) -> str:
     """Chained-CTE DuckDB replay of :func:`fellegi_sunter_em`
     iteration-for-iteration (the :func:`pagerank_oracle_sql` shape):
     ``cand_sql`` must produce the ``agree_<field>`` columns. Literals
     are rendered ``CAST(<repr> AS DOUBLE)`` so both engines bind the
     identical double (DuckDB parses bare decimals as DECIMAL)."""
-    ctes = _em_cte_chain(
-        cand_sql, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
-    )
+    ctes = _em_cte_chain(cand_sql, fields, n_iter)
     selects = " UNION ALL ".join(
         f"SELECT '{f}' AS field, m_{f} AS m_est, u_{f} AS u_est, lam"
         f" FROM it{int(n_iter)}"
@@ -836,21 +703,12 @@ def fellegi_sunter_em_scores_oracle_sql(
     id_cols: Sequence[str],
     threshold: float = 0.0,
     n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
-    round_to: int = 6,
 ) -> str:
     """Replay of :func:`fellegi_sunter_em_scores` — the EM chain of
     :func:`fellegi_sunter_em_oracle_sql` followed by the scoring
     projection over the SAME candidate relation. ``cand_sql`` must
     produce ``id_cols`` plus the ``agree_<field>`` columns."""
-    ctes = _em_cte_chain(
-        cand_sql, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
-    )
+    ctes = _em_cte_chain(cand_sql, fields, n_iter)
     terms = " + ".join(
         f"(CASE WHEN c.agree_{f} = 1 THEN ln(p.m_{f}) - ln(p.u_{f})"
         f" WHEN c.agree_{f} = 0"
@@ -864,9 +722,31 @@ def fellegi_sunter_em_scores_oracle_sql(
         + ",\n".join(ctes)
         + f"""
     SELECT {ids}, {agrees}, score FROM (
-      SELECT c.*, ROUND({terms}, {round_to}) AS score
+      SELECT c.*, ROUND({terms}, {_ROUND_TO}) AS score
       FROM cand c CROSS JOIN it{int(n_iter)} p
     ) WHERE score >= {_dlit(threshold)}"""
+    )
+
+
+def fellegi_sunter_em_posteriors_oracle_sql(
+    cand_sql: str,
+    fields: Sequence[str],
+    id_cols: Sequence[str],
+    threshold: float = 0.5,
+    n_iter: int = 5,
+) -> str:
+    """Replay of :func:`fellegi_sunter_em_posteriors`: the EM chain
+    followed by the E-step posterior over the candidate relation."""
+    ctes = _em_cte_chain(cand_sql, fields, n_iter)
+    ids = ", ".join(id_cols)
+    agrees = ", ".join(f"agree_{f}" for f in fields)
+    return (
+        "WITH "
+        + ",\n".join(ctes)
+        + f"""
+    SELECT {ids}, {agrees}, posterior FROM (
+    {_posterior_sql(fields, n_iter, threshold)}
+    )"""
     )
 
 
@@ -876,12 +756,6 @@ def fellegi_sunter_em_clusters_oracle_sql(
     id_cols: Sequence[str],
     threshold: float = 0.5,
     n_iter: int = 5,
-    init_lambda: float = 0.1,
-    init_m: float = 0.9,
-    init_u: float = 0.1,
-    round_dp: int = 12,
-    eps: float = 1e-06,
-    round_to: int = 6,
     final_select: str | None = None,
 ) -> str:
     """Replay of the full score→cluster workflow (Splink's
@@ -893,40 +767,15 @@ def fellegi_sunter_em_clusters_oracle_sql(
     or, when ``final_select`` is given, that SELECT evaluated with a
     ``clusters(id, cluster)`` CTE in scope (the evaluation-report
     hook B120 uses)."""
-    ctes = _em_cte_chain(
-        cand_sql, fields, n_iter, init_lambda, init_m, init_u,
-        round_dp, eps,
-    )
-    num_factors = " * ".join(
-        f"(CASE WHEN c.agree_{f} = 1 THEN p.m_{f}"
-        f" WHEN c.agree_{f} = 0 THEN 1.0 - p.m_{f}"
-        f" ELSE 1.0 END)"
-        for f in fields
-    )
-    den_factors = " * ".join(
-        f"(CASE WHEN c.agree_{f} = 1 THEN p.u_{f}"
-        f" WHEN c.agree_{f} = 0 THEN 1.0 - p.u_{f}"
-        f" ELSE 1.0 END)"
-        for f in fields
-    )
+    ctes = _em_cte_chain(cand_sql, fields, n_iter)
     idl, idr = id_cols
-    matches = f"""matches AS (
-      SELECT {idl}, {idr} FROM (
-        SELECT c.*, ROUND(num / (num + den), {round_to}) AS posterior
-        FROM (
-          SELECT c.*,
-                 p.lam * {num_factors} AS num,
-                 (1.0 - p.lam) * {den_factors} AS den
-          FROM cand c CROSS JOIN it{int(n_iter)} p
-        ) c
-      ) WHERE posterior >= {_dlit(threshold)}
-    )"""
     return (
         "WITH RECURSIVE "
         + ",\n".join(ctes)
-        + ",\n"
-        + matches
         + f""",
+    matches AS (
+      SELECT {idl}, {idr} FROM ({_posterior_sql(fields, n_iter, threshold)})
+    ),
     e2(s, d) AS (SELECT {idl}, {idr} FROM matches
                  UNION SELECT {idr}, {idl} FROM matches),
     nodes(id) AS (SELECT DISTINCT s FROM e2),

@@ -5157,50 +5157,101 @@ def mad_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     return mad_outliers(ev, ["event_type"], "event_id", "value", k=3.0)
 
 
-def _fs_linkage_oracle(m_probs: dict, threshold: float) -> str:
+def _linkage_halves(
+    spark: SparkSession, sf_dir: str, left_mod: int, null_seg: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The linkage family's fixture: TPC-H customers split into a left
+    half (``c_custkey % left_mod = 1``, id ``cust_l``) and the even
+    right half (id ``cust_r``), blocked on nation (``blk``) and
+    compared on market segment (``seg``; NULL for BUILDING when
+    ``null_seg``), name tens-digit (``tag`` — the last digit would
+    share parity with the odd/even split and never agree) and debt
+    flag (``debt``). :func:`_linkage_halves_sql` replays them in
+    DuckDB."""
+    seg = F.col("c_mktsegment")
+    cust = _t(spark, sf_dir, "customer").select(
+        "c_custkey",
+        F.col("c_nationkey").alias("blk"),
+        (F.nullif(seg, F.lit("BUILDING")) if null_seg else seg).alias("seg"),
+        F.substring("c_name", -2, 1).alias("tag"),
+        (F.col("c_acctbal") < 0).alias("debt"),
+    )
+    left = cust.where(F.col("c_custkey") % left_mod == 1).withColumnRenamed(
+        "c_custkey", "cust_l"
+    )
+    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
+        "c_custkey", "cust_r"
+    )
+    return left, right
+
+
+def _linkage_halves_sql(left_mod: int, null_seg: bool) -> tuple[str, str]:
+    """DuckDB replay of :func:`_linkage_halves`: the left and right
+    halves as two SELECTs."""
+    seg = "NULLIF(c_mktsegment, 'BUILDING')" if null_seg else "c_mktsegment"
+
+    def side(id_col: str, mod: int, par: int) -> str:
+        return f"""SELECT c_custkey AS {id_col}, c_nationkey AS blk,
+                   {seg} AS seg, substr(c_name, -2, 1) AS tag,
+                   c_acctbal < 0 AS debt
+            FROM customer WHERE c_custkey % {mod} = {par}"""
+
+    return side("cust_l", left_mod, 1), side("cust_r", 2, 0)
+
+
+def _linkage_cand_sql(left_mod: int, null_seg: bool) -> str:
+    """DuckDB candidates ``(cust_l, cust_r, agree_seg, agree_tag,
+    agree_debt)`` of :func:`_linkage_halves` blocked on nation."""
+    left, right = _linkage_halves_sql(left_mod, null_seg)
+    return f"""
+      SELECT l.cust_l, r.cust_r,
+             CAST(l.seg = r.seg AS INT) AS agree_seg,
+             CAST(l.tag = r.tag AS INT) AS agree_tag,
+             CAST(l.debt = r.debt AS INT) AS agree_debt
+      FROM ({left}) l JOIN ({right}) r ON l.blk = r.blk
+    """
+
+
+_FS_FIELDS = ["seg", "tag", "debt"]
+
+
+def _fs_linkage_oracle(
+    m_probs: dict,
+    threshold: float,
+    left_mod: int,
+    null_seg: bool,
+    null_as_no_info: bool,
+) -> str:
     """Fellegi–Sunter replay; ln() literals rendered with repr() so
     Spark's constant-folded 1.0-m and DuckDB's parse agree bit-for-
-    bit."""
+    bit. A NULL agreement scores NULL, or 0.0 under
+    ``null_as_no_info`` (the three-way CASE of the scorer)."""
     fields = list(m_probs)
-    agree_cols = ", ".join(
-        f"CAST(l.{f} = r.{f} AS INT) AS agree_{f}" for f in fields
-    )
     u_avgs = ", ".join(f"AVG(agree_{f}) AS u_{f}" for f in fields)
     u_clamps = ", ".join(
         f"LEAST(GREATEST(u_{f}, 0.5 / CAST(n AS DOUBLE)),"
         f" 1.0 - 0.5 / CAST(n AS DOUBLE)) AS u_{f}"
         for f in fields
     )
+    no_info = " ELSE 0.0" if null_as_no_info else ""
     terms = " + ".join(
         f"(CASE WHEN agree_{f} = 1 THEN ln({float(m)!r}) - ln(u_{f})"
-        f" ELSE ln({1.0 - float(m)!r}) - ln(1.0 - u_{f}) END)"
+        f" WHEN agree_{f} = 0 THEN ln({1.0 - float(m)!r}) - ln(1.0 - u_{f})"
+        f"{no_info} END)"
         for f, m in m_probs.items()
     )
     u_out = ", ".join(f"ROUND(u_{f}, 6) AS u_{f}" for f in fields)
     a_out = ", ".join(f"agree_{f}" for f in fields)
     return f"""
-    WITH l AS (
-      SELECT c_custkey AS lid, c_nationkey AS blk, c_mktsegment AS seg,
-             substr(c_name, -2, 1) AS tag, c_acctbal < 0 AS debt
-      FROM customer WHERE c_custkey % 2 = 1
-    ),
-    r AS (
-      SELECT c_custkey AS rid, c_nationkey AS blk, c_mktsegment AS seg,
-             substr(c_name, -2, 1) AS tag, c_acctbal < 0 AS debt
-      FROM customer WHERE c_custkey % 2 = 0
-    ),
-    cand AS (
-      SELECT lid, rid, {agree_cols}
-      FROM l JOIN r ON l.blk = r.blk
-    ),
+    WITH cand AS ({_linkage_cand_sql(left_mod, null_seg)}),
     s AS (SELECT COUNT(*) AS n, {u_avgs} FROM cand),
     c AS (SELECT {u_clamps} FROM s),
     scored AS (
-      SELECT lid, rid, {a_out}, {u_out},
+      SELECT cust_l, cust_r, {a_out}, {u_out},
              ROUND({terms}, 6) AS score
       FROM cand CROSS JOIN c
     )
-    SELECT lid AS cust_l, rid AS cust_r, {a_out},
+    SELECT cust_l, cust_r, {a_out},
            {", ".join(f"u_{f}" for f in fields)}, score
     FROM scored WHERE score >= {threshold!r}
     """
@@ -5209,109 +5260,34 @@ def _fs_linkage_oracle(m_probs: dict, threshold: float) -> str:
 _FS_M = {"seg": 0.9, "tag": 0.9, "debt": 0.8}
 
 
-@query("record_linkage_fs", oracle=_fs_linkage_oracle(_FS_M, 1.0))
+@query(
+    "record_linkage_fs",
+    oracle=_fs_linkage_oracle(_FS_M, 1.0, 2, False, False),
+)
 def record_linkage_fs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Probabilistic record linkage (B102), the Fellegi–Sunter
     log-likelihood model completing the entity-resolution family
     (B58 finds candidates, B61 clusters, this SCORES): customers
     split into two halves, blocked on nation, compared on market
-    segment / name tens-digit / debt flag (the last digit would share parity with the odd/even split and never agree) with supplied
-    m-probabilities and u-probabilities ESTIMATED from the candidate
-    relation itself (one single-row reduction, clamped against
-    ln(0)). One blocked equi-join + a broadcast stats row + a
+    segment / name tens-digit / debt flag (:func:`_linkage_halves`)
+    with supplied m-probabilities and u-probabilities ESTIMATED from
+    the candidate relation itself (one single-row reduction, clamped
+    against ln(0)). One blocked equi-join + a broadcast stats row + a
     projection — no cross join at any scale
     (operators/linkage.py fellegi_sunter_scores)."""
     from nass_summary_spark.operators.linkage import fellegi_sunter_scores
 
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
+    left, right = _linkage_halves(spark, sf_dir, 2, False)
     return fellegi_sunter_scores(
         left, right, "cust_l", "cust_r", "blk", _FS_M, threshold=1.0
     )
 
 
-def _fs_em_oracle() -> str:
-    from nass_summary_spark.operators.linkage import (
-        fellegi_sunter_em_oracle_sql,
-    )
-
-    cand_sql = """
-      SELECT CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey, c_nationkey AS blk, c_mktsegment AS seg,
-                   substr(c_name, -2, 1) AS tag, c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey, c_nationkey AS blk, c_mktsegment AS seg,
-                   substr(c_name, -2, 1) AS tag, c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
-    return fellegi_sunter_em_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], n_iter=5
-    )
-
-
 @query(
     "record_linkage_nullsafe",
-    oracle="""
-    WITH l AS (
-      SELECT c_custkey AS lid, c_nationkey AS blk,
-             NULLIF(c_mktsegment, 'BUILDING') AS seg,
-             c_acctbal < 0 AS debt
-      FROM customer WHERE c_custkey % 10 = 1
+    oracle=_fs_linkage_oracle(
+        {"seg": 0.9, "debt": 0.8}, -100.0, 10, True, True
     ),
-    r AS (
-      SELECT c_custkey AS rid, c_nationkey AS blk,
-             NULLIF(c_mktsegment, 'BUILDING') AS seg,
-             c_acctbal < 0 AS debt
-      FROM customer WHERE c_custkey % 2 = 0
-    ),
-    cand AS (
-      SELECT lid, rid,
-             CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM l JOIN r ON l.blk = r.blk
-    ),
-    s AS (SELECT COUNT(*) AS n, AVG(agree_seg) AS u_seg,
-                 AVG(agree_debt) AS u_debt FROM cand),
-    c AS (
-      SELECT
-        LEAST(GREATEST(u_seg, 0.5 / CAST(n AS DOUBLE)),
-              1.0 - 0.5 / CAST(n AS DOUBLE)) AS u_seg,
-        LEAST(GREATEST(u_debt, 0.5 / CAST(n AS DOUBLE)),
-              1.0 - 0.5 / CAST(n AS DOUBLE)) AS u_debt
-      FROM s
-    ),
-    scored AS (
-      SELECT lid, rid, agree_seg, agree_debt,
-             ROUND(u_seg, 6) AS u_seg, ROUND(u_debt, 6) AS u_debt,
-             ROUND(
-               (CASE WHEN agree_seg = 1 THEN ln(0.9) - ln(c.u_seg)
-                     WHEN agree_seg = 0 THEN ln(0.09999999999999998)
-                                             - ln(1.0 - c.u_seg)
-                     ELSE 0.0 END)
-               + (CASE WHEN agree_debt = 1 THEN ln(0.8) - ln(c.u_debt)
-                       WHEN agree_debt = 0 THEN ln(0.19999999999999996)
-                                               - ln(1.0 - c.u_debt)
-                       ELSE 0.0 END), 6) AS score
-      FROM cand CROSS JOIN c
-    )
-    SELECT lid AS cust_l, rid AS cust_r, agree_seg, agree_debt,
-           u_seg, u_debt, score
-    FROM scored WHERE score >= -100.0
-    """,
 )
 def record_linkage_nullsafe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi–Sunter scoring under MISSING comparison fields (the
@@ -5327,22 +5303,21 @@ def record_linkage_nullsafe_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/linkage.py fellegi_sunter_scores)."""
     from nass_summary_spark.operators.linkage import fellegi_sunter_scores
 
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")).alias("seg"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 10 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
+    left, right = _linkage_halves(spark, sf_dir, 10, True)
     return fellegi_sunter_scores(
         left, right, "cust_l", "cust_r", "blk",
         {"seg": 0.9, "debt": 0.8}, threshold=-100.0,
         null_as_no_info=True,
+    )
+
+
+def _fs_em_oracle(null_seg: bool) -> str:
+    from nass_summary_spark.operators.linkage import (
+        fellegi_sunter_em_oracle_sql,
+    )
+
+    return fellegi_sunter_em_oracle_sql(
+        _linkage_cand_sql(2, null_seg), _FS_FIELDS
     )
 
 
@@ -5351,24 +5326,9 @@ def _fs_em_scored_oracle() -> str:
         fellegi_sunter_em_scores_oracle_sql,
     )
 
-    cand_sql = """
-      SELECT l.lid AS cust_l, r.rid AS cust_r,
-             CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey AS lid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey AS rid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
     return fellegi_sunter_em_scores_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], ["cust_l", "cust_r"],
-        threshold=1.0, n_iter=5,
+        _linkage_cand_sql(2, False), _FS_FIELDS, ["cust_l", "cust_r"],
+        threshold=1.0,
     )
 
 
@@ -5380,8 +5340,8 @@ def record_linkage_em_scored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ln(m̂/û) — the zero-prior workflow (Splink's default) a user
     without labeled m-probabilities runs, where record_linkage_fs
     needed supplied priors. One full-data groupBy (the pattern
-    histogram) + the blocked join itself; scoring broadcasts the
-    single-row estimate back — no other wide operation. FULL oracle:
+    histogram) + the blocked join itself; scoring inlines the
+    estimate as literals — no other wide operation. FULL oracle:
     the EM chained-CTE replay composed with the scoring projection
     (operators/linkage.py fellegi_sunter_em_scores)."""
     from nass_summary_spark.operators.linkage import (
@@ -5389,53 +5349,16 @@ def record_linkage_em_scored_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         fellegi_sunter_em_scores,
     )
 
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
     cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
+        *_linkage_halves(spark, sf_dir, 2, False),
+        "cust_l", "cust_r", "blk", _FS_FIELDS,
     )
     return fellegi_sunter_em_scores(
-        cand, ["seg", "tag", "debt"], threshold=1.0, n_iter=5,
-        id_cols=["cust_l", "cust_r"],
+        cand, _FS_FIELDS, threshold=1.0, id_cols=["cust_l", "cust_r"]
     )
 
 
-def _fs_em_missing_oracle() -> str:
-    from nass_summary_spark.operators.linkage import (
-        fellegi_sunter_em_oracle_sql,
-    )
-
-    cand_sql = """
-      SELECT CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey, c_nationkey AS blk,
-                   NULLIF(c_mktsegment, 'BUILDING') AS seg,
-                   substr(c_name, -2, 1) AS tag, c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey, c_nationkey AS blk,
-                   NULLIF(c_mktsegment, 'BUILDING') AS seg,
-                   substr(c_name, -2, 1) AS tag, c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
-    return fellegi_sunter_em_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], n_iter=5
-    )
-
-
-@query("record_linkage_em_missing", oracle=_fs_em_missing_oracle())
+@query("record_linkage_em_missing", oracle=_fs_em_oracle(True))
 def record_linkage_em_missing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EM estimation under MISSING comparisons (B104d): one segment
     value is deterministically NULLed on both sides, so ~36% of
@@ -5451,52 +5374,45 @@ def record_linkage_em_missing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         fellegi_sunter_em,
     )
 
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.nullif(F.col("c_mktsegment"), F.lit("BUILDING")).alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
     cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
+        *_linkage_halves(spark, sf_dir, 2, True),
+        "cust_l", "cust_r", "blk", _FS_FIELDS,
     )
-    return fellegi_sunter_em(cand, ["seg", "tag", "debt"], n_iter=5)
+    return fellegi_sunter_em(cand, _FS_FIELDS)
 
 
-def _fs_em_posterior_oracle() -> str:
+def _fs_em_posterior_oracle(threshold: float) -> str:
     from nass_summary_spark.operators.linkage import (
         fellegi_sunter_em_posteriors_oracle_sql,
     )
 
-    cand_sql = """
-      SELECT l.lid AS cust_l, r.rid AS cust_r,
-             CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey AS lid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey AS rid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
     return fellegi_sunter_em_posteriors_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], ["cust_l", "cust_r"],
-        threshold=0.5, n_iter=5,
+        _linkage_cand_sql(2, False), _FS_FIELDS, ["cust_l", "cust_r"],
+        threshold=threshold,
     )
 
 
-@query("record_linkage_em_posterior", oracle=_fs_em_posterior_oracle())
+def _fs_em_posteriors(
+    spark: SparkSession, sf_dir: str, threshold: float
+) -> DataFrame:
+    """EM posteriors ≥ ``threshold`` of the dense odd × even
+    candidates — shared by the posterior, cluster and review-queue
+    queries."""
+    from nass_summary_spark.operators.linkage import (
+        blocked_agreements,
+        fellegi_sunter_em_posteriors,
+    )
+
+    cand = blocked_agreements(
+        *_linkage_halves(spark, sf_dir, 2, False),
+        "cust_l", "cust_r", "blk", _FS_FIELDS,
+    )
+    return fellegi_sunter_em_posteriors(
+        cand, _FS_FIELDS, threshold=threshold, id_cols=["cust_l", "cust_r"]
+    )
+
+
+@query("record_linkage_em_posterior", oracle=_fs_em_posterior_oracle(0.5))
 def record_linkage_em_posterior_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Posterior match probability per pair (B104c) — the quantity a
     production matcher thresholds on (Splink's match_probability):
@@ -5504,72 +5420,36 @@ def record_linkage_em_posterior_q(spark: SparkSession, sf_dir: str) -> DataFrame
     estimated prevalence λ̂ in so the output lands in [0,1] and
     threshold=0.5 means "more likely a match than not under the
     model". Same plan shape as the scored variant: one histogram
-    groupBy for the fit, broadcast of the single-row estimate back,
-    pure projection. FULL oracle (EM chain + E-step replay)
+    groupBy for the fit, the estimate inlined as literals, pure
+    projection. FULL oracle (EM chain + E-step replay)
     (operators/linkage.py fellegi_sunter_em_posteriors)."""
-    from nass_summary_spark.operators.linkage import (
-        blocked_agreements,
-        fellegi_sunter_em_posteriors,
-    )
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
-    cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
-    )
-    return fellegi_sunter_em_posteriors(
-        cand, ["seg", "tag", "debt"], threshold=0.5, n_iter=5,
-        id_cols=["cust_l", "cust_r"],
-    )
+    return _fs_em_posteriors(spark, sf_dir, 0.5)
 
 
-@query("record_linkage_em", oracle=_fs_em_oracle())
+@query("record_linkage_em", oracle=_fs_em_oracle(False))
 def record_linkage_em_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unsupervised EM estimation of the Fellegi–Sunter parameters
     (B104, the Splink/Winkler default when no labeled m-priors
     exist), over the same blocked candidate relation as
     record_linkage_fs (B102): one map-side-combinable groupBy folds
     the pair relation into a ≤2^F-row agreement-pattern histogram —
-    the only full-data pass at any scale — then 5 EM iterations run
-    as DataFrame arithmetic over that tiny checkpointed relation,
-    compiling into one Catalyst job like pagerank. Output (field,
-    m_est, u_est, lam); the oracle replays every iteration via
-    chained CTEs, pinned bit-for-bit by the per-M-step ROUND(12) +
-    clamp both engines apply (operators/linkage.py
-    fellegi_sunter_em)."""
+    the only full-data pass at any scale — checkpointed once; each
+    of the 5 EM iterations is then one small job over it (the M-step
+    aggregation) plus a ``.first()`` that brings the parameters back
+    to the driver. Output (field, m_est, u_est, lam); the oracle
+    replays every iteration via chained CTEs, pinned bit-for-bit by
+    the per-M-step ROUND(12) + clamp both engines apply
+    (operators/linkage.py fellegi_sunter_em)."""
     from nass_summary_spark.operators.linkage import (
         blocked_agreements,
         fellegi_sunter_em,
     )
 
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
     cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
+        *_linkage_halves(spark, sf_dir, 2, False),
+        "cust_l", "cust_r", "blk", _FS_FIELDS,
     )
-    return fellegi_sunter_em(cand, ["seg", "tag", "debt"], n_iter=5)
+    return fellegi_sunter_em(cand, _FS_FIELDS)
 
 
 @query(
@@ -7793,11 +7673,13 @@ def quality_classifier_train_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed logistic-regression FIT (B106) over the hashed
     unigram+bigram buckets B50 scores with — full-batch gradient
     descent as pure DataFrame arithmetic: the feature relation is
-    built once and persisted; each iteration is one broadcast join
-    of the model-sized weight relation, one combinable per-doc SUM,
-    a per-row sigmoid, one combinable per-bucket SUM, and a
-    quantized update (12-dp fixed-point numerators, all global sums
-    exact decimals) — the B104-EM chained-iteration shape, which is
+    built once and persisted; each iteration is one job — an
+    ``element_at`` lookup into the current weights as a literal
+    array, the per-doc sum as a window over the cache's id
+    clustering, a per-row sigmoid, one combinable per-bucket SUM —
+    and a quantized driver-side update (12-dp fixed-point
+    numerators, all global sums exact decimals) — the B104-EM
+    chained-iteration shape, which is
     what makes the FULL chained-CTE oracle replay bit-for-bit.
     Labels: long-document indicator (length >= 300). Output: one
     (bucket, wnum) row per observed bucket plus the bucket=-1 bias
@@ -8049,18 +7931,8 @@ def ann_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "record_linkage_blocked_union",
     oracle="""
-    WITH l AS (
-      SELECT c_custkey AS cust_l, c_nationkey AS blk,
-             substr(c_name, -2, 1) AS tag, c_mktsegment AS seg,
-             c_acctbal < 0 AS debt
-      FROM customer WHERE c_custkey % 10 = 1
-    ),
-    r AS (
-      SELECT c_custkey AS cust_r, c_nationkey AS blk,
-             substr(c_name, -2, 1) AS tag, c_mktsegment AS seg,
-             c_acctbal < 0 AS debt
-      FROM customer WHERE c_custkey % 2 = 0
-    ),
+    WITH l AS ({}),
+    r AS ({}),
     rule0 AS (
       SELECT cust_l, cust_r,
              CAST(l.seg = r.seg AS INT) AS agree_seg,
@@ -8077,7 +7949,7 @@ def ann_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
       WHERE NOT COALESCE(l.blk = r.blk, FALSE)
     )
     SELECT * FROM rule0 UNION ALL SELECT * FROM rule1
-    """,
+    """.format(*_linkage_halves_sql(10, False)),
 )
 def record_linkage_blocked_union_q(
     spark: SparkSession, sf_dir: str
@@ -8096,21 +7968,9 @@ def record_linkage_blocked_union_q(
         blocked_agreements_union,
     )
 
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        F.col("c_mktsegment").alias("seg"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 10 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
     return blocked_agreements_union(
-        left, right, "cust_l", "cust_r", ["blk", "tag"], ["seg", "debt"]
+        *_linkage_halves(spark, sf_dir, 10, False),
+        "cust_l", "cust_r", ["blk", "tag"], ["seg", "debt"],
     )
 
 
@@ -8402,33 +8262,31 @@ def pii_redact_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fs_em_clusters_oracle() -> str:
+def _fs_em_clusters_oracle(final_select: str | None) -> str:
     from nass_summary_spark.operators.linkage import (
         fellegi_sunter_em_clusters_oracle_sql,
     )
 
-    cand_sql = """
-      SELECT l.lid AS cust_l, r.rid AS cust_r,
-             CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey AS lid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey AS rid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
     return fellegi_sunter_em_clusters_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], ["cust_l", "cust_r"],
-        threshold=0.5, n_iter=5,
+        _linkage_cand_sql(2, False), _FS_FIELDS, ["cust_l", "cust_r"],
+        threshold=0.5, final_select=final_select,
     )
 
 
-@query("record_linkage_clusters", oracle=_fs_em_clusters_oracle())
+def _fs_em_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``(id, component)``: min-label connected components of the
+    ≥ 0.5 EM posterior match pairs."""
+    from nass_summary_spark.operators.dedup import connected_components
+
+    matches = _fs_em_posteriors(spark, sf_dir, 0.5)
+    return connected_components(
+        matches.select(
+            F.col("cust_l").alias("id_a"), F.col("cust_r").alias("id_b")
+        )
+    )
+
+
+@query("record_linkage_clusters", oracle=_fs_em_clusters_oracle(None))
 def record_linkage_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Score→CLUSTER entity resolution (B110) — the step after B104c
     that Splink ships as cluster_pairwise_predictions_at_threshold:
@@ -8436,44 +8294,14 @@ def record_linkage_clusters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     components assign one cluster id per real-world entity, so
     downstream joins key on the cluster (golden-record grouping)
     instead of raw pairs. Composes two certified pieces unchanged:
-    the EM posterior family (B104c, one pattern-histogram groupBy +
-    broadcast of the single-row estimate) and the B13 min-label CC
+    the EM posterior family (B104c, one pattern-histogram groupBy,
+    the estimate inlined as literals) and the B13 min-label CC
     (log-diameter rounds, node-sized label vector — match graphs
     are trillions of edges at 100 TB but the label state stays
     entity-sized). FULL oracle: EM chain + E-step + recursive
     min-label closure (operators/linkage.py
     fellegi_sunter_em_clusters_oracle_sql)."""
-    from nass_summary_spark.operators.dedup import connected_components
-    from nass_summary_spark.operators.linkage import (
-        blocked_agreements,
-        fellegi_sunter_em_posteriors,
-    )
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
-    cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
-    )
-    matches = fellegi_sunter_em_posteriors(
-        cand, ["seg", "tag", "debt"], threshold=0.5, n_iter=5,
-        id_cols=["cust_l", "cust_r"],
-    )
-    comp = connected_components(
-        matches.select(
-            F.col("cust_l").alias("id_a"), F.col("cust_r").alias("id_b")
-        )
-    )
+    comp = _fs_em_clusters(spark, sf_dir)
     return comp.select("id", F.col("component").alias("cluster"))
 
 
@@ -9467,25 +9295,6 @@ def epoch_plan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cluster_eval_oracle() -> str:
-    from nass_summary_spark.operators.linkage import (
-        fellegi_sunter_em_clusters_oracle_sql,
-    )
-
-    cand_sql = """
-      SELECT l.lid AS cust_l, r.rid AS cust_r,
-             CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey AS lid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey AS rid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
     final = """
     , assign AS (
       SELECT c.c_custkey AS id,
@@ -9519,10 +9328,7 @@ def _cluster_eval_oracle() -> str:
              AS f1
     FROM pred_p CROSS JOIN truth_p CROSS JOIN both_p
     """
-    return fellegi_sunter_em_clusters_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], ["cust_l", "cust_r"],
-        threshold=0.5, n_iter=5, final_select=final,
-    )
+    return _fs_em_clusters_oracle(final)
 
 
 @query("cluster_eval", oracle=_cluster_eval_oracle())
@@ -9540,46 +9346,19 @@ def cluster_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     unreachable by construction — the readout makes that cost
     visible instead of hiding it). FULL oracle (EM chain + E-step +
     recursive closure + contingency arithmetic)."""
-    from nass_summary_spark.operators.dedup import connected_components
-    from nass_summary_spark.operators.linkage import (
-        blocked_agreements,
-        fellegi_sunter_em_posteriors,
-    )
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
-    cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
-    )
-    matches = fellegi_sunter_em_posteriors(
-        cand, ["seg", "tag", "debt"], threshold=0.5, n_iter=5,
-        id_cols=["cust_l", "cust_r"],
-    )
-    comp = connected_components(
-        matches.select(
-            F.col("cust_l").alias("id_a"), F.col("cust_r").alias("id_b")
-        )
-    )
-    assign = cust.join(
+    comp = _fs_em_clusters(spark, sf_dir)
+    # the truth class is the oracle's assign CTE: the raw customer
+    # columns behind (seg, tag, debt)
+    assign = _t(spark, sf_dir, "customer").join(
         comp.select(F.col("id").alias("c_custkey"), "component"),
         "c_custkey",
         "left",
     ).select(
         F.coalesce(F.col("component"), F.col("c_custkey")).alias("cluster"),
         F.concat(
-            F.col("seg"), F.lit("|"), F.col("tag"), F.lit("|"),
-            F.col("debt").cast("string"),
+            F.col("c_mktsegment"), F.lit("|"),
+            F.substring("c_name", -2, 1), F.lit("|"),
+            (F.col("c_acctbal") < 0).cast("string"),
         ).alias("class"),
     )
     # C(n,2) in INTEGER arithmetic: Spark's `/` is double division,
@@ -11940,29 +11719,7 @@ def pseudonymize_keys_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _linkage_review_oracle() -> str:
-    from nass_summary_spark.operators.linkage import (
-        fellegi_sunter_em_posteriors_oracle_sql,
-    )
-
-    cand_sql = """
-      SELECT l.lid AS cust_l, r.rid AS cust_r,
-             CAST(l.seg = r.seg AS INT) AS agree_seg,
-             CAST(l.tag = r.tag AS INT) AS agree_tag,
-             CAST(l.debt = r.debt AS INT) AS agree_debt
-      FROM (SELECT c_custkey AS lid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 1) l
-      JOIN (SELECT c_custkey AS rid, c_nationkey AS blk,
-                   c_mktsegment AS seg, substr(c_name, -2, 1) AS tag,
-                   c_acctbal < 0 AS debt
-            FROM customer WHERE c_custkey % 2 = 0) r
-      ON l.blk = r.blk
-    """
-    inner = fellegi_sunter_em_posteriors_oracle_sql(
-        cand_sql, ["seg", "tag", "debt"], ["cust_l", "cust_r"],
-        threshold=0.0, n_iter=5,
-    )
+    inner = _fs_em_posterior_oracle(0.0)
     return f"""
     SELECT cust_l, cust_r, agree_seg, agree_tag, agree_debt,
            posterior, ROUND(ABS(posterior - 0.5), 6) AS uncertainty
@@ -11979,35 +11736,12 @@ def linkage_review_queue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     uncertainty-sampling rule; labeling near-certain pairs at either
     end is wasted review budget). Composes B104c's posterior machinery
     unchanged at threshold 0 and orders by |posterior − 0.5| with a
-    pair tie-break — one histogram fit + broadcast E-step projection
-    + a top-k, never a global sort of the pair relation
+    pair tie-break — one histogram fit + an E-step projection with
+    the estimate inlined + a top-k, never a global sort of the pair
+    relation
     (operators/linkage.py fellegi_sunter_em_posteriors).
     FULL oracle."""
-    from nass_summary_spark.operators.linkage import (
-        blocked_agreements,
-        fellegi_sunter_em_posteriors,
-    )
-
-    cust = _t(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.col("c_nationkey").alias("blk"),
-        F.col("c_mktsegment").alias("seg"),
-        F.substring("c_name", -2, 1).alias("tag"),
-        (F.col("c_acctbal") < 0).alias("debt"),
-    )
-    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
-        "c_custkey", "cust_l"
-    )
-    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
-        "c_custkey", "cust_r"
-    )
-    cand = blocked_agreements(
-        left, right, "cust_l", "cust_r", "blk", ["seg", "tag", "debt"]
-    )
-    post = fellegi_sunter_em_posteriors(
-        cand, ["seg", "tag", "debt"], threshold=0.0, n_iter=5,
-        id_cols=["cust_l", "cust_r"],
-    )
+    post = _fs_em_posteriors(spark, sf_dir, 0.0)
     unc = F.abs(F.col("posterior") - F.lit(0.5))
     return (
         post.withColumn("uncertainty", F.round(unc, 6))

@@ -31,6 +31,7 @@ batch scorer over the union of arrivals, for ANY batch split.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Mapping
 
 from pyspark.sql import DataFrame, SparkSession
@@ -38,7 +39,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from nass_summary_spark.functions.smalldf import local_struct_df
-from nass_summary_spark.operators.linkage import fellegi_sunter_scores
+from nass_summary_spark.operators.linkage import (
+    blocked_agreements,
+    em_fit,
+    fellegi_sunter_scores,
+    pattern_histogram,
+)
 from nass_summary_spark.streaming.sink import start_batches, write_shard
 
 
@@ -142,25 +148,22 @@ def linkage_stream(
 # ---------------------------------------------------------------------------
 
 
-def _pattern_hist(cand: DataFrame, fields) -> DataFrame:
-    """Agreement-pattern histogram of a candidate relation: ≤ 3^F
-    rows (each agree_<f> ∈ {0, 1, NULL}) — the Splink sufficient
-    statistic fellegi_sunter_em folds trillions of pairs into. NULL
-    indicators are keyed as -1 so the histogram join is total."""
-    keys = [
-        F.coalesce(F.col(f"agree_{f}"), F.lit(-1)).alias(f"agree_{f}")
-        for f in fields
-    ]
-    return (
-        cand.select(*keys)
-        .groupBy(*[f"agree_{f}" for f in fields])
-        .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
+def _keyed(hist: DataFrame, fields) -> DataFrame:
+    """The stored layout of a :func:`~nass_summary_spark.operators.
+    linkage.pattern_histogram`: NULL indicators keyed as -1, so the
+    histogram join of :func:`pattern_drift_kl` is total."""
+    return hist.select(
+        *[
+            F.coalesce(F.col(f"agree_{f}"), F.lit(-1)).alias(f"agree_{f}")
+            for f in fields
+        ],
+        "cnt",
     )
 
 
-def _write_pattern_hist(cand: DataFrame, fields, model_dir: str) -> None:
+def _write_pattern_hist(hist: DataFrame, fields, model_dir: str) -> None:
     (
-        _pattern_hist(cand, list(fields))
+        _keyed(hist, fields)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(f"{model_dir}/pattern_hist")
@@ -175,27 +178,20 @@ def persist_pattern_histogram(
     drift baseline :func:`pattern_drift_kl` compares against. Call it
     once with the same candidates the initial EM fit (or prior
     choice) was based on."""
-    _write_pattern_hist(cand, fields, f"{reference_path}/model")
-
-
-def pattern_drift_kl(
-    cand: DataFrame, fields, reference_path: str, round_to: int = 8
-) -> float:
-    """Add-one-smoothed KL(current ‖ stored) over agreement patterns
-    — B57's drift audit applied to the linkage comparison space: the
-    γ-pattern distribution is what the EM weights were fitted TO, so
-    its divergence measures exactly the staleness of the frozen
-    parameters (corpus-content drift that leaves agreement patterns
-    unchanged does not — and should not — trigger a re-fit). Both
-    histograms are model-sized (≤ 3^F rows); the arithmetic is one
-    outer join + a scalar sum."""
     fields = list(fields)
+    _write_pattern_hist(
+        pattern_histogram(cand, fields), fields, f"{reference_path}/model"
+    )
+
+
+def _drift_kl(hist: DataFrame, fields, reference_path: str) -> float:
     keys = [f"agree_{f}" for f in fields]
-    spark = cand.sparkSession
-    stored = spark.read.parquet(f"{reference_path}/model/pattern_hist")
-    cur = _pattern_hist(cand, fields)
+    stored = hist.sparkSession.read.parquet(
+        f"{reference_path}/model/pattern_hist"
+    )
     joined = (
-        cur.withColumnRenamed("cnt", "c_cur")
+        _keyed(hist, fields)
+        .withColumnRenamed("cnt", "c_cur")
         .join(
             stored.withColumnRenamed("cnt", "c_ref"), on=keys, how="full"
         )
@@ -208,14 +204,25 @@ def pattern_drift_kl(
     v = float(len(rows))
     n_cur = float(sum(r["c_cur"] for r in rows))
     n_ref = float(sum(r["c_ref"] for r in rows))
-    import math
-
     kl = 0.0
     for r in rows:
         p = (r["c_cur"] + 1.0) / (n_cur + v)
         q = (r["c_ref"] + 1.0) / (n_ref + v)
         kl += p * math.log(p / q)
-    return round(kl, round_to)
+    return round(kl, 8)
+
+
+def pattern_drift_kl(cand: DataFrame, fields, reference_path: str) -> float:
+    """Add-one-smoothed KL(current ‖ stored) over agreement patterns
+    — B57's drift audit applied to the linkage comparison space: the
+    γ-pattern distribution is what the EM weights were fitted TO, so
+    its divergence measures exactly the staleness of the frozen
+    parameters (corpus-content drift that leaves agreement patterns
+    unchanged does not — and should not — trigger a re-fit). Both
+    histograms are model-sized (≤ 3^F rows); the arithmetic is one
+    outer join + a scalar sum, rounded to 8 dp."""
+    fields = list(fields)
+    return _drift_kl(pattern_histogram(cand, fields), fields, reference_path)
 
 
 def refresh_linkage_params(
@@ -231,8 +238,10 @@ def refresh_linkage_params(
     parameters): block the accumulated ``arrivals`` against the
     stored reference, measure pattern drift vs the persisted
     baseline, and when it exceeds ``kl_threshold`` re-fit
-    Fellegi–Sunter by EM on the CURRENT candidates. The new params
-    and their new drift baseline are staged together in
+    Fellegi–Sunter by EM on the CURRENT candidates. The blocking
+    join runs once: its pattern histogram is checkpointed and serves
+    as drift signal, EM sufficient statistic and new baseline. The
+    new params and their new drift baseline are staged together in
     ``model__refreshing`` and published with ONE Hadoop-FS swap of
     the ``model`` directory (the index-family contract), so a failure
     leaves either the old pair or the new pair, never a mix.
@@ -243,31 +252,30 @@ def refresh_linkage_params(
     Returns ``{"kl", "refreshed", "m_probs", "u_probs"}`` (the live
     mappings after the call)."""
     from nass_summary_spark.functions import fsio
-    from nass_summary_spark.operators.linkage import (
-        blocked_agreements,
-        em_params,
-        fellegi_sunter_em,
-    )
 
     spark = arrivals.sparkSession
     ref, ref_id, block_col, m_probs, u_probs = load_linkage_reference(
         spark, reference_path
     )
     fields = list(m_probs)
-    cand = blocked_agreements(
-        arrivals, ref, arrival_id, ref_id, block_col, fields, salt=salt
-    )
-    kl = pattern_drift_kl(cand, fields, reference_path)
+    hist = pattern_histogram(
+        blocked_agreements(
+            arrivals, ref, arrival_id, ref_id, block_col, fields, salt=salt
+        ),
+        fields,
+    ).localCheckpoint()
+    kl = _drift_kl(hist, fields, reference_path)
     if kl < kl_threshold:
         return {
             "kl": kl, "refreshed": False,
             "m_probs": m_probs, "u_probs": u_probs,
         }
-    em = fellegi_sunter_em(cand, fields, n_iter=n_iter)
-    new_m, new_u = em_params(em)
+    p = em_fit(hist, fields, n_iter)
+    new_m = {f: p[f"m_{f}"] for f in fields}
+    new_u = {f: p[f"u_{f}"] for f in fields}
     staged = f"{reference_path}/model__refreshing"
     _write_params(spark, fields, new_m, new_u, staged)
-    _write_pattern_hist(cand, fields, staged)
+    _write_pattern_hist(hist, fields, staged)
     fsio.swap_in(spark, f"{reference_path}/model", staged, "__pre_refresh")
     return {
         "kl": kl, "refreshed": True,

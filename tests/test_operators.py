@@ -1883,6 +1883,73 @@ def test_blocked_agreements_rejects_equal_id_names(spark):
         blocked_agreements(df, df, "id", "id", "blk", ["f1"])
 
 
+def test_linkage_options_are_constants():
+    """The EM start point, the M-step rounding and clamp, and the
+    output rounding are constants of operators/linkage.py, not
+    options: no function there takes ``init_lambda``, ``init_m``,
+    ``init_u``, ``round_dp``, ``eps`` or ``round_to``, and the module
+    has at most 21 defaulted parameters."""
+    import ast
+    from pathlib import Path
+
+    import nass_summary_spark
+
+    src = Path(nass_summary_spark.__file__).parent / "operators" / "linkage.py"
+    funcs = [
+        n for n in ast.walk(ast.parse(src.read_text()))
+        if isinstance(n, ast.FunctionDef)
+    ]
+    gone = {"init_lambda", "init_m", "init_u", "round_dp", "eps", "round_to"}
+    taken = sorted(
+        f"{fn.name}({a.arg})"
+        for fn in funcs
+        for a in fn.args.args + fn.args.kwonlyargs
+        if a.arg in gone
+    )
+    assert taken == []
+    defaulted = sum(
+        len(fn.args.defaults) + sum(d is not None for d in fn.args.kw_defaults)
+        for fn in funcs
+    )
+    assert defaulted <= 21, defaulted
+
+
+def test_em_scorers_plan_only_the_blocking_join(spark, sf_dir):
+    """The EM scores and posteriors inline the fitted parameters as
+    literals: their plans hold exactly one join — the blocking join —
+    and no parameter frame joined back onto the pairs."""
+    import re
+
+    from nass_summary_spark.operators.linkage import (
+        blocked_agreements,
+        fellegi_sunter_em_posteriors,
+        fellegi_sunter_em_scores,
+    )
+
+    cust = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
+        "c_custkey",
+        F.col("c_nationkey").alias("blk"),
+        F.col("c_mktsegment").alias("seg"),
+        (F.col("c_acctbal") < 0).alias("debt"),
+    )
+    left = cust.where(F.col("c_custkey") % 2 == 1).withColumnRenamed(
+        "c_custkey", "lid"
+    )
+    right = cust.where(F.col("c_custkey") % 2 == 0).withColumnRenamed(
+        "c_custkey", "rid"
+    )
+    fields = ["seg", "debt"]
+    cand = blocked_agreements(left, right, "lid", "rid", "blk", fields)
+    for out in (
+        fellegi_sunter_em_scores(cand, fields, n_iter=2),
+        fellegi_sunter_em_posteriors(cand, fields, n_iter=2),
+    ):
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        joins = re.findall(r"\bJoin (\w+)", plan)
+        assert joins == ["Inner"], plan
+        assert "__blk" in plan
+
+
 def test_fellegi_sunter_scores_hand_replay(spark):
     """B102: replay the full FS computation in plain Python on a
     4x3-pair toy — u estimated from the candidate relation, clamped,
@@ -2044,8 +2111,7 @@ def test_fellegi_sunter_em_marginalizes_missing(spark):
 
 def test_fellegi_sunter_em_quotes_field_names(spark):
     """A field name that is not a bare SQL identifier fits exactly like
-    the same data under a plain name (the E-step renders SQL text, the
-    parameter frame a DDL schema)."""
+    the same data under a plain name (the E-step renders SQL text)."""
     from nass_summary_spark.operators.linkage import fellegi_sunter_em
 
     rows = [(1, 1)] * 6 + [(1, 0)] * 3 + [(0, 1)] * 4 + [(0, 0)] * 20
@@ -2140,6 +2206,7 @@ def test_fellegi_sunter_em_scores_equals_frozen_scoring(spark, sf_dir):
         blocked_agreements,
         em_params,
         fellegi_sunter_em,
+        fellegi_sunter_em_posteriors,
         fellegi_sunter_em_scores,
         fellegi_sunter_scores,
     )
@@ -2176,6 +2243,16 @@ def test_fellegi_sunter_em_scores_equals_frozen_scoring(spark, sf_dir):
         ).collect()
     }
     assert got and got == want
+
+    # empty candidates: the scores and posteriors are empty, the fit
+    # returns one row per field with every parameter at the clamp
+    # floor (GREATEST skips the NULL M-step sums)
+    empty = cand.where(F.lit(False))
+    assert fellegi_sunter_em_scores(empty, fields, n_iter=2).collect() == []
+    assert fellegi_sunter_em_posteriors(empty, fields, n_iter=2).collect() == []
+    assert sorted(
+        tuple(r) for r in fellegi_sunter_em(empty, fields, n_iter=2).collect()
+    ) == [("debt", 1e-06, 1e-06, 1e-06), ("seg", 1e-06, 1e-06, 1e-06)]
 
 
 def test_ann_eval_report_properties(spark, sf_dir):

@@ -229,10 +229,9 @@ def test_heavy_composites_plan_shape(spark, sf_dir):
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning") <= 1
 
-    # r7: record_linkage_em — one pattern-histogram x single-row-
-    # params crossJoin per EM iteration (bounded <=2^F x 1); the
-    # explode-unpivot must keep the plan referencing the chain once
-    # (a per-field union triples it)
+    # r7: record_linkage_em — the fit runs on the driver over the
+    # pattern histogram; the returned plan is the fitted rows as one
+    # literal relation (no exchange, no join, no EM chain)
     plan = plan_of(spark, sf_dir, "record_linkage_em")
     assert "CartesianProduct" not in plan
     assert plan.count("Exchange hashpartitioning") == 0
